@@ -27,6 +27,8 @@ pipeline + warehouse analytics at 100 TB).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -892,6 +894,13 @@ def _kth_smallest_report(spark, slopes, col, nbuckets=4096, max_levels=3):
     conds = []
     rank_below = 0  # values strictly before the current narrowed range
     for _ in range(max_levels):
+        if math.isnan(lo) or math.isnan(hi):
+            # F.max orders NaN above every double, so a NaN makes lo < hi
+            # false and the shortcut below would return the minimum.
+            raise ValueError(
+                f"_kth_smallest_report: {col} contains NaN (n={n}); "
+                "its median is undefined"
+            )
         if not (lo < hi):
             # All values in the narrowed range are equal (level 0: the whole
             # input is one tied value) — the k-th smallest IS lo; returning

@@ -677,6 +677,7 @@ def q_stream_minhash_delta(spark, sf_dir):
         # keys -> candidates, and the Jaccard-verify side) and would
         # otherwise re-tokenize the batch per consumer (round-13 review).
         grams = dedup.portable_shingles(batch_df, "doc_id", "text", 3).cache()
+        cand = None
         try:
             bands = dedup.portable_band_keys(
                 dedup.portable_minhash_signatures(grams, "doc_id", 16),
@@ -716,6 +717,10 @@ def q_stream_minhash_delta(spark, sf_dir):
             )
         finally:
             grams.unpersist()
+            if cand is not None:
+                # DataFrame.unpersist() does not reach a local checkpoint:
+                # its blocks belong to the RDD under the LogicalRDD plan.
+                cand._jdf.queryExecution().logical().rdd().unpersist(False)
 
     from ..streaming.streams import fast_checkpoint_dir
 
@@ -882,7 +887,7 @@ def q_stream_state_reader(spark, sf_dir):
     import os.path as _osp
     import shutil
 
-    from ..streaming.streams import fast_checkpoint_dir
+    from ..streaming.streams import fast_checkpoint_dir, stream_conf
 
     digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     # Deterministic name under the fast-volume base (this entry READS the
@@ -896,9 +901,7 @@ def q_stream_state_reader(spark, sf_dir):
         F.col("event_type") != FLUSH_EVENT_TYPE
     )
     stream = tumbling_window_counts(ev, watermark=REPLAY_WATERMARK)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with stream_conf(spark):
         q = (
             stream.writeStream.format("noop")
             .outputMode("append")
@@ -907,8 +910,6 @@ def q_stream_state_reader(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     st = spark.read.format("statestore").load(ckpt)
     return (
         st.select(

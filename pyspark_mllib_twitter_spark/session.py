@@ -113,6 +113,22 @@ def get_spark(
         # (r14 advice #1). 8192 exact literals is a verified-sane predicate
         # size (tests/test_layout.py).
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "8192")
+        # Stream checkpoints (offset/commit logs, state-store delta files)
+        # go through the FileSystem-based manager rather than the default
+        # FileContext one. Without native libhadoop, FileContext's
+        # create/rename on the local file system shells out (`readlink`,
+        # link-status lookups) for every file: on a 4-core host a 10-batch
+        # dedup replay forked ~4.3k processes and spent most of its
+        # trigger time in state-store commit. The FileSystem manager
+        # writes a temp file and renames it, which is safe because every
+        # checkpoint dir here has a single writer: no two queries ever run
+        # against the same dir at once. Applies to every stream,
+        # HDFS-backed and RocksDB state stores alike.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # NOT set: spark.cleaner.periodicGC.interval. Forcing frequent GC
         # to flush ContextCleaner-tracked broadcasts was measured WORSE —
         # the full-GC pauses land on whichever query is running (suite

@@ -31,6 +31,7 @@ Design notes for scale:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 import uuid
@@ -43,8 +44,9 @@ from pyspark.sql import types as T
 FLUSH_EVENT_TYPE = "__flush__"
 
 #: Micro-batch stats of the most recent ``run_to_memory`` call —
-#: ``{"n_batches", "add_batch_s", "trigger_s"}`` — so the bench can report
-#: replay-harness overhead separately from data-plane work.
+#: ``{"n_batches", "add_batch_s", "trigger_s", "commit_ms",
+#: "state_partitions"}`` — so the bench can report replay-harness overhead
+#: and state-store commit time separately from data-plane work.
 LAST_RUN_STATS: dict = {}
 
 #: Schema of the replayed events stream (events fixture after read_table's
@@ -182,7 +184,16 @@ def fast_checkpoint_dir() -> str:
     durable storage — the replay harness here has no durability
     requirement, so shared memory is the honest local equivalent.
     ``SPARK_GRAFT_STREAM_CKPT_DIR`` overrides the base (e.g. to durable
-    storage, or tmpfs on hosts where /dev/shm is unavailable)."""
+    storage, or tmpfs on hosts where /dev/shm is unavailable).
+
+    Two settings keep those commits cheap: the state width is capped at
+    the core count (``stream_conf``), so fewer delta files are written
+    per trigger, and ``session.get_spark`` selects the FileSystem-based
+    checkpoint manager, whose temp-file-then-rename commit forks no
+    ``readlink``/link-status shell command per file (the default
+    FileContext manager does when native libhadoop is absent). That
+    manager needs a single writer per dir, which the fresh name per run
+    gives."""
     import tempfile
 
     base = os.environ.get("SPARK_GRAFT_STREAM_CKPT_DIR")
@@ -206,6 +217,43 @@ def read_events_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def stream_conf(
+    spark: SparkSession,
+    state_partitions: int | None = 8,
+    extra_conf: dict[str, str] | None = None,
+):
+    """Session confs for one stream run, restored when the run ends.
+
+    ``state_partitions`` sets ``spark.sql.shuffle.partitions`` — the
+    stateful shuffle width — capped at ``defaultParallelism``. A stateful
+    query runs one state-store task per shuffle partition EVERY
+    micro-batch and commits one delta file per partition per operator, so
+    a width above the core count only adds waves of mostly-empty state
+    tasks: on 4 cores a width of 8 runs them in two waves and commits
+    twice the files of width 4, while widths 2 and 1 measured no faster
+    than 4. The width is fixed at the stream's first batch; batch queries
+    keep their tuning once the conf is restored.
+    ``None`` inherits the session value (production streams size this to
+    real key cardinality instead). Yields the effective width."""
+    overrides = dict(extra_conf or {})
+    if state_partitions is not None:
+        overrides["spark.sql.shuffle.partitions"] = str(
+            min(state_partitions, spark.sparkContext.defaultParallelism)
+        )
+    prev = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield int(spark.conf.get("spark.sql.shuffle.partitions"))
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
 def run_to_memory(
     stream_df: DataFrame,
     output_mode: str = "append",
@@ -217,47 +265,43 @@ def run_to_memory(
     trigger → real micro-batch sequence, watermarks advance batch to
     batch), sink to an in-memory table, return it as a DataFrame.
 
-    ``state_partitions`` temporarily overrides ``spark.sql.shuffle
-    .partitions`` for the stream: a stateful query runs one state-store
-    task per shuffle partition EVERY micro-batch, so replaying N batches at
-    the batch-tuned 32 partitions costs 32*N mostly-empty state tasks. The
-    stream's state partitioning is fixed at its first batch; the session
-    conf is restored right after the run so batch queries keep their
-    tuning. Pass ``None`` to inherit the session value (production streams
-    size this to real key cardinality instead).
+    ``state_partitions`` and ``extra_conf`` apply for the run only (see
+    ``stream_conf``): the state width is capped at the core count.
+    Checkpoint files go through the session's FileSystem-based
+    checkpoint manager (``session.get_spark``), so state-store commits
+    fork no ``readlink``/link-status shell command per file.
     """
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
     spark = stream_df.sparkSession
-    overrides: dict[str, str] = dict(extra_conf or {})
     # recentProgress keeps only the most recent N updates (default 100); a
     # replay with more micro-batches than that would silently undercount
     # LAST_RUN_STATS, so raise the cap well above any replay batch count.
-    overrides.setdefault("spark.sql.streaming.numRecentProgressUpdates", "4096")
-    if state_partitions is not None:
-        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
-    prev: dict[str, str | None] = {}
-    for k, v in overrides.items():
-        prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
+    overrides = {
+        "spark.sql.streaming.numRecentProgressUpdates": "4096",
+        **(extra_conf or {}),
+    }
     ckpt = fast_checkpoint_dir()
     try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with stream_conf(spark, state_partitions, overrides) as width:
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         # Bench introspection: how much of the wall time was micro-batch
         # harness cadence vs actual work. ``addBatch`` is the data-plane
         # execution inside each trigger; the rest of triggerExecution
         # (offset management, planning, commit) is fixed per-batch replay
         # overhead that scales with n_batches, not data volume.
+        # ``commit_ms`` is the state-store share of it.
         try:
             prog = list(q.recentProgress)
             dur = [p.get("durationMs", {}) or {} for p in prog]
+            ops = [op for p in prog for op in p.get("stateOperators") or []]
             LAST_RUN_STATS.clear()
             LAST_RUN_STATS.update(
                 {
@@ -268,6 +312,8 @@ def run_to_memory(
                     "trigger_s": round(
                         sum(d.get("triggerExecution", 0) for d in dur) / 1000.0, 3
                     ),
+                    "commit_ms": sum(op.get("commitTimeMs", 0) for op in ops),
+                    "state_partitions": width,
                 }
             )
         except Exception:
@@ -276,11 +322,6 @@ def run_to_memory(
         import shutil
 
         shutil.rmtree(ckpt, ignore_errors=True)
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
     return spark.table(name)
 
 
@@ -437,9 +478,6 @@ def foreach_batch_parquet_sink(
     writes + checkpointed offsets = effective exactly-once.
     """
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
@@ -448,19 +486,19 @@ def foreach_batch_parquet_sink(
 
     ckpt = fast_checkpoint_dir()
     try:
-        q = (
-            stream_df.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with stream_conf(spark, state_partitions):
+            q = (
+                stream_df.writeStream.foreachBatch(write_batch)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
         import shutil
 
         shutil.rmtree(ckpt, ignore_errors=True)
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def stream_interval_join(

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from pyspark_mllib_twitter_spark.plans import REGISTRY
 from pyspark_mllib_twitter_spark.plans.inference_ops import (
     ACF_MAX_LAG,
@@ -334,6 +336,17 @@ def test_kth_smallest_report_all_tied_short_circuits(spark):
     r2 = _kth_smallest_report(spark, mixed, "slope").collect()[0]
     # 51 zeros, 50 ones -> k = 51 -> median 0.0
     assert r2.n_pairs == 101 and r2.slope_per_day == 0.0
+
+
+def test_kth_smallest_report_rejects_nan(spark):
+    """A NaN makes the median undefined: fail loudly, never return the min."""
+    from pyspark_mllib_twitter_spark.plans.inference_ops import (
+        _kth_smallest_report,
+    )
+
+    slopes = spark.createDataFrame([(1.0,), (float("nan"),), (2.0,)], "slope double")
+    with pytest.raises(ValueError, match="NaN"):
+        _kth_smallest_report(spark, slopes, "slope")
 
 
 # ---------------------------------------------------------------------------

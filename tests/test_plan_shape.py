@@ -26,8 +26,6 @@ from pyspark_mllib_twitter_spark.operators import dedup
 from pyspark_mllib_twitter_spark.sources import read_table
 from pyspark_mllib_twitter_spark.sources.io import spread
 
-SF = "/root/testdata/sf0.001"
-
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -35,8 +33,8 @@ def _plan(df) -> str:
     )
 
 
-def test_no_inferred_generate_filter_pushdown(spark):
-    docs = spread(read_table(spark, SF, "documents")).select("doc_id", "text")
+def test_no_inferred_generate_filter_pushdown(spark, sf_smoke):
+    docs = spread(read_table(spark, sf_smoke, "documents")).select("doc_id", "text")
     grams = dedup.portable_shingles(docs, "doc_id", "text", 3)
     exploded = grams.select("doc_id", F.explode("grams").alias("g"))
     plan = _plan(exploded)

@@ -97,6 +97,28 @@ def test_stream_dedup_exactly_once(spark, events):
     assert real.select("event_id").distinct().count() == events.count()
 
 
+def test_stream_dedup_state_width_and_checkpoint_manager(spark, events, tmp_path):
+    """The dedup replay keeps exactly-once output with the state width
+    capped at the core count and checkpoints written through the
+    FileSystem-based manager (no per-file shell forks)."""
+    from pyspark_mllib_twitter_spark.streaming.streams import LAST_RUN_STATS
+
+    small = events.orderBy("event_id").limit(200)
+    d = replay_events_dir(
+        small, str(tmp_path), n_batches=3, flush_margin="60 days", duplicate_every=7
+    )
+    streamed = run_to_memory(
+        stream_dedup(read_events_stream(spark, d), watermark=WATERMARK)
+    )
+    real = streamed.filter(F.col("event_id") >= 0)
+    assert real.count() == real.select("event_id").distinct().count() == small.count()
+    assert 1 <= LAST_RUN_STATS["state_partitions"] <= spark.sparkContext.defaultParallelism
+    assert LAST_RUN_STATS["commit_ms"] >= 0
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+        ".FileSystemBasedCheckpointFileManager"
+    )
+
+
 def test_stateful_user_stats_match_batch(spark, events, replay_dir):
     streamed = run_to_memory(
         stateful_user_stats(read_events_stream(spark, replay_dir), watermark=WATERMARK),
@@ -647,9 +669,13 @@ def test_stream_minhash_delta_equals_batch_probe(spark, sf_smoke):
     non-overlapping in delta ids (each doc probed exactly once)."""
     from pyspark_mllib_twitter_spark.plans import REGISTRY
 
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    n_before = len(persisted())
     stream_rows = REGISTRY["q_stream_minhash_delta"].spark(
         spark, sf_smoke
     ).collect()
+    # the per-batch candidate checkpoints are released with the batch
+    assert len(persisted()) <= n_before
     batch_rows = REGISTRY["q_ef_minhash_delta_index"].spark(
         spark, sf_smoke
     ).collect()
