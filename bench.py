@@ -271,22 +271,11 @@ def main() -> int:
     ap.add_argument("--verbose", action="store_true")
     args = ap.parse_args()
 
+    from pyspark_mllib_twitter_spark.operators.iterate import ROUNDS as ITERATE_ROUNDS
     from pyspark_mllib_twitter_spark.plans import REGISTRY
     from pyspark_mllib_twitter_spark.plans.registry import base_name
     from pyspark_mllib_twitter_spark.session import get_spark
 
-    # The 64g heap win was measured by THIS harness on its 128 GiB box
-    # (session.py keeps a portable 32g default); explicit env still wins,
-    # and hosts without the headroom fall back to the portable default
-    # rather than requesting a heap the box can't give (round-6 advice).
-    try:
-        page = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-        host_gib = page / (1 << 30)
-    except (ValueError, OSError, AttributeError):
-        host_gib = 0.0
-    os.environ.setdefault(
-        "SPARK_GRAFT_DRIVER_MEM", "64g" if host_gib >= 96 else "32g"
-    )
     spark = get_spark("bench")
     sf_dir = args.sf_dir
 
@@ -454,6 +443,7 @@ def main() -> int:
     per_query: dict[str, float] = {}
     failures: dict[str, str] = {}
     streaming_stats: dict[str, dict] = {}
+    iterate_rounds: dict[str, list] = {}
     query_weather: dict[str, dict] = {}
     warmup_seconds = 0.0
     streaming_boundary_done = False
@@ -531,9 +521,12 @@ def main() -> int:
                 except Exception:
                     pass
             for _ in range(runs):
+                ITERATE_ROUNDS.clear()  # keep the last run's rounds only
                 t0 = time.perf_counter()
                 _execute(spec.spark(spark, sf_dir))
                 samples.append(time.perf_counter() - t0)
+            if ITERATE_ROUNDS:
+                iterate_rounds[name] = list(ITERATE_ROUNDS)
         except Exception as e:  # keep benching; a broken query is reported, not fatal
             failures[name] = f"{type(e).__name__}: {e}"
             if args.verbose:
@@ -553,7 +546,7 @@ def main() -> int:
                 query_weather[name] = {
                     "steal_pct": round(100.0 * qd["steal"] / q_total, 2),
                     "busy_pct": round(
-                        100.0 * (q_total - qd["idle"] - qd["iowait"]) / q_total, 2
+                        100.0 * (q_total - qd["idle"] - qd["iowait"] - qd["steal"]) / q_total, 2
                     ),
                 }
         if base_name(name).startswith("q_stream_"):
@@ -610,11 +603,14 @@ def main() -> int:
             detail["host_cpu"] = {
                 "steal_pct": round(100.0 * d["steal"] / total_ticks, 2),
                 "busy_pct": round(
-                    100.0 * (total_ticks - d["idle"] - d["iowait"]) / total_ticks, 2
+                    100.0 * (total_ticks - d["idle"] - d["iowait"] - d["steal"]) / total_ticks, 2
                 ),
             }
     if streaming_stats:
         detail["streaming"] = streaming_stats
+    if iterate_rounds:
+        # (round step, rounds run) per operators.iterate call of the entry
+        detail["iterate_rounds"] = iterate_rounds
     if query_weather:
         # Weather per >=5s entry (r14 verdict task 7) — see _cpu_ticks.
         detail["host_cpu_per_query"] = query_weather

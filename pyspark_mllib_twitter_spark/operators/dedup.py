@@ -20,6 +20,8 @@ Generalizes the reference's text-vectorize-and-compare pattern
 
 from __future__ import annotations
 
+import itertools
+
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -27,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions import vectors
+from .iterate import iterate
 
 
 # ---------------------------------------------------------------------------
@@ -119,12 +122,14 @@ def minhash_candidate_pairs(
     )
 
 
+#: Round cap for :func:`keep_one_representatives` (pointer jumping
+#: converges in O(log diameter) rounds) and how often it probes.
+_CC_MAX_ROUNDS = 20
+_CC_PROBE_EVERY = 2
+
+
 def keep_one_representatives(
-    pairs: DataFrame,
-    all_ids: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 20,
-    probe_every: int = 2,
+    pairs: DataFrame, all_ids: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Map every document to a duplicate-cluster representative (min id in
     its connected component), **run to fixpoint**.
@@ -140,9 +145,9 @@ def keep_one_representatives(
 
     Cost per round: 3 shuffles (edge join, min-agg, jump join). The
     convergence probe (inner join + limit-1 count) is a driver job, so it
-    runs only every ``probe_every`` rounds. ``max_iters`` is a safety cap;
-    hitting it without convergence warns. Returns ``(doc_id, rep_id)`` for
-    every id in ``all_ids``.
+    runs only every ``_CC_PROBE_EVERY`` rounds. The loop is
+    ``operators.iterate``, which raises if ``_CC_MAX_ROUNDS`` pass without
+    convergence. Returns ``(doc_id, rep_id)`` for every id in ``all_ids``.
 
     Correctness of the fixpoint: labels only decrease and never leave the
     component, so at a fixpoint every edge (u, v) has rep(u) == rep(v)
@@ -150,8 +155,6 @@ def keep_one_representatives(
     component, and the constant is the component min because the min node's
     label can never drop below itself.
     """
-    import warnings
-
     # Materialize the (often expensive) candidate-pair plan ONCE before the
     # symmetrize union — otherwise the union's two branches each re-evaluate
     # the upstream LSH/gram join, doubling its cost inside the checkpoint.
@@ -165,8 +168,8 @@ def keep_one_representatives(
     labels = all_ids.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("rep_id")
     ).localCheckpoint(eager=True)
-    converged = False
-    for it in range(max_iters):
+
+    def cc_round(labels: DataFrame, _: int) -> DataFrame:
         # Min over self and neighbors' labels.
         neighbor_labels = (
             edges.join(labels, edges.dst == labels.node)
@@ -184,29 +187,23 @@ def keep_one_representatives(
         lookup = propagated.select(
             F.col("node").alias("l_node"), F.col("rep_id").alias("l_rep")
         )
-        new_labels = (
-            propagated.join(lookup, propagated.rep_id == lookup.l_node, "left")
-            .select("node", F.coalesce("l_rep", "rep_id").alias("rep_id"))
-            .localCheckpoint(eager=True)  # cut lineage per iteration
+        return propagated.join(lookup, propagated.rep_id == lookup.l_node, "left").select(
+            "node", F.coalesce("l_rep", "rep_id").alias("rep_id")
         )
-        if (it + 1) % probe_every == 0 or it == max_iters - 1:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                .filter(F.col("n.rep_id") != F.col("o.rep_id"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                labels = new_labels
-                converged = True
-                break
-        labels = new_labels
-    if not converged:
-        warnings.warn(
-            f"keep_one_representatives hit max_iters={max_iters} before "
-            "converging; representatives may split long duplicate chains"
+
+    round_no = itertools.count(1)
+
+    def settled(old: DataFrame, new: DataFrame) -> bool:
+        return next(round_no) % _CC_PROBE_EVERY == 0 and (
+            new.alias("n")
+            .join(old.alias("o"), F.col("n.node") == F.col("o.node"))
+            .filter(F.col("n.rep_id") != F.col("o.rep_id"))
+            .limit(1)
+            .count()
+            == 0
         )
+
+    labels = iterate(labels, cc_round, _CC_MAX_ROUNDS, settled)
     return labels.select(F.col("node").alias(id_col), "rep_id")
 
 

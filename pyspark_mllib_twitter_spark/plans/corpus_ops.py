@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions import ordering as ORD
 from ..functions import text as TXT
+from ..operators.iterate import iterate
 from ..sources import read_table, spread
 from .registry import query
 
@@ -1465,22 +1466,19 @@ def q_yc_bfs_sssp(spark, sf_dir):
         # join + distinct from scratch (measured 17.8s -> ~5s at sf0.1).
         .localCheckpoint(eager=True)
     )
-    dist = spark.createDataFrame([(BFS_SOURCE, 0)], "node string, dist int")
-    frontier = dist.select("node")
-    for d in range(1, BFS_DEPTH + 1):
+
+    def bfs_level(dist: DataFrame, d: int) -> DataFrame:
+        frontier = dist.filter(F.col("dist") == d - 1).select("node")
         nxt = (
             edges.join(F.broadcast(frontier), edges.u == frontier.node)
             .select(F.col("v").alias("node"))
             .distinct()
         )
-        new = nxt.join(F.broadcast(dist.select("node")), "node", "left_anti").select(
-            "node", F.lit(d).alias("dist")
-        )
-        # Bound lineage growth across rounds (same discipline as the CC
-        # label-propagation loop in operators/dedup.py).
-        new = new.localCheckpoint(eager=True)
-        dist = dist.unionByName(new)
-        frontier = new.select("node")
+        new = nxt.join(F.broadcast(dist.select("node")), "node", "left_anti")
+        return dist.unionByName(new.select("node", F.lit(d).alias("dist")))
+
+    source = spark.createDataFrame([(BFS_SOURCE, 0)], "node string, dist int")
+    dist = iterate(source, bfs_level, BFS_DEPTH)
     return dist.select("node", F.col("dist").cast("bigint").alias("dist")).orderBy(
         "dist", "node"
     )
@@ -3829,45 +3827,41 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = 50) -> DataFrame
     Loop discipline — the PEEL pattern, distinct from the engine's other
     loops (pointer-jumping CC contracts labels, PageRank/BFS re-derive
     values; peeling REMOVES rows): each round computes degrees
-    (map-side-combinable agg over 2-int rows), drops low-degree nodes by
-    anti-joining the edge list on BOTH endpoints, and localCheckpoints
-    the shrunken edge list so lineage stays flat. The removed-node count
-    is the natural termination probe (one scalar per round, bounded
-    control state); rounds are data-dependent but bounded by the peel
-    depth (<= max node degree, in practice a handful).
+    (map-side-combinable agg over 2-int rows) and drops low-degree nodes
+    by anti-joining the edge list on BOTH endpoints. The low-degree count
+    of the peeled list is the termination probe (one scalar per round,
+    bounded control state); rounds are data-dependent but bounded by the
+    peel depth (<= max node degree, in practice a handful). The loop is
+    ``operators.iterate``: a peel cut short by ``max_rounds`` raises,
+    because a partially-peeled edge list is not a k-core.
 
     Scale: per-round cost shrinks monotonically (edges only leave);
     degree agg + two broadcast-able anti joins per round, digest-free.
     """
-    ed = edges.localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_rounds):
+
+    def low_degree(ed: DataFrame) -> DataFrame:
         deg = (
             ed.select(F.col("u").alias("node"))
             .unionByName(ed.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
-        low = deg.filter(F.col("deg") < k).select("node")
-        n_low = low.count()
-        if n_low == 0:
-            converged = True
-            break
-        ed = (
+        return deg.filter(F.col("deg") < k).select("node")
+
+    def peel(ed: DataFrame, _: int) -> DataFrame:
+        low = low_degree(ed)
+        return (
             ed.join(low.withColumnRenamed("node", "u"), "u", "left_anti")
             .join(low.withColumnRenamed("node", "v"), "v", "left_anti")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-    if not converged:
-        # A partially-peeled edge list is NOT a k-core (some survivors may
-        # still have degree < k) — returning it silently would hand callers
-        # a wrong graph. Peel depth is bounded by the degeneracy ordering
-        # length, so hitting this means max_rounds was set far too low.
-        raise RuntimeError(
-            f"kcore: fixpoint not reached within max_rounds={max_rounds}; "
-            "raise max_rounds (peel depth is data-dependent but finite)"
-        )
+
+    ed = iterate(
+        edges.localCheckpoint(eager=True),
+        peel,
+        max_rounds,
+        lambda _, ed: low_degree(ed).count() == 0,
+    )
     return (
         ed.select(F.col("u").alias("node"))
         .unionByName(ed.select(F.col("v").alias("node")))
@@ -4765,17 +4759,15 @@ def q_bc_weighted_sssp(spark, sf_dir):
         .unionByName(raw.select(F.col("su").alias("u"), F.col("cu").alias("v"), "w"))
         .localCheckpoint(eager=True)  # probed every round (the q_yc lesson)
     )
-    dist = spark.createDataFrame([(BFS_SOURCE, 0)], "node string, dist long")
-    for _ in range(SSSP_ROUNDS):
+
+    def relax(dist: DataFrame, _: int) -> DataFrame:
         relaxed = edges.join(F.broadcast(dist), edges.u == dist.node).select(
             F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)  # bound lineage across rounds
-        )
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    source = spark.createDataFrame([(BFS_SOURCE, 0)], "node string, dist long")
+    dist = iterate(source, relax, SSSP_ROUNDS)
     return dist.select("node", F.col("dist").cast("bigint").alias("dist")).orderBy(
         "dist", "node"
     )

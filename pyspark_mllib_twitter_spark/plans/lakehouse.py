@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate
 from ..sources import read_table
 from .registry import query
 
@@ -164,7 +165,7 @@ def q_xk_scd2_history(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# PageRank (fixed-iteration, deterministic)
+# PageRank (fixed rounds or to convergence, deterministic)
 # ---------------------------------------------------------------------------
 
 #: Damping factor and iteration count are FIXED so the oracle can unroll the
@@ -175,12 +176,22 @@ _PR_MOD = 100
 
 
 def pagerank(
-    edges: DataFrame, d: float = _PR_D, iters: int = _PR_ITERS
+    edges: DataFrame,
+    d: float = _PR_D,
+    iters: int = _PR_ITERS,
+    tol: float | None = None,
+    init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """Simplified PageRank (Page et al., "The PageRank Citation Ranking",
     1999 — public; no dangling-mass redistribution — mass that flows into
     a sink node leaves the system, the common simplification) on an
     ``(src, dst)`` edge DataFrame. Returns ``(node, rank)``.
+
+    Without ``tol`` it runs exactly ``iters`` rounds (the form an oracle
+    can unroll); with ``tol`` it runs to CONVERGENCE (max |Δrank| <
+    ``tol``, one scalar probe per round) and raises if ``iters`` rounds
+    pass first. ``init_ranks`` warm-starts from a previous run's output.
+    The loop is ``operators.iterate``.
 
     Distributed shape: edges are joined ONCE with out-degrees and cached —
     each iteration shuffles only ``(node, rank)`` pairs (16 bytes a row), so
@@ -205,8 +216,8 @@ def pagerank(
     # decimal-exact value an oracle engine computes, and the contract here
     # is bit-equal ranks before any rounding.
     teleport = F.expr(f"CAST(1.0 - {d!r} AS DOUBLE)") / F.lit(float(n_nodes))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for _ in range(iters):
+
+    def pagerank_round(ranks: DataFrame, _: int) -> DataFrame:
         contrib = (
             ed.join(ranks, ed.src == ranks.node)
             .select(
@@ -217,17 +228,27 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("contrib").cast("double").alias("inflow"))
         )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    teleport
-                    + F.lit(d) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
+        return nodes.join(contrib, "node", "left").select(
+            "node",
+            (teleport + F.lit(d) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias(
+                "rank"
+            ),
         )
-    return ranks
+
+    def converged(prev: DataFrame, new: DataFrame) -> bool:
+        delta = (
+            new.join(prev.withColumnRenamed("rank", "prev_rank"), "node")
+            .agg(F.max(F.abs(F.col("rank") - F.col("prev_rank"))))
+            .first()[0]
+        )
+        return delta is not None and delta < tol
+
+    ranks = (
+        init_ranks.select("node", "rank")
+        if init_ranks is not None
+        else nodes.withColumn("rank", F.lit(1.0 / n_nodes))
+    )
+    return iterate(ranks, pagerank_round, iters, converged if tol is not None else None)
 
 
 @query(
@@ -300,94 +321,16 @@ def q_xl_pagerank(spark, sf_dir):
     )
 
 
-def pagerank_converged(
-    edges: DataFrame,
-    d: float = _PR_D,
-    tol: float = 1e-6,
-    max_iters: int = 50,
-    init_ranks: DataFrame | None = None,
-) -> DataFrame:
-    """PageRank iterated to CONVERGENCE (max |Δrank| < ``tol``), the
-    production form of :func:`pagerank` whose fixed-iteration twin exists
-    for the unrollable oracle.
-
-    Loop discipline for unbounded iteration counts (same as the
-    pointer-jumping CC in operators/dedup.py): every round's ranks are
-    ``localCheckpoint(eager=True)``'d, truncating lineage so round N's plan
-    does not embed rounds 1..N-1 — without this the plan grows linearly,
-    analysis time super-linearly, and a convergence loop is unusable
-    (property-tested: plan size stays flat across 20 rounds,
-    tests/test_lakehouse.py). The convergence probe reuses the same
-    materialized frame: each round carries ``prev_rank`` so the delta is
-    ONE scalar aggregate on the just-checkpointed result — no extra join,
-    and the driver sees only a single float per round (bounded control
-    state, not data).
-
-    Scale: per-round shuffle stays (node, rank) pairs; the edge list with
-    out-degrees is checkpointed once (loop-invariant). Iterations are
-    sequential by nature — the 100 TB lever is per-round cost, which is
-    independent of round number here."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ed = edges.join(outdeg, "src").localCheckpoint(eager=True)
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    teleport = F.expr(f"CAST(1.0 - {d!r} AS DOUBLE)") / F.lit(float(n_nodes))
-    # init_ranks: warm start (resume from a previous run's output — what a
-    # periodically-refreshed production rank job does, and what lets the
-    # fixpoint property be tested with ONE extra round instead of a rerun).
-    ranks = (
-        init_ranks.select("node", "rank")
-        if init_ranks is not None
-        else nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    )
-    for _ in range(max_iters):
-        contrib = (
-            ed.join(ranks.select("node", "rank"), ed.src == F.col("node"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("outdeg")).cast("decimal(38,18)")
-                .alias("contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib").cast("double").alias("inflow"))
-        )
-        stepped = (
-            nodes.join(contrib, "node", "left")
-            .join(ranks.select("node", F.col("rank").alias("prev_rank")), "node")
-            .select(
-                "node",
-                (
-                    teleport + F.lit(d) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-                "prev_rank",
-            )
-            .localCheckpoint(eager=True)  # truncate lineage EVERY round
-        )
-        delta = stepped.agg(F.max(F.abs(F.col("rank") - F.col("prev_rank")))).first()[0]
-        ranks = stepped.drop("prev_rank")
-        if delta is not None and delta < tol:
-            break
-    return ranks
-
-
 @query("q_xl2_pagerank_converged")  # data-dependent iteration count -> rows-only
 def q_xl2_pagerank_converged(spark, sf_dir):
-    """PageRank run to convergence (tol=1e-4) on the same folded link graph
-    as ``q_xl_pagerank``. No SQL oracle by design — the iteration count is
-    data-dependent so the recurrence cannot be unrolled; instead the
-    property layer pins (a) bit-equality of the 3-iteration prefix to the
-    oracle-checked fixed twin, (b) the fixpoint property (one more
-    iteration moves no rank by >= tol), and (c) flat per-round plan size
-    (tests/test_lakehouse.py). tol=1e-4: convergence rate is ~d per round
-    (one decade per ~14 rounds at d=0.85), so this lands near 28 rounds —
-    deep enough to exercise the loop discipline, bounded enough to bench."""
+    """PageRank run to convergence (tol=1e-4, cap 40 rounds) on the same
+    folded link graph as ``q_xl_pagerank``. No SQL oracle by design — the
+    iteration count is data-dependent so the recurrence cannot be
+    unrolled; instead the property layer pins (a) the fixpoint property
+    (one more iteration moves no rank by >= tol) and (b) flat per-round
+    plan size (tests/test_lakehouse.py); the 3-round values of the same
+    :func:`pagerank` are oracle-checked by ``q_xl_pagerank``. The folded
+    graph is dense, so it converges in 1-3 rounds at sf0.001-0.1."""
     li = _t(spark, sf_dir, "lineitem")
     edges = (
         li.select(
@@ -398,7 +341,7 @@ def q_xl2_pagerank_converged(spark, sf_dir):
         .distinct()
     )
     return (
-        pagerank_converged(edges, tol=1e-4, max_iters=40)
+        pagerank(edges, iters=40, tol=1e-4)
         .select(
             F.col("node").cast("bigint").alias("node"),
             F.round("rank", 6).alias("rank"),
@@ -702,7 +645,7 @@ def hits_scores(edges: DataFrame, iters: int = HITS_ITERS) -> tuple:
 
     Scale shape: each half-step is one equi-join of the 2-int edge list
     with the current score vector plus one combinable sum — the same
-    join-per-iteration discipline as pagerank_converged; scores are
+    join-per-iteration discipline as pagerank; scores are
     localCheckpoint-pinned per round so the lineage stays constant-depth
     and each round's shuffles are not replayed by the next."""
     if iters < 1:

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate
 from ..sources import read_table
 from .registry import query
 
@@ -1767,13 +1768,11 @@ def q_d4_bradley_terry(spark, sf_dir):
         (2 * F.col("wij") + 1).cast("bigint").alias("wij"),
         (2 * F.col("nij") + 2).cast("bigint").alias("nij"),
     )
-    # The MM loop would otherwise double the logical plan per round
-    # (each iteration joins `e` twice against the previous p): pin the
-    # constant pair frame once and flatten p's lineage per round — the
-    # kcore/PageRank loop contract.
+    # Each MM round joins `e` twice against the previous p: pin the
+    # constant pair frame once; ``iterate`` flattens p's lineage per round.
     e = e.localCheckpoint(eager=True)
-    p = e.select("i").distinct().select("i", F.lit(1.0).alias("p"))
-    for _ in range(_BT_ITERS):
+
+    def mm_round(p, _):
         den = (
             e.join(p.withColumnRenamed("p", "pi"), "i")
             .join(
@@ -1783,11 +1782,13 @@ def q_d4_bradley_terry(spark, sf_dir):
             .groupBy("i")
             .agg(F.sum(F.expr(_BT_TERM)).cast("bigint").alias("den"))
         )
-        p = (
-            den.join(w, "i")
-            .select("i", F.expr(_BT_UPDATE).alias("p"))
-            .localCheckpoint(eager=True)
-        )
+        return den.join(w, "i").select("i", F.expr(_BT_UPDATE).alias("p"))
+
+    p = iterate(
+        e.select("i").distinct().select("i", F.lit(1.0).alias("p")),
+        mm_round,
+        _BT_ITERS,
+    )
     base = p.orderBy("i").limit(1).select(F.col("p").alias("p0"))
     return (
         p.join(w, "i")

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate
 from ..sources import read_table
 from .lakehouse import triangle_counts
 from .registry import query
@@ -3888,9 +3889,9 @@ def label_propagation(
 
     Loop discipline: the round state is ONE (node, label) table;
     each round = neighbor expansion (2|E| rows), a combinable
-    (node, label) count, a per-node argmax via max(struct(cnt,
-    -label)) — no window over the corpus — and a localCheckpoint to
-    keep lineage flat (the kcore/PageRank loop contract).
+    (node, label) count and a per-node argmax via max(struct(cnt,
+    -label)) — no window over the corpus. The loop is
+    ``operators.iterate``.
 
     Scale: each round shuffles (node, label) pairs keyed by node —
     2|E| rows, digest-width; rounds are a small constant.
@@ -3912,7 +3913,8 @@ def label_propagation(
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
+
+    def lpa_round(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             sym.join(
                 labels.withColumnRenamed("node", "nbr"), "nbr"
@@ -3922,7 +3924,7 @@ def label_propagation(
             .groupBy("node", "label")
             .agg(F.count("*").alias("cnt"))
         )
-        labels = (
+        return (
             votes.groupBy("node")
             .agg(
                 F.max(
@@ -3930,9 +3932,9 @@ def label_propagation(
                 ).alias("best")
             )
             .select("node", (-F.col("best.nl")).alias("label"))
-            .localCheckpoint(eager=True)
         )
-    return labels
+
+    return iterate(labels, lpa_round, rounds)
 
 
 @query("q_cz_lpa")

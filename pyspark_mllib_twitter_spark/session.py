@@ -15,6 +15,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_ram() -> str:
+    """Half of physical RAM as a JVM size string."""
+    return f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2 >> 20}m"
+
+
 def get_spark(
     app_name: str = "spark-twitter-engine",
     shuffle_partitions: int | None = None,
@@ -60,16 +65,17 @@ def get_spark(
         # Kryo kept for RDD-path parity with the reference
         # (COMP5349_2.py:121); Tungsten encoders dominate the DataFrame path.
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        # Default 32g: portable to ordinary dev machines. The bench harness
-        # (which measured the win on its 128 GiB box) exports
-        # SPARK_GRAFT_DRIVER_MEM=64g: the single-JVM local[32] session holds
-        # every executor's shuffle/broadcast blocks in ONE heap, and a
-        # 160+-query suite accumulates them (ContextCleaner frees on GC
-        # only). At 32g the full suite GC-thrashed whichever queries ran
-        # late (measured: q_ns_dedup_minhash 11.7s isolated, 77s late-suite;
-        # whole suite 423s); at 64g the same suite ran 360s with the
-        # late-suite spikes gone.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # Default: half of physical RAM, so the heap never outgrows the
+        # host (an oversized heap gets the JVM OOM-killed instead of
+        # collected). The single-JVM local session holds every executor's
+        # shuffle/broadcast blocks in ONE heap, and a 160+-query suite
+        # accumulates them (ContextCleaner frees on GC only): on a 128 GiB
+        # box the suite ran 423s at 32g with late-suite GC thrash and
+        # 360s at 64g, the half-RAM value. SPARK_GRAFT_DRIVER_MEM wins.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_ram(),
+        )
         # Whole-stage codegen emits one or more classes per query plan; a
         # 110-query suite fills the JVM's default code cache, after which
         # the JIT disables itself and iterative ML (ALS) runs interpreted

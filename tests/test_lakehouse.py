@@ -268,40 +268,30 @@ def test_rollup_state_empty_batch_merges_as_identity(spark):
     assert merged.count() == rollup_state(ev).count()
 
 
-def test_pagerank_converged_prefix_fixpoint_and_flat_plans(spark):
-    """pagerank_converged (the production loop): (a) with tol=0 its
-    3-iteration prefix is bit-equal to the oracle-checked fixed twin,
-    (b) at convergence one further iteration moves no rank by >= tol,
-    (c) per-round lineage is truncated — the analyzed-plan footprint of the
-    ranks frame stays FLAT over 20 rounds (the property that makes an
-    unbounded convergence loop usable; without localCheckpoint it grows
-    every round)."""
-    from pyspark_mllib_twitter_spark.plans.lakehouse import (
-        pagerank,
-        pagerank_converged,
-    )
-
+def test_pagerank_to_convergence_fixpoint_and_flat_plans(spark):
+    """pagerank run to convergence (``tol``): (a) at convergence one
+    further iteration moves no rank by >= tol, (b) per-round lineage is
+    truncated — the analyzed-plan footprint of the ranks frame stays FLAT
+    over many rounds (the property that makes an unbounded convergence
+    loop usable; without localCheckpoint it grows every round)."""
     edges = spark.createDataFrame(
         [(a, (a * 7 + b) % 23) for a in range(23) for b in (1, 2, 5) if a != (a * 7 + b) % 23],
         "src int, dst int",
     )
-    fixed = {r.node: r.rank for r in pagerank(edges, iters=3).collect()}
-    prefix_df = pagerank_converged(edges, tol=0.0, max_iters=3)
-    prefix = {r.node: r.rank for r in prefix_df.collect()}
-    assert prefix == fixed  # bit-equal, not approx: decimal sums both sides
+    prefix_df = pagerank(edges, iters=3)
 
-    # (b) fixpoint: converge, then warm-start ONE more round — no rank may
+    # (a) fixpoint: converge, then warm-start ONE more round — no rank may
     # move by tol or more (the loop's own exit criterion, re-verified from
     # the outside).
     tol = 1e-3
-    conv = pagerank_converged(edges, tol=tol, max_iters=30)
+    conv = pagerank(edges, iters=30, tol=tol)
     got = {r.node: r.rank for r in conv.collect()}
-    one_more = pagerank_converged(edges, tol=0.0, max_iters=1, init_ranks=conv)
+    one_more = pagerank(edges, iters=1, init_ranks=conv)
     stepped = {r.node: r.rank for r in one_more.collect()}
     assert set(got) == set(stepped)
     assert max(abs(got[n] - stepped[n]) for n in got) < tol
 
-    # (c) flat plan: a deep run's returned frame must be checkpoint-rooted —
+    # (b) flat plan: a deep run's returned frame must be checkpoint-rooted —
     # its analyzed plan no larger than the 3-round run's (no embedded
     # join-chain lineage growing with iteration count).
     plan_deep = conv._jdf.queryExecution().analyzed().toString()

@@ -156,21 +156,15 @@ def test_minhash_dedup_removes_exact_duplicates(documents):
 def test_keep_one_representatives_converges_on_chain(spark):
     """A path graph of 50 docs (diameter 49, far beyond the 20-round cap for
     plain propagation) converges to ONE representative WITHOUT hitting the
-    iteration cap — pointer jumping makes rounds O(log diameter), and the
-    convergence probe must actually fire (no warning)."""
-    import warnings
-
+    round cap (which raises) — pointer jumping makes rounds O(log
+    diameter), and the convergence probe must actually fire."""
     n = 50  # path graph 0-1-2-...-49
     pairs = spark.createDataFrame(
         [(i, i + 1, 0.0) for i in range(n - 1)], "id_a long, id_b long, d double"
     )
     all_ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        reps = dedup.keep_one_representatives(pairs, all_ids)
-        distinct_reps = {r.rep_id for r in reps.collect()}
-    assert distinct_reps == {0}
-    assert not [w for w in caught if "max_iters" in str(w.message)]
+    reps = dedup.keep_one_representatives(pairs, all_ids)
+    assert {r.rep_id for r in reps.collect()} == {0}
 
 
 def test_simhash_candidates_respect_hamming_bound(documents):
