@@ -619,31 +619,18 @@ def main() -> int:
     # Full per-query map: to a file and an EARLIER stdout line. The FINAL
     # line is a compact summary (<2 kB) because tail-capture harnesses keep
     # only the last ~2 kB of stdout — a single long line gets decapitated
-    # from the front and becomes unparseable.
-    detail_path = os.path.join(_REPO_DIR, "bench_detail.json")
+    # from the front and becomes unparseable. Each run writes its own file,
+    # named by core count and UTC time, so no run overwrites another.
+    stamp = time.strftime("%Y%m%dT%H%M%S", time.gmtime())
+    detail_path = os.path.join(
+        _REPO_DIR,
+        f"bench_detail_{spark.sparkContext.defaultParallelism}c_{stamp}.json",
+    )
     try:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1)
     except OSError:
         detail_path = None
-    # FULL-suite runs additionally snapshot to an immutable per-round file
-    # (bench_detail_r{N}.json, N = 1 + highest committed BENCH_r*.json) so
-    # per-query numbers survive later --only invocations overwriting
-    # bench_detail.json — round-over-round regressions stay attributable.
-    if detail_path and not args.only:
-        rounds = [
-            int(m.group(1))
-            for fn in os.listdir(_REPO_DIR)
-            if (m := re.match(r"BENCH_r(\d+)\.json$", fn))
-        ]
-        rnd = (max(rounds) if rounds else 0) + 1
-        try:
-            with open(
-                os.path.join(_REPO_DIR, f"bench_detail_r{rnd:02d}.json"), "w"
-            ) as f:
-                json.dump(detail, f, indent=1)
-        except OSError:
-            pass
     print(json.dumps(detail))
     summary = {
         "metric": "suite_seconds",

@@ -245,8 +245,18 @@ def portable_shingles(
     )
 
 
+#: The one portable-MinHash geometry: word 3-gram shingles, 16 hashes,
+#: 4 bands x 4 rows, pairs kept at Jaccard >= 0.5. Every portable recipe
+#: and its DuckDB oracle use it.
+SHINGLE_N = 3
+NUM_HASHES = 16
+BANDS = 4
+ROWS_PER_BAND = NUM_HASHES // BANDS
+MIN_JACCARD = 0.5
+
+
 def portable_minhash_signatures(
-    grams: DataFrame, id_col: str = "doc_id", num_hashes: int = 16
+    grams: DataFrame, id_col: str = "doc_id", num_hashes: int = NUM_HASHES
 ) -> DataFrame:
     """(id, sig): ``num_hashes``-slot MinHash signature over the ``grams``
     array column, portable md5 hashing only.
@@ -295,9 +305,7 @@ def portable_minhash_signatures(
     )
 
 
-def portable_band_keys(
-    sig: DataFrame, id_col: str = "doc_id", bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
+def portable_band_keys(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band_key): one LSH band key per (doc, band) from a portable
     MinHash signature — the band INDEX is folded into the key
     (``md5(band || '|' || slot values)``) so the banded equi-join needs a
@@ -306,12 +314,12 @@ def portable_band_keys(
     semantically identical to joining on (band_idx, band_key) separately —
     md5 collisions across band indexes are negligible — and portable:
     any ANSI engine reproduces the key bit-for-bit."""
-    r = rows_per_band
+    r = ROWS_PER_BAND
     return sig.select(
         F.col(id_col),
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda b: F.md5(
                     F.concat_ws("|", b.cast("string"), F.slice("sig", b * r + 1, r))
                 ),
@@ -320,14 +328,87 @@ def portable_band_keys(
     )
 
 
+def _band_keys(grams: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    return portable_band_keys(portable_minhash_signatures(grams, id_col), id_col)
+
+
+def minhash_band_table(docs: DataFrame) -> DataFrame:
+    """(lake_id, band_key) for every shingled doc of ``docs``
+    (``doc_id``, ``text``): the lake side of :func:`probe_band_table`,
+    persisted as an index or computed on the fly."""
+    grams = portable_shingles(docs, "doc_id", "text", SHINGLE_N)
+    return _band_keys(grams).withColumnRenamed("doc_id", "lake_id")
+
+
+def _jaccard_verify(
+    cand: DataFrame, grams_a: DataFrame, grams_b: DataFrame, min_jaccard: float
+) -> DataFrame:
+    """Candidate id pairs ``(a, b)`` -> ``(a, b, jaccard)`` at exact
+    shingle-set Jaccard >= ``min_jaccard``. ``grams_a`` and ``grams_b`` are
+    ``(id, grams)`` frames, joined to the candidates on ``a`` and ``b``."""
+    a, b = cand.columns
+    ga = grams_a.toDF(a, "g_a")
+    gb = grams_b.toDF(b, "g_b")
+    jac = F.size(F.array_intersect("g_a", "g_b")) / F.size(F.array_union("g_a", "g_b"))
+    return (
+        cand.join(ga, a)
+        .join(gb, b)
+        .select(a, b, jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= min_jaccard)
+    )
+
+
+def probe_band_table(
+    query: DataFrame, lake: DataFrame, lake_bands: DataFrame
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Asymmetric near-dup probe: ``(lake_id, query_id, jaccard)`` for every
+    (lake doc, query doc) pair that shares a band key and has exact
+    shingle Jaccard >= ``MIN_JACCARD``. ``query`` and ``lake`` are
+    ``(doc_id, text)``; ``lake_bands`` is the lake's
+    :func:`minhash_band_table`, either persisted (a bucketed index) or
+    computed on the fly. Returns the lazy pairs and the frames it pinned.
+
+    Shape, sized for a small ``query`` (a crawl batch, an eval set) against
+    a corpus-sized lake:
+
+    - the query side's band keys and shingles are broadcast, so the lake
+      side never shuffles;
+    - the distinct candidate pairs are pinned once with an eager
+      ``localCheckpoint``: both the id semi-join and the verify join read
+      them, and each would otherwise re-run the lake probe;
+    - only candidate lake docs are re-shingled, through a broadcast semi
+      join on their ids, so nothing corpus-sized is ever pinned.
+
+    Release the pins (``operators.iterate._release``) once the pairs have
+    run; the candidate checkpoint is eager, so building the frame runs the
+    probe as a job."""
+    q_grams = portable_shingles(query, "doc_id", "text", SHINGLE_N).localCheckpoint(
+        eager=False
+    )
+    q_bands = _band_keys(q_grams).withColumnRenamed("doc_id", "query_id")
+    cand = (
+        lake_bands.join(F.broadcast(q_bands), "band_key")
+        .select("lake_id", "query_id")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    cand_ids = cand.select(F.col("lake_id").alias("doc_id")).distinct()
+    lake_grams = portable_shingles(
+        lake.join(F.broadcast(cand_ids), "doc_id", "left_semi"),
+        "doc_id",
+        "text",
+        SHINGLE_N,
+    )
+    pairs = _jaccard_verify(cand, lake_grams, F.broadcast(q_grams), MIN_JACCARD)
+    return pairs, [q_grams, cand]
+
+
 def minhash_pairs_portable(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 1,
-    num_hashes: int = 16,
-    bands: int = 8,
-    min_jaccard: float = 0.5,
+    shingle_n: int = SHINGLE_N,
+    min_jaccard: float = MIN_JACCARD,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup pairs with PORTABLE hashing — no MLlib,
     no Python: every step is a codegen'd JVM expression built from md5, which
@@ -336,59 +417,28 @@ def minhash_pairs_portable(
     seeded hash family), the whole pipeline is value-checkable against a SQL
     oracle — candidate generation included, not just the verify step.
 
-    Signature: each seed ``g`` hashes every shingle once —
-    ``md5(g || '|' || s)`` — and the digest's four 8-hex-char quarters act
-    as four independent 32-bit hash functions (the Kirsch-Mitzenmacher
-    observation: k hashes derived from few base hashes preserve MinHash
-    accuracy), so 16 signature slots cost only ``num_hashes/4`` md5 passes
-    per shingle. A fixed-width lowercase-hex string's lexicographic order
-    IS its numeric order, so ``array_min`` over quarters is a valid
-    min-hash. Banding: ``bands`` keys of ``num_hashes/bands`` consecutive
-    signature slots, each re-hashed to one md5; two docs are candidates iff
-    they agree on >= 1 band key (an equi-join — shuffle scales with
-    duplicate density, not ``|docs|^2``). Every candidate is then verified
-    with the EXACT shingle-set Jaccard, so banding affects recall only,
-    never precision.
+    Signatures and band keys are :func:`portable_minhash_signatures` and
+    :func:`portable_band_keys` at the module geometry; two docs are
+    candidates iff they agree on >= 1 band key (an equi-join — shuffle
+    scales with duplicate density, not ``|docs|^2``). Every candidate is
+    then verified with the EXACT shingle-set Jaccard, so banding affects
+    recall only, never precision.
 
     Scale shape: the banded self-join shuffles (id, 32-byte key) rows only;
     shingle arrays travel only for candidate ids (the two closing hash
     joins) and are cached across their three uses (signature + both verify
-    sides — same discipline as the MLlib variant's featurized cache; at
-    warehouse scale this is a persisted intermediate). Bucket skew is
-    bounded because md5 collisions beyond true near-dups are negligible.
-    Output: ``(id_a, id_b, jaccard)``, id_a < id_b.
+    sides). Output: ``(id_a, id_b, jaccard)``, id_a < id_b.
     """
-    if num_hashes % bands:
-        raise ValueError(f"num_hashes {num_hashes} not divisible by bands {bands}")
-    r = num_hashes // bands
     grams = portable_shingles(docs, id_col, text_col, shingle_n).cache()
-    sig = portable_minhash_signatures(grams, id_col, num_hashes)
-    banded = sig.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.md5(F.concat_ws("|", F.slice("sig", b * r + 1, r))),
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_key")
+    banded = _band_keys(grams, id_col)
     cand = (
-        a.join(b, ["band_idx", "band_key"])
+        banded.toDF("id_a", "band_key")
+        .join(banded.toDF("id_b", "band_key"), "band_key")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    ga = grams.select(F.col(id_col).alias("id_a"), F.col("grams").alias("g_a"))
-    gb = grams.select(F.col(id_col).alias("id_b"), F.col("grams").alias("g_b"))
-    jac = F.size(F.array_intersect("g_a", "g_b")) / F.size(F.array_union("g_a", "g_b"))
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
+    return _jaccard_verify(cand, grams, grams, min_jaccard)
 
 
 # ---------------------------------------------------------------------------

@@ -583,7 +583,7 @@ def build_ivfpq_index(
     ``max_dirs`` bounds the DIRECTORY count for large-``n_centroids``
     geometries (the measured linear-in-C probe cost is parquet file
     LISTING over one-directory-per-cell, re-paid by every probe's fresh
-    file index — tools/exp_ann_index_scale.py + BENCHNOTES r13, the
+    file index — BENCHNOTES.md, Round 13, the
     small-files problem, not plan literals): cells are grouped into
     ``centroid_id % max_dirs`` partition directories with files
     CENTROID-SORTED inside, so a probe prunes directories by group and

@@ -1688,13 +1688,13 @@ def q_ek_bpe_apply(spark, sf_dir):
     stream and partial-aggregated per doc. At 100 TB the corpus scan
     dominates and the encode cost is amortized over every occurrence of
     a word; encoding per-occurrence multiplies the merge-chain work by
-    the corpus/vocab ratio. Measured A/B (tools/exp_bpe_apply_scale.py,
-    BENCHNOTES r13): the chain is cheap on short words, so the
-    wall-clock crossover sits at ~1-2M occurrences on local[32] (3.19s
-    vs 3.97s at 2.7M, gap widening monotonically with corpus growth;
-    the tiny encode side auto-broadcasts, so the join back is
-    map-side) — below that the plans tie; at real vocab/occurrence
-    ratios the per-occurrence chain dominates far harder.
+    the corpus/vocab ratio. Measured A/B (BENCHNOTES.md, Round 13): the
+    chain is cheap on short words, so the wall-clock crossover sits at
+    ~1-2M occurrences on local[32] (3.19s vs 3.97s at 2.7M, gap widening
+    monotonically with corpus growth; the tiny encode side
+    auto-broadcasts, so the join back is map-side) — below that the
+    plans tie; at real vocab/occurrence ratios the per-occurrence chain
+    dominates far harder.
 
     Value check: the DuckDB oracle executes the IDENTICAL greedy reduce
     per merge (generated from the same ``BPE_APPLY_MERGES`` constant),
@@ -4419,7 +4419,7 @@ def q_b3_containment_join(spark, sf_dir):
     x docs rows, one shuffle), which is why the symmetric join stays the
     default when inclusion semantics aren't needed.
 
-    Semi-prune experiment (measured, r9+r10, tools/exp_b3_skew.py): a
+    Semi-prune experiment (measured, BENCHNOTES.md, Round 10): a
     BROADCAST semi-join of the B-full index against the distinct
     A-prefix grams is ~neutral on the natural fixture (warm 10.6s vs
     10.2s plain) and wins ~1.5-2x on a skewed vocabulary (one hot gram

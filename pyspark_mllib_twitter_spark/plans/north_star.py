@@ -350,7 +350,9 @@ def q_ns_dedup_minhash(spark, sf_dir):
 
 #: Portable-MinHash pair CTE chain, shared by the pairs entry and the
 #: end-to-end dedup entry (must mirror operators.dedup.minhash_pairs_portable
-#: at shingle_n=3, num_hashes=16, bands=4, min_jaccard=0.5 exactly).
+#: at its geometry and min_jaccard=0.5 exactly; the oracle joins on
+#: (band_idx, band_key), the recipe on the folded key — equal up to md5
+#: collisions).
 _MINHASH_PAIRS_CTES = r"""
     g AS (
       SELECT doc_id, grams FROM (
@@ -408,10 +410,7 @@ def q_ns_minhash_portable(spark, sf_dir):
     90k for unigrams — word-shuffled dups are ``q_ns_jaccard_pairs``'s job;
     LSH showcases the banded candidate cut, which needs a sparse pair
     set)."""
-    pairs = dedup.minhash_pairs_portable(
-        spread(_docs(spark, sf_dir)),
-        shingle_n=3, num_hashes=16, bands=4, min_jaccard=0.5,
-    )
+    pairs = dedup.minhash_pairs_portable(spread(_docs(spark, sf_dir)))
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -446,9 +445,7 @@ def q_ns_minhash_dedup_e2e(spark, sf_dir):
     as ``q_x6_cc_clusters`` but over LSH-verified near-dup edges instead of
     gram-block edges — the composition a production fuzzy-dedup runs."""
     d = spread(_docs(spark, sf_dir))
-    pairs = dedup.minhash_pairs_portable(
-        d, shingle_n=3, num_hashes=16, bands=4, min_jaccard=0.5
-    )
+    pairs = dedup.minhash_pairs_portable(d)
     reps = dedup.keep_one_representatives(
         pairs.select("id_a", "id_b"), d.select("doc_id"), "doc_id"
     )
@@ -557,9 +554,9 @@ def q_ns_ann_ivfpq_idx(spark, sf_dir):
     tests/test_properties.py). Results are bit-identical to the in-memory
     q_ns_ann_ivfpq at the same parameters (tested).
 
-    Measured scale curve (tools/exp_ann_index_scale.py, corpus grown
+    Measured scale curve (BENCHNOTES.md, Round 13: corpus grown
     1x/10x/30x/100x with distinct rotated/sign-flipped replicas, fixed
-    10-query batch, BENCHNOTES r13): at this entry's FIXED geometry
+    10-query batch): at this entry's FIXED geometry
     (16 centroids, n_probe=8) the probe is FLAT (2.3-3.1s) through
     100x — overhead-bound at local scale, with the read bounded to
     n_probe/n_centroids of the corpus by the pruning. The

@@ -1167,25 +1167,9 @@ def build_chunk_fp_index(
     from ..operators.cdc import cdc_chunks
     from ..sources.bucketing import write_bucketed
 
-    # The table name is deterministic, so a previous SESSION may have left
-    # its warehouse directory behind while this session's in-memory catalog
-    # has never heard of the table — saveAsTable then refuses with
-    # LOCATION_ALREADY_EXISTS. Drop the catalog entry AND any orphaned
-    # location (local-mode warehouse is a file: path; with a real metastore
-    # the DROP alone is sufficient and the rmtree is a no-op).
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    if warehouse.startswith("file:"):
-        import shutil
-        from urllib.parse import urlparse
-
-        path = urlparse(warehouse).path
-        shutil.rmtree(f"{path}/{table}", ignore_errors=True)
-
     kw = dict(avg_size=CDC_AVG, min_size=CDC_MIN, max_size=CDC_MAX)
     fps = cdc_chunks(docs, **kw).select(F.md5("chunk").alias("fp")).distinct()
-    write_bucketed(fps, table, ["fp"], n_buckets)
-    return spark.table(table)
+    return write_bucketed(fps, table, ["fp"], n_buckets)
 
 
 @query("q_xg_chunk_dedup_bucketed", oracle=_chunk_dedup_oracle())
@@ -2076,11 +2060,10 @@ def q_dy_blocklist_suffix(spark, sf_dir):
     map-only hash probe — no shuffle of the corpus at all; the per-doc
     longest-rule pick is a partial-aggregable max over a (length, rule)
     struct. The filter composes as an anti-join of the corpus against
-    this output. MEASURED ceiling (BENCHNOTES round 11,
-    tools/exp_blocklist_scale.py, warm medians): the rules-broadcast is
-    rule-count-flat through ~1M rules, build-dominated past that (3.0s
-    at 4M/~100 MB, 11.3s at 16M/~400 MB vs 0.7-1.6s for the forced
-    shuffle). Past the ceiling, FORCE the shuffle (threshold=-1 or a
+    this output. MEASURED ceiling (BENCHNOTES.md, Round 11, warm
+    medians): the rules-broadcast is rule-count-flat through ~1M rules,
+    build-dominated past that (3.0s at 4M/~100 MB, 11.3s at 16M/~400 MB
+    vs 0.7-1.6s for the forced shuffle). Past the ceiling, FORCE the shuffle (threshold=-1 or a
     MERGE hint) — left alone the planner flips the broadcast to the
     corpus fan-out side, which only works when the probe side is small
     and never at 100 TB; the forced shuffle still moves only the short
@@ -2377,7 +2360,7 @@ def q_eb_path_blocklist(spark, sf_dir):
 #: ~27 words, so the six terms below flag a non-vacuous ~20% token share; a
 #: production lexicon (toxicity / brand-safety word lists, the C4 "bad
 #: words" filter, Raffel et al. 2020 §2.2, public) carries thousands of
-#: terms. MEASURED ceiling (tools/exp_flag_lexicon_scale.py, sf0.1): the
+#: terms. MEASURED ceiling (BENCHNOTES.md, Round 12, sf0.1): the
 #: compiled-expression shape wins only to ~1k terms — its cost is linear
 #: in N on the DRIVER (py4j literal construction + plan serialization:
 #: 0.9s at 1k, 5.8s at 10k, 63s at 100k) while the broadcast token join
@@ -2486,7 +2469,7 @@ def q_ee_flag_term_gate(spark, sf_dir):
     Scale shape: the lexicon compiles into the scan expression (array
     filter + IN over six terms) — map-only, no explode, no join, no
     shuffle; output is doc-grain. 100 TB = one scan. MEASURED ceiling
-    (tools/exp_flag_lexicon_scale.py): the compiled expression wins only
+    (BENCHNOTES.md, Round 12): the compiled expression wins only
     to ~1k terms — its cost grows linearly in lexicon size on the driver
     (literal construction + plan serialization, 63s at 100k) — so larger
     lexicons switch to a broadcast token join (the q_dy shape, ~flat
@@ -2564,43 +2547,24 @@ def minhash_delta_fixture(spark, sf_dir):
     return lake, delta
 
 
-def build_minhash_band_index(spark, sf_dir, lake, suffix: str = ""):
-    """Persist the lake's LSH band table hash-bucketed on ``band_key`` and
-    return the index DataFrame. Rebuilt each run for determinism; a
-    production pipeline writes it once per corpus version. Same
-    drop-table + orphaned-location hygiene as build_chunk_fp_index.
-
-    The lake shingles are NOT cached or returned (r14 verdict #1: the old
-    session-lifetime ``lake_grams.cache()`` pinned a corpus-sized table —
-    the exact 100 TB anti-pattern q_em had just shed): the band build
-    scans them once into the persisted table, and probe-time Jaccard
-    verifies re-shingle CANDIDATE lake docs only, via a broadcast semi
-    join on the probe's id set (the q_em candidate-pruned recipe — see
-    q_ef below / q_stream_minhash_delta)."""
+def build_minhash_band_index(sf_dir, lake, suffix: str = ""):
+    """Persist the lake's LSH band table (``dedup.minhash_band_table``)
+    hash-bucketed on ``band_key`` and return the index DataFrame. Rebuilt
+    each run for determinism; a production pipeline writes it once per
+    corpus version. The lake shingles are not kept: the probe re-shingles
+    candidate lake docs only (``dedup.probe_band_table``)."""
     import re as _re
 
     from ..operators import dedup
     from ..sources.bucketing import write_bucketed
 
-    lake_grams = dedup.portable_shingles(lake, "doc_id", "text", 3)
-    lake_bands = dedup.portable_band_keys(
-        dedup.portable_minhash_signatures(lake_grams, "doc_id", 16), "doc_id", 4, 4
-    )
     tag = _re.sub(r"\W+", "_", sf_dir).strip("_")
-    table = f"minhash_band_index_{tag}{suffix}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    if warehouse.startswith("file:"):
-        import shutil
-        from urllib.parse import urlparse
-
-        shutil.rmtree(
-            f"{urlparse(warehouse).path}/{table}", ignore_errors=True
-        )
-    write_bucketed(
-        lake_bands.withColumnRenamed("doc_id", "lake_id"), table, ["band_key"], 8
+    return write_bucketed(
+        dedup.minhash_band_table(lake),
+        f"minhash_band_index_{tag}{suffix}",
+        ["band_key"],
+        8,
     )
-    return spark.table(table)
 
 
 #: One oracle, two engines' worth of entries: the batch probe (q_ef) and
@@ -2646,71 +2610,20 @@ def q_ef_minhash_delta_index(spark, sf_dir):
     persistence must not change the answer, the q_xg contract).
 
     Scale shape: the index write pays the lake's signature scan ONCE per
-    corpus version; the probe shuffles ONLY the delta batch's (id,
-    32-byte key) rows — the index side is read bucket-aligned with no
-    exchange (write_bucketed on band_key, the single join column: band
-    index is FOLDED into the key precisely so the bucket clustering
-    covers the whole join condition). Verification joins move shingle
-    arrays for candidate ids only. At 100 TB the lake index dwarfs any
-    daily batch, so which side re-shuffles is the whole cost model.
-    Measured (tools/exp_minhash_index_scale.py, lake grown 30x under a
-    fixed delta batch): the banded candidate probe is FLAT in lake size
-    (~0.3-0.5s at every scale) while index build grows ~linearly — the
-    persisted-index claim, confirmed. In a probe-ONLY session (index
-    exists, lake grams not cached) the Jaccard verify additionally pays
-    an id-filtered lake TEXT fetch; the round-13 remedy
-    (``sources/layout.write_zone_sorted`` + ``fetch_by_ids``: lake
-    written doc_id-RANGE-SORTED, the bounded candidate id list pushed
-    as a literal In filter that footer stats prune) makes that fetch
-    FLAT too — measured 1.2-1.3s at every lake scale vs 1.3→6.6s
-    growing on the unsorted layout (30x: 6.58s → 1.32s, BENCHNOTES
-    r13).
-
-    Memory shape (r14 verdict #1 — r15 fix): NO corpus-sized pin
-    anywhere. The old shape cached the lake shingles for the session
-    (and never unpersisted them in the batch path); now the verify side
-    re-shingles ONLY candidate lake docs via a broadcast semi join, and
-    the one pinned intermediate is the PROBE-SIZED candidate pair table
-    (``localCheckpoint`` — note: eager, so building this DataFrame runs
-    the delta band pass + index probe as a job at construction time;
-    the q_em discipline, see tools/dump_plans.py). The delta shingles
-    cache is bounded by the crawl batch, never the corpus — the q_em
-    ``ev_grams`` class of pin."""
+    corpus version; each crawl batch runs the shared asymmetric probe
+    (``dedup.probe_band_table``) against the persisted index, so the index
+    side never re-shuffles. At 100 TB the lake index dwarfs any daily
+    batch, so which side re-shuffles is the whole cost model. Measured
+    (BENCHNOTES.md, Round 12: lake grown 30x under a fixed delta batch):
+    the banded candidate probe is FLAT in lake size while index build
+    grows ~linearly."""
     from ..operators import dedup
 
     lake, delta = minhash_delta_fixture(spark, sf_dir)
-    idx = build_minhash_band_index(spark, sf_dir, lake)
-
-    delta_grams = dedup.portable_shingles(delta, "doc_id", "text", 3).cache()
-    delta_bands = dedup.portable_band_keys(
-        dedup.portable_minhash_signatures(delta_grams, "doc_id", 16), "doc_id", 4, 4
-    ).withColumnRenamed("doc_id", "delta_id")
-    # Probe-sized; referenced twice (the id semi-join and the verify
-    # join) — each reference would otherwise re-run the delta band pass
-    # and the index probe join.
-    cand = (
-        delta_bands.join(idx, "band_key")
-        .select("lake_id", "delta_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cand_ids = cand.select(F.col("lake_id").alias("doc_id")).distinct()
-    lake_cand = lake.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    gl = dedup.portable_shingles(lake_cand, "doc_id", "text", 3).select(
-        F.col("doc_id").alias("lake_id"), F.col("grams").alias("g_l")
-    )
-    gd = delta_grams.select(
-        F.col("doc_id").alias("delta_id"), F.col("grams").alias("g_d")
-    )
-    jac = F.size(F.array_intersect("g_l", "g_d")) / F.size(
-        F.array_union("g_l", "g_d")
-    )
-    return (
-        cand.join(gl, "lake_id")
-        .join(gd, "delta_id")
-        .select("lake_id", "delta_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
-        .orderBy("lake_id", "delta_id")
+    idx = build_minhash_band_index(sf_dir, lake)
+    pairs, _ = dedup.probe_band_table(delta, lake, idx)
+    return pairs.withColumnRenamed("query_id", "delta_id").orderBy(
+        "lake_id", "delta_id"
     )
 
 
@@ -2790,21 +2703,13 @@ def q_em_fuzzy_decontaminate(spark, sf_dir):
     The token-REVERSED negative controls (same vocabulary, zero shared
     3-grams) prove the probe's precision: they must come back clean.
 
-    Spark shape: the asymmetric probe broadcast-joins the (tiny) eval
-    side's band keys against the lake's — at 100 TB the lake never
-    re-shuffles for an eval audit (same economics as q_ef's persisted
-    index; a recurring audit would persist the band table and reuse it
-    verbatim). Verification fetches lake shingles for candidate ids
-    only; argmax match is an exact (max, then min-id) two-step, no
+    Spark shape: the shared asymmetric probe (``dedup.probe_band_table``)
+    against lake band keys computed on the fly; the eval side is the
+    broadcast query side, so at 100 TB the lake never re-shuffles for an
+    eval audit (a recurring audit would persist the band table, as q_ef
+    does). The argmax match is an exact (max, then min-id) two-step, no
     window over the corpus. The DuckDB oracle replays the identical md5
-    pipeline, so flags, counts, AND jaccards are value-checked.
-
-    NOTE (r14 advice #4): the candidate pin below is
-    ``localCheckpoint(eager=True)`` — BUILDING this query's DataFrame runs
-    the lake minhash/band pipeline as a job at construction time (plan
-    dumps of this entry are not job-free, see tools/dump_plans.py), and
-    the checkpoint severs lineage, so an external unpersist of persistent
-    RDDs invalidates later reuse of the returned frame (rebuild instead)."""
+    pipeline, so flags, counts, AND jaccards are value-checked."""
     from ..operators import dedup
 
     lake = spread(_docs(spark, sf_dir)).select("doc_id", "text")
@@ -2817,61 +2722,14 @@ def q_em_fuzzy_decontaminate(spark, sf_dir):
         F.concat_ws(" ", F.reverse(TXT.tokens("text"))).alias("text"),
     )
     ev = tainted.unionByName(clean)
-
-    # NOT cached: lake shingles are corpus-sized — pinning them for the
-    # session is exactly the 100 TB anti-pattern (r13 advice). The band
-    # pass shingles the lake once; the verify side below re-shingles ONLY
-    # the candidate train docs (a probe-bounded semi join on the raw
-    # lake), so dropping the cache costs one bounded re-tokenize, not a
-    # second corpus pass (r14 measured: cache-pinned 3.1s, uncached
-    # full re-shingle 11.0s, this candidate-pruned shape ~3s solo). The
-    # EVAL side below IS cached: bounded by the eval set, never
-    # corpus-scale.
-    lake_grams = dedup.portable_shingles(lake, "doc_id", "text", 3)
-    lake_bands = dedup.portable_band_keys(
-        dedup.portable_minhash_signatures(lake_grams, "doc_id", 16), "doc_id", 4, 4
-    ).withColumnRenamed("doc_id", "train_id")
-    ev_grams = dedup.portable_shingles(ev, "doc_id", "text", 3).cache()
-    ev_bands = dedup.portable_band_keys(
-        dedup.portable_minhash_signatures(ev_grams, "doc_id", 16), "doc_id", 4, 4
-    ).withColumnRenamed("doc_id", "eval_id")
-
-    # Materialize the PROBE-SIZED candidate pair table once: it is
-    # referenced twice (the id semi-join below and the verify join), and
-    # each reference would otherwise re-run the whole lake minhash/band
-    # pipeline (r14 measured: 13.0s solo uncheckpointed vs ~3s). A
-    # localCheckpoint of the candidate pairs is bounded by the probe —
-    # the RIGHT thing to pin, unlike the corpus-sized lake_grams cache
-    # this replaces (r13 advice).
-    cand = (
-        lake_bands.join(F.broadcast(ev_bands), "band_key")
-        .select("train_id", "eval_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cand_ids = cand.select(F.col("train_id").alias("doc_id")).distinct()
-    lake_cand = lake.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    gl = dedup.portable_shingles(lake_cand, "doc_id", "text", 3).select(
-        F.col("doc_id").alias("train_id"), F.col("grams").alias("g_l")
-    )
-    ge = ev_grams.select(
-        F.col("doc_id").alias("eval_id"), F.col("grams").alias("g_e")
-    )
-    jac = F.size(F.array_intersect("g_l", "g_e")) / F.size(
-        F.array_union("g_l", "g_e")
-    )
+    pairs, _ = dedup.probe_band_table(ev, lake, dedup.minhash_band_table(lake))
+    matches = pairs.toDF("train_id", "eval_id", "jaccard")
     # ONE aggregation computes count, max jaccard AND the min-id argmax:
     # max(struct(jaccard, -train_id)) picks the highest jaccard and, among
     # exact-double ties, the LARGEST -train_id = smallest train_id — the
     # identical (max, then min-id) two-step the oracle runs, without the
     # previous matches.cache() + self-join-on-agg (2 extra exchanges and a
     # session-lifetime cache pin, r13 advice).
-    matches = (
-        cand.join(gl, "train_id")
-        .join(F.broadcast(ge), "eval_id")
-        .select("eval_id", "train_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
-    )
     agg = matches.groupBy("eval_id").agg(
         F.count("*").cast("bigint").alias("n_matches"),
         F.max(F.struct(F.col("jaccard"), (-F.col("train_id")).alias("neg_id")))

@@ -637,18 +637,17 @@ def q_stream_minhash_delta(spark, sf_dir):
     the whole-delta batch probe: this entry shares q_ef's DuckDB oracle
     VERBATIM and is hash-checked, not rows-only.
 
-    Scale: per trigger the stream side shuffles only that batch's
-    (id, 32-byte band key) rows; the index side stays bucket-aligned
-    with no exchange (q_ef's plan-asserted contract); verification
-    fetches lake shingles for candidate ids only. A 100 TB lake serves
-    a continuous crawl with per-batch cost proportional to the batch,
-    never the lake."""
+    Each batch runs the shared asymmetric probe
+    (``dedup.probe_band_table``) against the persisted index and releases
+    its pins once its partition is written, so per-batch cost and memory
+    follow the batch, never the lake."""
     import hashlib
     import os as _os
     import shutil
     import tempfile
 
     from ..operators import dedup
+    from ..operators.iterate import _release
     from .pipeline_ops import build_minhash_band_index, minhash_delta_fixture
 
     lake, _ = minhash_delta_fixture(spark, sf_dir)
@@ -657,7 +656,7 @@ def q_stream_minhash_delta(spark, sf_dir):
     # fresh process, so sharing q_ef's build would only help same-session
     # suites while coupling this entry's correctness to q_ef's execution
     # order (round-13 review: deliberate duplication, not an oversight).
-    idx = build_minhash_band_index(spark, sf_dir, lake, suffix="_stream")
+    idx = build_minhash_band_index(sf_dir, lake, suffix="_stream")
 
     replay = _delta_docs_replay_dir(spark, sf_dir)
     digest = hashlib.sha1(_os.path.abspath(sf_dir).encode()).hexdigest()[:12]
@@ -673,54 +672,14 @@ def q_stream_minhash_delta(spark, sf_dir):
     )
 
     def probe_batch(batch_df, batch_id: int) -> None:
-        # Cache the batch's shingles: the plan consumes them twice (band
-        # keys -> candidates, and the Jaccard-verify side) and would
-        # otherwise re-tokenize the batch per consumer (round-13 review).
-        grams = dedup.portable_shingles(batch_df, "doc_id", "text", 3).cache()
-        cand = None
+        pairs, pins = dedup.probe_band_table(batch_df, lake, idx)
         try:
-            bands = dedup.portable_band_keys(
-                dedup.portable_minhash_signatures(grams, "doc_id", 16),
-                "doc_id",
-                4,
-                4,
-            ).withColumnRenamed("doc_id", "delta_id")
-            # Batch-probe-sized candidates, pinned once per batch (the
-            # q_em/q_ef recipe — r14 verdict #1): referenced by the id
-            # semi-join and the verify join; the verify side re-shingles
-            # ONLY candidate lake docs instead of reading a session-pinned
-            # corpus-sized lake_grams cache.
-            cand = (
-                bands.join(idx, "band_key")
-                .select("lake_id", "delta_id")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            cand_ids = cand.select(F.col("lake_id").alias("doc_id")).distinct()
-            lake_cand = lake.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-            gl = dedup.portable_shingles(lake_cand, "doc_id", "text", 3).select(
-                F.col("doc_id").alias("lake_id"), F.col("grams").alias("g_l")
-            )
-            gd = grams.select(
-                F.col("doc_id").alias("delta_id"), F.col("grams").alias("g_d")
-            )
-            jac = F.size(F.array_intersect("g_l", "g_d")) / F.size(
-                F.array_union("g_l", "g_d")
-            )
-            (
-                cand.join(gl, "lake_id")
-                .join(gd, "delta_id")
-                .select("lake_id", "delta_id", jac.alias("jaccard"))
-                .filter(F.col("jaccard") >= 0.5)
-                .write.mode("overwrite")
-                .parquet(_os.path.join(out_dir, f"batch_id={batch_id}"))
-            )
+            pairs.withColumnRenamed("query_id", "delta_id").write.mode(
+                "overwrite"
+            ).parquet(_os.path.join(out_dir, f"batch_id={batch_id}"))
         finally:
-            grams.unpersist()
-            if cand is not None:
-                # DataFrame.unpersist() does not reach a local checkpoint:
-                # its blocks belong to the RDD under the LogicalRDD plan.
-                cand._jdf.queryExecution().logical().rdd().unpersist(False)
+            for pin in pins:
+                _release(pin)
 
     from ..streaming.streams import fast_checkpoint_dir
 

@@ -108,17 +108,6 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # Parquet exact-In pushdown must cover the largest literal id set
-        # the zone-map point-fetch path passes (sources/layout.fetch_by_ids,
-        # max_ids=8192): above this threshold Spark silently degrades the
-        # pushed In to the [min, max] RANGE, which prunes nothing once ids
-        # scatter (r13 advice / r14 fix). Set ONCE at session build — the
-        # conf is read at scan execution, so a per-fetch override could
-        # only be restored after an unspecified materialization time; the
-        # session-level setting removes that hidden cross-query mutation
-        # (r14 advice #1). 8192 exact literals is a verified-sane predicate
-        # size (tests/test_layout.py).
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "8192")
         # Stream checkpoints (offset/commit logs, state-store delta files)
         # go through the FileSystem-based manager rather than the default
         # FileContext one. Without native libhadoop, FileContext's

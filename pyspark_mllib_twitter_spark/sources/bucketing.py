@@ -16,25 +16,36 @@ across tables you intend to join.
 
 from __future__ import annotations
 
+import shutil
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a bucketed (and bucket-sorted) managed parquet table."""
-    writer = (
-        df.write.mode(mode)
+    df: DataFrame, table: str, bucket_cols: list[str], n_buckets: int
+) -> DataFrame:
+    """Write ``df`` as a bucketed (and bucket-sorted) managed parquet table,
+    replacing any table of that name, and return the table."""
+    spark = df.sparkSession
+    # Table names are deterministic, so a previous SESSION may have left its
+    # warehouse directory behind while this session's in-memory catalog has
+    # never heard of the table — saveAsTable then refuses with
+    # LOCATION_ALREADY_EXISTS. Drop the catalog entry AND any orphaned
+    # location (local-mode warehouse is a file: path; with a real metastore
+    # the DROP alone is sufficient and the rmtree is a no-op).
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    if warehouse.startswith("file:"):
+        shutil.rmtree(f"{urlparse(warehouse).path}/{table}", ignore_errors=True)
+    (
+        df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
+        .saveAsTable(table)
     )
-    writer = writer.sortBy(*(sort_cols or bucket_cols))
-    writer.saveAsTable(table)
+    return spark.table(table)
 
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:

@@ -143,9 +143,7 @@ def test_minhash_portable_equals_naive_on_candidates(spark, docs, n):
     )
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in minhash_pairs_portable(
-            df, shingle_n=n, num_hashes=16, bands=4, min_jaccard=0.4
-        ).collect()
+        for r in minhash_pairs_portable(df, shingle_n=n, min_jaccard=0.4).collect()
     }
 
     def grams(t):

@@ -347,7 +347,7 @@ def test_minhash_portable_subset_of_exact_and_high_recall(documents):
     got = {
         (r.id_a, r.id_b): r.jaccard
         for r in dedup.minhash_pairs_portable(
-            documents, shingle_n=3, num_hashes=16, bands=4, min_jaccard=0.5
+            documents, shingle_n=3, min_jaccard=0.5
         ).collect()
     }
     grams = documents.select(
@@ -376,6 +376,31 @@ def test_minhash_portable_subset_of_exact_and_high_recall(documents):
     near = {p for p, j in exact.items() if j >= 0.9}
     if near:
         assert len(near & set(got)) / len(near) >= 0.9
+
+
+def test_band_probe_of_own_band_table_equals_self_join_pairs(documents):
+    """The two callers of the shared Jaccard verify step agree: probing a
+    doc set against its own band table finds exactly the banded self-join's
+    verified pairs (and jaccards) once the probe's self-pairs and mirrored
+    pairs are dropped."""
+    from pyspark_mllib_twitter_spark.operators.iterate import _release
+
+    docs = documents.select("doc_id", "text")
+    probed, pins = dedup.probe_band_table(
+        docs, docs, dedup.minhash_band_table(docs)
+    )
+    got = {
+        (r.lake_id, r.query_id): r.jaccard
+        for r in probed.filter(F.col("lake_id") < F.col("query_id")).collect()
+    }
+    for pin in pins:
+        _release(pin)
+    want = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.minhash_pairs_portable(docs).collect()
+    }
+    assert want
+    assert got == want
 
 
 def test_portable_signatures_are_full_width_quarters(documents):
