@@ -37,11 +37,3 @@ def ord_key(ts_col: Column, id_col: Column) -> Column:
         F.lpad(us.cast("string"), _TS_W, "0"),
         F.lpad(id_col.cast("string"), _ID_W, "0"),
     )
-
-
-def ord_key_sql(ts_expr: str, id_expr: str) -> str:
-    """DuckDB twin of :func:`ord_key` — identical bytes for identical rows."""
-    return (
-        f"lpad(CAST(epoch_us(CAST({ts_expr} AS TIMESTAMP)) AS VARCHAR), {_TS_W}, '0')"
-        f" || lpad(CAST({id_expr} AS VARCHAR), {_ID_W}, '0')"
-    )

@@ -61,11 +61,6 @@ def alpha_ratio(text: Column | str) -> Column:
     return F.length(F.regexp_replace(c, "[^a-zA-Z]", "")) / F.nullif(F.length(c), F.lit(0))
 
 
-def punct_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(F.regexp_replace(c, "[^.,;:!?'\"()]", "")) / F.nullif(F.length(c), F.lit(0))
-
-
 def avg_token_len(text: Column | str) -> Column:
     toks = tokens(text)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))

@@ -36,11 +36,6 @@ from .iterate import iterate
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Exact row dedup — Spark's hash-based dropDuplicates (one shuffle)."""
-    return df.dropDuplicates(subset) if subset else df.dropDuplicates()
-
-
 def content_dedup_groups(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -1152,9 +1152,7 @@ def q_xf_chunk_dedup(spark, sf_dir):
     )
 
 
-def build_chunk_fp_index(
-    spark, docs: "DataFrame", table: str, n_buckets: int = 8
-) -> "DataFrame":
+def build_chunk_fp_index(docs: "DataFrame", table: str, n_buckets: int = 8) -> "DataFrame":
     """Persist the distinct CDC chunk fingerprints of ``docs`` as a
     bucketed managed table (hash-bucketed AND sorted on ``fp``) and return
     it. This is the production "delta ingest" index shape: the
@@ -1189,7 +1187,7 @@ def q_xg_chunk_dedup_bucketed(spark, sf_dir):
 
     tag = _re.sub(r"\W+", "_", sf_dir).strip("_")
     d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
-    idx = build_chunk_fp_index(spark, d, f"chunk_fp_index_v1_{tag}")
+    idx = build_chunk_fp_index(d, f"chunk_fp_index_v1_{tag}")
     v2_docs = d.select(
         "doc_id",
         F.when(

@@ -94,7 +94,6 @@ def implicit_als_recommend(
     max_iter: int = 5,
     reg_param: float = 0.1,
     alpha: float = 1.0,
-    user_subset: DataFrame | None = None,
     num_blocks: int | None = None,
 ) -> DataFrame:
     """Fit implicit-feedback ALS with the reference's hyperparameters
@@ -137,13 +136,7 @@ def implicit_als_recommend(
         als = als.setNumUserBlocks(num_blocks).setNumItemBlocks(num_blocks)
     model = als.fit(encoded)
 
-    if user_subset is not None:
-        subset_enc = user_subset.join(
-            F.broadcast(user_dict), user_subset[user_col] == user_dict[user_col]
-        ).select("u").distinct()
-        recs = model.recommendForUserSubset(subset_enc, k)
-    else:
-        recs = model.recommendForAllUsers(k)
+    recs = model.recommendForAllUsers(k)
 
     # U4-U7 replaced: posexplode keeps ALS's rank order; dictionary joins
     # (broadcast) map dense ids back to originals — no silent empty tuples.

@@ -73,7 +73,7 @@ def test_chunk_fp_index_probe_no_exchange_on_index(spark, sf_smoke):
     table = f"chunk_fp_idx_{uuid.uuid4().hex[:8]}"
     docs = spread(read_table(spark, sf_smoke, "documents")).select("doc_id", "text")
     try:
-        idx = build_chunk_fp_index(spark, docs, table)
+        idx = build_chunk_fp_index(docs, table)
         probe = spark.createDataFrame(
             [("0" * 32,), ("f" * 32,)], "fp string"
         )

@@ -176,15 +176,14 @@ def test_semantic_dedup_tiny_and_empty_corpus(spark):
 
 
 def test_bench_suite_order_batch_then_streaming():
-    """bench._suite_order (round-11 verdict task 3): every streaming
-    entry runs after every batch entry, nothing is lost or duplicated,
-    and relative order within each block stays sorted."""
+    """bench._suite_order: every entry exactly once, every streaming entry
+    after every batch entry, and each block sorted."""
     import bench
     from pyspark_mllib_twitter_spark.plans import REGISTRY
     from pyspark_mllib_twitter_spark.plans.registry import base_name
 
     names = sorted(REGISTRY)
-    ordered = bench._suite_order(names, base_name)
+    ordered = bench._suite_order(REGISTRY)
     assert sorted(ordered) == names
 
     def is_stream(n):
@@ -198,28 +197,5 @@ def test_bench_suite_order_batch_then_streaming():
     first_stream = flags.index(True)
     assert all(flags[first_stream:]), "a batch entry ran inside the streaming tail"
     assert not any(flags[:first_stream])
-    # warmed heavy entries lead the suite (quiet-heap slot), each block
-    # internally sorted
-    n_warm = len(bench.WARMED_SINGLE_RUN)
-    warm, batch, stream = (
-        ordered[:n_warm],
-        ordered[n_warm:first_stream],
-        ordered[first_stream:],
-    )
-    assert {base_name(n) for n in warm} == bench.WARMED_SINGLE_RUN
-    # the warmed block is sorted EXCEPT q_b3_containment_join, which is
-    # deliberately demoted to the last warmed slot (round-11 verdict #6:
-    # the heaviest warmed entry must not pay the freshest-JVM slot)
-    assert base_name(warm[-1]) == "q_b3_containment_join"
-    assert warm[:-1] == sorted(warm[:-1])
-    # the ML/ANN quiet block (round-13 verdict task 2b) leads the batch
-    # section: the JIT/GC-sensitive estimator entries run on an early
-    # quiet heap instead of mid-suite; block itself sorted, remainder of
-    # the batch alphabet sorted after it.
-    quiet = [n for n in batch if base_name(n) in bench.ML_ANN_QUIET]
-    rest = [n for n in batch if base_name(n) not in bench.ML_ANN_QUIET]
-    assert batch[: len(quiet)] == quiet, "quiet ML/ANN block must lead the batch"
-    assert quiet == sorted(quiet) and rest == sorted(rest)
-    assert stream == sorted(stream)
-    for w in bench.WARMED_SINGLE_RUN | bench.ML_ANN_QUIET:
-        assert not is_stream(w)
+    batch, stream = ordered[:first_stream], ordered[first_stream:]
+    assert batch == sorted(batch) and stream == sorted(stream)

@@ -114,8 +114,8 @@ def main() -> int:
     # driver cannot absorb for 380+ queries — round 11 measured a
     # Java-heap OOM at query ~377 (the pair-heavy Theil-Sen) that then
     # failed the 11 queries behind it on a dead gateway. Reuse bench's
-    # _reset_session_state (same measured rationale, incl. the amortized
-    # every-10-queries GC) rather than re-implementing it here.
+    # _reset_session_state (same measured rationale, incl. the forced
+    # driver GC after each sweep) rather than re-implementing it here.
     from bench import _reset_session_state as reset_session
 
     failures: list[str] = []
