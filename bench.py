@@ -16,7 +16,8 @@ One timing rule holds for every entry, in suite and ``--only`` mode alike:
    wall-clock around a full plan execution into Spark's ``noop`` sink:
    every row and column is computed and nothing is collected to the driver;
 3. record the host's steal and busy share over the entry's timed runs
-   (``perfbench/host.py``) under ``host_cpu_per_query``.
+   (``perfbench/host.py``) under ``host_cpu_per_query``; every run time,
+   in order, goes under ``query_runs``.
 
 Batch entries run first, then the streaming entries, each block sorted.
 One-time session costs (JIT of the estimator fits, the Python/Arrow workers,
@@ -231,6 +232,7 @@ def main() -> int:
 
     suite_cpu0 = host.cpu_times()
     per_query: dict[str, float] = {}
+    query_runs: dict[str, list[float]] = {}
     failures: dict[str, str] = {}
     streaming_stats: dict[str, dict] = {}
     iterate_rounds: dict[str, list] = {}
@@ -255,6 +257,7 @@ def main() -> int:
                 print(f"# FAIL {name}: {failures[name]}", file=sys.stderr)
             continue
         per_query[name] = round(statistics.median(samples), 3)
+        query_runs[name] = [round(s, 3) for s in samples]
         query_weather[name] = _weather(cpu0)
         if ITERATE_ROUNDS:
             iterate_rounds[name] = list(ITERATE_ROUNDS)
@@ -267,14 +270,18 @@ def main() -> int:
                 "net_of_replay_s": round(max(0.0, samples[-1] - overhead), 3),
             }
         if args.verbose:
-            runs = [round(s, 3) for s in samples]
-            print(f"# {name}: {per_query[name]}s runs={runs} {query_weather[name]}", file=sys.stderr)
+            print(
+                f"# {name}: {per_query[name]}s runs={query_runs[name]} {query_weather[name]}",
+                file=sys.stderr,
+            )
 
     detail = {
         "metric": "suite_seconds",
         "value": round(sum(per_query.values()), 3),
         "unit": "sec",
         "queries": per_query,
+        # every timed run in order (the first is the entry's cold run)
+        "query_runs": query_runs,
         "sf": _sf_from_dir(sf_dir),
         # CHECK_WINDOW rotation renames public names; base names are stable,
         # so histories join on this map.

@@ -32,7 +32,6 @@ def as_of_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     payload_cols: list[str] | None = None,
-    payload_prefix: str = "asof_",
 ) -> DataFrame:
     """For each left row, the latest right payload at-or-before its
     timestamp (per ``on`` key). Left rows with no prior right row get nulls.
@@ -45,7 +44,7 @@ def as_of_join(
     if not payload_cols:
         raise ValueError("as_of_join: right side has no payload columns")
 
-    out_names = [f"{payload_prefix}{c}" for c in payload_cols]
+    out_names = [f"asof_{c}" for c in payload_cols]
 
     # The payload travels as ONE struct, not independent columns: with
     # per-column last(col, ignorenulls=True), a NULL field in the latest

@@ -38,6 +38,13 @@ _WINDOW = 8
 _BASE = 257
 _MOD = (1 << 31) - 1  # Mersenne prime — cheap reduction, no sign issues
 
+#: CDC geometry (average / min / max chunk size in code points), sized to
+#: the ~150-550-char fixture docs (production would run e.g.
+#: 2048/512/8192 bytes).
+CDC_AVG = 64
+CDC_MIN = 16
+CDC_MAX = 192
+
 CDC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -100,31 +107,25 @@ def _boundaries(text: str, avg_size: int, min_size: int, max_size: int) -> list[
         last = nxt
 
 
-def cdc_chunks(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    avg_size: int = 64,
-    min_size: int = 16,
-    max_size: int = 192,
-) -> DataFrame:
-    """Split every document into content-defined chunks.
+def cdc_chunks(docs: DataFrame) -> DataFrame:
+    """Split every ``(doc_id, text)`` document into content-defined chunks.
 
     Output: ``(doc_id, chunk_id, chunk, n_bytes)`` where chunks concatenate
     exactly back to the document (lossless; property-tested), boundaries
     are a pure function of local content — inserting a prefix shifts only
     the first chunk(s), identical suffixes re-chunk identically — and
-    ``n_bytes`` is the chunk's UTF-8 byte length. Sizes (``avg/min/max``)
-    are in code points, so multi-byte text never splits mid-character.
+    ``n_bytes`` is the chunk's UTF-8 byte length. Sizes (``CDC_AVG`` /
+    ``CDC_MIN`` / ``CDC_MAX``) are in code points, so multi-byte text
+    never splits mid-character.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 text = text or ""
                 prev = 0
-                for k, end in enumerate(_boundaries(text, avg_size, min_size, max_size)):
+                for k, end in enumerate(_boundaries(text, CDC_AVG, CDC_MIN, CDC_MAX)):
                     piece = text[prev:end]
                     rows.append(
                         {
@@ -139,4 +140,4 @@ def cdc_chunks(
                 rows, columns=["doc_id", "chunk_id", "chunk", "n_bytes"]
             )
 
-    return docs.select(id_col, text_col).mapInPandas(run, CDC_SCHEMA)
+    return docs.select("doc_id", "text").mapInPandas(run, CDC_SCHEMA)

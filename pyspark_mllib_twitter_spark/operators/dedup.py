@@ -36,47 +36,35 @@ from .iterate import iterate
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def content_dedup_groups(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Group documents by content digest (md5 of normalized text); emit one
-    row per distinct content: ``keep_id`` (min id — deterministic keep-one
-    policy) and ``n_copies``. Shuffles 16-byte digests, never the text."""
+def content_dedup_groups(docs: DataFrame) -> DataFrame:
+    """Group ``(doc_id, text)`` documents by content digest (md5 of
+    normalized text); emit one row per distinct content: ``keep_id`` (min
+    id — deterministic keep-one policy) and ``n_copies``. Shuffles 16-byte
+    digests, never the text."""
     return (
-        docs.select(F.col(id_col), TXT.fingerprint(text_col).alias("fp"))
+        docs.select(F.col("doc_id"), TXT.fingerprint("text").alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
     )
 
 
-def content_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def content_dedup(docs: DataFrame) -> DataFrame:
     """Return the surviving rows (keep-one-per-content). Left-semi join back
     on the kept ids — no row data moves through the aggregate."""
-    keep = content_dedup_groups(docs, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return docs.join(keep, id_col, "left_semi")
+    keep = content_dedup_groups(docs).select(F.col("keep_id").alias("doc_id"))
+    return docs.join(keep, "doc_id", "left_semi")
 
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dedup
 # ---------------------------------------------------------------------------
 
-def minhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_features: int = 1 << 18,
-    num_hash_tables: int = 8,
-    max_jaccard_distance: float = 0.6,
-    seed: int = 42,
-) -> DataFrame:
+def minhash_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Near-duplicate candidate pairs via word-shingle MinHash LSH.
 
-    Pipeline: tokens → ``shingle_n``-gram shingles → hashed sparse binary
-    vector (HashingTF, binary) → MinHashLSH → ``approxSimilarityJoin`` at
-    Jaccard distance <= ``max_jaccard_distance``. Output:
+    Pipeline: tokens → 3-gram shingles → hashed sparse binary vector
+    (HashingTF, 2^18 features, binary) → MinHashLSH (8 tables) →
+    ``approxSimilarityJoin`` at Jaccard distance <= 0.6. Output:
     ``(id_a, id_b, jaccard_dist)`` with ``id_a < id_b``.
 
     Scale: LSH banding means only same-bucket pairs join — candidate count
@@ -88,29 +76,23 @@ def minhash_candidate_pairs(
     # after): equivalent drop set, but the pushed-down predicate copy
     # evaluates only the tokenizer, not the full ngram expression — the
     # portable_shingles r14 pushdown finding applied to the MLlib path.
-    toks = docs.filter(
-        F.size(TXT.tokens(text_col)) >= max(shingle_n, 1)
-    ).select(
-        F.col(id_col),
-        TXT.word_ngrams(TXT.tokens(text_col), shingle_n).alias("shingles"),
+    toks = docs.filter(F.size(TXT.tokens("text")) >= 3).select(
+        F.col("doc_id"),
+        TXT.word_ngrams(TXT.tokens("text"), 3).alias("shingles"),
     )
 
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
-    )
+    tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True)
     # Cached: the self-join reads the featurized side twice (datasetA and
     # datasetB) and the LSH fit scans it once more — without the cache the
     # shingling + hashing runs three times.
     feats = tf.transform(toks).cache()
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
+    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
     model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, max_jaccard_distance, distCol="jaccard_dist")
+    joined = model.approxSimilarityJoin(feats, feats, 0.6, distCol="jaccard_dist")
     return (
         joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
+            F.col("datasetA.doc_id").alias("id_a"),
+            F.col("datasetB.doc_id").alias("id_b"),
             "jaccard_dist",
         )
         .filter(F.col("id_a") < F.col("id_b"))
@@ -202,23 +184,16 @@ def keep_one_representatives(
     return labels.select(F.col("node").alias(id_col), "rep_id")
 
 
-def minhash_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kwargs,
-) -> DataFrame:
+def minhash_dedup(docs: DataFrame) -> DataFrame:
     """Fuzzy dedup end-to-end: survivors after MinHash-LSH clustering."""
-    pairs = minhash_candidate_pairs(docs, id_col, text_col, **kwargs)
-    reps = keep_one_representatives(pairs, docs.select(id_col), id_col)
-    keep = reps.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
-    return docs.join(keep, id_col, "left_semi")
+    pairs = minhash_candidate_pairs(docs)
+    reps = keep_one_representatives(pairs, docs.select("doc_id"))
+    keep = reps.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id")
+    return docs.join(keep, "doc_id", "left_semi")
 
 
-def portable_shingles(
-    docs: DataFrame, id_col: str, text_col: str, shingle_n: int
-) -> DataFrame:
-    """(id, grams): distinct word-``shingle_n``-gram set per doc, empty-gram
+def portable_shingles(docs: DataFrame, shingle_n: int) -> DataFrame:
+    """(doc_id, grams): distinct word-``shingle_n``-gram set per doc, empty-gram
     docs dropped. The shared front of the portable MinHash pipeline.
 
     The drop predicate is ``size(tokens) >= shingle_n`` — EXACTLY
@@ -231,9 +206,9 @@ def portable_shingles(
     the scan just to evaluate the predicate, once after the exchange for
     the projection (r14 measured: 4.1s -> ~1s per shingle pass at sf0.1;
     every portable-MinHash entry sits on this helper)."""
-    toks = TXT.tokens(text_col)
+    toks = TXT.tokens("text")
     return docs.filter(F.size(toks) >= max(shingle_n, 1)).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_distinct(
             TXT.word_ngrams(toks, shingle_n) if shingle_n > 1 else toks
         ).alias("grams"),
@@ -250,24 +225,20 @@ ROWS_PER_BAND = NUM_HASHES // BANDS
 MIN_JACCARD = 0.5
 
 
-def portable_minhash_signatures(
-    grams: DataFrame, id_col: str = "doc_id", num_hashes: int = NUM_HASHES
-) -> DataFrame:
-    """(id, sig): ``num_hashes``-slot MinHash signature over the ``grams``
+def portable_minhash_signatures(grams: DataFrame) -> DataFrame:
+    """(doc_id, sig): ``NUM_HASHES``-slot MinHash signature over the ``grams``
     array column, portable md5 hashing only.
 
     Each seed ``g`` hashes every shingle once — ``md5(g || '|' || s)`` —
     and the digest's four 8-hex-char quarters act as four independent
     32-bit hash functions (the Kirsch-Mitzenmacher observation: k hashes
     derived from few base hashes preserve MinHash accuracy), so
-    ``num_hashes`` signature slots cost ``num_hashes/4`` md5 passes per
+    ``NUM_HASHES`` signature slots cost ``NUM_HASHES/4`` md5 passes per
     shingle. A fixed-width lowercase-hex string's lexicographic order IS
     its numeric order, so ``array_min`` over quarters is a valid min-hash.
     Slot order is seed-major, quarter-minor (the oracle's ``4*seed + q``).
     """
-    if num_hashes % 4:
-        raise ValueError(f"num_hashes {num_hashes} not a multiple of 4 (quartered md5)")
-    n_seeds = num_hashes // 4
+    n_seeds = NUM_HASHES // 4
 
     # Closure helpers, NOT `lambda s, g=g:` — PySpark treats a two-parameter
     # callable as an (element, index) lambda and silently binds the second
@@ -280,7 +251,7 @@ def portable_minhash_signatures(
         return lambda x: F.substring(x, q * 8 + 1, 8)
 
     hashed = grams.select(
-        id_col,
+        "doc_id",
         *[
             F.transform(F.col("grams"), _md5_seed(g)).alias(f"h{g}")
             for g in range(n_seeds)
@@ -289,7 +260,7 @@ def portable_minhash_signatures(
     # Whole-stage codegen's subexpression elimination computes each seed's
     # md5 array once even though four mins reference it.
     return hashed.select(
-        id_col,
+        "doc_id",
         F.array(
             *[
                 F.array_min(F.transform(F.col(f"h{g}"), _quarter(q)))
@@ -300,8 +271,8 @@ def portable_minhash_signatures(
     )
 
 
-def portable_band_keys(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, band_key): one LSH band key per (doc, band) from a portable
+def portable_band_keys(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_key): one LSH band key per (doc, band) from a portable
     MinHash signature — the band INDEX is folded into the key
     (``md5(band || '|' || slot values)``) so the banded equi-join needs a
     single column, which a hash-bucketed PERSISTED index can cluster on
@@ -311,7 +282,7 @@ def portable_band_keys(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     any ANSI engine reproduces the key bit-for-bit."""
     r = ROWS_PER_BAND
     return sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(BANDS - 1)),
@@ -323,15 +294,15 @@ def portable_band_keys(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def _band_keys(grams: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return portable_band_keys(portable_minhash_signatures(grams, id_col), id_col)
+def _band_keys(grams: DataFrame) -> DataFrame:
+    return portable_band_keys(portable_minhash_signatures(grams))
 
 
 def minhash_band_table(docs: DataFrame) -> DataFrame:
     """(lake_id, band_key) for every shingled doc of ``docs``
     (``doc_id``, ``text``): the lake side of :func:`probe_band_table`,
     persisted as an index or computed on the fly."""
-    grams = portable_shingles(docs, "doc_id", "text", SHINGLE_N)
+    grams = portable_shingles(docs, SHINGLE_N)
     return _band_keys(grams).withColumnRenamed("doc_id", "lake_id")
 
 
@@ -377,9 +348,7 @@ def probe_band_table(
     Release the pins (``operators.iterate._release``) once the pairs have
     run; the candidate checkpoint is eager, so building the frame runs the
     probe as a job."""
-    q_grams = portable_shingles(query, "doc_id", "text", SHINGLE_N).localCheckpoint(
-        eager=False
-    )
+    q_grams = portable_shingles(query, SHINGLE_N).localCheckpoint(eager=False)
     q_bands = _band_keys(q_grams).withColumnRenamed("doc_id", "query_id")
     cand = (
         lake_bands.join(F.broadcast(q_bands), "band_key")
@@ -389,10 +358,7 @@ def probe_band_table(
     )
     cand_ids = cand.select(F.col("lake_id").alias("doc_id")).distinct()
     lake_grams = portable_shingles(
-        lake.join(F.broadcast(cand_ids), "doc_id", "left_semi"),
-        "doc_id",
-        "text",
-        SHINGLE_N,
+        lake.join(F.broadcast(cand_ids), "doc_id", "left_semi"), SHINGLE_N
     )
     pairs = _jaccard_verify(cand, lake_grams, F.broadcast(q_grams), MIN_JACCARD)
     return pairs, [q_grams, cand]
@@ -400,8 +366,6 @@ def probe_band_table(
 
 def minhash_pairs_portable(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = SHINGLE_N,
     min_jaccard: float = MIN_JACCARD,
 ) -> DataFrame:
@@ -424,8 +388,8 @@ def minhash_pairs_portable(
     joins) and are cached across their three uses (signature + both verify
     sides). Output: ``(id_a, id_b, jaccard)``, id_a < id_b.
     """
-    grams = portable_shingles(docs, id_col, text_col, shingle_n).cache()
-    banded = _band_keys(grams, id_col)
+    grams = portable_shingles(docs, shingle_n).cache()
+    banded = _band_keys(grams)
     cand = (
         banded.toDF("id_a", "band_key")
         .join(banded.toDF("id_b", "band_key"), "band_key")
@@ -445,17 +409,15 @@ def minhash_pairs_portable(
 SIMHASH_BITS = 63
 
 
-def simhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """63-bit SimHash per document, entirely JVM-side.
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """63-bit SimHash per ``(doc_id, text)`` document, entirely JVM-side.
 
     explode(tokens) → xxhash64(token) → per-bit +/-1 vote aggregated per
     document → signature reassembled as SUM(2^i for winning bits i).
     One shuffle (groupBy id); whole-stage codegen throughout — no Python.
     """
     tok = docs.select(
-        F.col(id_col), F.explode(TXT.tokens(text_col)).alias("token")
+        F.col("doc_id"), F.explode(TXT.tokens("text")).alias("token")
     ).withColumn("h", F.xxhash64("token"))
 
     votes = [
@@ -464,30 +426,25 @@ def simhash_signatures(
         ).alias(f"b{i}")
         for i in range(SIMHASH_BITS)
     ]
-    agg = tok.groupBy(id_col).agg(*votes)
+    agg = tok.groupBy("doc_id").agg(*votes)
 
     sig = None
     for i in range(SIMHASH_BITS):
         term = F.when(F.col(f"b{i}") > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
         sig = term if sig is None else sig + term
-    return agg.select(F.col(id_col), sig.alias("simhash"))
+    return agg.select(F.col("doc_id"), sig.alias("simhash"))
 
 
-def simhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup pairs by SimHash banding: split the signature into 4 x 16-bit
     bands; two docs are candidates iff they agree on >= 1 band (guaranteed to
     catch all pairs with hamming distance <= 3); verify with exact hamming
     distance = bit_count(xor). The join is an equi-join on (band_idx,
     band_value) — shuffle scales with collision density, not |docs|^2.
     """
-    sigs = simhash_signatures(docs, id_col, text_col)
+    sigs = simhash_signatures(docs)
     bands = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "simhash",
         F.explode(
             F.array(
@@ -502,13 +459,13 @@ def simhash_candidate_pairs(
                 ]
             )
         ).alias("band"),
-    ).select(id_col, "simhash", "band.band_idx", "band.band_val")
+    ).select("doc_id", "simhash", "band.band_idx", "band.band_val")
 
     a = bands.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"), "band_idx", "band_val"
+        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sig_a"), "band_idx", "band_val"
     )
     b = bands.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sig_b"), "band_idx", "band_val"
+        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sig_b"), "band_idx", "band_val"
     )
     return (
         a.join(b, ["band_idx", "band_val"])
@@ -519,7 +476,7 @@ def simhash_candidate_pairs(
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 
@@ -529,25 +486,21 @@ def simhash_candidate_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = "source",
     n: int = 3,
-    min_jaccard: float = 0.5,
-    max_block_size: int | None = 100_000,
+    max_block_size: int = 100_000,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs within a blocking key.
+    """Exact n-gram Jaccard similarity >= 0.5 for all ``(doc_id, text)``
+    pairs within the same ``source``.
 
     ``jaccard = |A ∩ B| / |A ∪ B|`` over distinct word n-grams, computed with
-    JVM array functions. The self-join is an equi-join on ``block_col``
+    JVM array functions. The self-join is an equi-join on ``source``
     (never a cross join); use MinHash LSH when no natural block exists.
 
     Within a block the pairing is O(block²) — a skewed block (one dominant
-    ``block_col`` value) would dominate the job at scale. ``max_block_size``
+    ``source`` value) would dominate the job at scale. ``max_block_size``
     guards that: blocks larger than the cap fail fast with the offending
     keys instead of silently running a quadratic stage; route those blocks
-    through :func:`minhash_candidate_pairs` instead. ``None`` disables the
-    guard (and the extra count job) for trusted inputs.
+    through :func:`minhash_candidate_pairs` instead.
     """
     # filter BEFORE the gram projection, on token count — equivalent to
     # the old size(grams) > 0 (an n-gram array is non-empty iff the doc
@@ -556,33 +509,29 @@ def ngram_jaccard_pairs(
     # the whole tokenize+ngram+distinct expression into the pushed copy
     # and re-pays it single-core at the scan (the portable_shingles r14
     # finding; same pattern here).
-    g = docs.filter(F.size(TXT.tokens(text_col)) >= max(n, 1)).select(
-        F.col(id_col),
-        *( [F.col(block_col)] if block_col else [] ),
-        F.array_distinct(TXT.word_ngrams(TXT.tokens(text_col), n)).alias("grams"),
+    g = docs.filter(F.size(TXT.tokens("text")) >= max(n, 1)).select(
+        F.col("doc_id"),
+        F.col("source"),
+        F.array_distinct(TXT.word_ngrams(TXT.tokens("text"), n)).alias("grams"),
     )
 
-    if max_block_size is not None:
-        counts = (
-            g.groupBy(*( [block_col] if block_col else [F.lit(1).alias("_all")] ))
-            .count()
-            .filter(F.col("count") > max_block_size)
-            .limit(5)
-            .collect()
+    counts = (
+        g.groupBy("source")
+        .count()
+        .filter(F.col("count") > max_block_size)
+        .limit(5)
+        .collect()
+    )
+    if counts:
+        raise ValueError(
+            f"ngram_jaccard_pairs: block(s) exceed max_block_size="
+            f"{max_block_size}: {[tuple(r) for r in counts]}; "
+            "use minhash_candidate_pairs for these blocks"
         )
-        if counts:
-            raise ValueError(
-                f"ngram_jaccard_pairs: block(s) exceed max_block_size="
-                f"{max_block_size}: {[tuple(r) for r in counts]}; "
-                "use minhash_candidate_pairs for these blocks"
-            )
 
-    join_keys = [block_col] if block_col else []
-    a = g.select(*join_keys, F.col(id_col).alias("id_a"), F.col("grams").alias("grams_a"))
-    b = g.select(*join_keys, F.col(id_col).alias("id_b"), F.col("grams").alias("grams_b"))
-    pairs = (a.join(b, join_keys) if join_keys else a.crossJoin(b)).filter(
-        F.col("id_a") < F.col("id_b")
-    )
+    a = g.select("source", F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
+    b = g.select("source", F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
+    pairs = a.join(b, ["source"]).filter(F.col("id_a") < F.col("id_b"))
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
     return (
@@ -591,7 +540,7 @@ def ngram_jaccard_pairs(
             "id_b",
             (inter.cast("double") / F.nullif(union, F.lit(0))).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= min_jaccard)
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
@@ -599,18 +548,12 @@ def ngram_jaccard_pairs(
 # Embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_cosine: float = 0.95,
-    num_hash_tables: int = 6,
-    bucket_length: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine >= ``min_cosine`` via
-    random-projection LSH on L2-normalized vectors (unit-sphere euclidean
-    distance sqrt(2-2c) <=> cosine c). Output ``(id_a, id_b, cos_sim)``."""
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
+    """Near-duplicate pairs by embedding cosine >= 0.3 via random-projection
+    LSH (8 tables, bucket length 1.0) on L2-normalized vectors (unit-sphere
+    euclidean distance sqrt(2-2c) <=> cosine c). Output
+    ``(id_a, id_b, cos_sim)``; the threshold is wide so the near-random
+    fixture yields a small, stable candidate set."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
@@ -618,23 +561,23 @@ def embedding_near_dup_pairs(
 
     # Cached: LSH fit + both sides of the self-join read this (3 scans).
     normed = embeddings.select(
-        F.col(id_col),
-        array_to_vector(vectors.l2_normalize(vec_col)).alias("features"),
+        F.col("vec_id"),
+        array_to_vector(vectors.l2_normalize("embedding")).alias("features"),
     ).cache()
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
+        bucketLength=1.0,
+        numHashTables=8,
+        seed=42,
     )
     model = lsh.fit(normed)
-    max_dist = math.sqrt(max(0.0, 2.0 - 2.0 * min_cosine))
+    max_dist = math.sqrt(max(0.0, 2.0 - 2.0 * 0.30))
     joined = model.approxSimilarityJoin(normed, normed, max_dist, distCol="dist")
     return (
         joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
+            F.col("datasetA.vec_id").alias("id_a"),
+            F.col("datasetB.vec_id").alias("id_b"),
             (1 - F.col("dist") * F.col("dist") / 2).alias("cos_sim"),
         )
         .filter(F.col("id_a") < F.col("id_b"))
@@ -645,16 +588,7 @@ def embedding_near_dup_pairs(
 # Semantic (embedding-cluster) dedup — SemDeDup-style
 # ---------------------------------------------------------------------------
 
-def semantic_dedup_pairs(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_cosine: float = 0.97,
-    n_clusters: int = 16,
-    seed: int = 42,
-    max_fit_rows: int = 65536,
-    max_iter: int = 8,
-) -> DataFrame:
+def semantic_dedup_pairs(embeddings: DataFrame, min_cosine: float = 0.97) -> DataFrame:
     """SemDeDup-style near-duplicate pairs (Abbas et al., "SemDeDup", 2023 —
     public): KMeans-cluster L2-normalized embeddings, then compare ONLY
     within-cluster pairs by exact cosine.
@@ -665,17 +599,15 @@ def semantic_dedup_pairs(
     search is an equi-join on cluster id — pair count scales with
     sum(cluster_size²), not |corpus|², and each cluster is its own shuffle
     partition. The recall tradeoff is pairs split across a cluster
-    boundary — the same blocking tradeoff as every IVF-style index; raise
-    ``n_clusters`` for speed, lower it for recall.
+    boundary — the same blocking tradeoff as every IVF-style index; more
+    clusters (16 here) trade recall for speed.
 
     Output: ``(id_a, id_b, cos_sim)`` with ``id_a < id_b``.
     """
     from .quantizer import bounded_fit_sample, lloyd, nearest_centroid_udf
 
-    norm = embeddings.select(
-        F.col(id_col), vectors.l2_normalize(vec_col).alias("arr")
-    )
-    fit_sample = bounded_fit_sample(norm, id_col, max_fit_rows)
+    norm = embeddings.select(F.col("vec_id"), vectors.l2_normalize("embedding").alias("arr"))
+    fit_sample = bounded_fit_sample(norm, "vec_id")
     # The quantizer trains DRIVER-LOCAL on the bounded sample (<= 65k
     # vectors — a few MB; numpy Lloyd finishes in milliseconds). An MLlib
     # fit here costs ~15 driver jobs (k-means|| init + one job per Lloyd
@@ -687,25 +619,23 @@ def semantic_dedup_pairs(
     n_fit = len(sample)
     if n_fit == 0:
         return embeddings.sparkSession.createDataFrame(
-            [], f"id_a {dict(embeddings.dtypes)[id_col]}, "
-                f"id_b {dict(embeddings.dtypes)[id_col]}, cos_sim double"
+            [], f"id_a {dict(embeddings.dtypes)['vec_id']}, "
+                f"id_b {dict(embeddings.dtypes)['vec_id']}, cos_sim double"
         )
     # A k close to n degenerates to one point per cluster (no within-cluster
     # pairs); cap at ~n/8 so clusters expect several members. k=1 means
     # all-pairs — exact and affordable at that corpus size.
-    k = max(1, min(n_clusters, n_fit // 8))
+    k = max(1, min(16, n_fit // 8))
     if k >= 2:
         # Shared spherical-k-means quantizer (operators.quantizer): unit
         # centroids, so the distributed assignment — an Arrow-batched
         # argmax-of-dots matmul, no shuffle, no MLlib — equals
         # nearest-centroid.
-        cents_arr = lloyd(sample, k, seed=seed, iters=max_iter, spherical=True)
-        assign = nearest_centroid_udf(
-            [[float(v) for v in c] for c in cents_arr], spherical=True
-        )
-        assigned = norm.select(id_col, "arr", assign("arr").alias("cluster_id"))
+        cents_arr = lloyd(sample, k, spherical=True)
+        assign = nearest_centroid_udf([[float(v) for v in c] for c in cents_arr])
+        assigned = norm.select("vec_id", "arr", assign("arr").alias("cluster_id"))
     else:  # corpus too small to block — one cluster == exact all-pairs
-        assigned = norm.select(id_col, "arr", F.lit(0).alias("cluster_id"))
+        assigned = norm.select("vec_id", "arr", F.lit(0).alias("cluster_id"))
     # Within-cluster pair scan as ONE grouped-map pass: each cluster's
     # vectors arrive as an Arrow batch and numpy computes the (blocked)
     # gram matrix — arrs are L2-normalized above, so dot == cosine. This
@@ -716,7 +646,7 @@ def semantic_dedup_pairs(
     # cluster-blocked: the matmul is row-blocked so peak memory is
     # O(block × cluster), never cluster²; parallelism = one task per
     # cluster, the same ceiling the self-join had.
-    id_type = dict(embeddings.dtypes)[id_col]
+    id_type = dict(embeddings.dtypes)["vec_id"]
     out_schema = f"id_a {id_type}, id_b {id_type}, cos_sim double"
 
     def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -725,7 +655,7 @@ def semantic_dedup_pairs(
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
         x = np.stack(pdf["arr"].to_numpy())[order]
@@ -754,30 +684,20 @@ def semantic_dedup_pairs(
     return assigned.groupBy("cluster_id").applyInPandas(cluster_pairs, out_schema)
 
 
-def semantic_dedup(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **kwargs,
-) -> DataFrame:
+def semantic_dedup(embeddings: DataFrame, **kwargs) -> DataFrame:
     """Survivors after SemDeDup clustering: near-dup pairs → connected
     components (min-id representative) → keep one row per component."""
-    pairs = semantic_dedup_pairs(embeddings, id_col, vec_col, **kwargs)
-    reps = keep_one_representatives(pairs, embeddings.select(id_col), id_col)
-    keep = reps.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
-    return embeddings.join(keep, id_col, "left_semi")
+    pairs = semantic_dedup_pairs(embeddings, **kwargs)
+    reps = keep_one_representatives(pairs, embeddings.select("vec_id"), "vec_id")
+    keep = reps.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id")
+    return embeddings.join(keep, "vec_id", "left_semi")
 
 
 # ---------------------------------------------------------------------------
 # Incremental dedup (new batch vs existing corpus)
 # ---------------------------------------------------------------------------
 
-def dedup_against(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_against(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Incremental exact dedup: the "ingest a new crawl against an existing
     lake" shape. Drops new-batch rows whose content fingerprint already
     exists in ``corpus`` (left-anti on the md5 digest), then keep-one
@@ -789,12 +709,12 @@ def dedup_against(
     ingest job joins against, not a rescan of the lake). Returns the
     surviving ``new_docs`` rows.
     """
-    new_fp = new_docs.select(F.col(id_col), TXT.fingerprint(text_col).alias("fp"))
-    corpus_fp = corpus.select(TXT.fingerprint(text_col).alias("fp"))
+    new_fp = new_docs.select(F.col("doc_id"), TXT.fingerprint("text").alias("fp"))
+    corpus_fp = corpus.select(TXT.fingerprint("text").alias("fp"))
     fresh = new_fp.join(corpus_fp, "fp", "left_anti")
     keep = (
         fresh.groupBy("fp")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
     )
-    return new_docs.join(keep, id_col, "left_semi")
+    return new_docs.join(keep, "doc_id", "left_semi")

@@ -90,15 +90,13 @@ def simulate_inventory_py(
 
 def simulate_inventory(
     demand: DataFrame,
-    item_col: str = "item_id",
-    day_col: str = "day_idx",
-    qty_col: str = "qty",
     start_stock: int = 500,
     reorder_point: int = 100,
     order_qty: int = 500,
     lead_days: int = 1,
 ) -> DataFrame:
-    """Distributed (s, Q) simulation: one summary row per item.
+    """Distributed (s, Q) simulation over ``(item_id, day_idx, qty)``
+    demand lines: one summary row per item.
 
     The recurrence still runs in Python (non-associative, the sanctioned
     escape hatch), but the Python boundary is ONE row per item: each
@@ -114,7 +112,7 @@ def simulate_inventory(
 
     def run(batches):
         for pdf in batches:
-            items = pdf[item_col].tolist()
+            items = pdf["item_id"].tolist()
             out = {
                 "item_id": [],
                 "n_days": [],
@@ -142,20 +140,20 @@ def simulate_inventory(
 
     # Collapse to (item, day) grain FIRST — the Python stage must see
     # calendar-bounded series, not raw lines.
-    daily = demand.groupBy(item_col, day_col).agg(
-        F.sum(qty_col).cast("bigint").alias(qty_col)
+    daily = demand.groupBy("item_id", "day_idx").agg(
+        F.sum("qty").cast("bigint").alias("qty")
     )
     series = (
-        daily.groupBy(item_col)
+        daily.groupBy("item_id")
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(F.col(day_col), F.col(qty_col)))
+                F.collect_list(F.struct(F.col("day_idx"), F.col("qty")))
             ).alias("__s")
         )
         .select(
-            item_col,
-            F.transform("__s", lambda s: s[day_col]).alias("__days"),
-            F.transform("__s", lambda s: s[qty_col]).alias("__qtys"),
+            "item_id",
+            F.transform("__s", lambda s: s["day_idx"]).alias("__days"),
+            F.transform("__s", lambda s: s["qty"]).alias("__qtys"),
         )
     )
     return series.mapInPandas(run, SIM_SCHEMA)

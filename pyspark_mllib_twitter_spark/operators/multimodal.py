@@ -50,12 +50,16 @@ class DecoderNotAvailable(NotImplementedError):
     the rest of the distributed plumbing testable."""
 
 
-def synthetic_assets(
-    spark, n: int = 256, seed: int = 42, num_partitions: int = 8
-) -> DataFrame:
-    """Deterministic asset table: ``image/png`` payloads are REAL PNG files
-    (id-derived pixels encoded with ``functions.png``), other mimes carry
-    id-derived opaque bytes; metadata is consistent with the payload.
+#: Size and payload seed of the synthetic asset table.
+N_ASSETS = 256
+ASSET_SEED = 42
+
+
+def synthetic_assets(spark) -> DataFrame:
+    """Deterministic ``N_ASSETS``-row asset table: ``image/png`` payloads
+    are REAL PNG files (id-derived pixels encoded with ``functions.png``),
+    other mimes carry id-derived opaque bytes; metadata is consistent with
+    the payload.
 
     Generated DISTRIBUTED: ``spark.range`` partitions the id space and an
     Arrow-batched ``mapInPandas`` materializes payloads on executors — no
@@ -82,7 +86,7 @@ def synthetic_assets(
                     pixels = (
                         (
                             i * 2654435761
-                            + (seed + 1) * 7919
+                            + (ASSET_SEED + 1) * 7919
                             + np.arange(n_px, dtype=np.int64)
                         )
                         % 251
@@ -91,7 +95,7 @@ def synthetic_assets(
                 else:
                     n_b = 64 + i % 64
                     payload = (
-                        (i * 2654435761 + np.arange(n_b, dtype=np.int64) * (seed + 1))
+                        (i * 2654435761 + np.arange(n_b, dtype=np.int64) * (ASSET_SEED + 1))
                         % 251
                     ).astype(np.uint8).tobytes()
                 rows.append(
@@ -114,7 +118,7 @@ def synthetic_assets(
     # actual codec work. 8 partitions keeps the generation distributed (and
     # the downstream mapInPandas stages inherit the layout) without paying
     # 64 task launches per stage for a few MB of assets.
-    return spark.range(0, n, 1, num_partitions).mapInPandas(gen, ASSET_SCHEMA)
+    return spark.range(0, N_ASSETS, 1, 8).mapInPandas(gen, ASSET_SCHEMA)
 
 
 def _fake_decode(payload: bytes, width: int, height: int) -> list[float]:
@@ -150,7 +154,6 @@ def _audio_features(payload: bytes) -> list[float]:
 def extract_features(
     assets: DataFrame,
     use_real_decoder: "bool | str" = False,
-    batch_note: str = "arrow",
 ) -> DataFrame:
     """Decode + feature-extract every asset via ``mapInPandas``.
 
@@ -305,8 +308,9 @@ def resize_assets(
     return assets.mapInPandas(batches, ASSET_SCHEMA)
 
 
-def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per (asset, frame_ts).
+def frame_sample_plan(assets: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: one output row per (asset, frame_ts),
+    one frame per second.
     The expansion is pure SQL (sequence + explode) — only the decode of each
     sampled frame would be Python, and that is the stubbed step."""
     video = assets.filter(F.col("mime").startswith("video/") | F.col("mime").startswith("audio/"))
@@ -314,6 +318,6 @@ def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
         "asset_id",
         "mime",
         F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("meta.duration_ms"), F.lit(0)), F.lit(every_ms))
+            F.sequence(F.lit(0), F.coalesce(F.col("meta.duration_ms"), F.lit(0)), F.lit(1000))
         ).alias("frame_ts_ms"),
     )

@@ -53,14 +53,18 @@ _PARTIAL_SCHEMA = StructType(
 )
 
 
-def _moment_partials(df: DataFrame, vec_col: str) -> DataFrame:
+#: Principal components kept by every fit.
+N_COMPONENTS = 8
+
+
+def _moment_partials(df: DataFrame) -> DataFrame:
     """Per-Arrow-batch (count, sum, Gram) partials — stage-1 map side."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             yield pd.DataFrame(
                 {
                     "n": [x.shape[0]],
@@ -69,15 +73,16 @@ def _moment_partials(df: DataFrame, vec_col: str) -> DataFrame:
                 }
             )
 
-    return df.select(vec_col).mapInPandas(run, _PARTIAL_SCHEMA)
+    return df.select("embedding").mapInPandas(run, _PARTIAL_SCHEMA)
 
 
-def fit_pca(df: DataFrame, vec_col: str = "embedding", k: int = 8):
-    """Fit PCA; returns ``(mean, components, eigvals, n, total_var)``
-    with ``components`` shaped (k, d), rows = principal axes sorted by
+def fit_pca(df: DataFrame):
+    """Fit PCA on the ``embedding`` column; returns ``(mean, components,
+    eigvals, n, total_var)`` with ``components`` shaped
+    (``N_COMPONENTS``, d), rows = principal axes sorted by
     descending eigenvalue, sign-fixed deterministically; ``total_var``
     is the covariance trace (denominator of explained-variance)."""
-    rows = _moment_partials(df, vec_col).collect()
+    rows = _moment_partials(df).collect()
     if not rows:
         raise ValueError("fit_pca: empty input")
     n = sum(r["n"] for r in rows)
@@ -91,7 +96,7 @@ def fit_pca(df: DataFrame, vec_col: str = "embedding", k: int = 8):
     cov = g / n - np.outer(mean, mean)
     # eigh returns ascending eigenvalues of the symmetric covariance.
     vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
+    order = np.argsort(vals)[::-1][:N_COMPONENTS]
     eigvals = np.maximum(vals[order], 0.0)
     comps = vecs[:, order].T.copy()
     # Deterministic sign: make the largest-|loading| coordinate of each
@@ -108,18 +113,16 @@ def project_pca(
     df: DataFrame,
     mean: np.ndarray,
     components: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "pc",
 ) -> DataFrame:
-    """Project each vector onto the fitted components — one broadcast
-    d*k matrix, one Arrow-batched matmul per batch."""
+    """Project each ``(vec_id, embedding)`` vector onto the fitted
+    components as ``(vec_id, pc)`` — one broadcast d*k matrix, one
+    Arrow-batched matmul per batch."""
     mu = mean.copy()
     w = components.T.copy()  # (d, k)
     schema = StructType(
         [
-            StructField(id_col, LongType()),
-            StructField(out_col, ArrayType(DoubleType())),
+            StructField("vec_id", LongType()),
+            StructField("pc", ArrayType(DoubleType())),
         ]
     )
 
@@ -127,21 +130,21 @@ def project_pca(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64) - mu
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64) - mu
             p = x @ w
             yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), out_col: list(p)}
+                {"vec_id": pdf["vec_id"].to_numpy(), "pc": list(p)}
             )
 
-    return df.select(id_col, vec_col).mapInPandas(run, schema)
+    return df.select("vec_id", "embedding").mapInPandas(run, schema)
 
 
-def pca_spectrum(df: DataFrame, vec_col: str = "embedding", k: int = 8) -> DataFrame:
+def pca_spectrum(df: DataFrame) -> DataFrame:
     """Component spectrum readout: one row per principal component with
     eigenvalue, explained-variance ratio, cumulative EVR, and the
     dominant input dimension — the scree-plot table."""
     spark = df.sparkSession
-    mean, comps, eigvals, n, total_var = fit_pca(df, vec_col, k)
+    mean, comps, eigvals, n, total_var = fit_pca(df)
     cum = 0.0
     rows = []
     for i, ev in enumerate(eigvals):

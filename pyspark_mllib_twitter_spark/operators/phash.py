@@ -19,10 +19,9 @@ Scale shape (100 TB of images):
   (asset_id, 8-byte hash);
 - banding shuffles 4 rows of (16-bit block, id) per image — bytes moved are
   independent of image size;
-- the pigeonhole guarantee is exact for Hamming distance < n_bands;
+- the pigeonhole guarantee is exact for Hamming distance < ``N_BANDS``;
   larger radii need multiple permuted band tables (Manku's rotation
-  scheme), which this module exposes via ``n_bands`` rather than
-  hard-coding.
+  scheme).
 
 Reference parity note: the reference engine (COMP5349_2.py) has no image
 surface at all — this extends the north-star multimodal family
@@ -42,7 +41,7 @@ from pyspark.sql import types as T
 #: dHash grid: 9 columns x 8 rows of grayscale -> 8 comparisons per row.
 DHASH_W, DHASH_H = 9, 8
 
-#: Default banding: 4 x 16-bit blocks over the 64-bit hash. Pigeonhole:
+#: Banding: 4 x 16-bit blocks over the 64-bit hash. Pigeonhole:
 #: any pair with Hamming distance <= 3 is guaranteed a shared block.
 N_BANDS = 4
 
@@ -72,13 +71,16 @@ INVERT_OFFSET = 20_000
 BRIGHT_MOD, INVERT_MOD = 4, 6
 
 
-def synthetic_png_neardup_corpus(
-    spark, n_base: int = 96, seed: int = 7, num_partitions: int = 8
-) -> DataFrame:
+#: Base-image count and pixel seed of the synthetic near-dup corpus.
+N_BASE = 96
+CORPUS_SEED = 7
+
+
+def synthetic_png_neardup_corpus(spark) -> DataFrame:
     """Deterministic PNG corpus with planted near-duplicates, generated
     DISTRIBUTED (``spark.range`` + ``mapInPandas``, no driver rows):
 
-    - ``n_base`` base images, 32x24 RGB, murmur-mixed pseudo-random pixels
+    - ``N_BASE`` base images, 32x24 RGB, murmur-mixed pseudo-random pixels
       in [0, 250] (so the brightness variant below can never clip);
     - every ``BRIGHT_MOD``-th base gains a ``+3``-brightness copy at
       ``id + BRIGHT_OFFSET`` — every pixel comparison is preserved, so its
@@ -116,7 +118,7 @@ def synthetic_png_neardup_corpus(
                     _murmur_mix(
                         np.uint64(i) * np.uint64(0x9E3779B97F4A7C15)
                         + idx
-                        + np.uint64(seed)
+                        + np.uint64(CORPUS_SEED)
                     )
                     % np.uint64(251)
                 ).astype(np.uint8)
@@ -153,7 +155,7 @@ def synthetic_png_neardup_corpus(
                     )
             yield pd.DataFrame(rows)
 
-    return spark.range(0, n_base, 1, num_partitions).mapInPandas(gen, schema)
+    return spark.range(0, N_BASE, 1, 8).mapInPandas(gen, schema)
 
 
 def dhash_py(payload: bytes) -> int:
@@ -211,18 +213,17 @@ def dhash_features(assets: DataFrame) -> DataFrame:
 
 def hamming_neardup_pairs(
     hashes: DataFrame,
-    n_bands: int = N_BANDS,
     max_hamming: int = MAX_HAMMING,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, hamming <= max_hamming) from a
     (asset_id, dhash) table.
 
-    Candidates: explode each hash into ``n_bands`` (band, block) keys —
+    Candidates: explode each hash into ``N_BANDS`` (band, block) keys —
     block = 16-bit slice via ``shiftrightunsigned`` + mask, all JVM — and
     self-equi-join on the key. Verification: ``bit_count(XOR)`` on the
     joined longs, exact. Banding affects recall only (guaranteed complete
-    for hamming < n_bands by pigeonhole), never precision."""
-    bits_per = 64 // n_bands
+    for hamming < N_BANDS by pigeonhole), never precision."""
+    bits_per = 64 // N_BANDS
     mask = (1 << bits_per) - 1
     # shiftrightunsigned takes a literal shift, so the (band, block) pairs
     # are built as an array of structs and exploded — still one projection.
@@ -238,7 +239,7 @@ def hamming_neardup_pairs(
                         .bitwiseAND(F.lit(mask))
                         .alias("block"),
                     )
-                    for b in range(n_bands)
+                    for b in range(N_BANDS)
                 ]
             )
         ).alias("bb"),

@@ -30,9 +30,13 @@ from pyspark.sql import DataFrame
 
 from .sampling import hash_sample
 
+#: Quantizer training-sample target and Lloyd round cap for every fit.
+MAX_FIT_ROWS = 65536
+LLOYD_ITERS = 8
 
-def bounded_fit_sample(df: DataFrame, key_col: str, max_fit_rows: int) -> DataFrame:
-    """Deterministic ≤ ``~max_fit_rows`` sample for quantizer training.
+
+def bounded_fit_sample(df: DataFrame, key_col: str) -> DataFrame:
+    """Deterministic ≤ ``~MAX_FIT_ROWS`` sample for quantizer training.
 
     md5-hash keyed (engine-portable, seedless, reproducible across runs and
     cluster sizes); granularity is 1/16, so the realized size is within ~2×
@@ -40,24 +44,24 @@ def bounded_fit_sample(df: DataFrame, key_col: str, max_fit_rows: int) -> DataFr
     corpus would be the difference between an O(sample) constant cost and an
     O(corpus × iterations) job at 100 TB."""
     n = df.count()
-    if n <= max_fit_rows:
+    if n <= MAX_FIT_ROWS:
         return df
-    rate = max(1, min(16, (16 * max_fit_rows) // n))
+    rate = max(1, min(16, (16 * MAX_FIT_ROWS) // n))
     return hash_sample(df, key_col, rate)
 
 
-def lloyd(x, k: int, seed: int = 42, iters: int = 8, spherical: bool = False):
-    """k centroids of the in-memory sample ``x`` (2-D array-like) by Lloyd
-    iteration; deterministic for a given ``seed`` (seeded-RNG choice of k
-    distinct start points). Returns a ``(k, dim)`` float64 ndarray —
-    unit-norm rows when ``spherical``."""
+def lloyd(x, k: int, seed: int = 42, spherical: bool = False):
+    """k centroids of the in-memory sample ``x`` (2-D array-like) by
+    ``LLOYD_ITERS`` Lloyd rounds; deterministic for a given ``seed``
+    (seeded-RNG choice of k distinct start points). Returns a ``(k, dim)``
+    float64 ndarray — unit-norm rows when ``spherical``."""
     import numpy as np
 
     x = np.asarray(x, dtype=np.float64)
     k = min(k, len(x))
     rng = np.random.default_rng(seed)
     cents = x[rng.choice(len(x), size=k, replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(LLOYD_ITERS):
         if spherical:
             # unit inputs and centroids: max cosine == max dot
             labels = (x @ cents.T).argmax(axis=1)
@@ -83,28 +87,19 @@ def fit_centroids(
     key_col: str,
     arr_col: str,
     k: int,
-    seed: int = 42,
-    iters: int = 8,
-    spherical: bool = True,
-    max_fit_rows: int = 65536,
 ) -> list[list[float]]:
-    """Bounded-sample collect + :func:`lloyd`; returns plain float lists
-    ready to broadcast as literals. Empty input → empty list."""
-    sample = [
-        r[0]
-        for r in bounded_fit_sample(df, key_col, max_fit_rows)
-        .select(arr_col)
-        .collect()
-    ]
+    """Bounded-sample collect + spherical :func:`lloyd`; returns plain float
+    lists ready to broadcast as literals. Empty input → empty list."""
+    sample = [r[0] for r in bounded_fit_sample(df, key_col).select(arr_col).collect()]
     if not sample:
         return []
-    cents = lloyd(sample, k, seed=seed, iters=iters, spherical=spherical)
+    cents = lloyd(sample, k, spherical=True)
     return [[float(v) for v in c] for c in cents]
 
 
-def nearest_centroid_udf(centroids: list[list[float]], spherical: bool = True):
-    """Arrow-batched nearest-centroid id (0-based) for an ``array<double>``
-    column.
+def nearest_centroid_udf(centroids: list[list[float]]):
+    """Arrow-batched nearest unit centroid id (0-based, by max dot) for a
+    unit-norm ``array<double>`` column.
 
     Why a pandas UDF and not a zip_with/aggregate expression: Catalyst
     evaluates higher-order-function lambdas INTERPRETED, per element — k
@@ -112,7 +107,7 @@ def nearest_centroid_udf(centroids: list[list[float]], spherical: bool = True):
     2 s for 2000 rows × 16 × 64), while numpy does the whole Arrow batch
     as one (n, d)·(d, k) matmul. This is the sanctioned vectorized escape
     hatch; the broadcast state is just the (k, d) centroid matrix. Ties
-    resolve to the lowest centroid id (numpy argmax/argmin first-index),
+    resolve to the lowest centroid id (numpy argmax first-index),
     matching :func:`lloyd`'s assignment exactly."""
     import numpy as np
     import pandas as pd
@@ -123,12 +118,7 @@ def nearest_centroid_udf(centroids: list[list[float]], spherical: bool = True):
     def assign(col):
         if not len(col):
             return pd.Series([], dtype="int32")
-        x = np.stack(col.to_numpy())
-        if spherical:
-            lab = (x @ cents.T).argmax(axis=1)
-        else:
-            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            lab = d2.argmin(axis=1)
+        lab = (np.stack(col.to_numpy()) @ cents.T).argmax(axis=1)
         return pd.Series(lab.astype("int32"))
 
     # Real annotation objects, not strings: the module's `from __future__

@@ -39,15 +39,13 @@ def hash_sample(df: DataFrame, key_col: str, rate_sixteenths: int) -> DataFrame:
     return df.filter(digit.isin(allowed))
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
+def stratified_sample(df: DataFrame, strata_col: str, fractions: dict) -> DataFrame:
     """Per-stratum Bernoulli sample (Spark ``sampleBy``): each stratum key
     is kept with its own probability — the rate-equalizer for skewed
     strata (e.g. downsample the dominant language, keep the rare ones).
-    Seeded for within-engine reproducibility; statistical, not exact —
+    Seeded (7) for within-engine reproducibility; statistical, not exact —
     verify with tolerance tests, not row oracles."""
-    return df.sampleBy(strata_col, fractions, seed)
+    return df.sampleBy(strata_col, fractions, 7)
 
 
 #: Hex digits in md5 output order — first k digits = keep-rate k/16.

@@ -32,34 +32,42 @@ from .quantizer import (
 )
 from .topk import top_k_per_group
 
+#: One quantizer geometry for the PQ and IVF+PQ operators (the q_ns_ann_*
+#: entries): 16 coarse cells, 8 probed; 8 one-byte PQ codes per vector
+#: over 64-code sub-space codebooks; ``k * REFINE`` ADC candidates
+#: re-ranked exactly.
+SEED = 42
+N_CENTROIDS = 16
+IVFPQ_PROBE = 8
+N_SUBVECTORS = 8
+N_CODES = 64
+REFINE = 8
+
 
 def brute_force_top_k(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors in ``corpus`` for every row of ``queries``.
+    """Exact top-k cosine neighbors in ``corpus`` for every row of ``queries``
+    (``vec_id`` / ``embedding`` columns), each query excluded from its own
+    neighbors.
 
     Returns columns: ``query_id``, ``neighbor_id``, ``sim``, ``rn`` (1-based
     rank). Ties broken by ascending neighbor id (deterministic; the W1
-    golden-output tie-break uses DESC id — callers choose via ``tie_desc``
-    variants if they need reference fidelity).
+    reference tie-break, DESC id, lives in
+    ``workloads.w1_similarity.user_similarity_top_k``).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        vectors.as_double_array(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        vectors.as_double_array("embedding").alias("q_vec"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.as_double_array(vec_col).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.as_double_array("embedding").alias("c_vec"),
     )
     # Broadcast the query side: the big corpus streams, no shuffle of corpus.
-    pairs = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -83,12 +91,6 @@ def lsh_top_k(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 4,
-    exclude_self: bool = True,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via random-projection LSH.
 
@@ -101,8 +103,8 @@ def lsh_top_k(
 
     def prep(df: DataFrame, prefix: str) -> DataFrame:
         normed = df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            vectors.l2_normalize(vec_col).alias("arr"),
+            F.col("vec_id").alias(f"{prefix}_id"),
+            vectors.l2_normalize("embedding").alias("arr"),
         )
         return _to_ml_vectors(normed, "arr", "features").drop("arr")
 
@@ -112,9 +114,9 @@ def lsh_top_k(
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
+        bucketLength=2.0,
+        numHashTables=4,
+        seed=SEED,
     )
     model = lsh.fit(c)
     # Wide threshold: unit-sphere euclidean distance 2.0 == cosine -1.0, so
@@ -125,9 +127,7 @@ def lsh_top_k(
         F.col("datasetB.neighbor_id").alias("neighbor_id"),
         # back to cosine: cos = 1 - dist^2 / 2 on unit vectors
         (1 - F.col("dist") * F.col("dist") / 2).alias("sim"),
-    )
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
     return top_k_per_group(
         pairs,
         ["query_id"],
@@ -140,18 +140,13 @@ def ivf_top_k(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    max_fit_rows: int = 65536,
-    max_iter: int = 8,
 ) -> DataFrame:
-    """IVF-style ANN: KMeans-partition the corpus, search only the ``n_probe``
-    nearest centroids per query. The coarse quantizer is tiny (centroids are
-    broadcast); the fine search is an equi-join on centroid id — shuffle
-    scales with corpus size / n_centroids * n_probe, not |Q| x |corpus|.
+    """IVF-style ANN: KMeans-partition the corpus into ``N_CENTROIDS`` cells,
+    search only the ``n_probe`` nearest centroids per query. The coarse
+    quantizer is tiny (centroids are broadcast); the fine search is an
+    equi-join on centroid id — shuffle scales with corpus size /
+    n_centroids * n_probe, not |Q| x |corpus|.
 
     Vectors are L2-normalized and the coarse quantizer is SPHERICAL k-means
     (shared helper, ``operators.quantizer``) so centroid assignment and the
@@ -166,26 +161,21 @@ def ivf_top_k(
     clusters, and n_probe is the recall/cost dial.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.l2_normalize(vec_col).alias("arr"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.l2_normalize("embedding").alias("arr"),
     )
     # Fit the coarse quantizer on a bounded sample; ASSIGN the full corpus.
     # Lloyd iterations are capped — centroid quality plateaus in a few
     # rounds and n_probe, not centroid polish, is the recall dial.
-    centroids = fit_centroids(
-        c, "neighbor_id", "arr", n_centroids,
-        seed=seed, iters=max_iter, spherical=True, max_fit_rows=max_fit_rows,
-    )
-    c_assigned = c.withColumn(
-        "centroid_id", nearest_centroid_udf(centroids, spherical=True)("arr")
-    )
+    centroids = fit_centroids(c, "neighbor_id", "arr", N_CENTROIDS)
+    c_assigned = c.withColumn("centroid_id", nearest_centroid_udf(centroids)("arr"))
     cent_df = corpus.sparkSession.createDataFrame(
         list(enumerate(centroids)), "centroid_id int, centroid array<double>"
     )
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        vectors.l2_normalize(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        vectors.l2_normalize("embedding").alias("q_vec"),
     )
     # nearest n_probe centroids per query (centroid table is tiny → broadcast)
     q_cent = top_k_per_group(
@@ -221,24 +211,16 @@ def pq_top_k(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_subvectors: int = 4,
-    n_codes: int = 16,
-    refine: int = 4,
-    seed: int = 42,
-    codebook_max_iter: int = 8,
-    max_fit_rows: int = 65536,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance + exact re-rank.
 
     The 100 TB memory story: each d-dim float vector is encoded as
-    ``n_subvectors`` one-byte codes (d*4 bytes -> m bytes, 64x here), so the
+    m = ``N_SUBVECTORS`` one-byte codes (d*4 bytes -> m bytes), so the
     candidate scan reads codes, not vectors. Per query, a lookup table of
-    subvector-to-centroid squared distances is built (m x n_codes floats,
-    broadcast); approximate distance is m array lookups per candidate
-    (``zip_with`` + ``aggregate``, all codegen'd JVM) instead of d
-    multiplies. The top ``k*refine`` by approximate distance are re-ranked
+    subvector-to-centroid squared distances is built (m x ``N_CODES``
+    floats, broadcast); approximate distance is m array lookups per
+    candidate (``zip_with`` + ``aggregate``, all codegen'd JVM) instead of d
+    multiplies. The top ``k*REFINE`` by approximate distance are re-ranked
     with exact cosine against the full vectors — the standard ADC+refine
     pipeline (Jegou et al., PQ for NN search; public method).
 
@@ -253,35 +235,19 @@ def pq_top_k(
     See :func:`ivfpq_top_k` for the composed IVF coarse-pruning + PQ
     compressed-scan operator — the full 100 TB shape.
     """
-    import numpy as np
-
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.l2_normalize(vec_col).alias("arr"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.l2_normalize("embedding").alias("arr"),
     )
     # One bounded-sample collect trains ALL m sub-space codebooks; capped
     # iterations, because quantization error plateaus after a few Lloyd
     # rounds and the exact re-rank absorbs the residual. The vector dim
     # comes from the sample itself — no separate probe job.
-    sample = np.asarray(
-        [
-            r[0]
-            for r in bounded_fit_sample(c, "neighbor_id", max_fit_rows)
-            .select("arr")
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    dim = sample.shape[1]
-    if dim % n_subvectors != 0:
-        raise ValueError(f"dim {dim} not divisible by n_subvectors {n_subvectors}")
-    lsub = dim // n_subvectors
+    sample = _fit_sample(c)
+    lsub = _subvector_len(sample)
     codebooks = [
-        lloyd(
-            sample[:, s * lsub : (s + 1) * lsub], n_codes,
-            seed=seed + s, iters=codebook_max_iter, spherical=False,
-        )
-        for s in range(n_subvectors)
+        lloyd(sample[:, s * lsub : (s + 1) * lsub], N_CODES, seed=SEED + s, spherical=False)
+        for s in range(N_SUBVECTORS)
     ]
     cb_lists = [[[float(v) for v in row] for row in b] for b in codebooks]
     codes = c.select(
@@ -291,8 +257,8 @@ def pq_top_k(
     )
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        vectors.l2_normalize(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        vectors.l2_normalize("embedding").alias("q_vec"),
     )
     # Per-query LUT matrix (subspace × code squared distances), one
     # Arrow-batched UDF over the tiny query set — replaces a
@@ -325,7 +291,7 @@ def pq_top_k(
         approx,
         ["query_id"],
         [F.col("approx_d2").asc(), F.col("neighbor_id").asc()],
-        k * refine,
+        k * REFINE,
         rank_col="cand_rn",
     )
     # Exact re-rank of the surviving candidates.
@@ -346,29 +312,18 @@ def ivfpq_top_k(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    n_subvectors: int = 8,
-    n_codes: int = 64,
-    refine: int = 8,
-    seed: int = 42,
-    max_fit_rows: int = 65536,
-    max_iter: int = 8,
-    codebook_max_iter: int = 8,
 ) -> DataFrame:
     """Composed IVF + PQ ANN — the full 100 TB index shape (Jegou et al.,
     "Product quantization for nearest neighbor search", 2011; public).
 
-    IVF alone cuts the CANDIDATE COUNT (probe n_probe of n_centroids
-    cells) but still reads full vectors; PQ alone compresses the SCAN
-    (m one-byte codes per vector) but reads every row. Composed: the
+    IVF alone cuts the CANDIDATE COUNT (probe ``IVFPQ_PROBE`` of
+    ``N_CENTROIDS`` cells) but still reads full vectors; PQ alone
+    compresses the SCAN (m one-byte codes per vector) but reads every row. Composed: the
     coarse spherical quantizer routes each corpus vector to a cell, PQ
     encodes the RESIDUAL (vector − its cell centroid — residuals have far
     less variance than raw vectors, so the same code budget quantizes
     finer), and a query ADC-scans codes only inside its probed cells, then
-    exactly re-ranks the top ``k*refine``. Cost per query: shuffle/scan
+    exactly re-ranks the top ``k*REFINE``. Cost per query: shuffle/scan
     ∝ corpus/n_centroids × n_probe rows of m bytes — both dials cut.
 
     Distributed shape: both quantizers fit driver-local on ONE bounded
@@ -381,61 +336,52 @@ def ivfpq_top_k(
     Output schema matches :func:`brute_force_top_k` for recall comparison.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.l2_normalize(vec_col).alias("arr"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.l2_normalize("embedding").alias("arr"),
     )
-    coarse_lists, cb_lists = _fit_ivfpq(
-        c, n_centroids, n_subvectors, n_codes,
-        seed=seed, max_iter=max_iter, codebook_max_iter=codebook_max_iter,
-        max_fit_rows=max_fit_rows,
-    )
+    coarse_lists, cb_lists = _fit_ivfpq(c, N_CENTROIDS)
     codes = _encode_ivfpq(c, coarse_lists, cb_lists)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        vectors.l2_normalize(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        vectors.l2_normalize("embedding").alias("q_vec"),
     )
-    return _rank_probed(codes, q, coarse_lists, cb_lists, k, n_probe, refine)
+    return _rank_probed(codes, q, coarse_lists, cb_lists, k, IVFPQ_PROBE)
 
 
-def _fit_ivfpq(
-    c: DataFrame,
-    n_centroids: int,
-    n_subvectors: int,
-    n_codes: int,
-    seed: int,
-    max_iter: int,
-    codebook_max_iter: int,
-    max_fit_rows: int,
-):
+def _fit_sample(c: DataFrame):
+    """The bounded quantizer-training sample of ``c.arr`` as a numpy matrix."""
+    import numpy as np
+
+    return np.asarray(
+        [r[0] for r in bounded_fit_sample(c, "neighbor_id").select("arr").collect()],
+        dtype=np.float64,
+    )
+
+
+def _subvector_len(sample) -> int:
+    dim = sample.shape[1]
+    if dim % N_SUBVECTORS != 0:
+        raise ValueError(f"dim {dim} not divisible by n_subvectors {N_SUBVECTORS}")
+    return dim // N_SUBVECTORS
+
+
+def _fit_ivfpq(c: DataFrame, n_centroids: int):
     """Fit the coarse quantizer + residual codebooks on ONE bounded-sample
     collect (the sample is assigned/residualized in numpy with the exact
     argmax-dot / first-tie semantics of the distributed UDFs). Returns
     ``(coarse, codebooks)`` as plain float lists — json-serializable, so a
     persisted index can store them next to the codes."""
-    import numpy as np
-
-    sample = np.asarray(
-        [
-            r[0]
-            for r in bounded_fit_sample(c, "neighbor_id", max_fit_rows)
-            .select("arr")
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    dim = sample.shape[1]
-    if dim % n_subvectors != 0:
-        raise ValueError(f"dim {dim} not divisible by n_subvectors {n_subvectors}")
-    lsub = dim // n_subvectors
-    coarse = lloyd(sample, n_centroids, seed=seed, iters=max_iter, spherical=True)
+    sample = _fit_sample(c)
+    lsub = _subvector_len(sample)
+    coarse = lloyd(sample, n_centroids, seed=SEED, spherical=True)
     labels = (sample @ coarse.T).argmax(axis=1)
     res_sample = sample - coarse[labels]
     codebooks = [
         lloyd(
-            res_sample[:, s * lsub : (s + 1) * lsub], n_codes,
-            seed=seed + 1 + s, iters=codebook_max_iter, spherical=False,
+            res_sample[:, s * lsub : (s + 1) * lsub], N_CODES,
+            seed=SEED + 1 + s, spherical=False,
         )
-        for s in range(n_subvectors)
+        for s in range(N_SUBVECTORS)
     ]
     coarse_lists = [[float(v) for v in row] for row in coarse]
     cb_lists = [[[float(v) for v in row] for row in b] for b in codebooks]
@@ -446,9 +392,7 @@ def _encode_ivfpq(c: DataFrame, coarse_lists: list, cb_lists: list) -> DataFrame
     """Corpus → (centroid_id, neighbor_id, arr, codes): two Arrow-batched
     passes (assignment matmul, then residualize+encode inside the encoder
     UDF — the residual never materializes as a column)."""
-    assigned = c.withColumn(
-        "centroid_id", nearest_centroid_udf(coarse_lists, spherical=True)("arr")
-    )
+    assigned = c.withColumn("centroid_id", nearest_centroid_udf(coarse_lists)("arr"))
     return assigned.select(
         "centroid_id",
         "neighbor_id",
@@ -466,13 +410,12 @@ def _rank_probed(
     cb_lists: list,
     k: int,
     n_probe: int,
-    refine: int,
     prune_scan: bool = False,
     group_mod: int | None = None,
 ) -> DataFrame:
     """Shared IVF+PQ search over an encoded corpus: probe the ``n_probe``
     nearest cells per query, ADC-scan codes inside those cells, exact
-    re-rank of the top ``k*refine``. The per-(query, cell) lookup table is
+    re-rank of the top ``k*REFINE``. The per-(query, cell) lookup table is
     one Arrow-batched UDF over the tiny probe set, because PQ codes
     residuals: ||q − x||² ≈ Σ_s ||(q − c)_s − codebook_s[code_s]||².
 
@@ -542,7 +485,7 @@ def _rank_probed(
         approx,
         ["query_id"],
         [F.col("approx_d2").asc(), F.col("neighbor_id").asc()],
-        k * refine,
+        k * REFINE,
         rank_col="cand_rn",
     )
     rescored = cand.select(
@@ -561,15 +504,7 @@ def _rank_probed(
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
-    n_subvectors: int = 8,
-    n_codes: int = 64,
-    seed: int = 42,
-    max_fit_rows: int = 65536,
-    max_iter: int = 8,
-    codebook_max_iter: int = 8,
     max_dirs: int | None = None,
 ) -> None:
     """Persist an IVF+PQ index: the encoded corpus as parquet PARTITIONED
@@ -594,14 +529,10 @@ def build_ivfpq_index(
     import os
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        vectors.l2_normalize(vec_col).alias("arr"),
+        F.col("vec_id").alias("neighbor_id"),
+        vectors.l2_normalize("embedding").alias("arr"),
     )
-    coarse_lists, cb_lists = _fit_ivfpq(
-        c, n_centroids, n_subvectors, n_codes,
-        seed=seed, max_iter=max_iter, codebook_max_iter=codebook_max_iter,
-        max_fit_rows=max_fit_rows,
-    )
+    coarse_lists, cb_lists = _fit_ivfpq(c, n_centroids)
     codes = _encode_ivfpq(c, coarse_lists, cb_lists)
     group_mod = (
         max_dirs if max_dirs is not None and n_centroids > max_dirs else None
@@ -637,10 +568,7 @@ def probe_ivfpq_index(
     path: str,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_probe: int = 4,
-    refine: int = 8,
 ) -> DataFrame:
     """Search a persisted IVF+PQ index (see :func:`build_ivfpq_index`).
     The probed cell ids become a literal IN filter on the partitioned
@@ -652,11 +580,11 @@ def probe_ivfpq_index(
         quant = json.load(f)
     codes = spark.read.parquet(os.path.join(path, "codes"))
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        vectors.l2_normalize(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        vectors.l2_normalize("embedding").alias("q_vec"),
     )
     return _rank_probed(
-        codes, q, quant["coarse"], quant["codebooks"], k, n_probe, refine,
+        codes, q, quant["coarse"], quant["codebooks"], k, n_probe,
         prune_scan=True,
         group_mod=quant.get("cell_group_mod"),
     )

@@ -82,14 +82,12 @@ def _cluster(values: np.ndarray, weights: np.ndarray, delta: int):
     return np.array(means), np.array(wts)
 
 
-def tdigest_build(
-    df: DataFrame, col: str, delta: int = DEFAULT_DELTA
-) -> DataFrame:
+def tdigest_build(df: DataFrame, col: str) -> DataFrame:
     """Level 1: per-partition t-digest centroids via ``mapInPandas``.
 
     Each Arrow batch stream (one task = one partition) is sorted once
     and clustered; output is a centroid table ``(mean, weight)`` of
-    ~O(delta) rows per partition.
+    ~O(``DEFAULT_DELTA``) rows per partition.
     """
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -103,7 +101,7 @@ def tdigest_build(
         if v.size == 0:
             return
         v.sort(kind="stable")
-        means, wts = _cluster(v, np.ones_like(v), delta)
+        means, wts = _cluster(v, np.ones_like(v), DEFAULT_DELTA)
         yield pd.DataFrame({"mean": means, "weight": wts})
 
     return df.select(F.col(col).cast("double").alias(col)).mapInPandas(
@@ -111,7 +109,7 @@ def tdigest_build(
     )
 
 
-def tdigest_merge(centroids: DataFrame, delta: int = DEFAULT_DELTA) -> DataFrame:
+def tdigest_merge(centroids: DataFrame) -> DataFrame:
     """Level 2: merge a centroid stream into one digest.
 
     The input is sketch-sized (partitions x delta), so the constant-key
@@ -124,7 +122,7 @@ def tdigest_merge(centroids: DataFrame, delta: int = DEFAULT_DELTA) -> DataFrame
         means, wts = _cluster(
             p["mean"].to_numpy(np.float64),
             p["weight"].to_numpy(np.float64),
-            delta,
+            DEFAULT_DELTA,
         )
         return pd.DataFrame({"mean": means, "weight": wts})
 

@@ -16,21 +16,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: English stopword subset used by default — deliberately the same tiny list
-#: as functions.text.STOPWORDS['en'] so the SQL and Pipeline paths agree.
+#: English stopword subset — deliberately the same tiny list as
+#: functions.text.STOPWORDS['en'] so the SQL and Pipeline paths agree.
 from ..functions.text import STOPWORDS
 
 
-def fit_text_features(
-    docs: DataFrame,
-    text_col: str = "text",
-    ngram_n: int = 2,
-    vocab_size: int = 1 << 12,
-    min_df: float = 1.0,
-    stopwords: list[str] | None = None,
-    keep_stages: bool = False,
-):
-    """Fit the text-featurization pipeline; returns ``(model, transformed)``.
+def fit_text_features(docs: DataFrame):
+    """Fit the text-featurization pipeline over the ``text`` column
+    (bigrams, a 4096-term vocabulary); returns ``(model, transformed)``.
 
     ``transformed`` adds: ``tokens`` (post-stopword removal), ``ngrams``,
     ``tfidf_norm`` (L2-normalized TF-IDF of the n-grams, VectorUDT — ML
@@ -49,7 +42,7 @@ def fit_text_features(
     pipeline = Pipeline(
         stages=[
             RegexTokenizer(
-                inputCol=text_col,
+                inputCol="text",
                 outputCol="raw_tokens",
                 pattern=r"\s+",
                 toLowercase=True,
@@ -58,14 +51,14 @@ def fit_text_features(
             StopWordsRemover(
                 inputCol="raw_tokens",
                 outputCol="tokens",
-                stopWords=stopwords or list(STOPWORDS["en"]),
+                stopWords=list(STOPWORDS["en"]),
             ),
-            NGram(inputCol="tokens", outputCol="ngrams", n=ngram_n),
+            NGram(inputCol="tokens", outputCol="ngrams", n=2),
             CountVectorizer(
                 inputCol="ngrams",
                 outputCol="tf",
-                vocabSize=vocab_size,
-                minDF=min_df,
+                vocabSize=1 << 12,
+                minDF=1.0,
             ),
             IDF(inputCol="tf", outputCol="tfidf"),
             Normalizer(inputCol="tfidf", outputCol="tfidf_norm", p=2.0),
@@ -79,9 +72,7 @@ def fit_text_features(
             raise ValueError(
                 "fit_text_features: corpus produced an empty n-gram "
                 "vocabulary — every document is empty or stopwords-only "
-                f"after tokenization (ngram_n={ngram_n})"
+                "after tokenization (bigrams)"
             ) from e
         raise
-    if not keep_stages:
-        out = out.drop("raw_tokens", "tf", "tfidf")
-    return model, out
+    return model, out.drop("raw_tokens", "tf", "tfidf")

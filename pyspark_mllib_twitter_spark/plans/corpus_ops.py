@@ -39,6 +39,7 @@ from ..functions import ordering as ORD
 from ..functions import text as TXT
 from ..operators.iterate import iterate
 from ..sources import read_table, spread
+from ..streaming.streams import KMV_K
 from .registry import query
 
 
@@ -1492,9 +1493,9 @@ def q_yc_bfs_sssp(spark, sf_dir):
 BPE_TRAIN_STEPS = 8
 
 
-def bpe_train(docs: DataFrame, text_col: str = "text", n_merges: int = BPE_TRAIN_STEPS) -> DataFrame:
-    """Learn ``n_merges`` BPE merges over a corpus (Sennrich et al. 2016,
-    public) — the full training loop whose single step is
+def bpe_train(docs: DataFrame) -> DataFrame:
+    """Learn ``BPE_TRAIN_STEPS`` BPE merges over the ``text`` of a corpus
+    (Sennrich et al. 2016, public) — the full training loop whose single step is
     ``q_y2_bpe_merge_step``: each round counts adjacent symbol pairs
     weighted by word frequency, merges the (weight desc, pair asc) argmax
     corpus-wide, and re-symbolizes.
@@ -1515,14 +1516,14 @@ def bpe_train(docs: DataFrame, text_col: str = "text", n_merges: int = BPE_TRAIN
 
     spark = docs.sparkSession
     freq = (
-        docs.select(_F.explode(TXT.tokens(text_col)).alias("w"))
+        docs.select(_F.explode(TXT.tokens("text")).alias("w"))
         .groupBy("w")
         .agg(_F.count("*").alias("f"))
         .select(_F.array_join(_F.split("w", ""), " ").alias("sym"), "f")
         .localCheckpoint(eager=True)
     )
     learned: list[tuple[int, str, int]] = []
-    for step in range(1, n_merges + 1):
+    for step in range(1, BPE_TRAIN_STEPS + 1):
         toks = _F.split("sym", " ")
         # Aggregate on the (a, b) STRUCT, never on a joined string: a
         # symbol may itself contain any delimiter character (e.g. "+"
@@ -3622,9 +3623,6 @@ def q_z2_interarrival(spark, sf_dir):
 # KMV distinct-count sketch (k minimum values, md5-portable, oracle-exact)
 # ---------------------------------------------------------------------------
 
-#: Sketch size: the k smallest hash values retained.
-KMV_K = 64
-
 
 @query(
     "q_z3_kmv_distinct",
@@ -4796,7 +4794,7 @@ MST_DRIVER_UNION_MAX = 1_000_000
 _MST_BROADCAST_NODES = 2_000_000
 
 
-def boruvka_mst(edges: DataFrame, max_rounds: int = MST_MAX_ROUNDS) -> DataFrame:
+def boruvka_mst(edges: DataFrame) -> DataFrame:
     """Minimum spanning forest of an undirected weighted edge list
     ``(u, v, w)`` (``u < v`` canonical, BIGINT ids) by distributed
     Borůvka (Borůvka 1926; the GraphX/Pregel MSF standard — each round
@@ -4820,7 +4818,7 @@ def boruvka_mst(edges: DataFrame, max_rounds: int = MST_MAX_ROUNDS) -> DataFrame
     ceil(log2(n)) + 1 hop budget (synchronous p <- p[p] squares chain
     coverage per hop, so log2 of the table size provably reaches every
     root — no convergence probes needed), checkpointing every third hop
-    to keep plans shallow. Outer loop raises on max_rounds exhaustion
+    to keep plans shallow. Outer loop raises on MST_MAX_ROUNDS exhaustion
     (q_z6 kcore contract: a partial forest is silently wrong).
 
     Scale: edges shuffle only on component labels (the node->label side
@@ -4842,7 +4840,7 @@ def boruvka_mst(edges: DataFrame, max_rounds: int = MST_MAX_ROUNDS) -> DataFrame
     ed = edges.localCheckpoint(eager=True)
     picked = None
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(MST_MAX_ROUNDS):
         cu = comp.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
         cv = comp.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
         if n_nodes <= _MST_BROADCAST_NODES:
@@ -4951,7 +4949,7 @@ def boruvka_mst(edges: DataFrame, max_rounds: int = MST_MAX_ROUNDS) -> DataFrame
         )
     if not converged:
         raise RuntimeError(
-            f"boruvka_mst: forest not complete within max_rounds={max_rounds}"
+            f"boruvka_mst: forest not complete within MST_MAX_ROUNDS={MST_MAX_ROUNDS}"
         )
     if picked is None:
         return edges.select("u", "v", "w").limit(0)

@@ -859,7 +859,12 @@ def q_zo_theil_sen(spark, sf_dir):
     return _kth_smallest_report(spark, slopes, "slope")
 
 
-def _kth_smallest_report(spark, slopes, col, nbuckets=4096, max_levels=3):
+#: Histogram width and depth of :func:`_kth_smallest_report`'s selection.
+_KTH_BUCKETS = 4096
+_KTH_LEVELS = 3
+
+
+def _kth_smallest_report(spark, slopes, col):
     """(n_pairs, round(median, 6)) via exact distributed selection of the
     k-th order statistic, k = (n+1)//2 — value-identical to
     ``percentile_disc(0.5) WITHIN GROUP (ORDER BY col)`` (the smallest
@@ -870,12 +875,12 @@ def _kth_smallest_report(spark, slopes, col, nbuckets=4096, max_levels=3):
     histogram aggregate ``groupBy(bucket).agg(count, min, max)`` whose
     bucket expression uses only Python-float literals (so the count pass
     and the narrowing filter evaluate bit-identical doubles), walking the
-    <=nbuckets rows on the driver to find the bucket containing rank k;
+    <=_KTH_BUCKETS rows on the driver to find the bucket containing rank k;
     the next level re-narrows using the bucket's ACTUAL [min, max] (no
     float boundary arithmetic). The final remainder (a few rows after two
     levels at bench scale; all-tied values short-circuit on lo == hi) is
     an orderBy + limit(k - rank_below) + max — the m-th smallest inside
-    the bucket. Driver-side data is bounded by nbuckets per level (the
+    the bucket. Driver-side data is bounded by _KTH_BUCKETS per level (the
     ``_doubled_tie_ranks`` offset-collect discipline), never value-sized.
     """
     first = slopes.agg(
@@ -893,7 +898,7 @@ def _kth_smallest_report(spark, slopes, col, nbuckets=4096, max_levels=3):
     k = (n + 1) // 2
     conds = []
     rank_below = 0  # values strictly before the current narrowed range
-    for _ in range(max_levels):
+    for _ in range(_KTH_LEVELS):
         if math.isnan(lo) or math.isnan(hi):
             # F.max orders NaN above every double, so a NaN makes lo < hi
             # false and the shortcut below would return the minimum.
@@ -909,11 +914,11 @@ def _kth_smallest_report(spark, slopes, col, nbuckets=4096, max_levels=3):
                 F.lit(int(n)).cast("bigint").alias("n_pairs"),
                 F.round(F.lit(float(lo)), 6).alias("slope_per_day"),
             )
-        w = (hi - lo) / nbuckets
+        w = (hi - lo) / _KTH_BUCKETS
         if w <= 0:
             break
         bucket = F.least(
-            F.floor((F.col(col) - F.lit(lo)) / F.lit(w)), F.lit(nbuckets - 1)
+            F.floor((F.col(col) - F.lit(lo)) / F.lit(w)), F.lit(_KTH_BUCKETS - 1)
         ).cast("int")
         narrowed = slopes
         for c in conds:
@@ -944,7 +949,7 @@ def _kth_smallest_report(spark, slopes, col, nbuckets=4096, max_levels=3):
         rank_below = cum
         conds.append(bucket == int(tgt["b"]))
         lo, hi = tgt["blo"], tgt["bhi"]
-        if tgt["c"] <= nbuckets:  # remainder already tiny — stop narrowing
+        if tgt["c"] <= _KTH_BUCKETS:  # remainder already tiny — stop narrowing
             break
     remain = slopes
     for c in conds:

@@ -636,26 +636,24 @@ HITS_ITERS = 10
 HITS_TOPK = 20
 
 
-def hits_scores(edges: DataFrame, iters: int = HITS_ITERS) -> tuple:
+def hits_scores(edges: DataFrame) -> tuple:
     """HITS hubs/authorities on a bipartite edge list ``(hub, auth)``
     (Kleinberg, "Authoritative sources in a hyperlinked environment",
     JACM 1999 — public): alternate h = E a and a = E^T h with L2
     normalization each half-step. Returns ``(hubs_df, auths_df)`` with
-    columns (node, score).
+    columns (node, score), after ``HITS_ITERS`` rounds.
 
     Scale shape: each half-step is one equi-join of the 2-int edge list
     with the current score vector plus one combinable sum — the same
     join-per-iteration discipline as pagerank; scores are
     localCheckpoint-pinned per round so the lineage stays constant-depth
     and each round's shuffles are not replayed by the next."""
-    if iters < 1:
-        raise ValueError(f"hits_scores needs iters >= 1, got {iters}")
     edges = edges.localCheckpoint(eager=True)  # reused 2x per iteration
     a = edges.select(F.col("auth").alias("node")).distinct().withColumn(
         "score", F.lit(1.0)
     )
     h = None
-    for it in range(iters):
+    for it in range(HITS_ITERS):
         h = (
             edges.join(a.withColumnRenamed("node", "auth"), "auth")
             .groupBy("hub")
@@ -681,7 +679,7 @@ def hits_scores(edges: DataFrame, iters: int = HITS_ITERS) -> tuple:
         # on a 20k-edge graph; eager per-round pinning brings the round
         # cost back to a constant 4 jobs (~1s).
         a = a.localCheckpoint(eager=True)
-        h = h.localCheckpoint(eager=True) if it == iters - 1 else h
+        h = h.localCheckpoint(eager=True) if it == HITS_ITERS - 1 else h
     return h, a
 
 

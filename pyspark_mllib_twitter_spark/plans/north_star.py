@@ -260,9 +260,7 @@ def q_ns_emb_neardup(spark, sf_dir):
     L2-normalized vectors (the 5th dedup family). Threshold chosen so the
     random fixture yields a small, stable candidate set; recall properties
     are covered by the LSH ANN tests."""
-    pairs = dedup.embedding_near_dup_pairs(
-        spread(_emb(spark, sf_dir)), min_cosine=0.30, num_hash_tables=8, bucket_length=1.0
-    )
+    pairs = dedup.embedding_near_dup_pairs(spread(_emb(spark, sf_dir)))
     return pairs.select(
         "id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim")
     ).orderBy("id_a", "id_b")
@@ -335,7 +333,7 @@ def q_ns_jaccard_pairs(spark, sf_dir):
     words)."""
     d = spread(_docs(spark, sf_dir).filter(F.col("doc_id") < 300))
     return (
-        dedup.ngram_jaccard_pairs(d, block_col="source", n=1, min_jaccard=0.5)
+        dedup.ngram_jaccard_pairs(d, n=1)
         .orderBy("id_a", "id_b")
     )
 
@@ -521,10 +519,7 @@ def q_ns_ann_pq(spark, sf_dir):
     # each re-read the encoded corpus; an extra exchange in that lineage
     # costs more than the single-task scan saves (measured 4.6s -> 13.4s).
     emb = _emb(spark, sf_dir)
-    res = similarity.pq_top_k(
-        corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5,
-        n_subvectors=8, n_codes=64, refine=8,
-    )
+    res = similarity.pq_top_k(corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5)
     return res.orderBy("query_id", "rn")
 
 
@@ -537,10 +532,7 @@ def q_ns_ann_ivfpq(spark, sf_dir):
     Recall-vs-exact is property-tested alongside the PQ-only operator at
     an equal code budget (tests/test_properties.py)."""
     emb = _emb(spark, sf_dir)
-    res = similarity.ivfpq_top_k(
-        corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5,
-        n_centroids=16, n_probe=8, n_subvectors=8, n_codes=64, refine=8,
-    )
+    res = similarity.ivfpq_top_k(corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5)
     return res.orderBy("query_id", "rn")
 
 
@@ -580,11 +572,9 @@ def q_ns_ann_ivfpq_idx(spark, sf_dir):
     tag = _re.sub(r"\W+", "_", sf_dir).strip("_")
     path = f"/tmp/ann_ivfpq_idx_{tag}"
     emb = _emb(spark, sf_dir)
-    similarity.build_ivfpq_index(
-        emb, path, n_centroids=16, n_subvectors=8, n_codes=64
-    )
+    similarity.build_ivfpq_index(emb, path, n_centroids=16)
     res = similarity.probe_ivfpq_index(
-        spark, path, emb.filter(F.col("vec_id") < 10), k=5, n_probe=8, refine=8
+        spark, path, emb.filter(F.col("vec_id") < 10), k=5, n_probe=8
     )
     return res.orderBy("query_id", "rn")
 
@@ -601,7 +591,7 @@ def q_ns_multimodal(spark, sf_dir):
     generator, so each branch would re-run the whole (codec-dominated)
     generation; the single pass is the shape a mixed-modality lake needs
     at scale."""
-    assets = multimodal.synthetic_assets(spark, n=256)
+    assets = multimodal.synthetic_assets(spark)
     feats = multimodal.extract_features(
         multimodal.resize_assets(assets, 64, 48, use_real_decoder="auto"),
         use_real_decoder="auto",
@@ -640,7 +630,7 @@ def q_ej_image_phash_neardup(spark, sf_dir):
     band equi-join — never all-pairs; verification is a JVM bit_count
     on two longs. 100 TB of images cost one decode pass + a banded
     join on 32-byte rows."""
-    corpus = phash.synthetic_png_neardup_corpus(spark, n_base=96)
+    corpus = phash.synthetic_png_neardup_corpus(spark)
     pairs = phash.hamming_neardup_pairs(phash.dhash_features(corpus))
     return pairs.orderBy("id_a", "id_b")
 
@@ -664,7 +654,7 @@ def q_el_image_dedup_e2e(spark, sf_dir):
     Scale: decode once (hashes cached — 16 bytes/image), banded pair
     join, then CC over the PAIR graph only — O(log diameter) rounds of
     3 bounded shuffles; image bytes never enter any of it."""
-    corpus = phash.synthetic_png_neardup_corpus(spark, n_base=96)
+    corpus = phash.synthetic_png_neardup_corpus(spark)
     hashes = phash.dhash_features(corpus).cache()
     pairs = phash.hamming_neardup_pairs(hashes)
     reps = dedup.keep_one_representatives(
@@ -832,7 +822,7 @@ def q_ns_pipeline(spark, sf_dir):
         "doc_id", F.col("doc_id") + 100000
     )
     with_dups = filtered.unionByName(dups)
-    kept = D.content_dedup(with_dups, id_col="doc_id", text_col="text")
+    kept = D.content_dedup(with_dups)
     return (
         kept.groupBy("source")
         .agg(

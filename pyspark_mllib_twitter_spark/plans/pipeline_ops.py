@@ -35,6 +35,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TXT
+from ..operators.cdc import CDC_AVG, CDC_MAX, CDC_MIN
 from ..sources import read_table, spread
 from .registry import query
 
@@ -1036,13 +1037,6 @@ def _cdc_oracle() -> str:
     """
 
 
-#: CDC geometry, sized to the ~150-550-char fixture docs (production would
-#: run e.g. 2048/512/8192 bytes).
-CDC_AVG = 64
-CDC_MIN = 16
-CDC_MAX = 192
-
-
 @query("q_xe_cdc_chunks", oracle=_cdc_oracle())
 def q_xe_cdc_chunks(spark, sf_dir):
     """Content-defined chunking, value-checked end to end.
@@ -1061,10 +1055,7 @@ def q_xe_cdc_chunks(spark, sf_dir):
     """
     from ..operators.cdc import cdc_chunks
 
-    return cdc_chunks(
-        spread(_docs(spark, sf_dir)),
-        avg_size=CDC_AVG, min_size=CDC_MIN, max_size=CDC_MAX,
-    ).orderBy("doc_id", "chunk_id")
+    return cdc_chunks(spread(_docs(spark, sf_dir))).orderBy("doc_id", "chunk_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1129,9 +1120,8 @@ def q_xf_chunk_dedup(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    kw = dict(avg_size=CDC_AVG, min_size=CDC_MIN, max_size=CDC_MAX)
-    v1fp = cdc_chunks(d, **kw).select(F.md5("chunk").alias("fp")).distinct()
-    v2 = cdc_chunks(v2_docs, **kw).select(
+    v1fp = cdc_chunks(d).select(F.md5("chunk").alias("fp")).distinct()
+    v2 = cdc_chunks(v2_docs).select(
         (F.col("doc_id") % 3 == 0).cast("int").alias("edited"),
         F.md5("chunk").alias("fp"),
     )
@@ -1152,9 +1142,9 @@ def q_xf_chunk_dedup(spark, sf_dir):
     )
 
 
-def build_chunk_fp_index(docs: "DataFrame", table: str, n_buckets: int = 8) -> "DataFrame":
-    """Persist the distinct CDC chunk fingerprints of ``docs`` as a
-    bucketed managed table (hash-bucketed AND sorted on ``fp``) and return
+def build_chunk_fp_index(docs: "DataFrame", table: str) -> "DataFrame":
+    """Persist the distinct CDC chunk fingerprints of ``docs`` as an
+    8-bucket managed table (hash-bucketed AND sorted on ``fp``) and return
     it. This is the production "delta ingest" index shape: the
     distinct+shuffle on the corpus's fingerprints is paid ONCE at write
     time; every later crawl probes the index with an equi-join on ``fp``
@@ -1165,9 +1155,8 @@ def build_chunk_fp_index(docs: "DataFrame", table: str, n_buckets: int = 8) -> "
     from ..operators.cdc import cdc_chunks
     from ..sources.bucketing import write_bucketed
 
-    kw = dict(avg_size=CDC_AVG, min_size=CDC_MIN, max_size=CDC_MAX)
-    fps = cdc_chunks(docs, **kw).select(F.md5("chunk").alias("fp")).distinct()
-    return write_bucketed(fps, table, ["fp"], n_buckets)
+    fps = cdc_chunks(docs).select(F.md5("chunk").alias("fp")).distinct()
+    return write_bucketed(fps, table, ["fp"], 8)
 
 
 @query("q_xg_chunk_dedup_bucketed", oracle=_chunk_dedup_oracle())
@@ -1196,8 +1185,7 @@ def q_xg_chunk_dedup_bucketed(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    kw = dict(avg_size=CDC_AVG, min_size=CDC_MIN, max_size=CDC_MAX)
-    v2 = cdc_chunks(v2_docs, **kw).select(
+    v2 = cdc_chunks(v2_docs).select(
         (F.col("doc_id") % 3 == 0).cast("int").alias("edited"),
         F.md5("chunk").alias("fp"),
     )

@@ -1363,14 +1363,13 @@ def q_d2_tdigest(spark, sf_dir):
     input grows only with partition COUNT.
     """
     from ..operators.tdigest import (
-        DEFAULT_DELTA,
         tdigest_build,
         tdigest_merge,
         tdigest_quantiles,
     )
 
     ev = read_table(spark, sf_dir, "events").select("value")
-    digest = tdigest_merge(tdigest_build(ev, "value"), DEFAULT_DELTA)
+    digest = tdigest_merge(tdigest_build(ev, "value"))
     # Sketch-sized (<= ~2*delta rows) driver materialization — the
     # sanctioned bounded collect, not a data collect.
     pdf = digest.toPandas()

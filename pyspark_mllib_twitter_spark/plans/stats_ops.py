@@ -1545,7 +1545,7 @@ def q_bw_pca(spark, sf_dir):
     from ..operators.pca import pca_spectrum
 
     emb = read_table(spark, sf_dir, "embeddings")
-    return pca_spectrum(emb, "embedding", k=8)
+    return pca_spectrum(emb)
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..sources import read_table
 from ..streaming import (
     FLUSH_EVENT_TYPE,
+    REPLAY_WATERMARK,
     read_events_stream,
     replay_events_dir,
     run_to_memory,
@@ -58,12 +59,8 @@ GATED_ENTRIES: dict[str, str] = {
 }
 
 
-#: The events fixture spans ~1 month and the replayer shifts late rows by 2
-#: of 8 batches → worst-case event-time lateness ~1/4 of the span (~8 days).
-#: The oracle-checked entries need ZERO dropped rows, so their watermark
-#: delay must exceed that lateness, and the flush sentinel must sit beyond
-#: delay + window so the final watermark still closes every real window.
-REPLAY_WATERMARK = "45 days"
+#: Flush sentinel offset: beyond ``REPLAY_WATERMARK`` + window, so the
+#: final watermark still closes every real window.
 REPLAY_FLUSH_MARGIN = "60 days"
 
 
@@ -175,7 +172,7 @@ def q_stream_window_counts(spark, sf_dir):
     replay lateness < watermark delay → zero dropped rows, and the flush
     sentinel closes every real window)."""
     stream = tumbling_window_counts(
-        _replayed_stream(spark, sf_dir), watermark=REPLAY_WATERMARK
+        _replayed_stream(spark, sf_dir)
     )
     out = run_to_memory(stream, output_mode="append")
     # Sentinel windows never close (the watermark never passes them), so
@@ -210,7 +207,7 @@ def q_stream_sliding(spark, sf_dir):
     from ..streaming import sliding_window_stats
 
     stream = sliding_window_stats(
-        _replayed_stream(spark, sf_dir), watermark=REPLAY_WATERMARK
+        _replayed_stream(spark, sf_dir)
     )
     out = run_to_memory(stream, output_mode="append")
     return out.filter(F.col("event_type") != FLUSH_EVENT_TYPE).orderBy(
@@ -245,7 +242,7 @@ def q_stream_ohlc(spark, sf_dir):
     from ..streaming import windowed_ohlc
 
     stream = windowed_ohlc(
-        _replayed_stream(spark, sf_dir), watermark=REPLAY_WATERMARK
+        _replayed_stream(spark, sf_dir)
     )
     out = run_to_memory(stream, output_mode="append")
     return out.filter(F.col("event_type") != FLUSH_EVENT_TYPE).orderBy(
@@ -302,8 +299,6 @@ def q_stream_join(spark, sf_dir):
         right_key="user_id",
         left_ts="click_ts",
         right_ts="purchase_ts",
-        within="1 hour",
-        watermark=REPLAY_WATERMARK,
     )
     out = run_to_memory(joined, output_mode="append")
     return out.select(
@@ -403,7 +398,7 @@ def q_stream_stateful(spark, sf_dir):
     from ..streaming import stateful_user_stats
 
     stream = stateful_user_stats(
-        _replayed_stream(spark, sf_dir), watermark=REPLAY_WATERMARK
+        _replayed_stream(spark, sf_dir)
     )
     out = run_to_memory(stream, output_mode="update")
     return (
@@ -421,7 +416,7 @@ def q_stream_stateful(spark, sf_dir):
 def q_stream_session(spark, sf_dir):
     """Per-user session windows (30 min gap) over the replayed stream;
     equivalence with batch session_window is pinned in test_streaming.py."""
-    stream = sessionized(_replayed_stream(spark, sf_dir), watermark=REPLAY_WATERMARK)
+    stream = sessionized(_replayed_stream(spark, sf_dir))
     out = run_to_memory(stream, output_mode="append")
     return out.filter(F.col("user_id") != -1).orderBy("user_id", "s_start")
 
@@ -450,7 +445,6 @@ if tws_available():
 
         stream = tws_user_stats(
             _replayed_stream(spark, sf_dir, late_fraction_pct=0, n_batches=2),
-            watermark=REPLAY_WATERMARK,
         )
         out = run_to_memory(
             stream, output_mode="update", extra_conf=ROCKSDB_STATE_CONF
@@ -511,7 +505,6 @@ def q_stream_dedup(spark, sf_dir):
     20th event one batch later: output must contain each event_id once."""
     stream = stream_dedup(
         _replayed_stream(spark, sf_dir, duplicate_every=20),
-        watermark=REPLAY_WATERMARK,
     )
     out = run_to_memory(stream, output_mode="append")
     return (
@@ -566,7 +559,11 @@ def q_stream_dedup_lake(spark, sf_dir):
     )
 
 
-def _delta_docs_replay_dir(spark, sf_dir, n_batches: int = 4) -> str:
+#: Micro-batches in the delta-crawl document replay.
+_DELTA_REPLAY_BATCHES = 4
+
+
+def _delta_docs_replay_dir(spark, sf_dir) -> str:
     """Ordered parquet chunk files of the delta-crawl document batch
     (the q_ef fixture), for file-source replay — one chunk per
     micro-batch, committed through the shared ``_cached_build_dir``
@@ -583,7 +580,7 @@ def _delta_docs_replay_dir(spark, sf_dir, n_batches: int = 4) -> str:
     key = (
         os.path.abspath(sf_dir),
         "minhash_delta",
-        n_batches,
+        _DELTA_REPLAY_BATCHES,
         DELTA_MOD,
         DELTA_ID_OFFSET,
         DELTA_PREFIX,
@@ -597,7 +594,7 @@ def _delta_docs_replay_dir(spark, sf_dir, n_batches: int = 4) -> str:
         pdf = delta.orderBy("doc_id").toPandas()
         os.makedirs(tmp)
         n = len(pdf)
-        per = max(1, (n + n_batches - 1) // n_batches)
+        per = max(1, (n + _DELTA_REPLAY_BATCHES - 1) // _DELTA_REPLAY_BATCHES)
         for i in range(0, n, per):
             pq.write_table(
                 pa.Table.from_pandas(pdf.iloc[i : i + per], preserve_index=False),
@@ -859,7 +856,7 @@ def q_stream_state_reader(spark, sf_dir):
     ev = _replayed_stream(spark, sf_dir).filter(
         F.col("event_type") != FLUSH_EVENT_TYPE
     )
-    stream = tumbling_window_counts(ev, watermark=REPLAY_WATERMARK)
+    stream = tumbling_window_counts(ev)
     with stream_conf(spark):
         q = (
             stream.writeStream.format("noop")
@@ -1006,7 +1003,6 @@ def q_stream_attribution(spark, sf_dir):
         _replayed_stream(spark, sf_dir, late_fraction_pct=0).filter(
             F.col("user_id").isNotNull()
         ),
-        watermark=REPLAY_WATERMARK,
     )
     out = run_to_memory(stream, output_mode="update")
     return out.filter(F.col("user_id") >= 0).orderBy("event_id")
@@ -1026,7 +1022,7 @@ def q_stream_topk(spark, sf_dir):
     from ..streaming import space_saving_topk
 
     stream = space_saving_topk(
-        _replayed_stream(spark, sf_dir), watermark=REPLAY_WATERMARK
+        _replayed_stream(spark, sf_dir)
     )
     out = run_to_memory(stream, output_mode="update")
     final_v = out.groupBy(F.col("event_type").alias("et")).agg(
@@ -1173,8 +1169,6 @@ def q_stream_kmv(spark, sf_dir):
             & (F.col("user_id") >= 0)
             & (F.col("event_type") != FLUSH_EVENT_TYPE)
         ),
-        watermark=REPLAY_WATERMARK,
-        k=_SKMV_K,
     )
     out = run_to_memory(stream, output_mode="update")
     final_v = out.groupBy(F.col("event_type").alias("et")).agg(
@@ -1342,7 +1336,6 @@ def q_stream_tdigest(spark, sf_dir):
             (F.col("event_type") != FLUSH_EVENT_TYPE)
             & F.col("value").isNotNull()
         ),
-        watermark=REPLAY_WATERMARK,
     )
     out = run_to_memory(stream, output_mode="update")
     final_v = out.groupBy(F.col("event_type").alias("et")).agg(

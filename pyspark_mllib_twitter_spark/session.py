@@ -22,7 +22,6 @@ def _half_ram() -> str:
 
 def get_spark(
     app_name: str = "spark-twitter-engine",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -38,11 +37,10 @@ def get_spark(
     # no environment (round-9 A/B measured ~15% Python-worker tax from
     # unconditional PYTHONPATH wiring here; see BENCHNOTES round 10).
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(cpus), 8)
-        except ValueError:
-            shuffle_partitions = 32
+    try:
+        shuffle_partitions = max(int(cpus), 8)
+    except ValueError:
+        shuffle_partitions = 32
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -85,7 +85,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread(df: DataFrame, n: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to session default parallelism — ONLY when
     the input plan yields fewer partitions than that.
 
@@ -108,7 +108,7 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     stages (i.e. RUNS JOBS) to resolve partitioning. Call this on a raw
     ``read_table``/scan DataFrame (optionally filtered/projected), never
     on the output of a join/groupBy/repartition."""
-    n = n or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
@@ -139,10 +139,9 @@ def read_tweets_json_array(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(TWEETS_SCHEMA).option("multiLine", "true").json(path)
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: list[str] | None = None) -> None:
-    """Default sink (replaces the reference's saveAsTextFile)."""
-    writer = df.write.mode(mode)
+def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    """Default sink, overwriting (replaces the reference's saveAsTextFile)."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -152,11 +151,9 @@ def write_clustered_parquet(
     df: DataFrame,
     path: str,
     cluster_by: list[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Range-clustered parquet layout: ``repartitionByRange`` on the cluster
-    keys (sampled range boundaries → one key range per output file) +
+    """Range-clustered 4-file parquet layout: ``repartitionByRange`` on the
+    cluster keys (sampled range boundaries → one key range per output file) +
     ``sortWithinPartitions`` so rows are ordered inside each file.
 
     Why it matters at 100 TB: parquet row-group min/max statistics only
@@ -166,35 +163,19 @@ def write_clustered_parquet(
     every file — the poor man's Z-order, exact for a single-key prefix.
     Costs one range-shuffle at write time; every later scan pays less.
     """
-    part = (
-        df.repartitionByRange(n_files, *cluster_by)
-        if n_files
-        else df.repartitionByRange(*cluster_by)
-    )
-    part.sortWithinPartitions(*cluster_by).write.mode(mode).parquet(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None) -> None:
-    """ORC sink — the other splittable columnar format Spark ships natively;
-    same predicate-pushdown/column-pruning story as parquet for warehouses
-    standardized on ORC (Hive-lineage)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source — vectorized read with pushdown, schema from file footer."""
-    return spark.read.orc(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV sink for interop exports. Header on; timestamps as ISO-8601 so a
-    schema'd read round-trips losslessly (micros precision)."""
     (
-        df.write.mode(mode)
+        df.repartitionByRange(4, *cluster_by)
+        .sortWithinPartitions(*cluster_by)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV sink for interop exports, overwriting. Header on; timestamps as
+    ISO-8601 so a schema'd read round-trips losslessly (micros precision)."""
+    (
+        df.write.mode("overwrite")
         .option("header", "true")
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
         .csv(path)

@@ -631,9 +631,13 @@ def docstore_merge(
     }
 
 
-def docstore_vacuum(store: str, retain_last: int = 2) -> dict:
+#: Manifest versions :func:`docstore_vacuum` keeps.
+VACUUM_RETAIN = 2
+
+
+def docstore_vacuum(store: str) -> dict:
     """Reclaim unreachable history from a ``retain_history`` docstore: keep
-    the newest ``retain_last`` manifest versions (the latest pointer always
+    the newest ``VACUUM_RETAIN`` manifest versions (the latest pointer always
     survives), delete older version snapshots, then delete every data file
     referenced by NO retained manifest. The lakehouse VACUUM shape
     (Delta/Iceberg expire-snapshots, public designs): time travel is a
@@ -650,16 +654,14 @@ def docstore_vacuum(store: str, retain_last: int = 2) -> dict:
     import os as _os
     import re as _re
 
-    if retain_last < 1:
-        raise ValueError("docstore_vacuum: retain_last must be >= 1")
     vpat = _re.compile(r"^_MANIFEST\.v(\d+)\.json$")
     versions = sorted(
         int(m.group(1))
         for m in (vpat.match(f) for f in _os.listdir(store))
         if m
     )
-    kept_v = versions[-retain_last:]
-    dropped_v = versions[: -retain_last] if len(versions) > retain_last else []
+    kept_v = versions[-VACUUM_RETAIN:]
+    dropped_v = versions[:-VACUUM_RETAIN] if len(versions) > VACUUM_RETAIN else []
 
     def _files(name: str) -> set[str]:
         with open(_os.path.join(store, name), encoding="utf-8") as f:

@@ -43,6 +43,14 @@ from pyspark.sql import types as T
 #: event_type of the far-future flush sentinel appended by the replayer.
 FLUSH_EVENT_TYPE = "__flush__"
 
+#: Watermark delay of every replayed stream. The events fixture spans ~1
+#: month and the replayer shifts late rows by 2 of 8 batches → worst-case
+#: event-time lateness ~1/4 of the span (~8 days). The oracle-checked
+#: entries need ZERO dropped rows, so the delay must exceed that lateness,
+#: and the flush sentinel must sit beyond delay + window so the final
+#: watermark still closes every real window.
+REPLAY_WATERMARK = "45 days"
+
 #: Micro-batch stats of the most recent ``run_to_memory`` call —
 #: ``{"n_batches", "add_batch_s", "trigger_s", "commit_ms",
 #: "state_partitions"}`` — so the bench can report replay-harness overhead
@@ -72,7 +80,6 @@ def replay_events_dir(
     out_dir: str | None = None,
     n_batches: int = 8,
     late_fraction_pct: int = 5,
-    late_batch_shift: int = 2,
     flush_margin: str = "2 days",
     duplicate_every: int | None = None,
 ) -> str:
@@ -80,7 +87,7 @@ def replay_events_dir(
     replay: chunk *i* becomes micro-batch *i* (``maxFilesPerTrigger=1``).
 
     Rows are event-time ordered, then a deterministic ``late_fraction_pct``%
-    (by ``event_id`` hash) are shifted ``late_batch_shift`` batches later —
+    (by ``event_id`` hash) are shifted 2 batches later —
     late arrivals within a bounded delay, per FIXTURES.md §C. A final flush
     sentinel (``event_type='__flush__'``, ts = max + ``flush_margin``)
     closes all real windows. ``duplicate_every=k`` re-appends every k-th row
@@ -103,7 +110,7 @@ def replay_events_dir(
     # Deterministic late shift: Knuth-hash of event_id, no RNG state.
     late = [(int(e) * 2654435761 % 100) < late_fraction_pct for e in pdf["event_id"]]
     batch = [
-        min(b + late_batch_shift, n_batches - 1) if is_late else b
+        min(b + 2, n_batches - 1) if is_late else b
         for b, is_late in zip(batch, late)
     ]
     pdf = pdf.assign(_batch=batch)
@@ -257,7 +264,6 @@ def stream_conf(
 def run_to_memory(
     stream_df: DataFrame,
     output_mode: str = "append",
-    name: str | None = None,
     state_partitions: int | None = 8,
     extra_conf: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -271,7 +277,7 @@ def run_to_memory(
     checkpoint manager (``session.get_spark``), so state-store commits
     fork no ``readlink``/link-status shell command per file.
     """
-    name = name or f"mem_{uuid.uuid4().hex[:8]}"
+    name = f"mem_{uuid.uuid4().hex[:8]}"
     spark = stream_df.sparkSession
     # recentProgress keeps only the most recent N updates (default 100); a
     # replay with more micro-batches than that would silently undercount
@@ -329,19 +335,15 @@ def run_to_memory(
 # Streaming operators
 # ---------------------------------------------------------------------------
 
-def tumbling_window_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window counts/sums per event_type.
+def tumbling_window_counts(events: DataFrame, watermark: str = REPLAY_WATERMARK) -> DataFrame:
+    """Watermarked 10-minute tumbling-window counts/sums per event_type.
 
     State: one row per (window, event_type); evicted once the watermark
     passes window end. Money-style sums go through decimal — same
     order-independence discipline as the batch agg suite."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
@@ -356,17 +358,12 @@ def tumbling_window_counts(
     )
 
 
-def sliding_window_stats(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked sliding-window per-type averages (each event lands in
-    window/slide overlapping windows)."""
+def sliding_window_stats(events: DataFrame) -> DataFrame:
+    """Watermarked sliding-window per-type averages (10-minute windows every
+    5 minutes: each event lands in two overlapping windows)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", REPLAY_WATERMARK)
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.avg("value").alias("avg_value"))
         .select(
             F.col("w.start").alias("w_start"),
@@ -378,12 +375,8 @@ def sliding_window_stats(
     )
 
 
-def windowed_ohlc(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window OHLC per event_type — the streaming twin
+def windowed_ohlc(events: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window OHLC per event_type — the streaming twin
     of the batch candlestick aggregate (plans/corpus_ops.py q_y8_ohlc):
     open/close via ``min_by``/``max_by`` on the shared fixed-width string
     ordering key (functions/ordering.py — lexicographic == (ts, event_id)
@@ -398,8 +391,8 @@ def windowed_ohlc(
 
     return (
         events.withColumn("ord", ord_key(F.col("ts"), F.col("event_id")))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .withWatermark("ts", REPLAY_WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.min_by("value", "ord").alias("open"),
             F.max("value").alias("high"),
@@ -420,17 +413,13 @@ def windowed_ohlc(
     )
 
 
-def sessionized(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-user session windows (gap-based). Sessions merge as events
+def sessionized(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute gap). Sessions merge as events
     arrive; a session closes — and its state is evicted — when the
     watermark passes session end + gap."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", REPLAY_WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
@@ -445,27 +434,21 @@ def sessionized(
     )
 
 
-def stream_dedup(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Exactly-once by key within the watermark horizon:
+def stream_dedup(events: DataFrame) -> DataFrame:
+    """Exactly-once by ``event_id`` within the watermark horizon:
     ``dropDuplicatesWithinWatermark`` keeps the first arrival of each key
     and drops re-deliveries until the key ages out of state — the
     bounded-state streaming twin of batch ``dropDuplicates`` (state size
     ~ keys per watermark window, not the whole stream)."""
     return (
-        events.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(keys or ["event_id"])
+        events.withWatermark("ts", REPLAY_WATERMARK)
+        .dropDuplicatesWithinWatermark(["event_id"])
     )
 
 
 def foreach_batch_parquet_sink(
     stream_df: DataFrame,
     out_dir: str,
-    output_mode: str = "append",
-    state_partitions: int | None = 8,
 ) -> None:
     """Run a streaming plan to completion (availableNow) through a
     ``foreachBatch`` parquet sink — the production pattern for sinks Spark
@@ -486,10 +469,10 @@ def foreach_batch_parquet_sink(
 
     ckpt = fast_checkpoint_dir()
     try:
-        with stream_conf(spark, state_partitions):
+        with stream_conf(spark):
             q = (
                 stream_df.writeStream.foreachBatch(write_batch)
-                .outputMode(output_mode)
+                .outputMode("append")
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
@@ -508,12 +491,9 @@ def stream_interval_join(
     right_key: str,
     left_ts: str,
     right_ts: str,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
 ) -> DataFrame:
-    """Watermarked stream-stream join: pair every right row with left rows
-    of the same key where ``left_ts <= right_ts <= left_ts + within``.
+    """Watermarked stream-stream inner join: pair every right row with left
+    rows of the same key where ``left_ts <= right_ts <= left_ts + 1 hour``.
 
     Inner matches emit as soon as both sides arrive — no window closure
     needed — but the watermark + the two-sided time-range bound are what
@@ -523,14 +503,14 @@ def stream_interval_join(
     canonical unbounded-state mistake. Callers rename columns so the two
     sides are disjoint before joining.
     """
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
+    l = left.withWatermark(left_ts, REPLAY_WATERMARK)
+    r = right.withWatermark(right_ts, REPLAY_WATERMARK)
     cond = (
         (F.col(left_key) == F.col(right_key))
         & (F.col(right_ts) >= F.col(left_ts))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {within}"))
+        & (F.col(right_ts) <= F.col(left_ts) + F.expr("INTERVAL 1 hour"))
     )
-    return l.join(r, cond, how)
+    return l.join(r, cond, "inner")
 
 
 #: Output/state schemas for stateful_user_stats.
@@ -551,7 +531,7 @@ _USER_STATS_STATE = T.StructType(
 )
 
 
-def stateful_user_stats(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def stateful_user_stats(events: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: running
     per-user (count, sum(value), max ts), one updated row per user per
     micro-batch in which the user appears.
@@ -579,7 +559,7 @@ def stateful_user_stats(events: DataFrame, watermark: str = "2 hours") -> DataFr
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", REPLAY_WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -809,7 +789,7 @@ def tws_available() -> bool:
     return ensure_protobuf() is not None
 
 
-def tws_user_stats(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def tws_user_stats(events: DataFrame) -> DataFrame:
     """Running per-user (count, sum(value)) via ``transformWithStateInPandas``
     — the Spark 4 successor of ``applyInPandasWithState`` (same semantics as
     :func:`stateful_user_stats`, modern API): a ``StatefulProcessor`` class
@@ -861,7 +841,7 @@ def tws_user_stats(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
             pass
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", REPLAY_WATERMARK)
         .groupBy("user_id")
         .transformWithStateInPandas(
             _RunningStats(),
@@ -879,7 +859,6 @@ TWS_SESSION_GAP_MS = 30 * 60 * 1000
 def tws_session_finalizer(
     events: DataFrame,
     watermark: str = "30 minutes",
-    gap_ms: int = TWS_SESSION_GAP_MS,
 ) -> DataFrame:
     """Idle-timeout SESSIONIZATION with event-time TIMERS via
     ``transformWithStateInPandas`` — the API surface ``tws_user_stats``
@@ -889,7 +868,8 @@ def tws_session_finalizer(
     batch re-runs the gap split over the open session MERGED with the
     batch's sorted events (so session boundaries match the batch twin
     ``q_dq_sessionize`` exactly, independent of micro-batch slicing —
-    including a late-but-in-allowance row more than ``gap_ms`` BEFORE
+    including a late-but-in-allowance row more than ``gap_ms``
+    (``TWS_SESSION_GAP_MS``) BEFORE
     the open session's start, which closes as its own earlier session
     instead of extending the session backward), and the open tail
     re-arms one timer at ``last_ms + gap_ms`` each batch; when the watermark passes
@@ -908,6 +888,7 @@ def tws_session_finalizer(
     """
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+    gap_ms = TWS_SESSION_GAP_MS
     fallback = ensure_protobuf()
     if fallback is not None:  # "" still carries the version override
         _wire_worker_pythonpath(events, fallback)
@@ -1028,12 +1009,7 @@ _ATTR_STATE = T.StructType(
 )
 
 
-def stateful_attribution(
-    events: DataFrame,
-    watermark: str = "2 hours",
-    touch_types: tuple = ("click", "view"),
-    lookback_days: int = 7,
-) -> DataFrame:
+def stateful_attribution(events: DataFrame) -> DataFrame:
     """Streaming last-touch attribution via ``applyInPandasWithState`` —
     the stateful twin of the batch window plan (q_zd_attribution in
     plans/mining_ops.py): per-user state is ONE (ts, id, type) tuple for
@@ -1057,7 +1033,7 @@ def stateful_attribution(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    lookback_us = lookback_days * 86_400_000_000
+    lookback_us = 7 * 86_400_000_000
 
     def update(key, pdfs, state: GroupState):
         # The function runs once PER (user, micro-batch) — ~15k calls per
@@ -1089,7 +1065,7 @@ def stateful_attribution(
                     else:
                         rows.append((int(eid_arr[i]), int(key[0]), None, None,
                                      None))
-                if etype in touch_types:
+                if etype in ("click", "view"):
                     t_us, t_eid, t_type = int(us_arr[i]), int(eid_arr[i]), etype
         state.update((t_us, t_eid, t_type))
         # ~26% of (user, batch) calls see no purchase — skip the empty
@@ -1102,7 +1078,7 @@ def stateful_attribution(
             )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", REPLAY_WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -1140,22 +1116,19 @@ _SS_STATE = T.StructType(
 
 def space_saving_topk(
     events: DataFrame,
-    watermark: str = "2 hours",
-    capacity: int = SS_CAPACITY,
-    topk: int = SS_TOPK,
 ) -> DataFrame:
     """Streaming heavy hitters per event type via the Space-Saving sketch
     (Metwally, Agrawal & El Abbadi, "Efficient computation of frequent and
     top-k elements in data streams", ICDT 2005 — public), as a custom
     stateful operator: state per key is a BOUNDED counter table of
-    ``capacity`` (user, count, err) triples regardless of how many
+    ``SS_CAPACITY`` (user, count, err) triples regardless of how many
     distinct users flow past — the property that makes per-key top-k
     viable on an unbounded stream where exact per-user counts would grow
     state linearly in the user universe.
 
     Guarantees (tested): for every tracked user,
     ``true_count <= ss_count`` and ``ss_count - ss_err <= true_count``;
-    any user with true frequency above N/capacity is guaranteed tracked.
+    any user with true frequency above N/SS_CAPACITY is guaranteed tracked.
 
     Determinism: rows are applied in (ts, event_id) order within each
     micro-batch (the Arrow chunks arrive in partition order, which is not
@@ -1163,7 +1136,7 @@ def space_saving_topk(
     deterministic replay yields a bit-identical sketch — what makes the
     operator golden-testable at all.
 
-    Each batch emits the current top-``topk`` with a monotone state
+    Each batch emits the current top-``SS_TOPK`` with a monotone state
     version; the final answer is the row set at each key's max version
     (update-mode analogue of q_stream_stateful's monotone max).
     """
@@ -1188,7 +1161,7 @@ def space_saving_topk(
                 u = int(u)
                 if u in table:
                     table[u][0] += 1
-                elif len(table) < capacity:
+                elif len(table) < SS_CAPACITY:
                     table[u] = [1, 0]
                 else:
                     # evict the minimum (count, err, user) entry
@@ -1206,7 +1179,7 @@ def space_saving_topk(
             )
         )
         head = sorted(table.items(), key=lambda kv: (-kv[1][0], kv[1][1], kv[0]))[
-            :topk
+            :SS_TOPK
         ]
         yield pd.DataFrame(
             {
@@ -1221,7 +1194,7 @@ def space_saving_topk(
 
     return (
         events.filter(F.col("user_id").isNotNull())
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", REPLAY_WATERMARK)
         .groupBy("event_type")
         .applyInPandasWithState(
             update,
@@ -1233,10 +1206,15 @@ def space_saving_topk(
     )
 
 
-def streaming_kmv(events: DataFrame, watermark: str = "2 hours", k: int = 64) -> DataFrame:
+#: KMV sketch size: the k smallest distinct hashes retained (shared with
+#: the batch twin, plans/corpus_ops.py q_z3).
+KMV_K = 64
+
+
+def streaming_kmv(events: DataFrame) -> DataFrame:
     """Streaming KMV distinct-count sketch per event type (Bar-Yossef et
     al., RANDOM 2002 — public) as a custom stateful operator: state per
-    key is the ``k`` smallest DISTINCT md5 hex digests of user ids — a
+    key is the ``KMV_K`` smallest DISTINCT md5 hex digests of user ids — a
     bounded ORDER-STATISTICS merge (contrast the register-max merge of
     the streaming HLL): merging a batch is "union then keep k smallest",
     which is associative, commutative and idempotent, so arrival order
@@ -1247,7 +1225,7 @@ def streaming_kmv(events: DataFrame, watermark: str = "2 hours", k: int = 64) ->
     Each batch emits (k_actual, kth_hash) with a monotone version; the
     numeric estimate is computed batch-side from the final state in the
     engine's shared-text close (keeping Python float rounding out of the
-    protocol). State is ``k`` 32-char digests per group, constant in the
+    protocol). State is ``KMV_K`` 32-char digests per group, constant in the
     user universe.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -1262,7 +1240,7 @@ def streaming_kmv(events: DataFrame, watermark: str = "2 hours", k: int = 64) ->
         for pdf in pdfs:
             for u in pdf["user_id"]:
                 cur.add(_hl.md5(str(int(u)).encode()).hexdigest())
-        keep = sorted(cur)[:k]
+        keep = sorted(cur)[:KMV_K]
         version += 1
         state.update((keep, version))
         yield pd.DataFrame(
@@ -1279,7 +1257,7 @@ def streaming_kmv(events: DataFrame, watermark: str = "2 hours", k: int = 64) ->
     )
     state_schema = "hashes array<string>, version long"
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", REPLAY_WATERMARK)
         .groupBy("event_type")
         .applyInPandasWithState(
             update,
@@ -1291,14 +1269,12 @@ def streaming_kmv(events: DataFrame, watermark: str = "2 hours", k: int = 64) ->
     )
 
 
-def streaming_tdigest(
-    events: DataFrame, watermark: str = "2 hours", delta: int = 100
-) -> DataFrame:
+def streaming_tdigest(events: DataFrame) -> DataFrame:
     """Streaming t-digest quantile sketch per event type (Dunning &
     Ertl 2019) as a custom stateful operator: state per key is the
     centroid list (means, weights) — each micro-batch's values merge
     into the digest by the same greedy k1-scale clustering the batch
-    twin uses (operators/tdigest.py), so state stays ~2*delta rows per
+    twin uses (operators/tdigest.py), so state stays ~2*DEFAULT_DELTA rows per
     key no matter how much data streams through. UNLIKE the KMV/HLL
     sketches, t-digest merging is NOT batching-invariant (centroid
     layout depends on arrival grouping), so this entry is rows-only
@@ -1314,7 +1290,7 @@ def streaming_tdigest(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.tdigest import _cluster, tdigest_quantiles
+    from ..operators.tdigest import DEFAULT_DELTA, _cluster, tdigest_quantiles
 
     def update(key, pdfs, state: GroupState):
         import numpy as np
@@ -1336,7 +1312,7 @@ def streaming_tdigest(
             [np.asarray(weights, dtype=np.float64), np.ones_like(add)]
         )
         order = np.lexsort((wts, pts))
-        m2, w2 = _cluster(pts[order], wts[order], delta)
+        m2, w2 = _cluster(pts[order], wts[order], DEFAULT_DELTA)
         version += 1
         state.update(([float(x) for x in m2], [float(x) for x in w2], version))
         q = tdigest_quantiles(
@@ -1360,7 +1336,7 @@ def streaming_tdigest(
     )
     state_schema = "means array<double>, weights array<double>, version long"
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", REPLAY_WATERMARK)
         .groupBy("event_type")
         .applyInPandasWithState(
             update,

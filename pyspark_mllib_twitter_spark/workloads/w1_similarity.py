@@ -27,14 +27,19 @@ from pyspark.sql import functions as F
 from ..functions import vectors
 from ..operators.topk import top_k_per_group
 
+#: Reference vectorizer hyperparameters (COMP5349_2.py:151-178):
+#: HashingTF(numFeatures=200), CountVectorizer(vocabSize=200, minDF=1).
+NUM_FEATURES = 200
+VOCAB_SIZE = 200
 
-def build_user_documents(tweets: DataFrame, fidelity: bool = True) -> DataFrame:
+
+def build_user_documents(tweets: DataFrame) -> DataFrame:
     """P1 + F1 + A1 (COMP5349_2.py:146): per-user interaction-ID documents.
 
     Returns ``(user_id, tokens array<string>)``.
 
-    ``fidelity=True`` (default) reproduces the reference's exact token
-    semantics (COMP5349_2.py:146,151-152): the collected IDs are joined with
+    The tokens reproduce the reference's exact token semantics
+    (COMP5349_2.py:146,151-152): the collected IDs are joined with
     ``', '`` into one document string and re-tokenized by whitespace
     (Tokenizer semantics: lowercase + ``\\s+`` split), so **every token but
     the last carries a trailing comma** (``'123,'``), which changes the
@@ -46,13 +51,8 @@ def build_user_documents(tweets: DataFrame, fidelity: bool = True) -> DataFrame:
     difference. The reference also does NOT filter null ``user_id`` in W1
     (only W2 does), so the null-author group forms a document that
     participates in the vocabulary and can appear as a neighbor; we keep it.
-
-    ``fidelity=False`` keeps bare sorted tokens and drops the null-user row
-    — the sane-semantics mode for new pipelines.
     """
     filtered = tweets.filter("replyto_id IS NOT NULL OR retweet_id IS NOT NULL")
-    if not fidelity:
-        filtered = filtered.filter(F.col("user_id").isNotNull())
     interactions = filtered.select(
         "user_id",
         # F1 hazard kept verbatim: concat_ws('-') would join BOTH ids with
@@ -66,8 +66,6 @@ def build_user_documents(tweets: DataFrame, fidelity: bool = True) -> DataFrame:
     grouped = interactions.groupBy("user_id").agg(
         F.sort_array(F.collect_list("interaction")).alias("sorted_ids")
     )
-    if not fidelity:
-        return grouped.select("user_id", F.col("sorted_ids").alias("tokens"))
     # The reference's join → Tokenizer round-trip: 'a, b, c' → ['a,','b,','c']
     doc = F.concat_ws(", ", "sorted_ids")
     return grouped.select(
@@ -78,15 +76,13 @@ def build_user_documents(tweets: DataFrame, fidelity: bool = True) -> DataFrame:
 
 def vectorize_documents(
     docs: DataFrame,
-    tokens_col: str = "tokens",
-    num_features: int = 200,
-    vocab_size: int = 200,
-    min_df: float = 1.0,
+    num_features: int = NUM_FEATURES,
+    vocab_size: int = VOCAB_SIZE,
 ) -> DataFrame:
-    """M1-M5 as one ``pyspark.ml.Pipeline``: TF-IDF (HashingTF + IDF) and
-    CountVectorizer branches, both L2-normalized, with reference
-    hyperparameters (COMP5349_2.py:151-178: numFeatures=200, vocabSize=200,
-    minDF=1, Normalizer p=2).
+    """M1-M5 as one ``pyspark.ml.Pipeline`` over the ``tokens`` column:
+    TF-IDF (HashingTF + IDF) and CountVectorizer branches, both
+    L2-normalized (Normalizer p=2, CountVectorizer minDF=1), with the
+    reference hyperparameters by default.
 
     Output adds ``tfidf array<double>`` and ``cv array<double>`` (unit
     vectors — dot product == cosine). Arrays, not VectorUDT, so downstream
@@ -98,10 +94,10 @@ def vectorize_documents(
 
     pipeline = Pipeline(
         stages=[
-            HashingTF(inputCol=tokens_col, outputCol="raw_tf", numFeatures=num_features),
+            HashingTF(inputCol="tokens", outputCol="raw_tf", numFeatures=num_features),
             IDF(inputCol="raw_tf", outputCol="tfidf_vec"),
             CountVectorizer(
-                inputCol=tokens_col, outputCol="cv_vec", vocabSize=vocab_size, minDF=min_df
+                inputCol="tokens", outputCol="cv_vec", vocabSize=vocab_size, minDF=1.0
             ),
             Normalizer(inputCol="tfidf_vec", outputCol="tfidf_norm", p=2.0),
             Normalizer(inputCol="cv_vec", outputCol="cv_norm", p=2.0),
@@ -119,10 +115,6 @@ def user_similarity_top_k(
     docs: DataFrame,
     query_user_ids: "list[int] | DataFrame",
     k: int = 5,
-    id_col: str = "user_id",
-    tokens_col: str = "tokens",
-    num_features: int = 200,
-    vocab_size: int = 200,
 ) -> DataFrame:
     """End-to-end W1: top-``k`` most similar users to each query user, under
     BOTH vectorizations, reference tie-break (sim DESC, user id DESC —
@@ -131,7 +123,7 @@ def user_similarity_top_k(
     Output: ``(query_id, vectorizer, neighbor_id, sim, rn)`` where
     ``vectorizer`` in {'tfidf', 'cv'}.
     """
-    vec = vectorize_documents(docs, tokens_col, num_features, vocab_size).cache()
+    vec = vectorize_documents(docs).cache()
 
     spark = docs.sparkSession
     if isinstance(query_user_ids, DataFrame):
@@ -147,10 +139,10 @@ def user_similarity_top_k(
     results = []
     for vectorizer in ("tfidf", "cv"):
         q = vec.join(
-            F.broadcast(q_ids), vec[id_col] == q_ids.query_id, "inner"
+            F.broadcast(q_ids), vec["user_id"] == q_ids.query_id, "inner"
         ).select("query_id", F.col(vectorizer).alias("q_vec"))
         corpus = vec.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vectorizer).alias("c_vec")
+            F.col("user_id").alias("neighbor_id"), F.col(vectorizer).alias("c_vec")
         )
         # J1 re-expressed: corpus x broadcast(queries), theta id != id
         pairs = corpus.crossJoin(F.broadcast(q)).filter(

@@ -24,6 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+#: Reference ALS hyperparameters (COMP5349_2.py:204).
+ALS_RANK = 10
+ALS_SEED = 0
+ALS_MAX_ITER = 5
+ALS_REG_PARAM = 0.1
+ALS_ALPHA = 1.0
+
 
 def build_mention_pairs(tweets: DataFrame) -> DataFrame:
     """F5 + P2 + A2 (COMP5349_2.py:196-197): (user_id, mention_id, y) implicit
@@ -85,20 +92,12 @@ def dense_id_dictionary(
 
 def implicit_als_recommend(
     pairs: DataFrame,
-    user_col: str = "user_id",
-    item_col: str = "mention_id",
-    rating_col: str = "y",
     k: int = 5,
-    rank: int = 10,
-    seed: int = 0,
-    max_iter: int = 5,
-    reg_param: float = 0.1,
-    alpha: float = 1.0,
     num_blocks: int | None = None,
 ) -> DataFrame:
     """Fit implicit-feedback ALS with the reference's hyperparameters
-    (COMP5349_2.py:204) and return top-``k`` recommendations per user mapped
-    back to original IDs.
+    (COMP5349_2.py:204) on ``(user_id, mention_id, y)`` pairs and return
+    top-``k`` recommendations per user mapped back to original IDs.
 
     Output: ``(user_id, rec_rank int 1..k, rec_item_id, rating float)``,
     rank order preserved from ALS.
@@ -110,23 +109,23 @@ def implicit_als_recommend(
     """
     from pyspark.ml.recommendation import ALS
 
-    user_dict = dense_id_dictionary(pairs, user_col, "u").cache()
-    item_dict = dense_id_dictionary(pairs, item_col, "i").cache()
+    user_dict = dense_id_dictionary(pairs, "user_id", "u").cache()
+    item_dict = dense_id_dictionary(pairs, "mention_id", "i").cache()
 
     encoded = (
-        pairs.join(F.broadcast(user_dict), user_col)
-        .join(F.broadcast(item_dict), item_col)
-        .select("u", "i", F.col(rating_col).cast("float").alias("y"))
+        pairs.join(F.broadcast(user_dict), "user_id")
+        .join(F.broadcast(item_dict), "mention_id")
+        .select("u", "i", F.col("y").cast("float").alias("y"))
         .cache()  # ALS reads its input many times (O4: load-bearing cache)
     )
 
     als = ALS(
-        rank=rank,
-        seed=seed,
-        maxIter=max_iter,
-        regParam=reg_param,
+        rank=ALS_RANK,
+        seed=ALS_SEED,
+        maxIter=ALS_MAX_ITER,
+        regParam=ALS_REG_PARAM,
         implicitPrefs=True,
-        alpha=alpha,
+        alpha=ALS_ALPHA,
         userCol="u",
         itemCol="i",
         ratingCol="y",
@@ -150,6 +149,6 @@ def implicit_als_recommend(
     )
     return (
         exploded.join(F.broadcast(user_dict), "u")
-        .join(F.broadcast(item_dict.withColumnRenamed(item_col, "rec_item_id")), "i")
-        .select(user_col, "rec_rank", "rec_item_id", "rating")
+        .join(F.broadcast(item_dict.withColumnRenamed("mention_id", "rec_item_id")), "i")
+        .select("user_id", "rec_rank", "rec_item_id", "rating")
     )

@@ -21,19 +21,20 @@ from pyspark.sql import functions as F
 from ..functions import text as TXT
 
 
-def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Numeric quality features + heuristic label, all JVM-side."""
+def quality_features(docs: DataFrame) -> DataFrame:
+    """Numeric quality features + heuristic label of ``(doc_id, text)``
+    documents, all JVM-side."""
     return docs.select(
         "doc_id",
-        F.length(text_col).cast("double").alias("n_char"),
-        TXT.token_count(text_col).cast("double").alias("n_tok"),
-        F.coalesce(TXT.alpha_ratio(text_col), F.lit(0.0)).alias("alpha"),
-        F.coalesce(TXT.avg_token_len(text_col), F.lit(0.0)).alias("awl"),
-        (TXT.quality_score(text_col) >= 0.9).cast("double").alias("label"),
+        F.length("text").cast("double").alias("n_char"),
+        TXT.token_count("text").cast("double").alias("n_tok"),
+        F.coalesce(TXT.alpha_ratio("text"), F.lit(0.0)).alias("alpha"),
+        F.coalesce(TXT.avg_token_len("text"), F.lit(0.0)).alias("awl"),
+        (TXT.quality_score("text") >= 0.9).cast("double").alias("label"),
     )
 
 
-def fit_quality_classifier(feats: DataFrame, seed: int = 0):
+def fit_quality_classifier(feats: DataFrame):
     """Fit the Pipeline; returns the PipelineModel."""
     from pyspark.ml import Pipeline
     from pyspark.ml.classification import LogisticRegression
@@ -54,14 +55,14 @@ def fit_quality_classifier(feats: DataFrame, seed: int = 0):
     return pipe.fit(feats)
 
 
-def quality_predictions(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_predictions(docs: DataFrame) -> DataFrame:
     """Fit + score in one call: ``(doc_id, label, prediction, p1)`` where
     ``p1`` is the positive-class probability (6dp). Deterministic: L-BFGS
     on a fixed dataset converges to the same optimum regardless of
     partitioning (convex problem), unlike ALS's seeded factor init."""
     from pyspark.ml.functions import vector_to_array
 
-    feats = quality_features(docs, text_col).cache()
+    feats = quality_features(docs).cache()
     model = fit_quality_classifier(feats)
     scored = model.transform(feats)
     return scored.select(
@@ -72,7 +73,7 @@ def quality_predictions(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tune_quality_classifier(feats: DataFrame, seed: int = 0):
+def tune_quality_classifier(feats: DataFrame):
     """Model selection via ``TrainValidationSplit`` over the W3 pipeline:
     a small regParam grid scored by validation AUC on a seeded 75/25
     split. Returns ``(tvs_model, grid_values)``. Deterministic end-to-end:
@@ -106,15 +107,15 @@ def tune_quality_classifier(feats: DataFrame, seed: int = 0):
         estimatorParamMaps=grid,
         evaluator=BinaryClassificationEvaluator(labelCol="label"),
         trainRatio=0.75,
-        seed=seed,
+        seed=0,
     )
     return tvs.fit(feats), grid_values
 
 
-def tuning_report(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def tuning_report(docs: DataFrame) -> DataFrame:
     """One row per grid point: ``(reg_param, auc, chosen)`` — the model
     selection audit record."""
-    feats = quality_features(docs, text_col)
+    feats = quality_features(docs)
     model, grid_values = tune_quality_classifier(feats)
     metrics = model.validationMetrics
     best = max(range(len(metrics)), key=lambda i: metrics[i])

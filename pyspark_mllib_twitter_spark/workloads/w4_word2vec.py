@@ -27,26 +27,23 @@ from ..functions import text as TXT
 
 def word_embeddings(
     docs: DataFrame,
-    text_col: str = "text",
-    vector_size: int = 32,
-    min_count: int = 5,
-    seed: int = 0,
     num_partitions: int = 1,
     max_iter: int = 1,
 ) -> DataFrame:
-    """Fit Word2Vec over tokenized ``text_col``; return the vocabulary as a
+    """Fit Word2Vec (32-dim, minCount 5, seed 0) over the tokenized ``text``
+    column; return the vocabulary as a
     ``(word, vec array<float>)`` DataFrame (``getVectors`` + vector_to_array,
     so downstream stays in plain SQL types)."""
     from pyspark.ml.feature import Word2Vec
     from pyspark.ml.functions import vector_to_array
 
-    toks = docs.select(TXT.tokens(text_col).alias("tokens"))
+    toks = docs.select(TXT.tokens("text").alias("tokens"))
     if num_partitions == 1:
         toks = toks.coalesce(1)  # pin layout => bit-stable training
     model = Word2Vec(
-        vectorSize=vector_size,
-        minCount=min_count,
-        seed=seed,
+        vectorSize=32,
+        minCount=5,
+        seed=0,
         numPartitions=num_partitions,
         maxIter=max_iter,
         inputCol="tokens",
@@ -90,17 +87,17 @@ def nearest_terms(vectors: DataFrame, query_words: list[str], k: int = 3) -> Dat
     )
 
 
-def top_frequent_terms(docs: DataFrame, text_col: str = "text", n: int = 5,
-                       min_count: int = 5) -> list[str]:
-    """The n most frequent tokens (count desc, token asc — total order), the
-    deterministic query-word pick for the nearest-terms demo."""
+def top_frequent_terms(docs: DataFrame) -> list[str]:
+    """The 5 most frequent ``text`` tokens seen at least 5 times (count desc,
+    token asc — total order), the deterministic query-word pick for the
+    nearest-terms demo."""
     rows = (
-        docs.select(F.explode(TXT.tokens(text_col)).alias("w"))
+        docs.select(F.explode(TXT.tokens("text")).alias("w"))
         .groupBy("w")
         .count()
-        .where(F.col("count") >= min_count)
+        .where(F.col("count") >= 5)
         .orderBy(F.desc("count"), F.asc("w"))
-        .limit(n)
+        .limit(5)
         .collect()
     )
     return [r["w"] for r in rows]

@@ -22,14 +22,9 @@ from pyspark.sql import functions as F
 from ..functions import vectors
 
 
-def cluster_embeddings(
-    emb: DataFrame,
-    k: int = 8,
-    seed: int = 42,
-    max_iter: int = 10,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """KMeans over L2-normalized embeddings; returns per-row assignments
+def cluster_embeddings(emb: DataFrame) -> DataFrame:
+    """KMeans (k=8, 10 rounds, seed 42) over L2-normalized ``embedding``
+    vectors; returns per-row assignments
     ``(vec_id, cluster, dist)`` where ``dist`` is the euclidean distance to
     the assigned centroid. Deterministic for a fixed seed and input
     partitioning (k-means|| sampling is seeded)."""
@@ -38,10 +33,10 @@ def cluster_embeddings(
 
     feats = emb.select(
         "vec_id",
-        array_to_vector(vectors.l2_normalize(vec_col)).alias("features"),
+        array_to_vector(vectors.l2_normalize("embedding")).alias("features"),
     )
     model = KMeans(
-        k=k, seed=seed, maxIter=max_iter, featuresCol="features",
+        k=8, seed=42, maxIter=10, featuresCol="features",
         predictionCol="cluster",
     ).fit(feats)
     assigned = model.transform(feats)

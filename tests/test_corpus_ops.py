@@ -639,9 +639,9 @@ def test_boruvka_mst_bench_scale_smoke(spark):
 
     from pyspark_mllib_twitter_spark.sources import read_table
 
-    sf_dir = os.path.join(
-        os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"), "sf0.1"
-    )
+    from .conftest import TESTDATA
+
+    sf_dir = os.path.join(TESTDATA, "sf0.1")
     if not os.path.isdir(sf_dir):
         import pytest
 

@@ -114,9 +114,7 @@ def test_salted_join_rejects_outer_modes(spark):
 def test_ngram_jaccard_block_guard_trips(spark, docs):
     """Oversized blocks must fail fast, not run the quadratic stage."""
     with pytest.raises(ValueError, match="max_block_size"):
-        dedup.ngram_jaccard_pairs(
-            docs, block_col="source", max_block_size=1
-        ).count()
+        dedup.ngram_jaccard_pairs(docs, max_block_size=1).count()
 
 
 def test_observation_metrics_match_batch_agg(spark, sf_smoke):

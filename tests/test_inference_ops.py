@@ -405,12 +405,12 @@ def test_ks_matches_scipy_style_recompute(spark, sf_smoke):
 # ---------------------------------------------------------------------------
 
 
-def test_pettitt_matches_bruteforce_pair_sum(spark):
+def test_pettitt_matches_bruteforce_pair_sum(spark, sf_smoke):
     """q_ed's midrank identity vs the definitional double sum
     U_t = sum_{i<=t} sum_{j>t} sgn(x_j - x_i), on the real fixture series:
     recompute every U_t in pure Python from the daily counts (ties
     included) and check K, the change day, and the signed U there."""
-    sf = "/root/testdata/sf0.001"
+    sf = sf_smoke
     import collections
 
     from pyspark.sql import functions as F  # noqa: F811 - local use

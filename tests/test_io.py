@@ -12,9 +12,7 @@ from pyspark.sql import functions as F
 from pyspark_mllib_twitter_spark.sources import read_table
 from pyspark_mllib_twitter_spark.sources.io import (
     read_csv,
-    read_orc,
     write_csv,
-    write_orc,
     write_parquet,
 )
 
@@ -70,21 +68,6 @@ def test_csv_round_trip(spark, sf_smoke, tmp_out):
     assert a == b
 
 
-def test_orc_round_trip_with_pushdown(spark, sf_smoke, tmp_out):
-    """ORC sink → source is lossless, and a filtered read shows pushed
-    predicates in the scan (same pushdown story as parquet)."""
-    orders = read_table(spark, sf_smoke, "orders")
-    write_orc(orders, tmp_out)
-    back = read_orc(spark, tmp_out)
-    assert back.schema == orders.schema
-    a = sorted(tuple(r) for r in orders.collect())
-    b = sorted(tuple(r) for r in back.collect())
-    assert a == b
-    filtered = back.filter(F.col("o_orderkey") == a[0][0])
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(o_orderkey)" in plan or "EqualTo(o_orderkey" in plan
-
-
 def test_events_ts_is_timestamp(spark, sf_smoke):
     """``events.ts`` must surface as a wall-clock timestamp type whatever the
     file's physical encoding: native ``timestamp_ntz`` for TIMESTAMP(MICROS)
@@ -118,7 +101,7 @@ def test_clustered_write_disjoint_file_ranges(spark, sf_smoke, tmp_out):
     from pyspark_mllib_twitter_spark.sources.io import write_clustered_parquet
 
     orders = read_table(spark, sf_smoke, "orders")
-    write_clustered_parquet(orders, tmp_out, ["o_orderkey"], n_files=4)
+    write_clustered_parquet(orders, tmp_out, ["o_orderkey"])
 
     files = [
         os.path.join(tmp_out, f)
@@ -388,7 +371,7 @@ def test_docstore_compaction_collapses_files(spark, tmp_path):
 def test_docstore_time_travel_and_vacuum(spark, tmp_path):
     """Time-travel contract: with retain_history every commit publishes an
     immutable versioned manifest; old versions stay readable (data files
-    pinned) after later overwrites; docstore_vacuum(retain_last) expires
+    pinned) after later overwrites; docstore_vacuum expires
     old snapshots, reclaims data files referenced by NO retained version,
     and makes expired version reads fail loudly — while every retained
     version and the latest pointer read exactly as before."""
@@ -437,7 +420,7 @@ def test_docstore_time_travel_and_vacuum(spark, tmp_path):
     }
     assert v1_files <= set(os.listdir(store))
 
-    out = docstore_vacuum(store, retain_last=2)
+    out = docstore_vacuum(store)
     assert out["kept_versions"] == [2, 3]
     assert out["dropped_versions"] == [1]
     # v1's files were referenced ONLY by v1 -> reclaimed
@@ -455,7 +438,7 @@ def test_docstore_time_travel_and_vacuum(spark, tmp_path):
         ids(1)
 
     # vacuum is idempotent
-    again = docstore_vacuum(store, retain_last=2)
+    again = docstore_vacuum(store)
     assert again["dropped_versions"] == []
     assert again["deleted_files"] == []
 

@@ -9,15 +9,13 @@ that make them scale (broadcast anti-join, rank-pairs-only shuffles).
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from pyspark_mllib_twitter_spark.plans import REGISTRY
 from pyspark_mllib_twitter_spark.plans.lakehouse import pagerank
 
-SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001")
+from .conftest import SF_ORACLE as SF
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,11 @@ tests/test_oracle.py."""
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark_mllib_twitter_spark.plans import REGISTRY
+
+from .conftest import TESTDATA
 
 
 def _rows(spark, sf, name):
@@ -119,7 +122,7 @@ def test_geo_blocking_complete_vs_bruteforce(spark):
         GEO_JOIN_RADIUS_KM,
     )
 
-    sf = "/root/testdata/sf0.01"
+    sf = os.path.join(TESTDATA, "sf0.01")
     custs = spark.read.parquet(f"{sf}/customer.parquet").collect()
     supps = spark.read.parquet(f"{sf}/supplier.parquet").collect()
 

@@ -11,7 +11,7 @@ from pyspark_mllib_twitter_spark.operators import multimodal
 
 @pytest.fixture(scope="module")
 def assets(spark):
-    df = multimodal.synthetic_assets(spark, n=256).cache()
+    df = multimodal.synthetic_assets(spark).cache()
     yield df
     df.unpersist()  # don't leak the cache into later modules
 
@@ -20,7 +20,7 @@ def test_assets_schema_and_determinism(spark, assets):
     assert assets.schema == multimodal.ASSET_SCHEMA
     assert assets.count() == 256
     # regenerating yields byte-identical payloads (seeded, id-derived)
-    again = multimodal.synthetic_assets(spark, n=256)
+    again = multimodal.synthetic_assets(spark)
     a = {r.asset_id: bytes(r.payload) for r in assets.collect()}
     b = {r.asset_id: bytes(r.payload) for r in again.collect()}
     assert a == b
@@ -108,7 +108,7 @@ def test_resize_updates_images_passes_through_rest(assets):
 
 
 def test_frame_sample_plan_counts(assets):
-    plan = multimodal.frame_sample_plan(assets, every_ms=1000)
+    plan = multimodal.frame_sample_plan(assets)
     got = {
         (r.asset_id): r.n for r in plan.groupBy("asset_id").agg(F.count("*").alias("n")).collect()
     }

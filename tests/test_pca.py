@@ -29,7 +29,7 @@ def emb(spark, sf_smoke):
 
 @pytest.fixture(scope="module")
 def fitted(emb):
-    return fit_pca(emb, "embedding", k=K)
+    return fit_pca(emb)
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +62,7 @@ def test_components_orthonormal_and_ordered(fitted):
 def test_projection_variance_equals_eigenvalues(emb, fitted, local_x):
     mean, comps, eigvals, n, total_var = fitted
     proj = (
-        project_pca(emb, mean, comps, "embedding", "vec_id", "pc")
+        project_pca(emb, mean, comps)
         .orderBy("vec_id")
         .collect()
     )
@@ -77,7 +77,7 @@ def test_projection_variance_equals_eigenvalues(emb, fitted, local_x):
 
 def test_spectrum_readout_consistent(emb, fitted):
     mean, comps, eigvals, n, total_var = fitted
-    rows = pca_spectrum(emb, "embedding", k=K).collect()
+    rows = pca_spectrum(emb).collect()
     assert [r["component"] for r in rows] == list(range(1, K + 1))
     evr = [r["explained_var_ratio"] for r in rows]
     np.testing.assert_allclose(
@@ -91,9 +91,7 @@ def test_spectrum_readout_consistent(emb, fitted):
 def test_partitioning_invariance(emb, fitted):
     """Moments are partition-order independent up to float tolerance."""
     mean, comps, eigvals, n, total_var = fitted
-    mean2, comps2, eigvals2, n2, tv2 = fit_pca(
-        emb.repartition(7, "vec_id"), "embedding", k=K
-    )
+    mean2, comps2, eigvals2, n2, tv2 = fit_pca(emb.repartition(7, "vec_id"))
     assert n2 == n
     np.testing.assert_allclose(mean2, mean, atol=1e-9)
     np.testing.assert_allclose(eigvals2, eigvals, rtol=1e-7, atol=1e-9)

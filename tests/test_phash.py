@@ -13,12 +13,12 @@ from pyspark.sql import functions as F
 from pyspark_mllib_twitter_spark.operators import phash
 from pyspark_mllib_twitter_spark.plans import REGISTRY
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE as SF
 
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    df = phash.synthetic_png_neardup_corpus(spark, n_base=96).cache()
+    df = phash.synthetic_png_neardup_corpus(spark).cache()
     yield df
     df.unpersist()
 
@@ -40,7 +40,7 @@ def test_corpus_shape_and_determinism(spark, corpus):
     assert len(ids) == n_base + n_bright + n_inv
     again = {
         r["asset_id"]: bytes(r["payload"])
-        for r in phash.synthetic_png_neardup_corpus(spark, n_base=96).collect()
+        for r in phash.synthetic_png_neardup_corpus(spark).collect()
     }
     first = {r["asset_id"]: bytes(r["payload"]) for r in corpus.collect()}
     assert first == again

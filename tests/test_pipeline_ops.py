@@ -14,7 +14,7 @@ import pytest
 
 from pyspark_mllib_twitter_spark.plans import REGISTRY, pipeline_ops
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE as SF
 
 
 def test_chunk_coverage_and_overlap(spark):

@@ -35,7 +35,7 @@ def _plan(df) -> str:
 
 def test_no_inferred_generate_filter_pushdown(spark, sf_smoke):
     docs = spread(read_table(spark, sf_smoke, "documents")).select("doc_id", "text")
-    grams = dedup.portable_shingles(docs, "doc_id", "text", 3)
+    grams = dedup.portable_shingles(docs, 3)
     exploded = grams.select("doc_id", F.explode("grams").alias("g"))
     plan = _plan(exploded)
     # One evaluation — the projection. With InferFiltersFromGenerate active

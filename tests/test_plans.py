@@ -16,7 +16,7 @@ import pytest
 
 from pyspark_mllib_twitter_spark.plans import REGISTRY
 
-SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001")
+from .conftest import SF_ORACLE as SF
 
 
 @pytest.fixture(scope="module", autouse=True)

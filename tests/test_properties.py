@@ -171,7 +171,7 @@ def test_simhash_candidates_respect_hamming_bound(documents):
     """Every emitted candidate pair has hamming <= max_hamming, and banding
     is complete: any pair with hamming <= 3 shares at least one 16-bit band
     (pigeonhole over 4 bands) — verified on near-identical docs."""
-    pairs = dedup.simhash_candidate_pairs(documents, max_hamming=3).collect()
+    pairs = dedup.simhash_candidate_pairs(documents).collect()
     assert all(r.hamming <= 3 for r in pairs)
     # Completeness: compute signatures, find all pairs with hamming <= 3 by
     # brute force over the (small) smoke fixture, compare sets.
@@ -201,9 +201,7 @@ def test_pq_recall_vs_exact(embeddings, exact_neighbors):
     random fixture — threshold leaves margin for KMeans init drift across
     partitionings)."""
     q = embeddings.filter(F.col("vec_id") < N_QUERIES)
-    approx = similarity.pq_top_k(
-        embeddings, q, k=K, n_subvectors=8, n_codes=64, refine=8
-    ).collect()
+    approx = similarity.pq_top_k(embeddings, q, k=K).collect()
     r = _recall(approx, exact_neighbors)
     assert r >= 0.6, f"PQ recall {r:.3f} < 0.6"
 
@@ -218,10 +216,7 @@ def test_ivfpq_recall_vs_exact(embeddings, exact_neighbors):
     materially below it would mean the PQ stage is dropping true
     neighbors."""
     q = embeddings.filter(F.col("vec_id") < N_QUERIES)
-    approx = similarity.ivfpq_top_k(
-        embeddings, q, k=K,
-        n_centroids=16, n_probe=8, n_subvectors=8, n_codes=64, refine=8,
-    ).collect()
+    approx = similarity.ivfpq_top_k(embeddings, q, k=K).collect()
     r = _recall(approx, exact_neighbors)
     assert r >= 0.6, f"IVF+PQ recall {r:.3f} < 0.6"
 
@@ -257,19 +252,14 @@ def test_ivfpq_index_matches_inmemory_and_prunes(spark, embeddings, tmp_path):
     partition filter on the codes scan — unprobed cells are pruned from
     I/O, not just filtered after read."""
     path = str(tmp_path / "idx")
-    similarity.build_ivfpq_index(
-        embeddings, path, n_centroids=16, n_subvectors=8, n_codes=64
-    )
+    similarity.build_ivfpq_index(embeddings, path, n_centroids=16)
     q = embeddings.filter(F.col("vec_id") < N_QUERIES)
-    probe = similarity.probe_ivfpq_index(spark, path, q, k=K, n_probe=8, refine=8)
+    probe = similarity.probe_ivfpq_index(spark, path, q, k=K, n_probe=8)
     via_idx = sorted(map(tuple, probe.collect()))
     inmem = sorted(
         map(
             tuple,
-            similarity.ivfpq_top_k(
-                embeddings, q, k=K,
-                n_centroids=16, n_probe=8, n_subvectors=8, n_codes=64, refine=8,
-            ).collect(),
+            similarity.ivfpq_top_k(embeddings, q, k=K).collect(),
         )
     )
     assert via_idx == inmem
@@ -278,8 +268,7 @@ def test_ivfpq_index_matches_inmemory_and_prunes(spark, embeddings, tmp_path):
     import re
 
     narrow = similarity.probe_ivfpq_index(
-        spark, path, embeddings.filter(F.col("vec_id") == 0), k=K,
-        n_probe=2, refine=8,
+        spark, path, embeddings.filter(F.col("vec_id") == 0), k=K, n_probe=2
     )
     qe = narrow._jdf.queryExecution()
     plan = qe.explainString(
@@ -411,8 +400,8 @@ def test_portable_signatures_are_full_width_quarters(documents):
     documents must get distinct signatures."""
     import re
 
-    grams = dedup.portable_shingles(documents, "doc_id", "text", 3)
-    rows = dedup.portable_minhash_signatures(grams, num_hashes=16).collect()
+    grams = dedup.portable_shingles(documents, 3)
+    rows = dedup.portable_minhash_signatures(grams).collect()
     assert rows
     pat = re.compile(r"^[0-9a-f]{8}$")
     for r in rows:
@@ -476,22 +465,18 @@ def test_ivfpq_grouped_index_identical_and_prunes_both_levels(
 
     flat, grouped = str(tmp_path / "flat"), str(tmp_path / "grouped")
     for path, max_dirs in ((flat, None), (grouped, 8)):
-        similarity.build_ivfpq_index(
-            embeddings, path, n_centroids=64, n_subvectors=8, n_codes=64,
-            max_dirs=max_dirs,
-        )
+        similarity.build_ivfpq_index(embeddings, path, n_centroids=64, max_dirs=max_dirs)
     q = embeddings.filter(F.col("vec_id") < N_QUERIES)
     res_flat = sorted(map(tuple, similarity.probe_ivfpq_index(
-        spark, flat, q, k=K, n_probe=8, refine=8).collect()))
+        spark, flat, q, k=K, n_probe=8).collect()))
     res_grouped = sorted(map(tuple, similarity.probe_ivfpq_index(
-        spark, grouped, q, k=K, n_probe=8, refine=8).collect()))
+        spark, grouped, q, k=K, n_probe=8).collect()))
     assert res_flat == res_grouped
     dirs = [d for d in os.listdir(os.path.join(grouped, "codes"))
             if d.startswith("cell_group=")]
     assert 0 < len(dirs) <= 8
     narrow = similarity.probe_ivfpq_index(
-        spark, grouped, embeddings.filter(F.col("vec_id") == 0), k=K,
-        n_probe=2, refine=8,
+        spark, grouped, embeddings.filter(F.col("vec_id") == 0), k=K, n_probe=2
     )
     plan = narrow._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -47,7 +47,7 @@ def test_hash_sample_guards(orders):
 
 def test_stratified_sample_respects_per_stratum_rates(orders):
     fractions = {"O": 0.5, "F": 0.1, "P": 1.0}
-    out = stratified_sample(orders, "o_orderstatus", fractions, seed=7)
+    out = stratified_sample(orders, "o_orderstatus", fractions)
     base = {r.o_orderstatus: r.n for r in orders.groupBy("o_orderstatus").agg(F.count("*").alias("n")).collect()}
     got = {r.o_orderstatus: r.n for r in out.groupBy("o_orderstatus").agg(F.count("*").alias("n")).collect()}
     for status, frac in fractions.items():
@@ -60,7 +60,7 @@ def test_stratified_sample_respects_per_stratum_rates(orders):
             # Bernoulli: allow ±40% relative (small strata at sf0.001)
             assert 0.6 * expect <= got.get(status, 0) <= 1.4 * expect, (status, expect, got)
     # seeded: reproducible within the engine
-    again = stratified_sample(orders, "o_orderstatus", fractions, seed=7)
+    again = stratified_sample(orders, "o_orderstatus", fractions)
     assert sorted(r.o_orderkey for r in out.collect()) == sorted(
         r.o_orderkey for r in again.collect()
     )

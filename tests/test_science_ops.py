@@ -873,7 +873,7 @@ def test_dtw_registry_entry_runs_and_is_deterministic(spark, sf_smoke):
     assert row.path_len >= max(row.n_a, row.n_b)
 
 
-def test_matryoshka_full_dim_is_exact_and_errors_shrink(spark):
+def test_matryoshka_full_dim_is_exact_and_errors_shrink(spark, sf_smoke):
     """q_ec: the full-dim row is its own reference (zero error, total
     sign agreement), truncation error at 32 dims is no worse than at 8
     (MRL monotonicity holds in aggregate on any fixture), and every
@@ -881,7 +881,7 @@ def test_matryoshka_full_dim_is_exact_and_errors_shrink(spark):
     rows = {
         r["dim"]: r
         for r in REGISTRY["q_ec_matryoshka_audit"]
-        .spark(spark, "/root/testdata/sf0.001")
+        .spark(spark, sf_smoke)
         .collect()
     }
     assert set(rows) == {8, 16, 32, 64}
@@ -896,13 +896,13 @@ def test_matryoshka_full_dim_is_exact_and_errors_shrink(spark):
         assert n == rows[64]["n_pairs"] > 0
 
 
-def test_matryoshka_matches_numpy_bruteforce(spark):
+def test_matryoshka_matches_numpy_bruteforce(spark, sf_smoke):
     """q_ec vs a NumPy recomputation, independent of both engines: for
     every consecutive-id pair, cosines at each prefix dim quantized the
     same way, then the same per-dim aggregates."""
     import numpy as np
 
-    sf = "/root/testdata/sf0.001"
+    sf = sf_smoke
     emb = {
         r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
         for r in spark.read.parquet(f"{sf}/embeddings.parquet").collect()

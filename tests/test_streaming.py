@@ -45,7 +45,7 @@ def replay_dir(spark, events):
 
 def test_sliding_windows_match_batch(spark, events, replay_dir):
     streamed = run_to_memory(
-        sliding_window_stats(read_events_stream(spark, replay_dir), watermark=WATERMARK)
+        sliding_window_stats(read_events_stream(spark, replay_dir))
     )
     got = {
         (r.w_start, r.event_type): (r.n, round(r.avg_value, 6))
@@ -65,7 +65,7 @@ def test_sliding_windows_match_batch(spark, events, replay_dir):
 
 def test_session_windows_match_batch(spark, events, replay_dir):
     streamed = run_to_memory(
-        sessionized(read_events_stream(spark, replay_dir), watermark=WATERMARK)
+        sessionized(read_events_stream(spark, replay_dir))
     )
     got = {
         (r.user_id, r.s_start): (r.s_end, r.n_events, round(r.sum_value, 6))
@@ -90,7 +90,7 @@ def test_session_windows_match_batch(spark, events, replay_dir):
 def test_stream_dedup_exactly_once(spark, events):
     d = replay_events_dir(events, flush_margin="60 days", duplicate_every=10)
     streamed = run_to_memory(
-        stream_dedup(read_events_stream(spark, d), watermark=WATERMARK)
+        stream_dedup(read_events_stream(spark, d))
     )
     real = streamed.filter(F.col("event_id") >= 0)
     assert real.count() == events.count()
@@ -108,7 +108,7 @@ def test_stream_dedup_state_width_and_checkpoint_manager(spark, events, tmp_path
         small, str(tmp_path), n_batches=3, flush_margin="60 days", duplicate_every=7
     )
     streamed = run_to_memory(
-        stream_dedup(read_events_stream(spark, d), watermark=WATERMARK)
+        stream_dedup(read_events_stream(spark, d))
     )
     real = streamed.filter(F.col("event_id") >= 0)
     assert real.count() == real.select("event_id").distinct().count() == small.count()
@@ -121,7 +121,7 @@ def test_stream_dedup_state_width_and_checkpoint_manager(spark, events, tmp_path
 
 def test_stateful_user_stats_match_batch(spark, events, replay_dir):
     streamed = run_to_memory(
-        stateful_user_stats(read_events_stream(spark, replay_dir), watermark=WATERMARK),
+        stateful_user_stats(read_events_stream(spark, replay_dir)),
         output_mode="update",
     )
     # update mode appends one row per (user, batch); counts are monotone →
@@ -255,7 +255,7 @@ def test_watermark_drops_too_late_row(spark):
     )
     out = run_to_memory(
         tumbling_window_counts(
-            read_events_stream(spark, d), window="10 minutes", watermark="30 minutes"
+            read_events_stream(spark, d), watermark="30 minutes"
         )
     )
     counts = {
@@ -288,7 +288,7 @@ def test_late_within_delay_is_kept(spark):
     )
     out = run_to_memory(
         tumbling_window_counts(
-            read_events_stream(spark, d), window="10 minutes", watermark="30 minutes"
+            read_events_stream(spark, d), watermark="30 minutes"
         )
     )
     counts = {
@@ -310,7 +310,7 @@ def test_tws_user_stats(spark, events, replay_dir):
         tws_user_stats,
     )
 
-    stream = tws_user_stats(read_events_stream(spark, replay_dir), watermark=WATERMARK)
+    stream = tws_user_stats(read_events_stream(spark, replay_dir))
     assert stream.isStreaming
     assert set(stream.columns) == {"user_id", "n_events", "sum_value"}
 

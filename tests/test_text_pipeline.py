@@ -21,7 +21,7 @@ def documents(spark, sf_smoke):
 def test_pipeline_ngrams_match_sql_twin(documents):
     """NGram-after-StopWordsRemover output == functions.text.word_ngrams
     over the same stopword-filtered SQL tokens, row by row."""
-    _, out = fit_text_features(documents, ngram_n=2)
+    _, out = fit_text_features(documents)
     sql_side = documents.select(
         "doc_id",
         TXT.word_ngrams(

@@ -39,7 +39,7 @@ def test_w1_golden_top5(tweets):
     )
 
     golden = _load("w1_top5.json")
-    docs = build_user_documents(tweets, fidelity=True)
+    docs = build_user_documents(tweets)
     rows = user_similarity_top_k(docs, [QUERY_USER], k=5).collect()
     got = {"tfidf": [], "cv": []}
     for r in rows:  # already ordered by (query_id, vectorizer, rn)
@@ -62,20 +62,15 @@ def test_w1_tie_break_is_desc_id(tweets):
 def test_w1_fidelity_tokens_carry_commas(tweets):
     """The reference joins with ', ' then re-tokenizes (COMP5349_2.py:146,
     151-152): all tokens but the last end with ','. Also: the null-author
-    document exists in fidelity mode (no user_id filter in W1)."""
+    document exists (no user_id filter in W1)."""
     from pyspark_mllib_twitter_spark.workloads.w1_similarity import build_user_documents
 
-    docs = build_user_documents(tweets, fidelity=True)
+    docs = build_user_documents(tweets)
     row = docs.filter(docs.user_id == QUERY_USER).first()
     assert row is not None and len(row.tokens) >= 10
     assert all(t.endswith(",") for t in row.tokens[:-1])
     assert not row.tokens[-1].endswith(",")
     assert docs.filter(docs.user_id.isNull()).count() == 1
-
-    clean = build_user_documents(tweets, fidelity=False)
-    crow = clean.filter(clean.user_id == QUERY_USER).first()
-    assert all(not t.endswith(",") for t in crow.tokens)
-    assert clean.filter(clean.user_id.isNull()).count() == 0
 
 
 def test_w2_golden_recs(tweets):

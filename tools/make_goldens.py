@@ -42,7 +42,7 @@ def main() -> None:
     spark = get_spark("make-goldens")
     tweets = read_tweets_jsonl(spark, os.path.join(FIXTURES, "tweets.jsonl")).cache()
 
-    docs = build_user_documents(tweets, fidelity=True)
+    docs = build_user_documents(tweets)
     w1 = user_similarity_top_k(docs, [QUERY_USER], k=5).collect()
     w1_golden = {"query_user": QUERY_USER, "tfidf": [], "cv": []}
     for r in w1:
