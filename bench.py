@@ -130,7 +130,7 @@ def _warm_session(spark, sf_dir: str, streaming: bool) -> None:
         tiny = spark.createDataFrame(
             [(1, ["a", "b"]), (2, ["b", "c"])], ["user_id", "tokens"]
         )
-        vectorize_documents(tiny, vocab_size=4, num_features=4).collect()
+        vectorize_documents(tiny).collect()
         vecs = spark.createDataFrame(
             [(Vectors.dense([0.0, 1.0]), 0.0), (Vectors.dense([1.0, 0.0]), 1.0)],
             ["features", "label"],

@@ -15,7 +15,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: Canonical multimodal asset schema: payload is opaque bytes; typed metadata
@@ -306,18 +305,3 @@ def resize_assets(
             )
 
     return assets.mapInPandas(batches, ASSET_SCHEMA)
-
-
-def frame_sample_plan(assets: DataFrame) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per (asset, frame_ts),
-    one frame per second.
-    The expansion is pure SQL (sequence + explode) — only the decode of each
-    sampled frame would be Python, and that is the stubbed step."""
-    video = assets.filter(F.col("mime").startswith("video/") | F.col("mime").startswith("audio/"))
-    return video.select(
-        "asset_id",
-        "mime",
-        F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("meta.duration_ms"), F.lit(0)), F.lit(1000))
-        ).alias("frame_ts_ms"),
-    )

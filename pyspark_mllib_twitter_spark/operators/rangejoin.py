@@ -82,17 +82,13 @@ def interval_join(
     lo_col: str,
     hi_col: str,
     bin_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join every point row to every interval row with
+    """Inner-join every point row to every interval row with
     ``lo <= point <= hi`` via the bin equi-join. Output: all point columns
-    + all interval columns. ``how`` supports 'inner' and 'left'
-    (left keeps pointless points with null interval columns).
+    + all interval columns.
     """
     if bin_width <= 0:
         raise ValueError("interval_join: bin_width must be positive")
-    if how not in ("inner", "left"):
-        raise ValueError(f"interval_join: unsupported how={how!r}")
 
     p = points.withColumn("_bin", F.floor(F.col(point_col) / bin_width))
     i = intervals.withColumn(
@@ -104,24 +100,10 @@ def interval_join(
             )
         ),
     )
-    matched = (
+    return (
         p.join(i, "_bin")
         .filter(
             (F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) <= F.col(hi_col))
         )
         .drop("_bin")
     )
-    if how == "inner":
-        return matched
-    # left: one bin per point means no duplicate-probe dedup is needed;
-    # re-attach unmatched points with null interval columns.
-    unmatched = p.join(
-        i.select("_bin", lo_col, hi_col).distinct(),
-        (p["_bin"] == i["_bin"])
-        & (p[point_col] >= i[lo_col])
-        & (p[point_col] <= i[hi_col]),
-        "left_anti",
-    ).drop("_bin")
-    for c in intervals.columns:
-        unmatched = unmatched.withColumn(c, F.lit(None).cast(intervals.schema[c].dataType))
-    return matched.unionByName(unmatched)

@@ -411,7 +411,6 @@ def _rank_probed(
     k: int,
     n_probe: int,
     prune_scan: bool = False,
-    group_mod: int | None = None,
 ) -> DataFrame:
     """Shared IVF+PQ search over an encoded corpus: probe the ``n_probe``
     nearest cells per query, ADC-scan codes inside those cells, exact
@@ -423,11 +422,7 @@ def _rank_probed(
     n_probe ints — bounded, driver-side by design) and filters the codes
     scan with a literal IN predicate. For a PERSISTED index partitioned by
     ``centroid_id`` that predicate becomes a partition filter: unprobed
-    cells are never read — the candidate cut becomes an I/O cut.
-    ``group_mod`` (a grouped index layout, see ``build_ivfpq_index``'s
-    ``max_dirs``) adds the matching ``cell_group`` partition filter; the
-    cell-level IN then prunes ROW GROUPS inside each directory (the files
-    are centroid-sorted — the zone-map idea applied to the index)."""
+    cells are never read — the candidate cut becomes an I/O cut."""
     spark = codes.sparkSession
     cent_df = spark.createDataFrame(
         list(enumerate(coarse_lists)), "centroid_id int, centroid array<double>"
@@ -446,10 +441,6 @@ def _rank_probed(
     ).select("query_id", "q_vec", "centroid_id")
     if prune_scan:
         cells = [r.centroid_id for r in q_cent.select("centroid_id").distinct().collect()]
-        if group_mod:
-            codes = codes.filter(
-                F.col("cell_group").isin(sorted({c % group_mod for c in cells}))
-            )
         codes = codes.filter(F.col("centroid_id").isin(cells))
     probes = q_cent.select(
         "query_id",
@@ -505,7 +496,6 @@ def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
     n_centroids: int = 16,
-    max_dirs: int | None = None,
 ) -> None:
     """Persist an IVF+PQ index: the encoded corpus as parquet PARTITIONED
     BY ``centroid_id`` (probing n_probe cells later reads only those
@@ -513,18 +503,7 @@ def build_ivfpq_index(
     tests/test_properties.py) plus the fitted quantizers as a JSON
     sidecar. Encode-once-probe-many is the production retrieval shape: the
     fit + encode cost amortizes over every later query batch, exactly like
-    the bucketed chunk-fingerprint index amortizes its distinct shuffle.
-
-    ``max_dirs`` bounds the DIRECTORY count for large-``n_centroids``
-    geometries (the measured linear-in-C probe cost is parquet file
-    LISTING over one-directory-per-cell, re-paid by every probe's fresh
-    file index — BENCHNOTES.md, Round 13, the
-    small-files problem, not plan literals): cells are grouped into
-    ``centroid_id % max_dirs`` partition directories with files
-    CENTROID-SORTED inside, so a probe prunes directories by group and
-    then prunes ROW GROUPS inside each via footer stats — the
-    ``sources/layout`` zone-map idea applied to the index. The grouping
-    is recorded in the sidecar; results are bit-identical (tested)."""
+    the bucketed chunk-fingerprint index amortizes its distinct shuffle."""
     import json
     import os
 
@@ -534,33 +513,11 @@ def build_ivfpq_index(
     )
     coarse_lists, cb_lists = _fit_ivfpq(c, n_centroids)
     codes = _encode_ivfpq(c, coarse_lists, cb_lists)
-    group_mod = (
-        max_dirs if max_dirs is not None and n_centroids > max_dirs else None
+    codes.write.mode("overwrite").partitionBy("centroid_id").parquet(
+        os.path.join(path, "codes")
     )
-    if group_mod:
-        (
-            codes.withColumn(
-                "cell_group", (F.col("centroid_id") % group_mod).cast("int")
-            )
-            .repartition(group_mod, F.col("cell_group"))
-            .sortWithinPartitions("cell_group", "centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("cell_group")
-            .parquet(os.path.join(path, "codes"))
-        )
-    else:
-        codes.write.mode("overwrite").partitionBy("centroid_id").parquet(
-            os.path.join(path, "codes")
-        )
     with open(os.path.join(path, "quantizer.json"), "w") as f:
-        json.dump(
-            {
-                "coarse": coarse_lists,
-                "codebooks": cb_lists,
-                "cell_group_mod": group_mod,
-            },
-            f,
-        )
+        json.dump({"coarse": coarse_lists, "codebooks": cb_lists}, f)
 
 
 def probe_ivfpq_index(
@@ -586,5 +543,4 @@ def probe_ivfpq_index(
     return _rank_probed(
         codes, q, quant["coarse"], quant["codebooks"], k, n_probe,
         prune_scan=True,
-        group_mod=quant.get("cell_group_mod"),
     )

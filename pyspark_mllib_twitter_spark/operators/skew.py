@@ -68,30 +68,17 @@ def salted_join(
     small: DataFrame,
     on: str,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the big side's hot keys spread over ``n_salts``
+    """Inner equi-join with the big side's hot keys spread over ``n_salts``
     partitions: big rows get a deterministic salt; the small side is
     replicated once per salt (explode of a literal range) so every
     (key, salt) bucket still finds its match. Join key becomes
     (``on``, salt); output drops the salt.
-
-    Only join modes where unmatched SMALL-side rows are never emitted are
-    semantics-preserving under replication: for right/full outer (or anti
-    from the small side) an unmatched small row would appear once per salt.
     """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "cross"}
-    if how.lower().replace("_", "") not in {a.replace("_", "") for a in allowed}:
-        raise ValueError(
-            f"salted_join: how={how!r} is not semantics-preserving — the "
-            f"replicated small side would emit unmatched rows n_salts times; "
-            f"supported: inner, left/left_outer, left_semi, cross"
-        )
     b = big.withColumn(
         "_salt", (F.monotonically_increasing_id() % n_salts).cast("int")
     )
     s = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<int>"))
     )
-    out = b.join(s, [on, "_salt"], how)
-    return out.drop("_salt")
+    return b.join(s, [on, "_salt"]).drop("_salt")

@@ -180,7 +180,6 @@ def pagerank(
     d: float = _PR_D,
     iters: int = _PR_ITERS,
     tol: float | None = None,
-    init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """Simplified PageRank (Page et al., "The PageRank Citation Ranking",
     1999 — public; no dangling-mass redistribution — mass that flows into
@@ -190,8 +189,7 @@ def pagerank(
     Without ``tol`` it runs exactly ``iters`` rounds (the form an oracle
     can unroll); with ``tol`` it runs to CONVERGENCE (max |Δrank| <
     ``tol``, one scalar probe per round) and raises if ``iters`` rounds
-    pass first. ``init_ranks`` warm-starts from a previous run's output.
-    The loop is ``operators.iterate``.
+    pass first. The loop is ``operators.iterate``.
 
     Distributed shape: edges are joined ONCE with out-degrees and cached —
     each iteration shuffles only ``(node, rank)`` pairs (16 bytes a row), so
@@ -243,11 +241,7 @@ def pagerank(
         )
         return delta is not None and delta < tol
 
-    ranks = (
-        init_ranks.select("node", "rank")
-        if init_ranks is not None
-        else nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    )
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     return iterate(ranks, pagerank_round, iters, converged if tol is not None else None)
 
 

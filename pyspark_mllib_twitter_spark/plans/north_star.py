@@ -559,14 +559,8 @@ def q_ns_ann_ivfpq_idx(spark, sf_dir):
     problem — one parquet directory per cell means every probe's fresh
     file index lists C directories and the write schedules C tasks —
     not plan literals (a pruned 8-cell count at C=256 runs in 0.23s
-    once listed). Remedy IMPLEMENTED: ``build_ivfpq_index(...,
-    max_dirs=N)`` groups cells into bounded directories with
-    centroid-sorted files (partition-prune the group, row-group-prune
-    the cell — the sources/layout zone-map idea applied to the index);
-    at C=1600 it cuts probe 6.13s → 3.30s and build 41.6s → 12.4s with
-    bit-identical results (plan- and value-asserted in
-    tests/test_properties.py). This entry keeps the flat layout —
-    right for its 16-cell geometry."""
+    once listed). At this entry's 16-cell geometry the one-directory-
+    per-cell layout is not the bottleneck."""
     import re as _re
 
     tag = _re.sub(r"\W+", "_", sf_dir).strip("_")

@@ -1,25 +1,17 @@
 from .io import (
     FIXTURE_TABLES,
     TWEETS_SCHEMA,
-    load_all_tables,
     read_table,
-    read_tweets_json_array,
     read_tweets_jsonl,
     register_views,
     spread,
-    write_clustered_parquet,
-    write_parquet,
 )
 
 __all__ = [
     "FIXTURE_TABLES",
     "TWEETS_SCHEMA",
-    "load_all_tables",
     "read_table",
-    "read_tweets_json_array",
     "read_tweets_jsonl",
     "register_views",
     "spread",
-    "write_clustered_parquet",
-    "write_parquet",
 ]

@@ -19,7 +19,7 @@ from __future__ import annotations
 import shutil
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -47,6 +47,3 @@ def write_bucketed(
     )
     return spark.table(table)
 
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -1,12 +1,10 @@
-"""Schema'd sources and sinks.
+"""Schema'd sources.
 
 The reference reads ONE multiline JSON file with inferred schema
-(``/root/reference/COMP5349_2.py:138``) and writes stringified Python tuples
-via ``rdd.saveAsTextFile`` (``COMP5349_2.py:188,211``). Both are non-starters
-at 100 TB: multiline JSON is unsplittable (one task parses the whole file) and
-schema inference costs an extra full scan. The new engine declares explicit
-``StructType`` schemas, prefers splittable formats (JSONL, Parquet), and sinks
-to Parquet.
+(``COMP5349_2.py:138``). That is a non-starter at 100 TB:
+multiline JSON is unsplittable (one task parses the whole file) and schema
+inference costs an extra full scan. The new engine declares explicit
+``StructType`` schemas and reads splittable formats (JSONL, Parquet).
 """
 
 from __future__ import annotations
@@ -114,10 +112,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-def load_all_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in FIXTURE_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for ``spark.sql``."""
     for name in FIXTURE_TABLES:
@@ -131,64 +125,3 @@ def read_tweets_jsonl(spark: SparkSession, path: str) -> DataFrame:
     HDFS/S3 block, and the declared schema skips the inference scan.
     """
     return spark.read.schema(TWEETS_SCHEMA).json(path)
-
-
-def read_tweets_json_array(spark: SparkSession, path: str) -> DataFrame:
-    """Fidelity-mode reader matching the reference's multiline JSON array
-    (COMP5349_2.py:138). Unsplittable — kept only for parity tests."""
-    return spark.read.schema(TWEETS_SCHEMA).option("multiLine", "true").json(path)
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Default sink, overwriting (replaces the reference's saveAsTextFile)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_clustered_parquet(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-) -> None:
-    """Range-clustered 4-file parquet layout: ``repartitionByRange`` on the
-    cluster keys (sampled range boundaries → one key range per output file) +
-    ``sortWithinPartitions`` so rows are ordered inside each file.
-
-    Why it matters at 100 TB: parquet row-group min/max statistics only
-    skip reads when each file covers a *narrow* key range. After this
-    write, per-file key ranges are disjoint, so a point or range predicate
-    on the cluster key touches one file (or a contiguous few) instead of
-    every file — the poor man's Z-order, exact for a single-key prefix.
-    Costs one range-shuffle at write time; every later scan pays less.
-    """
-    (
-        df.repartitionByRange(4, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """CSV sink for interop exports, overwriting. Header on; timestamps as
-    ISO-8601 so a schema'd read round-trips losslessly (micros precision)."""
-    (
-        df.write.mode("overwrite")
-        .option("header", "true")
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-        .csv(path)
-    )
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Schema'd CSV source — header skipped, declared types, NO inference
-    (inference costs a full extra scan and guesses; same discipline as the
-    JSON readers). CSV splits by line, so it parallelizes like JSONL."""
-    return (
-        spark.read.schema(schema)
-        .option("header", "true")
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-        .csv(path)
-    )

@@ -77,14 +77,15 @@ EVENTS_SCHEMA = T.StructType(
 
 def replay_events_dir(
     events: DataFrame,
-    out_dir: str | None = None,
+    out_dir: str,
     n_batches: int = 8,
     late_fraction_pct: int = 5,
     flush_margin: str = "2 days",
     duplicate_every: int | None = None,
 ) -> str:
-    """Materialize ``events`` as ordered parquet chunk files for file-source
-    replay: chunk *i* becomes micro-batch *i* (``maxFilesPerTrigger=1``).
+    """Materialize ``events`` as ordered parquet chunk files in ``out_dir``
+    for file-source replay: chunk *i* becomes micro-batch *i*
+    (``maxFilesPerTrigger=1``). Returns ``out_dir``.
 
     Rows are event-time ordered, then a deterministic ``late_fraction_pct``%
     (by ``event_id`` hash) are shifted 2 batches later —
@@ -138,9 +139,6 @@ def replay_events_dir(
         flushes.append(flush)
 
     full = pd.concat([x for x in (pdf, dups, *flushes) if x is not None])
-    out_dir = out_dir or os.path.join(
-        "/tmp", f"events_replay_{uuid.uuid4().hex[:8]}"
-    )
     os.makedirs(out_dir, exist_ok=True)
     schema = pa.schema(
         [

@@ -74,15 +74,11 @@ def build_user_documents(tweets: DataFrame) -> DataFrame:
     )
 
 
-def vectorize_documents(
-    docs: DataFrame,
-    num_features: int = NUM_FEATURES,
-    vocab_size: int = VOCAB_SIZE,
-) -> DataFrame:
+def vectorize_documents(docs: DataFrame) -> DataFrame:
     """M1-M5 as one ``pyspark.ml.Pipeline`` over the ``tokens`` column:
     TF-IDF (HashingTF + IDF) and CountVectorizer branches, both
     L2-normalized (Normalizer p=2, CountVectorizer minDF=1), with the
-    reference hyperparameters by default.
+    reference hyperparameters.
 
     Output adds ``tfidf array<double>`` and ``cv array<double>`` (unit
     vectors — dot product == cosine). Arrays, not VectorUDT, so downstream
@@ -94,10 +90,10 @@ def vectorize_documents(
 
     pipeline = Pipeline(
         stages=[
-            HashingTF(inputCol="tokens", outputCol="raw_tf", numFeatures=num_features),
+            HashingTF(inputCol="tokens", outputCol="raw_tf", numFeatures=NUM_FEATURES),
             IDF(inputCol="raw_tf", outputCol="tfidf_vec"),
             CountVectorizer(
-                inputCol="tokens", outputCol="cv_vec", vocabSize=vocab_size, minDF=1.0
+                inputCol="tokens", outputCol="cv_vec", vocabSize=VOCAB_SIZE, minDF=1.0
             ),
             Normalizer(inputCol="tfidf_vec", outputCol="tfidf_norm", p=2.0),
             Normalizer(inputCol="cv_vec", outputCol="cv_norm", p=2.0),
@@ -136,34 +132,38 @@ def user_similarity_top_k(
         q_ids = spark.createDataFrame(
             [(int(u),) for u in query_user_ids], "query_id bigint"
         )
-    results = []
-    for vectorizer in ("tfidf", "cv"):
-        q = vec.join(
-            F.broadcast(q_ids), vec["user_id"] == q_ids.query_id, "inner"
-        ).select("query_id", F.col(vectorizer).alias("q_vec"))
-        corpus = vec.select(
-            F.col("user_id").alias("neighbor_id"), F.col(vectorizer).alias("c_vec")
-        )
-        # J1 re-expressed: corpus x broadcast(queries), theta id != id
-        pairs = corpus.crossJoin(F.broadcast(q)).filter(
-            F.col("neighbor_id") != F.col("query_id")
-        )
-        scored = pairs.select(
-            "query_id",
-            F.lit(vectorizer).alias("vectorizer"),
-            "neighbor_id",
-            # unit vectors: dot == cosine (COMP5349_2.py:170-173)
-            vectors.dot(F.col("q_vec"), F.col("c_vec")).alias("sim"),
-        )
-        results.append(
-            top_k_per_group(
-                scored,
-                ["query_id", "vectorizer"],
-                [F.col("sim").desc(), F.col("neighbor_id").desc()],
-                k,
+    q = vec.join(
+        F.broadcast(q_ids), vec["user_id"] == q_ids.query_id, "inner"
+    ).select("query_id", F.col("tfidf").alias("q_tfidf"), F.col("cv").alias("q_cv"))
+    # J1 re-expressed: corpus x broadcast(queries), theta id != id; both
+    # vectorizers score on the same pair row, stacked into (vectorizer, sim).
+    pairs = (
+        vec.select(F.col("user_id").alias("neighbor_id"), "tfidf", "cv")
+        .crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+    )
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(v).alias("vectorizer"),
+                        # unit vectors: dot == cosine (COMP5349_2.py:170-173)
+                        vectors.dot(F.col(f"q_{v}"), F.col(v)).alias("sim"),
+                    )
+                    for v in ("tfidf", "cv")
+                ]
             )
-        )
-    out = results[0].unionAll(results[1])
+        ),
+    )
+    out = top_k_per_group(
+        scored,
+        ["query_id", "vectorizer"],
+        [F.col("sim").desc(), F.col("neighbor_id").desc()],
+        k,
+    )
     return out.select("query_id", "vectorizer", "neighbor_id", "sim", "rn").orderBy(
         "query_id", "vectorizer", "rn"
     )

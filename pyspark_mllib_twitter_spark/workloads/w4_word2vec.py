@@ -9,12 +9,9 @@ few query vectors, JVM ``zip_with`` dot over the vocabulary, WindowGroupLimit
 top-k) instead of driver-side ``model.findSynonyms`` calls per word.
 
 Determinism: MLlib Word2Vec is seeded but its gradient averaging depends on
-the input partition layout, so the query path pins ``num_partitions=1`` and
-coalesces the token input — bit-stable output, and fine at fixture scale
+the input partition layout, so the fit runs on one partition over a
+coalesced token input — bit-stable output, and fine at fixture scale
 because the *vocabulary* (not the corpus) is what the training loop holds.
-At 100 TB you flip ``num_partitions`` up and accept run-to-run wiggle, the
-standard distributed-Word2Vec tradeoff (Spark averages per-partition models
-each iteration).
 """
 
 from __future__ import annotations
@@ -25,27 +22,23 @@ from pyspark.sql import functions as F
 from ..functions import text as TXT
 
 
-def word_embeddings(
-    docs: DataFrame,
-    num_partitions: int = 1,
-    max_iter: int = 1,
-) -> DataFrame:
-    """Fit Word2Vec (32-dim, minCount 5, seed 0) over the tokenized ``text``
+def word_embeddings(docs: DataFrame) -> DataFrame:
+    """Fit Word2Vec (32-dim, minCount 5, seed 0, one partition, one
+    iteration) over the tokenized ``text``
     column; return the vocabulary as a
     ``(word, vec array<float>)`` DataFrame (``getVectors`` + vector_to_array,
     so downstream stays in plain SQL types)."""
     from pyspark.ml.feature import Word2Vec
     from pyspark.ml.functions import vector_to_array
 
-    toks = docs.select(TXT.tokens("text").alias("tokens"))
-    if num_partitions == 1:
-        toks = toks.coalesce(1)  # pin layout => bit-stable training
+    # pin layout => bit-stable training
+    toks = docs.select(TXT.tokens("text").alias("tokens")).coalesce(1)
     model = Word2Vec(
         vectorSize=32,
         minCount=5,
         seed=0,
-        numPartitions=num_partitions,
-        maxIter=max_iter,
+        numPartitions=1,
+        maxIter=1,
         inputCol="tokens",
         outputCol="vec",
     ).fit(toks)

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_mllib_twitter_spark.sources import read_table
-from pyspark_mllib_twitter_spark.sources.bucketing import read_bucketed, write_bucketed
+from pyspark_mllib_twitter_spark.sources.bucketing import write_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -29,8 +29,8 @@ def bucketed_pair(spark, sf_smoke):
 
 def test_bucketed_join_no_exchange(spark, sf_smoke, bucketed_pair):
     t_orders, t_lineitem = bucketed_pair
-    o = read_bucketed(spark, t_orders)
-    li = read_bucketed(spark, t_lineitem)
+    o = spark.table(t_orders)
+    li = spark.table(t_lineitem)
     joined = o.join(li, o.o_orderkey == li.l_orderkey).select(
         "o_orderkey", "l_linenumber", "l_quantity", "o_totalprice"
     )
@@ -54,7 +54,7 @@ def test_bucketed_join_no_exchange(spark, sf_smoke, bucketed_pair):
 
 def test_bucketed_groupby_no_exchange(spark, bucketed_pair):
     _, t_lineitem = bucketed_pair
-    li = read_bucketed(spark, t_lineitem)
+    li = spark.table(t_lineitem)
     agg = li.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:800]

@@ -100,17 +100,6 @@ def test_as_of_join_latest_row_nulls_not_backfilled(spark):
     assert out[0].asof_v is None  # latest row's null, NOT "old_v"
 
 
-def test_salted_join_rejects_outer_modes(spark):
-    from pyspark_mllib_twitter_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, "x")], "k long, a string")
-    small = spark.createDataFrame([(1, "y")], "k long, b string")
-    for how in ("right", "full", "full_outer", "left_anti"):
-        with pytest.raises(ValueError, match="semantics-preserving"):
-            salted_join(big, small, on="k", how=how)
-    assert salted_join(big, small, on="k", how="left").count() == 1
-
-
 def test_ngram_jaccard_block_guard_trips(spark, docs):
     """Oversized blocks must fail fast, not run the quadratic stage."""
     with pytest.raises(ValueError, match="max_block_size"):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_mllib_twitter_spark.operators import iterate
 from pyspark_mllib_twitter_spark.plans import REGISTRY
 from pyspark_mllib_twitter_spark.plans.lakehouse import pagerank
 
@@ -278,13 +279,14 @@ def test_pagerank_to_convergence_fixpoint_and_flat_plans(spark):
     )
     prefix_df = pagerank(edges, iters=3)
 
-    # (a) fixpoint: converge, then warm-start ONE more round — no rank may
-    # move by tol or more (the loop's own exit criterion, re-verified from
-    # the outside).
+    # (a) fixpoint: converge in ``rounds`` rounds, then run ``rounds + 1``
+    # from scratch — no rank may move by tol or more (the loop's own exit
+    # criterion, re-verified from the outside).
     tol = 1e-3
     conv = pagerank(edges, iters=30, tol=tol)
+    rounds = iterate.ROUNDS[-1][1]
     got = {r.node: r.rank for r in conv.collect()}
-    one_more = pagerank(edges, iters=1, init_ranks=conv)
+    one_more = pagerank(edges, iters=rounds + 1)
     stepped = {r.node: r.rank for r in one_more.collect()}
     assert set(got) == set(stepped)
     assert max(abs(got[n] - stepped[n]) for n in got) < tol

@@ -107,19 +107,6 @@ def test_resize_updates_images_passes_through_rest(assets):
         ).collect()
 
 
-def test_frame_sample_plan_counts(assets):
-    plan = multimodal.frame_sample_plan(assets)
-    got = {
-        (r.asset_id): r.n for r in plan.groupBy("asset_id").agg(F.count("*").alias("n")).collect()
-    }
-    want = {
-        r.asset_id: (r.meta.duration_ms // 1000) + 1
-        for r in assets.collect()
-        if r.mime.startswith(("video/", "audio/"))
-    }
-    assert got == want
-
-
 def test_audio_features_are_spectral(spark, assets):
     """Audio assets must go through the FFT band path: L1-normalized 8-dim
     features (sum to 1), deterministic across runs, and distinct from the

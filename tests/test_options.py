@@ -12,6 +12,9 @@ Calls are matched by callee name (a bare name or the attribute of
 gives it by keyword or by position, or passes ``*args`` / ``**kwargs``.
 Functions with no call site by name (callbacks Spark invokes) and names
 defined more than once are skipped: name matching cannot tell them apart.
+
+A second guard caps the total count of those defaulted parameters, so an
+option set only by a test cannot come back either.
 """
 
 from __future__ import annotations
@@ -23,6 +26,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "pyspark_mllib_twitter_spark"
 CALLERS = [PACKAGE, ROOT / "tools", ROOT / "perfbench", ROOT / "tests", ROOT / "bench.py"]
+#: Ceiling on the package's settable values: defaulted parameters of
+#: non-``@query`` defs.
+MAX_OPTIONS = 55
 
 
 def _py_files(path: Path) -> list[Path]:
@@ -64,7 +70,8 @@ def _passes(call: ast.Call, name: str, index: int | None) -> bool:
     return index is not None and index < len(call.args)
 
 
-def unset_options() -> list[str]:
+def _package_defs() -> tuple[list[tuple[Path, ast.FunctionDef]], collections.Counter]:
+    """Non-recipe package defs, and how often each name is defined."""
     defs = []
     names = collections.Counter()
     for path in _py_files(PACKAGE):
@@ -73,6 +80,11 @@ def unset_options() -> list[str]:
                 names[node.name] += 1
                 if not _is_recipe(node):
                     defs.append((path.relative_to(ROOT), node))
+    return defs, names
+
+
+def unset_options() -> list[str]:
+    defs, names = _package_defs()
     calls = collections.defaultdict(list)
     for src in CALLERS:
         for path in _py_files(src):
@@ -95,4 +107,13 @@ def test_every_option_is_set_by_some_caller():
     assert not unset, (
         f"{len(unset)} defaulted parameter(s) no call site passes; write the "
         "value in the body instead:\n" + "\n".join(unset)
+    )
+
+
+def test_option_count_stays_under_ceiling():
+    defs, _ = _package_defs()
+    n = sum(len(_defaulted(fn)) for _, fn in defs)
+    assert n <= MAX_OPTIONS, (
+        f"{n} settable options > {MAX_OPTIONS}; write values no real caller "
+        "varies in the body instead"
     )

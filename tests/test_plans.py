@@ -89,17 +89,16 @@ def test_dynamic_partition_pruning(spark, tmp_path):
     """Joining a date-partitioned fact against a selectively-filtered dim
     must inject a dynamicpruning expression into the fact scan's
     PartitionFilters — at 100 TB this is the difference between scanning
-    one month and scanning every partition. Exercises the partitioned
-    write_parquet sink end-to-end."""
+    one month and scanning every partition."""
     from pyspark.sql import functions as F
 
-    from pyspark_mllib_twitter_spark.sources import read_table, write_parquet
+    from pyspark_mllib_twitter_spark.sources import read_table
 
     path = str(tmp_path / "orders_by_month")
     orders = read_table(spark, SF, "orders").withColumn(
         "o_month", F.month("o_orderdate")
     )
-    write_parquet(orders, path, partition_by=["o_month"])
+    orders.write.partitionBy("o_month").parquet(path)
     fact = spark.read.parquet(path)
     dim = spark.createDataFrame(
         [(m, "x" * m) for m in range(1, 13)], "m int, tag string"

@@ -449,41 +449,3 @@ def test_equidepth_approx_matches_exact(spark, sf_smoke):
     assert set(exact) == set(approx)
     for b in exact:
         assert abs(exact[b] - approx[b]) <= max(2, 0.02 * total), (b, exact[b], approx[b])
-
-
-def test_ivfpq_grouped_index_identical_and_prunes_both_levels(
-    spark, embeddings, tmp_path
-):
-    """The bounded-directory layout (``max_dirs`` — the small-files remedy
-    for large n_centroids): (a) results are BIT-IDENTICAL to the
-    one-dir-per-cell layout at the same parameters; (b) the directory
-    count is bounded by max_dirs; (c) a probe prunes at BOTH levels —
-    ``cell_group`` as a partition filter AND ``centroid_id`` as a pushed
-    scan filter that the centroid-sorted files' footer stats can act on."""
-    import os
-    import re
-
-    flat, grouped = str(tmp_path / "flat"), str(tmp_path / "grouped")
-    for path, max_dirs in ((flat, None), (grouped, 8)):
-        similarity.build_ivfpq_index(embeddings, path, n_centroids=64, max_dirs=max_dirs)
-    q = embeddings.filter(F.col("vec_id") < N_QUERIES)
-    res_flat = sorted(map(tuple, similarity.probe_ivfpq_index(
-        spark, flat, q, k=K, n_probe=8).collect()))
-    res_grouped = sorted(map(tuple, similarity.probe_ivfpq_index(
-        spark, grouped, q, k=K, n_probe=8).collect()))
-    assert res_flat == res_grouped
-    dirs = [d for d in os.listdir(os.path.join(grouped, "codes"))
-            if d.startswith("cell_group=")]
-    assert 0 < len(dirs) <= 8
-    narrow = similarity.probe_ivfpq_index(
-        spark, grouped, embeddings.filter(F.col("vec_id") == 0), k=K, n_probe=2
-    )
-    plan = narrow._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert re.search(r"PartitionFilters: \[[^\]]*cell_group", plan), plan[:1500]
-    assert re.search(r"PushedFilters: \[[^\]]*[Ii]n\(centroid_id", plan), (
-        plan[:1500]
-    )

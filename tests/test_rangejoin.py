@@ -49,23 +49,6 @@ def test_bin_width_does_not_change_semantics(data, w):
     assert got == want
 
 
-def test_left_keeps_unmatched_points(data):
-    points, intervals = data
-    out = interval_join(points, intervals, "v", "lo", "hi", bin_width=40.0, how="left")
-    matched_pids = {
-        r.pid
-        for r in points.join(
-            intervals, (points.v >= intervals.lo) & (points.v <= intervals.hi)
-        )
-        .select("pid")
-        .collect()
-    }
-    null_rows = out.filter(F.col("iv_id").isNull())
-    assert {r.pid for r in null_rows.collect()} == (
-        {r.pid for r in points.collect()} - matched_pids
-    )
-
-
 @pytest.mark.parametrize("w", [13.0, 40.0, 333.0])
 def test_overlap_matches_naive_and_emits_once(spark, data, w):
     """Overlap join equals the naive predicate join — same pairs, each
@@ -95,5 +78,3 @@ def test_guards(data):
     points, intervals = data
     with pytest.raises(ValueError, match="bin_width"):
         interval_join(points, intervals, "v", "lo", "hi", bin_width=0)
-    with pytest.raises(ValueError, match="unsupported how"):
-        interval_join(points, intervals, "v", "lo", "hi", bin_width=10, how="full")

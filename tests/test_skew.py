@@ -59,19 +59,3 @@ def test_salted_join_matches_plain(spark, skewed):
     )
     assert salted == plain
     assert len(plain) > 0
-
-
-def test_salted_join_left_keeps_unmatched(spark, skewed):
-    dim = spark.createDataFrame([(1, "one")], "k long, name string")
-    out = salted_join(skewed, dim, "k", how="left")
-    assert out.count() == skewed.count()
-    assert out.filter(F.col("name").isNull()).count() == skewed.filter(F.col("k") != 1).count()
-
-
-def test_salted_join_rejects_modes_that_replicate_unmatched_small_rows(spark, skewed):
-    """right/full outer (and anti from the small side) would emit each
-    unmatched small-side row once per salt — the operator must refuse."""
-    dim = spark.createDataFrame([(1, "one")], "k long, name string")
-    for how in ("right", "right_outer", "full", "full_outer", "outer", "left_anti"):
-        with pytest.raises(ValueError, match="not semantics-preserving"):
-            salted_join(skewed, dim, "k", how=how)

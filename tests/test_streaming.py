@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -39,8 +38,10 @@ def events(spark, sf_smoke):
 
 
 @pytest.fixture(scope="module")
-def replay_dir(spark, events):
-    return replay_events_dir(events, flush_margin="60 days")
+def replay_dir(spark, events, tmp_path_factory):
+    return replay_events_dir(
+        events, str(tmp_path_factory.mktemp("replay")), flush_margin="60 days"
+    )
 
 
 def test_sliding_windows_match_batch(spark, events, replay_dir):
@@ -87,8 +88,10 @@ def test_session_windows_match_batch(spark, events, replay_dir):
     assert got == want
 
 
-def test_stream_dedup_exactly_once(spark, events):
-    d = replay_events_dir(events, flush_margin="60 days", duplicate_every=10)
+def test_stream_dedup_exactly_once(spark, events, tmp_path):
+    d = replay_events_dir(
+        events, str(tmp_path), flush_margin="60 days", duplicate_every=10
+    )
     streamed = run_to_memory(
         stream_dedup(read_events_stream(spark, d))
     )
@@ -141,11 +144,11 @@ def test_stateful_user_stats_match_batch(spark, events, replay_dir):
     assert got == want
 
 
-def test_streaming_parquet_sink(spark, events, replay_dir):
+def test_streaming_parquet_sink(spark, events, replay_dir, tmp_path):
     """writeStream → parquet files with a checkpoint: the durable-sink path
     (memory sink is tests-only). Output rows equal the memory-sink run."""
-    out_dir = os.path.join("/tmp", f"stream_sink_{uuid.uuid4().hex[:8]}")
-    ckpt = out_dir + "_ckpt"
+    out_dir = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
     stream = tumbling_window_counts(
         read_events_stream(spark, replay_dir), watermark=WATERMARK
     )
@@ -167,13 +170,13 @@ def test_streaming_parquet_sink(spark, events, replay_dir):
     assert a == b and len(a) > 0
 
 
-def test_foreach_batch_sink_partitions_by_batch(spark, events, replay_dir):
+def test_foreach_batch_sink_partitions_by_batch(spark, events, replay_dir, tmp_path):
     """foreachBatch sink: every micro-batch lands in its own batch_id=N
     subdir (the idempotent-replay layout) and the union of all batches is
     exactly the replayed input."""
     from pyspark_mllib_twitter_spark.streaming import foreach_batch_parquet_sink
 
-    out_dir = os.path.join("/tmp", f"feb_sink_{uuid.uuid4().hex[:8]}")
+    out_dir = str(tmp_path / "sink")
     stream = read_events_stream(spark, replay_dir)
     foreach_batch_parquet_sink(stream, out_dir)
 
@@ -189,13 +192,11 @@ def test_foreach_batch_sink_partitions_by_batch(spark, events, replay_dir):
     assert got == want
 
 
-def _write_chunks(chunks: list[list[tuple]]) -> str:
-    """Hand-built replay dir: one file per micro-batch, rows are
+def _write_chunks(out: str, chunks: list[list[tuple]]) -> str:
+    """Hand-built replay dir ``out``: one file per micro-batch, rows are
     (event_id, ts_iso, user_id, event_type, value)."""
     import datetime as dt
 
-    out = os.path.join("/tmp", f"late_replay_{uuid.uuid4().hex[:8]}")
-    os.makedirs(out)
     schema = pa.schema(
         [
             ("event_id", pa.int64()),
@@ -228,7 +229,7 @@ def _write_chunks(chunks: list[list[tuple]]) -> str:
     return out
 
 
-def test_watermark_drops_too_late_row(spark):
+def test_watermark_drops_too_late_row(spark, tmp_path):
     """A row older than (max seen - delay) whose window already closed must
     be dropped from the aggregation — the one semantics a no-drop replay
     can't show. Timeline (10-min windows, 30-min watermark delay):
@@ -241,6 +242,7 @@ def test_watermark_drops_too_late_row(spark):
     its own batch); flush batches close the rest.
     """
     d = _write_chunks(
+        str(tmp_path),
         [
             [
                 (1, "2024-01-01 09:05:00", 1, "click", 1.0),
@@ -269,10 +271,11 @@ def test_watermark_drops_too_late_row(spark):
     assert sum(counts.values()) == 4  # 5 arrivals, 1 dropped
 
 
-def test_late_within_delay_is_kept(spark):
+def test_late_within_delay_is_kept(spark, tmp_path):
     """Same shape, but the late arrival is within the watermark delay →
     aggregated normally (no drop)."""
     d = _write_chunks(
+        str(tmp_path),
         [
             [
                 (1, "2024-01-01 09:05:00", 1, "click", 1.0),
@@ -427,7 +430,7 @@ def test_space_saving_topk_bounds_and_determinism(spark, sf_smoke):
 
 @pytest.mark.parametrize("n_batches", [8, 2])
 def test_tws_session_finalizer_matches_batch_sessionizer(
-    spark, events, n_batches
+    spark, events, n_batches, tmp_path
 ):
     """q_stream_tws_timers: on a 0%-late replay (nothing dropped by the
     watermark) with the flush sentinel closing every open session, the
@@ -450,6 +453,7 @@ def test_tws_session_finalizer_matches_batch_sessionizer(
 
     rd = replay_events_dir(
         events,
+        str(tmp_path),
         late_fraction_pct=0,
         flush_margin="60 days",
         n_batches=n_batches,

@@ -8,7 +8,8 @@ Runs the two reference workloads on the committed tweets fixture and writes:
   nb:220-230 golden cell, including the score-DESC/id-DESC tie-break).
 - ``tests/fixtures/w2_recs.json`` — per-user top-5 ``[rec_item_id,
   rating_6dp]`` lists from ALS(seed=0, reference hyperparameters,
-  num_blocks=8 pinned for cross-machine reproducibility).
+  ``w2_recommend.ALS_NUM_BLOCKS`` = 8 user/item blocks, the fixed count
+  that makes the seeded fit the same on every machine).
 
 Run once after regenerating the fixture; tests/test_workloads.py asserts
 exact equality against these files.
@@ -51,7 +52,7 @@ def main() -> None:
         json.dump(w1_golden, f, indent=1, sort_keys=True)
 
     pairs = build_mention_pairs(tweets)
-    recs = implicit_als_recommend(pairs, k=5, num_blocks=8).collect()
+    recs = implicit_als_recommend(pairs, k=5).collect()
     by_user: dict[str, list] = {}
     for r in sorted(recs, key=lambda r: (r.user_id, r.rec_rank)):
         by_user.setdefault(str(r.user_id), []).append(
