@@ -17,7 +17,8 @@ One timing rule holds for every entry, in suite and ``--only`` mode alike:
    every row and column is computed and nothing is collected to the driver;
 3. record the host's steal and busy share over the entry's timed runs
    (``perfbench/host.py``) under ``host_cpu_per_query``; every run time,
-   in order, goes under ``query_runs``.
+   in order, goes under ``query_runs``; the classes Janino compiled during
+   those runs go under ``codegen_compiles``.
 
 Batch entries run first, then the streaming entries, each block sorted.
 One-time session costs (JIT of the estimator fits, the Python/Arrow workers,
@@ -66,6 +67,21 @@ def _execute(df) -> None:
 
 def _weather(before: list[int]) -> dict:
     return {k: round(v, 2) for k, v in host.weather(before, host.cpu_times()).items()}
+
+
+def _codegen_compiles(spark) -> int:
+    """Generated classes compiled so far in this JVM (Spark's
+    ``CodegenMetrics``); a class found in the codegen cache is not counted."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _metaspace_mb(spark) -> float:
+    """JVM Metaspace in use, where the compiled generated classes live."""
+    for pool in spark.sparkContext._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans():
+        if pool.getName() == "Metaspace":
+            return round(pool.getUsage().getUsed() / 2**20, 1)
+    return -1.0
 
 
 def _reset_session_state(spark) -> None:
@@ -237,12 +253,14 @@ def main() -> int:
     streaming_stats: dict[str, dict] = {}
     iterate_rounds: dict[str, list] = {}
     query_weather: dict[str, dict] = {}
+    codegen_compiles: dict[str, int] = {}
 
     for name in names:
         spec = REGISTRY[name]
         _reset_session_state(spark)
         samples = []
         cpu0 = host.cpu_times()
+        compiles0 = _codegen_compiles(spark)
         try:
             for _ in range(args.runs):
                 # keep the last run's reports only
@@ -259,6 +277,7 @@ def main() -> int:
         per_query[name] = round(statistics.median(samples), 3)
         query_runs[name] = [round(s, 3) for s in samples]
         query_weather[name] = _weather(cpu0)
+        codegen_compiles[name] = _codegen_compiles(spark) - compiles0
         if ITERATE_ROUNDS:
             iterate_rounds[name] = list(ITERATE_ROUNDS)
         if LAST_RUN_STATS:
@@ -291,6 +310,9 @@ def main() -> int:
         # steal: CPU the hypervisor never gave this guest; busy excludes it
         "host_cpu": _weather(suite_cpu0),
         "host_cpu_per_query": query_weather,
+        # Janino compiles per entry, over its timed runs
+        "codegen_compiles": codegen_compiles,
+        "jvm_metaspace_mb": _metaspace_mb(spark),
     }
     if streaming_stats:
         detail["streaming"] = streaming_stats

@@ -2233,8 +2233,9 @@ def q_yk_knn_eval(spark, sf_dir):
     vectors. The per-probe top-k is a rank-filtered window on the probe
     key (WindowGroupLimit: each task keeps k candidates before the
     shuffle); votes and the argmax run on k-row groups. Cosine stays in
-    one codegen'd ``aggregate``/``zip_with`` expression (functions/
-    vectors.py) — no Python, no UDF.
+    one JVM-side ``aggregate``/``zip_with`` expression (functions/
+    vectors.py; lambda functions are evaluated interpreted, through
+    ``CodegenFallback``) — no Python, no UDF.
     """
     from ..functions import vectors as V
 
@@ -3077,9 +3078,10 @@ def q_yu_ewma(spark, sf_dir):
 
     Scale shape: ONE window pass with a constant-width ROWS frame
     (bounded state per row — never holds a user's whole series), then the
-    weighting is a codegen'd higher-order fold over a <= K-element array
-    in-row (zip_with + aggregate; no Python, no explode — the row count
-    never multiplies). Per-user ordering ties break on event_id so both
+    weighting is a JVM-side higher-order fold over a <= K-element array
+    in-row (zip_with + aggregate, evaluated interpreted through
+    ``CodegenFallback``; no Python, no explode — the row count never
+    multiplies). Per-user ordering ties break on event_id so both
     engines assemble identical trails.
     """
     ev = read_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())

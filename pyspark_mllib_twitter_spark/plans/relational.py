@@ -526,8 +526,11 @@ def q_a5_id_dictionary(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     return (
-        dense_id_dictionary(ev, "user_id", "dense_id")
-        .select("user_id", F.col("dense_id").cast("bigint").alias("dense_id"))
+        dense_id_dictionary(ev, ["user_id"])
+        .select(
+            F.col("id").alias("user_id"),
+            F.col("dense_id").cast("bigint").alias("dense_id"),
+        )
         .orderBy("user_id")
     )
 

@@ -15,6 +15,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Entries in Spark's cache of compiled generated classes
+#: (``spark.sql.codegen.cache.maxEntries``, a static conf; Spark's default is
+#: 100). The cache is keyed by the generated source, so a plan that runs
+#: again reuses its classes only while they are still cached. A W1 + W2 pass
+#: compiles about 120-145 classes, more than the default holds, so every
+#: pass compiled all of them again with Janino; the largest bench entry
+#: compiles about 150 per run. 1000 holds either working set several times
+#: over: a sf0.01 bench suite on 4 cores compiled 10.7k classes at 100
+#: entries and 7.4k at 1000, with 265 vs 273 MB of Metaspace in use at its
+#: end.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
+
 def _half_ram() -> str:
     """Half of physical RAM as a JVM size string."""
     return f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2 >> 20}m"
@@ -81,6 +94,7 @@ def get_spark(
         # late-suite queries still ran 3-4x their isolated-warm time at
         # 512m (q_x5: 5.9s in-suite vs 1.4s warm isolated).
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate synthesizes `size(arr) > 0 AND

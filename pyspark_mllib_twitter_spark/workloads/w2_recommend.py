@@ -50,12 +50,12 @@ def build_mention_pairs(tweets: DataFrame) -> DataFrame:
     )
 
 
-def dense_id_dictionary(
-    df: DataFrame, id_col: str, out_col: str = "dense_id"
-) -> DataFrame:
-    """Collision-free long→int dictionary: ids 1..N in ascending-id order
-    (identical contract to ``DENSE_RANK() OVER (ORDER BY id)``), built
-    WITHOUT a global window.
+def dense_id_dictionary(df: DataFrame, id_cols: list[str]) -> DataFrame:
+    """Collision-free long→int dictionaries for several id columns in one
+    pass: ``(id_col string, id bigint, dense_id int)``, where each column's
+    ids get 1..N in ascending-id order (per column, the contract of
+    ``DENSE_RANK() OVER (ORDER BY id)``), built WITHOUT a global window.
+    Select one column's dictionary with ``id_col = <name>``.
 
     Replaces F3 ``f.hash`` (COMP5349_2.py:197) — 32-bit murmur over 64-bit
     Twitter IDs silently merges users from ~77k ids (birthday bound). A
@@ -63,35 +63,54 @@ def dense_id_dictionary(
     partition (no-partition window = single-partition sort) — the W2
     scale-killer at ~10^8+ ids. Distributed recipe instead:
 
-    1. distinct ids, range-repartitioned by id → globally ordered across
+    1. the columns' ids stacked as ``(id_col, id)`` rows by one explode
+       (one scan of ``df``, not a union of one scan per column), distinct,
+       range-repartitioned by ``(id_col, id)`` → globally ordered across
        partitions, sorted within each (one shuffle);
-    2. per-partition counts → driver (numPartitions rows, bounded) →
-       cumulative offsets, broadcast back;
-    3. dense id = partition offset + row_number within the partition —
-       the window is partitioned by ``spark_partition_id()``, so every
-       partition ranks locally in parallel.
+    2. per-(column, partition) counts → driver (at most columns ×
+       numPartitions rows, one collect) → cumulative offsets per column,
+       broadcast back;
+    3. dense id = the column's offset for the partition + row_number within
+       the (column, partition) — the window is partitioned by
+       ``spark_partition_id()``, so every partition ranks locally in
+       parallel.
     """
-    ids = df.select(id_col).where(F.col(id_col).isNotNull()).distinct()
-    parts = ids.repartitionByRange(F.col(id_col)).sortWithinPartitions(id_col)
+    stacked = (
+        df.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(c).alias("id_col"), F.col(c).alias("id"))
+                        for c in id_cols
+                    ]
+                )
+            ).alias("e")
+        )
+        .select("e.*")
+        .where(F.col("id").isNotNull())
+        .distinct()
+    )
+    parts = stacked.repartitionByRange("id_col", "id").sortWithinPartitions("id_col", "id")
     with_pid = parts.withColumn("_pid", F.spark_partition_id())
 
     counts = sorted(
-        (tuple(r) for r in with_pid.groupBy("_pid").count().collect())
+        tuple(r) for r in with_pid.groupBy("id_col", "_pid").count().collect()
     )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
+    offsets, acc = [], {}
+    for col, pid, cnt in counts:
+        offsets.append((col, pid, acc.get(col, 0)))
+        acc[col] = acc.get(col, 0) + cnt
     offsets_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "_pid int, _offset long"
+        offsets or [(id_cols[0], 0, 0)], "id_col string, _pid int, _offset long"
     )
 
-    local_rank = F.row_number().over(W.partitionBy("_pid").orderBy(id_col))
+    local_rank = F.row_number().over(W.partitionBy("id_col", "_pid").orderBy("id"))
     return (
-        with_pid.join(F.broadcast(offsets_df), "_pid")
+        with_pid.join(F.broadcast(offsets_df), ["id_col", "_pid"])
         .select(
-            id_col,
-            (F.col("_offset") + local_rank).cast("int").alias(out_col),
+            "id_col",
+            "id",
+            (F.col("_offset") + local_rank).cast("int").alias("dense_id"),
         )
     )
 
@@ -103,12 +122,21 @@ def implicit_als_recommend(pairs: DataFrame, k: int = 5) -> DataFrame:
 
     Output: ``(user_id, rec_rank int 1..k, rec_item_id, rating float)``,
     rank order preserved from ALS. The fit uses ``ALS_NUM_BLOCKS`` user and
-    item blocks.
+    item blocks. ``pairs`` is cached for the fit and released after it.
     """
     from pyspark.ml.recommendation import ALS
 
-    user_dict = dense_id_dictionary(pairs, "user_id", "u").cache()
-    item_dict = dense_id_dictionary(pairs, "mention_id", "i").cache()
+    # pairs feeds both the dictionaries and the ALS input: computed once.
+    pairs = pairs.cache()
+    dicts = dense_id_dictionary(pairs, ["user_id", "mention_id"]).cache()
+
+    def column_dict(id_col: str, out_col: str) -> DataFrame:
+        return dicts.where(F.col("id_col") == id_col).select(
+            F.col("id").alias(id_col), F.col("dense_id").alias(out_col)
+        )
+
+    user_dict = column_dict("user_id", "u")
+    item_dict = column_dict("mention_id", "i")
 
     encoded = (
         pairs.join(F.broadcast(user_dict), "user_id")
@@ -132,6 +160,10 @@ def implicit_als_recommend(pairs: DataFrame, k: int = 5) -> DataFrame:
         numItemBlocks=ALS_NUM_BLOCKS,
     )
     model = als.fit(encoded)
+    # The fit input is spent; the dictionaries stay cached because the
+    # returned frame joins them back.
+    encoded.unpersist()
+    pairs.unpersist()
 
     recs = model.recommendForAllUsers(k)
 

@@ -28,7 +28,7 @@ PACKAGE = ROOT / "pyspark_mllib_twitter_spark"
 CALLERS = [PACKAGE, ROOT / "tools", ROOT / "perfbench", ROOT / "tests", ROOT / "bench.py"]
 #: Ceiling on the package's settable values: defaulted parameters of
 #: non-``@query`` defs.
-MAX_OPTIONS = 55
+MAX_OPTIONS = 54
 
 
 def _py_files(path: Path) -> list[Path]:

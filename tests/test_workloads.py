@@ -95,6 +95,119 @@ def test_w2_golden_recs(tweets):
     assert not mismatches, f"{len(mismatches)} users differ, e.g. {next(iter(mismatches.items()))}"
 
 
+def test_sparse_dot_equals_dense_dot_exactly(spark):
+    """``sparse_dot(nonzeros(a), b)`` is ``dot(a, b)`` bit for bit on random
+    arrays with zeros (both signs), negatives and exact cancellations."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from pyspark_mllib_twitter_spark.functions import vectors
+
+    rng = random.Random(12)
+
+    def draw(n):
+        return [
+            rng.choice([0.0, -0.0, 0.0, rng.uniform(-1, 1), rng.gauss(0, 1e3)])
+            for _ in range(n)
+        ]
+
+    rows = [(draw(n), draw(n)) for n in (1, 2, 5, 17, 200) for _ in range(40)]
+    rows += [
+        ([0.0] * 8, draw(8)),  # zero query vector
+        ([-0.0] * 8, [-1.0] * 8),  # negative-zero terms only
+        ([1.0, 0.0, -1.0], [0.5, 3.0, 0.5]),  # cancels to exactly 0
+        ([0.0, 1.0, 0.0], [-2.0, 0.0, -0.0]),  # a nonzero against a zero
+    ]
+    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
+    got = df.select(
+        vectors.dot("a", "b").alias("dense"),
+        vectors.sparse_dot(vectors.nonzeros("a"), F.col("b")).alias("sparse"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r, (a, b) in zip(got, rows):
+        assert r.sparse == r.dense, (a, b, r)
+        assert str(r.sparse) == str(r.dense), (a, b, r)  # the sign of a zero
+
+
+def test_w1_sparse_scoring_equals_dense_scoring(tweets, monkeypatch):
+    """W1 scored over the query's nonzeros returns the rows of the dense
+    ``zip_with`` fold, ``sim`` compared exactly."""
+    from pyspark_mllib_twitter_spark.functions import vectors
+    from pyspark_mllib_twitter_spark.workloads.w1_similarity import (
+        build_user_documents,
+        user_similarity_top_k,
+    )
+
+    docs = build_user_documents(tweets)
+    first = docs.where("user_id IS NOT NULL").orderBy("user_id").limit(16)
+    users = [r.user_id for r in first.collect()]
+    assert QUERY_USER in users
+    sparse = [tuple(r) for r in user_similarity_top_k(docs, users, k=5).collect()]
+    with monkeypatch.context() as m:
+        m.setattr(vectors, "nonzeros", vectors.as_double_array)
+        m.setattr(vectors, "sparse_dot", vectors.dot)
+        dense = [tuple(r) for r in user_similarity_top_k(docs, users, k=5).collect()]
+    assert len(sparse) == 10 * len(users)
+    assert sparse == dense
+
+
+def test_w1_w2_rerun_compiles_no_class(tweets):
+    """The generated classes of a W1 + W2 pass fit Spark's codegen cache
+    (``session.CODEGEN_CACHE_MAX_ENTRIES``): running the pass again compiles
+    nothing. With Spark's default of 100 entries every pass recompiled
+    about 120 classes."""
+    from pyspark_mllib_twitter_spark.workloads.w1_similarity import (
+        build_user_documents,
+        user_similarity_top_k,
+    )
+    from pyspark_mllib_twitter_spark.workloads.w2_recommend import (
+        build_mention_pairs,
+        implicit_als_recommend,
+    )
+
+    spark = tweets.sparkSession
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def one_pass():
+        user_similarity_top_k(build_user_documents(tweets), [QUERY_USER], k=5).collect()
+        implicit_als_recommend(build_mention_pairs(tweets), k=5).collect()
+
+    one_pass()
+    before = compiled()
+    one_pass()
+    assert compiled() == before
+
+
+def test_w2_releases_fit_input(tweets):
+    """W2 leaves cached only what its result reads: the id dictionaries and
+    ALS's factor RDDs, not the pairs or the encoded fit input."""
+    from pyspark_mllib_twitter_spark.workloads.w2_recommend import (
+        build_mention_pairs,
+        implicit_als_recommend,
+    )
+
+    sc = tweets.sparkSession.sparkContext
+
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    tweets.count()  # the fixture's own cache, outside the count
+    # Ids, not a count: the ContextCleaner may release earlier tests' RDDs
+    # meanwhile.
+    before = persisted()
+    # A filter that keeps every row makes a plan no earlier test cached:
+    # caching a plan that is already cached adds no RDD.
+    pairs = build_mention_pairs(tweets).where("y > 0")
+    recs = implicit_als_recommend(pairs, k=5)
+    assert not pairs.is_cached
+    assert len(persisted() - before) == 3
+    assert recs.count() > 0
+
+
 def test_w2_no_null_users(tweets):
     """W2 keeps the reference's P2 filter: null authors contribute no pairs."""
     from pyspark_mllib_twitter_spark.workloads.w2_recommend import build_mention_pairs
