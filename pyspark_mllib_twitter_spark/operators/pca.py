@@ -18,11 +18,9 @@ public algorithm, any linear-algebra text):
    fixed deterministically (largest-|loading| coordinate made
    positive) so downstream projections are reproducible across runs
    and partitionings.
-3. **Distributed projection.** ``project_pca`` applies the k
-   components as one Arrow-batched matmul per batch.
 
-At 100 TB: stage 1 is one scan with combinable partials; stages 2-3
-are a broadcast of a d*k matrix. Nothing driver-side grows with data.
+At 100 TB: stage 1 is one scan with combinable partials; stage 2 is
+d x d driver work. Nothing driver-side grows with data.
 
 Reference scope: the reference (COMP5349_2.py:1-211) has no PCA;
 north-star embedding-analytics mandate.
@@ -107,36 +105,6 @@ def fit_pca(df: DataFrame):
             comps[i] = -comps[i]
     total_var = float(np.maximum(vals, 0.0).sum())
     return mean, comps, eigvals, int(n), total_var
-
-
-def project_pca(
-    df: DataFrame,
-    mean: np.ndarray,
-    components: np.ndarray,
-) -> DataFrame:
-    """Project each ``(vec_id, embedding)`` vector onto the fitted
-    components as ``(vec_id, pc)`` — one broadcast d*k matrix, one
-    Arrow-batched matmul per batch."""
-    mu = mean.copy()
-    w = components.T.copy()  # (d, k)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("pc", ArrayType(DoubleType())),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64) - mu
-            p = x @ w
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "pc": list(p)}
-            )
-
-    return df.select("vec_id", "embedding").mapInPandas(run, schema)
 
 
 def pca_spectrum(df: DataFrame) -> DataFrame:

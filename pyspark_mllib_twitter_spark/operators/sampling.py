@@ -1,4 +1,4 @@
-"""Sampling operators: deterministic hash sampling and stratified sampling.
+"""Sampling operators: deterministic hash sampling, plain and stratified.
 
 A 100 TB pipeline samples constantly — eval splits, dedup audits, cheap
 profiling — and the two properties that matter at scale are (a)
@@ -9,10 +9,8 @@ a repartition).
 ``hash_sample`` keys the decision on md5 of the row key: a pure projection
 + filter that pushes down like any predicate, gives the same rows on every
 engine that has md5 (so it is DuckDB-oracle-checkable), and never needs a
-seed handshake between jobs. ``stratified_sample`` wraps Spark's
-``sampleBy`` (per-stratum Bernoulli, seeded) for rate-correcting skewed
-strata; its guarantees are statistical, so it is property-tested with
-tolerances rather than oracle-matched.
+seed handshake between jobs. ``stratified_hash_sample`` gives each
+stratum its own keep-rate with the same md5 test.
 """
 
 from __future__ import annotations
@@ -37,19 +35,6 @@ def hash_sample(df: DataFrame, key_col: str, rate_sixteenths: int) -> DataFrame:
     allowed = list(_HEX[:rate_sixteenths])
     digit = F.substring(F.md5(F.col(key_col).cast("string")), 32, 1)
     return df.filter(digit.isin(allowed))
-
-
-def stratified_sample(df: DataFrame, strata_col: str, fractions: dict) -> DataFrame:
-    """Per-stratum Bernoulli sample (Spark ``sampleBy``): each stratum key
-    is kept with its own probability — the rate-equalizer for skewed
-    strata (e.g. downsample the dominant language, keep the rare ones).
-    Seeded (7) for within-engine reproducibility; statistical, not exact —
-    verify with tolerance tests, not row oracles."""
-    return df.sampleBy(strata_col, fractions, 7)
-
-
-#: Hex digits in md5 output order — first k digits = keep-rate k/16.
-_HEX = "0123456789abcdef"
 
 
 def stratified_hash_sample(

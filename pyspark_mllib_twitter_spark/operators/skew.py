@@ -20,7 +20,7 @@ unsalted equivalents in tests/test_skew.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

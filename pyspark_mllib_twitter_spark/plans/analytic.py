@@ -3,7 +3,8 @@
 ∅-ref surface widening (SURVEY §2.12 round-2 additions): the reference
 (``/root/reference/COMP5349_2.py``) has no subqueries or reshape operators,
 but a user replacing it with this engine expects the full DataFrame/SQL
-surface. Each query here pairs an idiomatic Spark plan with a DuckDB oracle.
+surface. Where the SQL is the whole recipe, one text serves Spark and the
+DuckDB oracle (``sql_query``); the rest pair a Spark plan with an oracle.
 
 Scale notes inline per query; the common themes:
 
@@ -21,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..sources import read_table, register_views
-from .registry import query
+from ..sources import read_table, run_sql
+from .registry import query, sql_query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -38,9 +39,11 @@ def _dec_sum(col: str | F.Column) -> F.Column:
 # Subqueries
 # ---------------------------------------------------------------------------
 
-@query(
+# Orders above the global average price. The average is decimal_sum / count
+# so both engines divide identical inputs; a float AVG can flip boundary rows.
+sql_query(
     "q_sub_scalar",
-    oracle="""
+    """
     SELECT o_orderkey, o_totalprice
     FROM orders
     WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6)))
@@ -49,22 +52,6 @@ def _dec_sum(col: str | F.Column) -> F.Column:
     ORDER BY o_orderkey
     """,
 )
-def q_sub_scalar(spark, sf_dir):
-    """∅-ref: uncorrelated scalar subquery — orders above the global average
-    price. Spark-first: the subquery is a 1-row aggregate broadcast-joined
-    against the fact scan (Catalyst's own scalar-subquery planning does the
-    same), so the "subquery" costs one extra stage and zero driver memory at
-    any scale. The average is ``decimal_sum / count`` so Spark and DuckDB
-    divide identical inputs — a float-summed AVG can differ in the last ulp
-    and flip boundary rows."""
-    o = _t(spark, sf_dir, "orders")
-    gavg = o.agg((_dec_sum("o_totalprice") / F.count("*")).alias("gavg"))
-    return (
-        o.join(F.broadcast(gavg))
-        .where(F.col("o_totalprice") > F.col("gavg"))
-        .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
-    )
 
 
 @query(
@@ -174,17 +161,9 @@ _GSETS_SQL = """
 """
 
 
-@query("q_g4_grouping_sets", oracle=_GSETS_SQL)
-def q_g4_grouping_sets(spark, sf_dir):
-    """∅-ref: explicit GROUPING SETS with ``GROUPING()`` markers — the
-    general form behind rollup (q_g1) and cube (q_g2), one SQL text run by
-    both engines. Raw columns are grouped and COALESCE'd only in the SELECT
-    (grouping an aliased COALESCE would absorb the subtotal NULL markers —
-    see the q_g1 dialect note); ``GROUPING()`` disambiguates real -1 keys
-    from subtotal rows. Spark expands the sets into a single Expand + hash
-    aggregate: one shuffle regardless of how many sets."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GSETS_SQL)
+# Explicit GROUPING SETS. Raw columns are grouped and COALESCE'd only in the
+# SELECT: grouping an aliased COALESCE would absorb the subtotal NULL markers.
+sql_query("q_g4_grouping_sets", _GSETS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -218,9 +197,11 @@ def q_u2_unpivot(spark, sf_dir):
     ).orderBy("p_partkey", "measure")
 
 
-@query(
+# By-name union: the second branch's columns arrive in another order and `bal`
+# is missing (null-filled); a positional union (q_u1) would mis-align them.
+sql_query(
     "q_u3_union_by_name",
-    oracle="""
+    """
     SELECT c_custkey AS id, c_name AS name, c_acctbal AS bal,
            'customer' AS src
     FROM customer
@@ -230,28 +211,6 @@ def q_u2_unpivot(spark, sf_dir):
     ORDER BY src, id
     """,
 )
-def q_u3_union_by_name(spark, sf_dir):
-    """∅-ref: ``unionByName(allowMissingColumns=True)`` — schema-aligned
-    union where the second branch's columns arrive in a different order and
-    one (``bal``) is absent, null-filled. Positional ``union`` (q_u1) would
-    silently mis-align these; by-name union is the safe API for evolving
-    schemas in long-lived pipelines. No shuffle — union is a plan-level
-    concatenation of the two scans."""
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_name").alias("name"),
-        F.col("c_acctbal").alias("bal"),
-        F.lit("customer").alias("src"),
-    )
-    supp = _t(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name"),  # deliberately different column order
-        F.col("s_suppkey").alias("id"),
-        F.lit("supplier").alias("src"),
-    )
-    return (
-        cust.unionByName(supp, allowMissingColumns=True)
-        .orderBy("src", "id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -413,40 +372,24 @@ def q_a8_salted_agg(spark, sf_dir):
     ).orderBy("event_type")
 
 
-@query(
+# Co-moment aggregates per group. Skewness and kurtosis accumulate 3rd/4th-order
+# moments whose engine-order error reaches the 6th decimal, so both round to 4dp.
+# `+ 0e0` turns the -0.0 DuckDB's ROUND gives for a tiny negative skewness
+# into 0.0, which is what Spark's ROUND gives.
+sql_query(
     "q_a9_stats_suite",
-    oracle="""
+    """
     SELECT l_returnflag,
            CORR(l_quantity, l_extendedprice)        AS qty_price_corr,
            COVAR_SAMP(l_quantity, l_discount)       AS qty_disc_covar,
            COVAR_POP(l_quantity, l_discount)        AS qty_disc_covar_pop,
-           ROUND(SKEWNESS(l_quantity), 4)           AS qty_skew,
+           ROUND(SKEWNESS(l_quantity), 4) + 0e0     AS qty_skew,
            ROUND(KURTOSIS(l_quantity), 4)           AS qty_kurt
     FROM lineitem
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
 )
-def q_a9_stats_suite(spark, sf_dir):
-    """∅-ref statistics aggregates: Pearson correlation, sample/population
-    covariance, skewness, kurtosis per group — the co-moment family MLlib's
-    Summarizer exposes, here as plain partial-aggregable SQL (one shuffle,
-    map-side co-moment merge). Corr/covar agree inside the 6dp comparison
-    (bounded outputs, 2nd-order moments); skewness/kurtosis accumulate
-    3rd/4th-order moments whose engine-order error reaches the 6th decimal
-    at 60k rows, so both sides round them to 4dp."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.corr("l_quantity", "l_extendedprice").alias("qty_price_corr"),
-            F.covar_samp("l_quantity", "l_discount").alias("qty_disc_covar"),
-            F.covar_pop("l_quantity", "l_discount").alias("qty_disc_covar_pop"),
-            F.round(F.skewness("l_quantity"), 4).alias("qty_skew"),
-            F.round(F.kurtosis("l_quantity"), 4).alias("qty_kurt"),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -472,18 +415,7 @@ _Q5_SQL = """
 """
 
 
-@query("q_sql_q5", oracle=_Q5_SQL)
-def q_sql_q5(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q5 shape — a 6-table join with a
-    same-nation co-location condition (customer and supplier must share a
-    nation) and a region + date-range filter, one SQL text for both
-    engines. Catalyst's join reordering + AQE drive the plan: region and
-    nation broadcast trivially, the date filter pushes to the orders scan,
-    and the customer⋈supplier nation condition prunes before the big
-    lineitem join. The local-vs-distant-supplier variant of this query is
-    the classic join-order stress test."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q5_SQL)
+sql_query("q_sql_q5", _Q5_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -557,9 +489,11 @@ def q_f_bitwise(spark, sf_dir):
     ).orderBy("o_orderkey")
 
 
-@query(
+# Bag set operations (INTERSECT ALL / EXCEPT ALL): the surviving multiplicity
+# is the observable difference from q_u1, so the bags are re-counted.
+sql_query(
     "q_u4_bag_setops",
-    oracle="""
+    """
     SELECT 'inter_all' AS tag, k, COUNT(*) AS n FROM
       (SELECT o_custkey AS k FROM orders
        INTERSECT ALL
@@ -574,24 +508,6 @@ def q_f_bitwise(spark, sf_dir):
     ORDER BY tag, k
     """,
 )
-def q_u4_bag_setops(spark, sf_dir):
-    """∅-ref: bag-semantics set operations — ``intersectAll`` keeps each
-    key min(count_left, count_right) times and ``exceptAll`` keeps
-    count_left - count_right occurrences, vs the distinct semantics of
-    q_u1. The multiplicity is the observable difference, so the query
-    re-counts the surviving bags. Spark plans both as aggregate+join on
-    per-key counts — one shuffle each, no row explosion."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    inter = (
-        o.intersectAll(c).groupBy("k").agg(F.count("*").alias("n"))
-        .select(F.lit("inter_all").alias("tag"), "k", "n")
-    )
-    exc = (
-        o.exceptAll(c).groupBy("k").agg(F.count("*").alias("n"))
-        .select(F.lit("except_all").alias("tag"), "k", "n")
-    )
-    return inter.unionAll(exc).orderBy("tag", "k")
 
 
 @query(
@@ -704,19 +620,21 @@ def q_udtf_tokens(spark, sf_dir):
                 yield (doc_id, i, t)
 
     spark.udtf.register("first_tokens", FirstTokens)
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT f.doc_id, f.i, f.tok
         FROM documents, LATERAL first_tokens(doc_id, text) f
         ORDER BY f.doc_id, f.i
-        """
+        """,
     )
 
 
-@query(
+# Per-group OLS slope, intercept and R² from 2nd-order co-moments.
+sql_query(
     "q_a10_regr_suite",
-    oracle="""
+    """
     SELECT l_returnflag,
            regr_slope(l_extendedprice, l_quantity)     AS slope,
            regr_intercept(l_extendedprice, l_quantity) AS icept,
@@ -727,24 +645,6 @@ def q_udtf_tokens(spark, sf_dir):
     ORDER BY l_returnflag
     """,
 )
-def q_a10_regr_suite(spark, sf_dir):
-    """∅-ref: linear-regression aggregates — per-group OLS slope /
-    intercept / R² / count in one pass (2nd-order co-moments, same
-    partial-merge shape as q_a9's covar; both engines agree inside 6dp
-    because the moments are ratio-normalized). The SQL-native way to fit
-    thousands of tiny per-group models without MLlib — use the W3
-    Pipeline when the model has more than one feature."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.regr_slope("l_extendedprice", "l_quantity").alias("slope"),
-            F.regr_intercept("l_extendedprice", "l_quantity").alias("icept"),
-            F.regr_r2("l_extendedprice", "l_quantity").alias("r2"),
-            F.regr_count("l_extendedprice", "l_quantity").cast("bigint").alias("n"),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 @query("q_a11_sketch_merge", oracle=None)  # HLL sketch binary — engine-specific
@@ -809,16 +709,7 @@ _LATERAL_SQL = """
 """
 
 
-@query("q_sql_lateral", oracle=_LATERAL_SQL)
-def q_sql_lateral(spark, sf_dir):
-    """∅-ref SQL front-end: LATERAL correlated subquery — per-nation
-    maximum balance computed by a subquery that references the outer row,
-    one SQL text for both engines. Catalyst decorrelates it into the same
-    aggregate-then-join plan q_sub_q17 builds by hand; pinning the syntax
-    matters because LATERAL is how users express per-row top-N and
-    correlated lookups without learning the decorrelation trick."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+sql_query("q_sql_lateral", _LATERAL_SQL)
 
 
 @query(
@@ -886,9 +777,11 @@ def q_udf_grouped_agg(spark, sf_dir):
     )
 
 
-@query(
+# Ordered funnel (view -> click -> purchase): a later stage counts only at or
+# after the first qualifying earlier one, unlike three independent mins.
+sql_query(
     "q_xn_funnel",
-    oracle="""
+    """
     WITH ev AS (
       SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
       FROM events WHERE user_id IS NOT NULL
@@ -916,58 +809,6 @@ def q_udf_grouped_agg(spark, sf_dir):
     ORDER BY v.user_id
     """,
 )
-def q_xn_funnel(spark, sf_dir):
-    """∅-ref behavioral analytics: ORDERED funnel (view → click → purchase)
-    — per user, the first view, the first click AT OR AFTER that view, and
-    the first purchase at or after that click; ``stage`` = how deep the
-    user got. The ordering constraint is what distinguishes a funnel from
-    three independent mins: a purchase before the first qualifying click
-    does not count.
-
-    Spark-first: each stage is a filtered min-aggregate joined forward into
-    the next — aggregates shrink to one row per user BEFORE any join, so
-    every join is between user-sized sides co-partitioned on user_id, and
-    Catalyst reuses that one hash partitioning across all three stages plus
-    the final left joins (no re-shuffle). Event-type filters push into the
-    shared scan. Holds at any event volume; the per-stage state is one
-    timestamp per user."""
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select("user_id", "event_type", "ts")
-    )
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") >= F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") >= F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
-    )
-    return (
-        v.join(c, "user_id", "left")
-        .join(p, "user_id", "left")
-        .select(
-            "user_id", "t_view", "t_click", "t_purchase",
-            F.when(F.col("t_purchase").isNotNull(), F.lit(3))
-            .when(F.col("t_click").isNotNull(), F.lit(2))
-            .otherwise(F.lit(1))
-            .cast("int")
-            .alias("stage"),
-        )
-        .orderBy("user_id")
-    )
 
 
 @query(
@@ -1189,21 +1030,9 @@ _RECURSIVE_SQL = """
 """
 
 
-@query("q_sql_recursive", oracle=_RECURSIVE_SQL)
-def q_sql_recursive(spark, sf_dir):
-    """∅-ref SQL front-end: RECURSIVE CTE (new in Spark 4) — walk each key's
-    halving chain to the root and measure depth, one SQL text for both
-    engines. This is the declarative form of the iterative loops the engine
-    otherwise hand-rolls (connected components, PageRank): Spark executes
-    the recursion as iterated UNION ALL steps over the accumulating working
-    set, each step a distributed plan — the same execute-until-empty shape
-    as the hand-written label propagation, now available to plain SQL users.
-    Depth is bounded (log2 of the max key), so the working set shrinks
-    geometrically; recursion on an unbounded graph would instead need the
-    operator-level CC/PageRank implementations with their convergence
-    probes."""
-    register_views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_SQL)
+# RECURSIVE CTE: each key's halving chain to the root and its depth. Depth is
+# bounded by log2 of the max key, so the working set shrinks geometrically.
+sql_query("q_sql_recursive", _RECURSIVE_SQL)
 
 
 @query(
@@ -1454,20 +1283,9 @@ _Q10_SQL = """
 """
 
 
-@query("q_sql_q10", oracle=_Q10_SQL)
-def q_sql_q10(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q10 shape (returned-item report) — the
-    top-20 customers by revenue lost to returns in a half-year window, one
-    SQL text for both engines. Adds the join-breadth Q3/Q5 don't cover:
-    a selective fact filter (returnflag) joined up through TWO dimension
-    levels with a grouped top-k. Catalyst broadcasts nation and plans
-    TakeOrderedAndProject for the LIMIT — no global sort; money sums are
-    decimal-exact so the DESC order (and therefore the top-20 cut) is
-    engine-stable. The revenue-then-custkey ORDER BY is total, making the
-    LIMIT deterministic — an unkeyed top-k over ties would be
-    engine-dependent."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q10_SQL)
+# TPC-H Q10 shape: top-20 customers by revenue lost to returns. The ORDER BY
+# is total and the sums decimal, so the LIMIT cuts the same rows on both.
+sql_query("q_sql_q10", _Q10_SQL)
 
 
 _Q18_SQL = """
@@ -1489,24 +1307,16 @@ _Q18_SQL = """
 """
 
 
-@query("q_sql_q18", oracle=_Q18_SQL)
-def q_sql_q18(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q18 shape (large-volume orders) — the
-    IN-subquery-with-HAVING pattern: orders whose total quantity clears a
-    threshold, rejoined to their customers. Catalyst plans the IN as a
-    LEFT SEMI join against the grouped-HAVING aggregate — the subquery
-    never duplicates rows, and the same lineitem scan feeds both the
-    filter aggregate and the outer sum (exchange reuse). Quantity sums are
-    decimal so the HAVING threshold cuts identically on both engines;
-    threshold 210 is tuned to the fixture's order sizes (selective but
-    non-empty at sf0.01)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q18_SQL)
+# TPC-H Q18 shape: IN subquery with HAVING. The threshold 210 is tuned to the
+# fixture's order sizes (selective but non-empty at sf0.01).
+sql_query("q_sql_q18", _Q18_SQL)
 
 
-@query(
+# try_ functions: NULL on failure instead of a failed job. The oracle spells
+# each as TRY_CAST/CASE, so which rows are NULL is checked too.
+sql_query(
     "q_f_try",
-    oracle="""
+    """
     SELECT p_partkey,
            TRY_CAST(substring(p_name, 1, 3) AS INT)      AS bad_int,
            TRY_CAST(p_size AS SMALLINT)                  AS ok_small,
@@ -1518,38 +1328,6 @@ def q_sql_q18(spark, sf_dir):
     FROM part ORDER BY p_partkey
     """,
 )
-def q_f_try(spark, sf_dir):
-    """∅-ref error-safe scalar surface: the ``try_`` function family —
-    NULL-on-failure instead of job-killing exceptions, the ingestion-time
-    answer to dirty data at 100 TB (one malformed row must not fail a
-    million-task job; dropping to permissive modes engine-wide would hide
-    real bugs). Pins: ``try_cast`` on unparseable strings, a narrowing
-    ``try_cast`` that fits, ``try_divide`` by a sometimes-zero divisor
-    (NULL, not Inf/error), and ``ln`` guarded to NULL on non-positive
-    input. The oracle spells each as the equivalent TRY_CAST/CASE —
-    bitwise-identical including WHICH rows are NULL."""
-    p = _t(spark, sf_dir, "part")
-    return (
-        p.select(
-            "p_partkey",
-            F.substring("p_name", 1, 3).try_cast("int").alias("bad_int"),
-            F.col("p_size").try_cast("smallint").alias("ok_small"),
-            F.try_divide(
-                F.col("p_retailprice"),
-                F.when(F.col("p_partkey") % 10 == 0, F.lit(0.0)).otherwise(
-                    (F.col("p_partkey") % 10).cast("double")
-                ),
-            ).cast("double").alias("safe_div"),
-            F.round(
-                F.when(
-                    F.col("p_retailprice") - 900 > 0,
-                    F.log(F.col("p_retailprice") - 900),
-                ),
-                6,
-            ).alias("safe_ln"),
-        )
-        .orderBy("p_partkey")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1578,16 +1356,7 @@ _Q12_SQL = """
 """
 
 
-@query("q_sql_q12", oracle=_Q12_SQL)
-def q_sql_q12(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q12 shape (late shipments by priority) —
-    conditional-sum classification over a fact-dimension join with an
-    interval-arithmetic lateness predicate. Catalyst pushes both shipdate
-    range bounds to the scan and plans the priority CASE sums as one
-    map-side-combinable aggregate; the only shuffle is the orderkey join.
-    Counts are integers — no float comparison surface at all."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q12_SQL)
+sql_query("q_sql_q12", _Q12_SQL)
 
 
 _Q14_SQL = """
@@ -1603,16 +1372,7 @@ _Q14_SQL = """
 """
 
 
-@query("q_sql_q14", oracle=_Q14_SQL)
-def q_sql_q14(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q14 shape (promotion effect) — the
-    conditional-numerator / total-denominator ratio aggregate. Both sums
-    run in DECIMAL(38,6) (exact, order-independent) so numerator and
-    denominator are bit-identical across engines before the one double
-    division; the part join is a broadcast hash probe (part is the small
-    side), and the shipdate window reaches the scan as PushedFilters."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q14_SQL)
+sql_query("q_sql_q14", _Q14_SQL)
 
 
 _Q16_SQL = """
@@ -1630,16 +1390,7 @@ _Q16_SQL = """
 """
 
 
-@query("q_sql_q16", oracle=_Q16_SQL)
-def q_sql_q16(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q16 shape (supplier diversity per part
-    class, minus blacklisted suppliers) — the NOT IN subquery pattern.
-    Catalyst plans NOT IN as LEFT ANTI (null-aware) with the 6-row
-    blacklist broadcast; p_size IN (...) prunes at the part scan. The
-    COUNT(DISTINCT) shuffles (brand, type, size, suppkey) pairs — grouped
-    distinct, not a global expand."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q16_SQL)
+sql_query("q_sql_q16", _Q16_SQL)
 
 
 _Q19_SQL = """
@@ -1657,18 +1408,7 @@ _Q19_SQL = """
 """
 
 
-@query("q_sql_q19", oracle=_Q19_SQL)
-def q_sql_q19(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q19 shape (discounted revenue under
-    disjunctive brand/size/quantity predicates) — the OR-of-conjunctions
-    pattern that defeats naive pushdown. Catalyst splits the disjunction:
-    the common join key stays an equi-hash-join, per-side implied
-    predicates (p_brand IN (...), l_quantity ranges) are extracted and
-    pushed below the join, and the residual disjunction evaluates
-    post-join in codegen. Decimal revenue sum keeps the single-row answer
-    bit-stable."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q19_SQL)
+sql_query("q_sql_q19", _Q19_SQL)
 
 
 _Q21_SQL = """
@@ -1692,18 +1432,9 @@ _Q21_SQL = """
 """
 
 
-@query("q_sql_q21", oracle=_Q21_SQL)
-def q_sql_q21(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q21 shape (suppliers who alone kept a
-    finished order waiting) — the EXISTS + NOT EXISTS correlated-subquery
-    pair on the same fact table. Catalyst rewrites them to LEFT SEMI and
-    LEFT ANTI joins on l_orderkey with the extra non-equi conditions
-    (suppkey inequality, lateness vs the OUTER order date) folded into the
-    join condition — three passes over lineitem, all equi-hash on
-    orderkey, no nested-loop. Lateness reuses the Q12 interval predicate
-    (fixture has no receipt/commit dates)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q21_SQL)
+# TPC-H Q21 shape: EXISTS + NOT EXISTS on lineitem. The fixture has no
+# receipt/commit dates, so lateness reuses Q12's interval predicate.
+sql_query("q_sql_q21", _Q21_SQL)
 
 
 _Q22_SQL = """
@@ -1726,20 +1457,10 @@ _Q22_SQL = """
 """
 
 
-@query("q_sql_q22", oracle=_Q22_SQL)
-def q_sql_q22(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q22 shape (global-sales-opportunity:
-    high-balance customers gone dormant) — uncorrelated scalar subquery
-    (the average balance, computed once and broadcast as a literal-like
-    filter) plus a correlated NOT EXISTS anti-join against recent orders.
-    Every fixture customer has SOME order, so dormancy is "no order since
-    1999" — same anti-join shape as the original's "no orders at all".
-    The c_nationkey % 10 code stands in for the phone prefix. The scalar
-    avg is float (both engines sum doubles in different orders) — safe
-    because it's a strict threshold on values ~1e3 with no fixture value
-    within float-noise of the mean; the OUTPUT sums are decimal-exact."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q22_SQL)
+# TPC-H Q22 shape. Every fixture customer has an order, so dormancy is "no
+# order since 1999"; c_nationkey % 10 stands in for the phone prefix. The
+# scalar AVG is a float, safe because no balance is within noise of it.
+sql_query("q_sql_q22", _Q22_SQL)
 
 
 @query(
@@ -1814,16 +1535,7 @@ _Q1_SQL = """
 """
 
 
-@query("q_sql_q1", oracle=_Q1_SQL)
-def q_sql_q1(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q1 (pricing summary report) — the
-    canonical scan-heavy aggregate: one pass over lineitem, eight
-    aggregates over four grouping cells. All sums/avgs run in
-    DECIMAL(38,6) (exact, order-independent) with one double cast at the
-    end. Plan: partial + final HashAggregate around a 4-row shuffle —
-    the whole table reduces map-side."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q1_SQL)
+sql_query("q_sql_q1", _Q1_SQL)
 
 
 _Q2_SQL = """
@@ -1840,18 +1552,9 @@ _Q2_SQL = """
 """
 
 
-@query("q_sql_q2", oracle=_Q2_SQL)
-def q_sql_q2(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q2 shape (minimum-cost supplier) — the
-    CORRELATED SCALAR MIN subquery, decorrelated by Catalyst into a
-    per-region min aggregate joined back (no per-row re-execution). The
-    fixture lacks partsupp, so the correlation runs region → min supplier
-    balance, preserving the defining shape: an equality filter against a
-    correlated aggregate, with ties kept (several suppliers can share the
-    region minimum). Balances are exact 2dp doubles, so the equality is
-    engine-safe."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q2_SQL)
+# TPC-H Q2 shape: correlated scalar MIN. The fixture has no partsupp, so it
+# correlates region -> minimum supplier balance; ties are kept.
+sql_query("q_sql_q2", _Q2_SQL)
 
 
 _Q4_SQL = """
@@ -1868,16 +1571,9 @@ _Q4_SQL = """
 """
 
 
-@query("q_sql_q4", oracle=_Q4_SQL)
-def q_sql_q4(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q4 (order priority checking) — the
-    EXISTS semi-join probe: orders in a date window having at least one
-    late line (shipdate 60+ days past order date stands in for the
-    missing commit/receipt pair, as in q_sql_q12). Catalyst decorrelates
-    to LEFT SEMI on l_orderkey; the date window prunes at the orders
-    scan. Counts only — no float surface."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q4_SQL)
+# TPC-H Q4: EXISTS probe. Shipdate 60+ days past the order date stands in for
+# the missing commit/receipt pair.
+sql_query("q_sql_q4", _Q4_SQL)
 
 
 _Q6_SQL = """
@@ -1892,15 +1588,7 @@ _Q6_SQL = """
 """
 
 
-@query("q_sql_q6", oracle=_Q6_SQL)
-def q_sql_q6(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q6 (forecasting revenue change) — the
-    pure filter-aggregate: every predicate (date range, discount band,
-    quantity cap) reaches the parquet scan as PushedFilters; the plan is
-    scan → partial agg → single-row exchange → final agg, the minimal
-    possible shape. The discount BETWEEN on 2dp doubles is exact."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q6_SQL)
+sql_query("q_sql_q6", _Q6_SQL)
 
 
 _Q7_SQL = """
@@ -1925,15 +1613,7 @@ _Q7_SQL = """
 """
 
 
-@query("q_sql_q7", oracle=_Q7_SQL)
-def q_sql_q7(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q7 (volume shipping) — the two-role
-    dimension join: nation joins TWICE under different aliases (supplier
-    side and customer side) with a symmetric nation-pair disjunction.
-    Catalyst broadcasts both nation probes and pushes the shipdate window
-    to the scan; volumes aggregate in DECIMAL."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q7_SQL)
+sql_query("q_sql_q7", _Q7_SQL)
 
 
 _Q8_SQL = """
@@ -1963,16 +1643,7 @@ _Q8_SQL = """
 """
 
 
-@query("q_sql_q8", oracle=_Q8_SQL)
-def q_sql_q8(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q8 (national market share) — the
-    eight-table star join with a conditional-share ratio per year: the
-    target nation's volume over total volume, both summed in DECIMAL so
-    the ratio's operands are bit-identical before the one double
-    division. Region/part filters prune their dimension scans; nation
-    again joins twice (market region vs supplier nationality)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q8_SQL)
+sql_query("q_sql_q8", _Q8_SQL)
 
 
 _Q9_SQL = """
@@ -1994,17 +1665,9 @@ _Q9_SQL = """
 """
 
 
-@query("q_sql_q9", oracle=_Q9_SQL)
-def q_sql_q9(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q9 shape (product-type profit) — the
-    LIKE-filtered star join with a computed profit measure per
-    nation-year. The fixture lacks ps_supplycost, so cost is the
-    deterministic proxy 0.8 * p_retailprice * quantity — the defining
-    shape (substring part filter, five-table join, derived-column
-    aggregate) is intact. The per-row profit expression is double
-    arithmetic (deterministic), then DECIMAL-summed."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q9_SQL)
+# TPC-H Q9 shape. The fixture has no ps_supplycost, so cost is the proxy
+# 0.8 * p_retailprice * quantity.
+sql_query("q_sql_q9", _Q9_SQL)
 
 
 _Q11_SQL = """
@@ -2019,18 +1682,9 @@ _Q11_SQL = """
 """
 
 
-@query("q_sql_q11", oracle=_Q11_SQL)
-def q_sql_q11(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q11 shape (important stock
-    identification) — GROUP BY with a HAVING threshold that is itself an
-    uncorrelated scalar subquery over the same table (a fraction of the
-    global total). Catalyst evaluates the scalar once and broadcasts it
-    as a filter; both sides of the comparison are DECIMAL-exact (the
-    0.05 fraction scales a decimal, engine-identically). The fixture
-    lacks partsupp, so supplier balances per nation stand in for stock
-    value per part — shape preserved."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q11_SQL)
+# TPC-H Q11 shape: HAVING against a scalar subquery. The fixture has no
+# partsupp, so supplier balances per nation stand in for stock value.
+sql_query("q_sql_q11", _Q11_SQL)
 
 
 _Q13_SQL = """
@@ -2046,17 +1700,9 @@ _Q13_SQL = """
 """
 
 
-@query("q_sql_q13", oracle=_Q13_SQL)
-def q_sql_q13(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q13 (customer distribution) — the
-    two-level aggregate over an OUTER join with a join-condition filter
-    (the filter lives in the ON clause, so customers with zero qualifying
-    orders survive with count 0 — moving it to WHERE would silently drop
-    them, the classic outer-join trap). First level counts per customer,
-    second level histograms the counts. Priority stands in for the
-    missing o_comment pattern filter."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q13_SQL)
+# TPC-H Q13: two-level aggregate over an outer join. The filter sits in the ON
+# clause so customers with no qualifying order keep count 0.
+sql_query("q_sql_q13", _Q13_SQL)
 
 
 _Q15_SQL = """
@@ -2076,21 +1722,7 @@ _Q15_SQL = """
 """
 
 
-@query("q_sql_q15", oracle=_Q15_SQL)
-def q_sql_q15(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q15 (top supplier) — the reused named
-    subquery (CTE standing in for the original's CREATE VIEW): revenue
-    is referenced twice, once as the join input and once under the
-    scalar MAX, and ties for the maximum are KEPT (the = comparison is
-    on exact DECIMAL revenue, so a tie is a real value tie on both
-    engines, never float noise). The scalar MAX plans as ONE shared
-    subquery evaluated once per query (plan-asserted); Spark does not
-    reuse the CTE's aggregate exchange ACROSS the subquery/main-plan
-    boundary, so the revenue aggregate itself runs twice — at scale the
-    CTE would be checkpointed or the max folded into a window/rank pass
-    if that second scan mattered."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q15_SQL)
+sql_query("q_sql_q15", _Q15_SQL)
 
 
 _Q20_SQL = """
@@ -2110,15 +1742,6 @@ _Q20_SQL = """
 """
 
 
-@query("q_sql_q20", oracle=_Q20_SQL)
-def q_sql_q20(spark, sf_dir):
-    """∅-ref SQL front-end: TPC-H Q20 shape (potential part promotion) —
-    the nested IN whose subquery is itself a grouped HAVING aggregate:
-    suppliers that moved more than a threshold quantity of any single
-    'small%' part this year. Catalyst plans the IN as LEFT SEMI over the
-    aggregated subquery (distinct-on-build, no fan-out); the LIKE prefix
-    and date window prune their scans. The missing partsupp availability
-    comparison is replaced by the shipped-quantity threshold — same
-    nesting depth, same decorrelation work."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q20_SQL)
+# TPC-H Q20 shape: nested IN over a grouped HAVING. The shipped-quantity
+# threshold replaces the missing partsupp availability test.
+sql_query("q_sql_q20", _Q20_SQL)

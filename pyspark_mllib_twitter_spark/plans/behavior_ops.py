@@ -28,7 +28,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..sources import read_table
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # Ordered funnel conversion (view -> click -> purchase)
@@ -226,9 +226,11 @@ def q_at_retention(spark, sf_dir):
 DID_CUTOFF = "2024-01-16"
 
 
-@query(
+# Difference-in-differences (Card & Krueger 1994): treatment by user parity,
+# post-period by a fixed cutoff; cell means from exact cents DECIMAL sums.
+sql_query(
     "q_au_did",
-    oracle=f"""
+    f"""
     WITH p AS (
       SELECT CAST(user_id % 2 AS INT) AS treat,
              CASE WHEN CAST(ts AS DATE) >= DATE '{DID_CUTOFF}'
@@ -262,69 +264,6 @@ DID_CUTOFF = "2024-01-16"
     FROM m
     """,
 )
-def q_au_did(spark, sf_dir):
-    """Difference-in-differences (Card & Krueger 1994 design, public):
-    the 2x2 exact-cells estimator over purchase values — treatment by
-    deterministic user parity, post-period by a fixed cutoff date. DiD =
-    (treat_post - treat_pre) - (ctrl_post - ctrl_pre), all four cell
-    means from exact cents DECIMAL sums with ONE shared-text close.
-
-    Scale shape: a single map-side-combinable aggregate producing an
-    8-number row — the same one-scan moment discipline as the OLS /
-    A-B z-test entries; no join, no window, no shuffle beyond the
-    1-row final combine.
-    """
-    p = (
-        read_table(spark, sf_dir, "events")
-        .filter((F.col("event_type") == "purchase") & F.col("user_id").isNotNull())
-        .select(
-            (F.col("user_id") % 2).cast("int").alias("treat"),
-            F.when(
-                F.col("ts").cast("date") >= F.lit(DID_CUTOFF).cast("date"), 1
-            )
-            .otherwise(0)
-            .alias("post"),
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-    )
-
-    def _cell(t, q):
-        cond = (F.col("treat") == t) & (F.col("post") == q)
-        return (
-            F.sum(F.when(cond, F.col("cents").cast("decimal(38,0)"))),
-            F.count(F.when(cond, F.lit(1))).cast("bigint"),
-        )
-
-    s_t1, n_t1 = _cell(1, 1)
-    s_t0, n_t0 = _cell(1, 0)
-    s_c1, n_c1 = _cell(0, 1)
-    s_c0, n_c0 = _cell(0, 0)
-    m = p.agg(
-        s_t1.alias("s_t1"),
-        s_t0.alias("s_t0"),
-        s_c1.alias("s_c1"),
-        s_c0.alias("s_c0"),
-        n_t1.alias("n_t1"),
-        n_t0.alias("n_t0"),
-        n_c1.alias("n_c1"),
-        n_c0.alias("n_c0"),
-    )
-    close = (
-        "round((CAST(s_t1 AS DOUBLE) / n_t1 - CAST(s_t0 AS DOUBLE) / n_t0"
-        " - (CAST(s_c1 AS DOUBLE) / n_c1 - CAST(s_c0 AS DOUBLE) / n_c0))"
-        " / 100.0, 6)"
-    )
-    return m.selectExpr(
-        "n_t1",
-        "n_t0",
-        "n_c1",
-        "n_c0",
-        "round(CAST(s_t1 AS DOUBLE) / n_t1 / 100.0, 6) AS mean_treat_post",
-        "round(CAST(s_t0 AS DOUBLE) / n_t0 / 100.0, 6) AS mean_treat_pre",
-        "round(CAST(s_c1 AS DOUBLE) / n_c1 / 100.0, 6) AS mean_ctrl_post",
-        "round(CAST(s_c0 AS DOUBLE) / n_c0 / 100.0, 6) AS mean_ctrl_pre",
-        f"{close} AS did_estimate",
-    )
 
 
 # ---------------------------------------------------------------------------

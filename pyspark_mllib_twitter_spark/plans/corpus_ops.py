@@ -40,7 +40,7 @@ from ..functions import text as TXT
 from ..operators.iterate import iterate
 from ..sources import read_table, spread
 from ..streaming.streams import KMV_K
-from .registry import query
+from .registry import query, sql_query
 
 
 def _docs(spark, sf_dir):
@@ -1351,9 +1351,11 @@ def q_ya_chi2_independence(spark, sf_dir):
 # Markov transition matrix over event sequences
 # ---------------------------------------------------------------------------
 
-@query(
+# First-order Markov transition matrix over per-user event sequences, ordered
+# by (ts, event_id) so the chains are the same on both engines.
+sql_query(
     "q_yb_markov_transitions",
-    oracle=f"""
+    f"""
     WITH seq AS (
       SELECT event_type AS a,
              lead(event_type) OVER (PARTITION BY user_id
@@ -1366,30 +1368,6 @@ def q_ya_chi2_independence(spark, sf_dir):
     ORDER BY t.a, t.b
     """,
 )
-def q_yb_markov_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over per-user event sequences
-    — the sequence-mining primitive behind clickstream analysis and
-    next-event prediction: ``P(next = b | current = a)`` estimated from
-    time-ordered transitions, ordered by ``(ts, event_id)`` on both
-    engines so chains are engine-identical.
-
-    Scale shape: ONE window pass partitioned by the sequence key (users),
-    then two map-side-combinable aggregations over (a, b) pairs — the
-    transition table is |types|^2 regardless of event volume. The
-    normalizing out-degree join runs on that tiny table, not on events.
-    """
-    e = read_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        F.col("event_type").alias("a"), F.lead("event_type").over(w).alias("b")
-    ).filter(F.col("b").isNotNull())
-    trans = seq.groupBy("a", "b").agg(F.count("*").alias("n"))
-    outs = trans.groupBy("a").agg(F.sum("n").alias("n_out"))
-    return (
-        trans.join(outs, "a")
-        .select("a", "b", F.col("n").cast("bigint").alias("n"), (F.col("n") / F.col("n_out")).alias("p"))
-        .orderBy("a", "b")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1939,9 +1917,11 @@ def q_yg_rolling_distinct(spark, sf_dir):
 RULE_MIN_COUNT = 8
 
 
-@query(
+# Pairwise association rules (Agrawal et al. 1993): confidence and lift for
+# item pairs in >= RULE_MIN_COUNT baskets; the SQL twin of FPGrowth's rules.
+sql_query(
     "q_yh_assoc_rules",
-    oracle=f"""
+    f"""
     WITH b AS (
       SELECT DISTINCT l_orderkey, l_suppkey AS item FROM lineitem),
     n AS (SELECT count(DISTINCT l_orderkey) AS n_baskets FROM b),
@@ -1963,57 +1943,16 @@ RULE_MIN_COUNT = 8
     ORDER BY antecedent, consequent
     """,
 )
-def q_yh_assoc_rules(spark, sf_dir):
-    """Pairwise association rules (Agrawal et al. 1993, public): for item
-    pairs co-occurring in >= ``RULE_MIN_COUNT`` baskets, the rule x -> y
-    with confidence P(y|x) and lift P(y|x)/P(y) — the value-checked SQL
-    twin of the rule stage FPGrowth (q_ml_fpgrowth) runs engine-side, at
-    the pair level where SQL can express the lattice exactly.
-
-    Scale shape: baskets reduce to DISTINCT (basket, item) digests once;
-    the pair generation is a self-equi-join on the basket key, whose
-    output is bounded by sum(basket_size^2) — basket-size-governed, not
-    corpus-governed (the same bound PFP's projected trees rely on); item
-    margins broadcast into the final rule projection. The HAVING floor
-    applies in the pair aggregation, before any join fan-out.
-    """
-    li = read_table(spark, sf_dir, "lineitem")
-    b = li.select("l_orderkey", F.col("l_suppkey").alias("item")).distinct()
-    n = b.agg(F.countDistinct("l_orderkey").alias("n_baskets"))
-    item = b.groupBy("item").agg(F.count("*").alias("c"))
-    b2 = b.select(F.col("l_orderkey").alias("k"), F.col("item").alias("y_item"))
-    pair = (
-        b.join(b2, (b.l_orderkey == b2.k) & (b.item != b2.y_item))
-        .groupBy(F.col("item").alias("x"), F.col("y_item").alias("y"))
-        .agg(F.count("*").alias("c_xy"))
-        .filter(F.col("c_xy") >= RULE_MIN_COUNT)
-    )
-    ix = item.select(F.col("item").alias("x"), F.col("c").alias("c_x"))
-    iy = item.select(F.col("item").alias("y"), F.col("c").alias("c_y"))
-    return (
-        pair.join(F.broadcast(ix), "x")
-        .join(F.broadcast(iy), "y")
-        .crossJoin(F.broadcast(n))
-        .select(
-            F.col("x").alias("antecedent"),
-            F.col("y").alias("consequent"),
-            F.col("c_xy").cast("bigint").alias("n_xy"),
-            (F.col("c_xy") / F.col("c_x")).alias("confidence"),
-            ((F.col("c_xy") / F.col("c_x")) / (F.col("c_y") / F.col("n_baskets"))).alias(
-                "lift"
-            ),
-        )
-        .orderBy("antecedent", "consequent")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Two-proportion A/B z-test
 # ---------------------------------------------------------------------------
 
-@query(
+# Two-proportion z-test: users split by id parity, conversion = any purchase.
+sql_query(
     "q_yi_abtest_ztest",
-    oracle="""
+    """
     WITH assign AS (
       SELECT user_id, user_id % 2 AS grp FROM (SELECT DISTINCT user_id FROM events)),
     conv AS (
@@ -2043,61 +1982,6 @@ def q_yh_assoc_rules(spark, sf_dir):
     FROM wide
     """,
 )
-def q_yi_abtest_ztest(spark, sf_dir):
-    """Two-proportion z-test for an A/B experiment (pooled-variance form,
-    any statistics text): users split deterministically by id parity,
-    conversion = any 'purchase' event; reports per-arm counts, absolute
-    lift, and the z statistic — the experimentation-platform readout query.
-
-    Scale shape: user assignment and conversion reduce to DISTINCT user
-    digests (two map-side-combinable aggregations + one digest-width
-    left join); everything after is arithmetic on a 2-row table pivoted
-    to one row. At 100 TB of events the only full-scan work is the two
-    distincts.
-    """
-    e = read_table(spark, sf_dir, "events")
-    assign = e.select("user_id").distinct().withColumn("grp", F.col("user_id") % 2)
-    # Conversion = any HIGH-VALUE purchase: the fixture's per-user purchase
-    # count (~13 at every SF) makes "any purchase" saturate to p = 1 for
-    # both arms, which zeroes the pooled variance — the z-test needs a
-    # non-degenerate event.
-    conv = (
-        e.filter((F.col("event_type") == "purchase") & (F.col("value") >= 190))
-        .select("user_id")
-        .distinct()
-        .withColumn("converted", F.lit(1))
-    )
-    cell = (
-        assign.join(conv, "user_id", "left")
-        .groupBy("grp")
-        .agg(
-            F.count("*").alias("n_users"),
-            F.sum(F.coalesce("converted", F.lit(0))).alias("n_conv"),
-        )
-    )
-    wide = cell.agg(
-        F.max(F.when(F.col("grp") == 0, F.col("n_users"))).alias("n0"),
-        F.max(F.when(F.col("grp") == 0, F.col("n_conv"))).alias("c0"),
-        F.max(F.when(F.col("grp") == 1, F.col("n_users"))).alias("n1"),
-        F.max(F.when(F.col("grp") == 1, F.col("n_conv"))).alias("c1"),
-    )
-    p_pool = (F.col("c0") + F.col("c1")) / (F.col("n0") + F.col("n1"))
-    lift = F.col("c1") / F.col("n1") - F.col("c0") / F.col("n0")
-    return wide.select(
-        F.col("n0").cast("bigint").alias("n_control"),
-        F.col("c0").cast("bigint").alias("conv_control"),
-        F.col("n1").cast("bigint").alias("n_treat"),
-        F.col("c1").cast("bigint").alias("conv_treat"),
-        lift.alias("lift_abs"),
-        # Degenerate arms (all or none converted) have zero pooled variance:
-        # z undefined -> NULL on both engines, never a divide-by-zero.
-        F.when(
-            (F.col("c0") + F.col("c1") > 0)
-            & (F.col("c0") + F.col("c1") < F.col("n0") + F.col("n1")),
-            lift
-            / F.sqrt(p_pool * (1 - p_pool) * (1.0 / F.col("n0") + 1.0 / F.col("n1"))),
-        ).alias("z_score"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2289,9 +2173,11 @@ def q_yk_knn_eval(spark, sf_dir):
 # Distribution entropy / KL-vs-uniform (corpus mixture diagnostics)
 # ---------------------------------------------------------------------------
 
-@query(
+# Shannon entropy and KL divergence from uniform over lang and source. Natural
+# log on both engines (DuckDB's `log` is base 10).
+sql_query(
     "q_yl_entropy",
-    oracle="""
+    """
     WITH src AS (
       SELECT 'lang' AS axis, lang AS grp, count(*) AS c FROM documents GROUP BY lang
       UNION ALL
@@ -2309,48 +2195,6 @@ def q_yk_knn_eval(spark, sf_dir):
     FROM h ORDER BY axis
     """,
 )
-def q_yl_entropy(spark, sf_dir):
-    """Shannon entropy and KL divergence from uniform for the corpus's
-    categorical axes (lang, source) — the information-theoretic mixture
-    diagnostic next to PSI drift (q_xu): H near ln(n) means a balanced
-    mixture; KL(p || uniform) = ln(n) - H is exactly the imbalance the
-    temperature reweighting (q_y5) exists to shrink. Natural log on both
-    engines (DuckDB ``log`` is base 10 — the PMI lesson).
-
-    Scale shape: one grouped count per axis over the scan (map-side
-    combinable), then all ratio/log math on the group-sized table.
-    """
-    d = _docs(spark, sf_dir)
-    src = (
-        d.groupBy(F.lit("lang").alias("axis"), F.col("lang").alias("grp"))
-        .agg(F.count("*").alias("c"))
-        .unionByName(
-            d.groupBy(F.lit("source").alias("axis"), F.col("source").alias("grp")).agg(
-                F.count("*").alias("c")
-            )
-        )
-    )
-    tot = src.groupBy("axis").agg(F.sum("c").alias("n"))
-    h = (
-        src.join(F.broadcast(tot), "axis")
-        .groupBy("axis")
-        .agg(
-            F.count("*").alias("n_groups"),
-            (-F.sum((F.col("c") / F.col("n")) * F.log(F.col("c") / F.col("n")))).alias(
-                "entropy"
-            ),
-        )
-    )
-    return h.select(
-        "axis",
-        F.col("n_groups").cast("bigint").alias("n_groups"),
-        "entropy",
-        # clamp: see the oracle comment — KL is analytically >= 0 and the
-        # uniform axis lands within 1 ulp of zero with run-varying sign
-        F.greatest(F.lit(0.0), F.log("n_groups") - F.col("entropy")).alias(
-            "kl_uniform"
-        ),
-    ).orderBy("axis")
 
 
 # ---------------------------------------------------------------------------
@@ -3111,9 +2955,11 @@ def q_yu_ewma(spark, sf_dir):
 # ROC AUC (rank-sum / Mann-Whitney, distributed rank)
 # ---------------------------------------------------------------------------
 
-@query(
+# ROC AUC via the rank-sum (Mann-Whitney U) identity; score ties break on
+# event_id so both engines rank identically.
+sql_query(
     "q_yv_auc",
-    oracle="""
+    """
     WITH scored AS (
       SELECT value AS score,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS label,
@@ -3132,57 +2978,6 @@ def q_yu_ewma(spark, sf_dir):
     FROM agg
     """,
 )
-def q_yv_auc(spark, sf_dir):
-    """ROC AUC of "does the value column predict a purchase event" via the
-    rank-sum (Mann-Whitney U) identity AUC = (R_pos - n_pos(n_pos+1)/2)
-    / (n_pos * n_neg) — the standard large-scale AUC formulation because
-    it needs only a GLOBAL RANK, not the O(n^2) pair enumeration or a
-    thresholds sweep (Hanley & McNeil 1982 — public). Score ties break on
-    event_id so both engines rank identically (fixture scores are
-    continuous doubles — tie handling is deterministic, not statistical).
-
-    Scale shape: the global rank uses the distributed range-repartition +
-    broadcast-offsets recipe (q_yj_gini; layout localCheckpoint-pinned so
-    the offsets job and the rank read the same partitioning) — no
-    single-partition window; the rest is one scalar aggregate.
-    """
-    ev = read_table(spark, sf_dir, "events").select(
-        F.col("value").alias("score"),
-        (F.col("event_type") == "purchase").cast("long").alias("label"),
-        "event_id",
-    )
-    parts = (
-        ev.repartitionByRange("score", "event_id")
-        .sortWithinPartitions("score", "event_id")
-        .localCheckpoint(eager=True)
-    )
-    with_pid = parts.withColumn("_pid", F.spark_partition_id())
-    counts = sorted(tuple(r) for r in with_pid.groupBy("_pid").count().collect())
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    offsets_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset long")
-    local_rank = F.row_number().over(
-        Window.partitionBy("_pid").orderBy("score", "event_id")
-    )
-    ranked = with_pid.join(F.broadcast(offsets_df), "_pid").withColumn(
-        "r", F.col("_offset") + local_rank
-    )
-    agg = ranked.agg(
-        F.sum(F.when(F.col("label") == 1, F.col("r")).otherwise(0)).alias("rank_sum"),
-        F.sum("label").alias("n_pos"),
-        (F.count("*") - F.sum("label")).alias("n_neg"),
-    )
-    return agg.select(
-        F.col("n_pos").cast("bigint").alias("n_pos"),
-        F.col("n_neg").cast("bigint").alias("n_neg"),
-        F.round(
-            (F.col("rank_sum") - F.col("n_pos") * (F.col("n_pos") + 1) / 2.0)
-            / (F.col("n_pos").cast("double") * F.col("n_neg")),
-            6,
-        ).alias("auc"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3392,9 +3187,11 @@ def q_yy_qq_deciles(spark, sf_dir):
 # Categorical mutual information (lang ; source)
 # ---------------------------------------------------------------------------
 
-@query(
+# Mutual information between lang and source, in nats. Each term is one log
+# of an integer ratio; clamped at 0 against -1ulp summation noise.
+sql_query(
     "q_yz_mutual_information",
-    oracle="""
+    """
     WITH joint AS (
       SELECT lang, source, count(*) AS c FROM documents GROUP BY lang, source),
     tot AS (SELECT sum(c) AS n FROM joint),
@@ -3411,47 +3208,6 @@ def q_yy_qq_deciles(spark, sf_dir):
     FROM terms
     """,
 )
-def q_yz_mutual_information(spark, sf_dir):
-    """Mutual information between the lang and source columns — the
-    categorical-dependence readout that complements the chi-square test
-    (q_ya): MI = sum p(x,y) ln(p(x,y)/(p(x)p(y))), in nats. Near-zero MI
-    = the corpus mixes languages independently of source (what a balanced
-    crawl wants); high MI flags source-language entanglement that
-    stratified sampling must respect. All counts are exact integers; the
-    ln-ratio is arranged as (c*n)/(cx*cy) so each term is one double log
-    of an integer ratio — identical on both engines. Clamped at 0 (MI is
-    analytically >= 0; summation-order noise can land at -1ulp).
-
-    Scale shape: one (lang, source) aggregate (bounded grid), margins by
-    re-aggregating the GRID not the corpus, broadcast joins, one scalar
-    sum.
-    """
-    d = read_table(spark, sf_dir, "documents").select("lang", "source")
-    joint = d.groupBy("lang", "source").agg(F.count("*").alias("c"))
-    tot = joint.agg(F.sum("c").alias("n"))
-    px = joint.groupBy("lang").agg(F.sum("c").alias("cx"))
-    py = joint.groupBy("source").agg(F.sum("c").alias("cy"))
-    terms = (
-        joint.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(px), "lang")
-        .join(F.broadcast(py), "source")
-        .select(
-            "n",
-            "cx",
-            (
-                F.col("c") / F.col("n")
-                * F.log((F.col("c") * F.col("n")).cast("double") / (F.col("cx") * F.col("cy")))
-            ).alias("term"),
-        )
-    )
-    n_lang = px.count()
-    n_source = py.count()
-    return terms.agg(
-        F.max("n").cast("bigint").alias("n_docs"),
-        F.lit(n_lang).cast("bigint").alias("n_lang"),
-        F.lit(n_source).cast("bigint").alias("n_source"),
-        F.round(F.greatest(F.lit(0.0), F.sum("term")), 6).alias("mutual_information"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3462,9 +3218,11 @@ def q_yz_mutual_information(spark, sf_dir):
 CUPED_SPLIT = "2024-01-15"
 
 
-@query(
+# CUPED-adjusted A/B means (Deng et al., WSDM 2013). Moment sums are exact
+# DECIMAL, so theta differs between engines only in its one division.
+sql_query(
     "q_z1_abtest_cuped",
-    oracle=f"""
+    f"""
     WITH per_user AS (
       SELECT user_id, user_id % 2 AS grp,
              sum(CASE WHEN ts <  TIMESTAMP '{CUPED_SPLIT}'
@@ -3493,57 +3251,6 @@ CUPED_SPLIT = "2024-01-15"
     FROM adj ORDER BY grp
     """,
 )
-def q_z1_abtest_cuped(spark, sf_dir):
-    """CUPED-adjusted A/B means (Deng, Xu, Kohavi & Walker, WSDM 2013 —
-    public): reduce experiment variance by regressing out a PRE-period
-    covariate — y_adj = y - theta*(x - xbar) with theta = cov(x,y)/var(x)
-    — leaving arm means unbiased but tighter. The modern experimentation
-    default on top of the plain z-test (q_yi). Moment sums run in exact
-    DECIMAL (including the cross-moment sum(x*y)) so theta is identical
-    on both engines up to its single double division.
-
-    Scale shape: one per-user aggregate, one 5-scalar moment aggregate,
-    theta broadcast back as a 1-row cross join — two scans' worth of
-    work at any corpus size, no window, no Python.
-    """
-    ev = read_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    split = F.lit(CUPED_SPLIT).cast("timestamp")
-    dv = F.col("value").cast("decimal(38,6)")
-    per_user = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("ts") < split, dv).otherwise(F.lit(0).cast("decimal(38,6)"))).alias("x"),
-        F.sum(F.when(F.col("ts") >= split, dv).otherwise(F.lit(0).cast("decimal(38,6)"))).alias("y"),
-    ).withColumn("grp", (F.col("user_id") % 2).cast("int"))
-    moments = per_user.agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    theta = moments.select(
-        (F.col("sx").cast("double") / F.col("n")).alias("xbar"),
-        (
-            (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")).cast("double")
-            / (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")).cast("double")
-        ).alias("th"),
-    )
-    adj = (
-        per_user.crossJoin(F.broadcast(theta))
-        .groupBy("grp")
-        .agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.round(F.avg(F.col("y").cast("double")), 6).alias("raw_mean"),
-            F.round(
-                F.avg(
-                    F.col("y").cast("double")
-                    - F.col("th") * (F.col("x").cast("double") - F.col("xbar"))
-                ),
-                6,
-            ).alias("adj_mean"),
-            F.round(F.any_value("th"), 6).alias("theta"),
-        )
-    )
-    return adj.select("grp", "n_users", "raw_mean", "adj_mean", "theta").orderBy("grp")
 
 
 # ---------------------------------------------------------------------------
@@ -3697,9 +3404,11 @@ def q_z3_kmv_distinct(spark, sf_dir):
 CALIB_BINS = 10
 
 
-@query(
+# Calibration (reliability) diagram: score = value / 200 (the fixture's value
+# range), label = purchase event.
+sql_query(
     "q_z4_calibration",
-    oracle=f"""
+    f"""
     WITH scored AS (
       SELECT least({CALIB_BINS - 1},
                    CAST(floor(value / 200.0 * {CALIB_BINS}) AS INT)) AS bin,
@@ -3712,39 +3421,6 @@ CALIB_BINS = 10
     FROM scored GROUP BY bin ORDER BY bin
     """,
 )
-def q_z4_calibration(spark, sf_dir):
-    """Calibration / reliability diagram for a score: bucket the
-    (normalized) score into equal-width bins and compare each bin's mean
-    score against its observed positive rate — the probability-
-    calibration readout that complements ranking quality (q_yv AUC): a
-    model can rank well and still be badly calibrated (DeGroot &
-    Fienberg 1983 — public). Scores are value/200 (the fixture value
-    range), labels are purchase events.
-
-    Scale shape: one map-only bin assignment + one map-side-combinable
-    aggregate over CALIB_BINS groups. Nothing else.
-    """
-    ev = read_table(spark, sf_dir, "events").filter(
-        (F.col("value") >= 0) & (F.col("value") <= 200)
-    )
-    score = F.col("value") / 200.0
-    binned = ev.select(
-        F.least(
-            F.lit(CALIB_BINS - 1),
-            F.floor(score * CALIB_BINS).cast("int"),
-        ).alias("bin"),
-        score.alias("score"),
-        (F.col("event_type") == "purchase").cast("long").alias("label"),
-    )
-    return (
-        binned.groupBy("bin")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(F.avg("score"), 6).alias("mean_score"),
-            F.round(F.avg(F.col("label").cast("double")), 6).alias("frac_positive"),
-        )
-        .orderBy("bin")
-    )
 
 
 # ---------------------------------------------------------------------------

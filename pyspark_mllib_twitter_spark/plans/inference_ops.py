@@ -33,7 +33,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..sources import read_table, spread
-from .registry import query
+from .registry import query, sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -412,9 +412,11 @@ _ASSORT_EXPR = (
 )
 
 
-@query(
+# Degree assortativity (Newman 2002) of the folded supplier-part graph: the
+# Pearson correlation of endpoint degrees, from DECIMAL(38,0) moments.
+sql_query(
     "q_zk_assortativity",
-    oracle=f"""
+    f"""
     WITH folded AS (
       SELECT DISTINCT
              least(l_suppkey % {ASSORT_MOD}, l_partkey % {ASSORT_MOD}) AS u,
@@ -441,54 +443,6 @@ _ASSORT_EXPR = (
     SELECT m2, {_ASSORT_EXPR} AS assortativity FROM m
     """,
 )
-def q_zk_assortativity(spark, sf_dir):
-    """Degree assortativity coefficient (Newman 2002, public) of the
-    folded supplier-part link graph — the graph family shared with
-    pagerank/triangles/k-core. Answers "do hubs link to hubs?": the
-    Pearson correlation of endpoint degrees over all directed edges.
-
-    Exactness: degrees are exact BIGINTs; all five correlation moments
-    accumulate in DECIMAL(38,0); the closing Pearson expression is one
-    shared-text double formula (two IEEE sqrts on identical inputs).
-
-    Scale shape: distinct-fold the edge list (one shuffle), degree count
-    (one combinable groupBy), then two broadcast-able joins of the edge
-    list against the degree table (node-count sized — broadcast when it
-    fits, shuffle-hash when not; at this fold width Spark's AQE picks
-    broadcast) and one global moment aggregate that partial-aggregates
-    map-side to a single row. No windows, no iteration.
-    """
-    li = read_table(spark, sf_dir, "lineitem")
-    su = (F.col("l_suppkey") % ASSORT_MOD).alias("a")
-    pu = (F.col("l_partkey") % ASSORT_MOD).alias("b")
-    folded = (
-        li.select(su, pu)
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-    )
-    directed = folded.select(
-        F.col("u").alias("s"), F.col("v").alias("d")
-    ).unionAll(folded.select(F.col("v").alias("s"), F.col("u").alias("d")))
-    deg = directed.groupBy(F.col("s").alias("node")).agg(
-        F.count("*").cast("bigint").alias("deg")
-    )
-    pairs = (
-        directed.join(
-            deg.select(F.col("node").alias("s"), F.col("deg").alias("du")), "s"
-        )
-        .join(deg.select(F.col("node").alias("d"), F.col("deg").alias("dv")), "d")
-        .select("du", "dv")
-    )
-    m = pairs.agg(
-        F.count("*").cast("bigint").alias("m2"),
-        F.sum(F.col("du").cast("decimal(38,0)")).alias("sx"),
-        F.sum(F.col("dv").cast("decimal(38,0)")).alias("sy"),
-        F.sum(F.col("du").cast("decimal(38,0)") * F.col("du")).alias("sxx"),
-        F.sum(F.col("dv").cast("decimal(38,0)") * F.col("dv")).alias("syy"),
-        F.sum(F.col("du").cast("decimal(38,0)") * F.col("dv")).alias("sxy"),
-    )
-    return m.select("m2", F.expr(_ASSORT_EXPR).alias("assortativity"))
 
 
 # ---------------------------------------------------------------------------
@@ -676,9 +630,11 @@ _MK_Z = (
 )
 
 
-@query(
+# Mann-Kendall trend test on daily revenue with the exact tie correction.
+# var18 keeps the /18 unapplied so it stays an integer.
+sql_query(
     "q_zn_mann_kendall",
-    oracle=f"""
+    f"""
     WITH daily AS (
       SELECT date_trunc('day', o_orderdate) AS day,
              SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
@@ -701,71 +657,6 @@ _MK_Z = (
     SELECT n, s, {_MK_Z} AS z FROM m
     """,
 )
-def q_zn_mann_kendall(spark, sf_dir):
-    """Mann-Kendall trend test on the daily order-revenue series — the
-    nonparametric "is there a monotone trend?" companion to the CUSUM
-    change-point (q_zc) and the ACF (q_zi): S counts concordant minus
-    discordant day pairs, variance gets the exact tie correction, z is
-    continuity-corrected (Mann 1945 / Kendall 1975, public).
-
-    Exactness: S, n, and the tie term are exact integers (cents
-    comparisons, integer products; var18 keeps the /18 un-applied so it
-    stays integral); z is one shared-text expression with a single sqrt.
-
-    Scale shape: the corpus-sized reduce is the combinable groupBy(day);
-    the O(days^2) pair join runs on the POST-AGGREGATE series (bounded:
-    a decade is ~3.7k rows, ~7M comparisons — document-and-contain, the
-    same smallness argument as q_zi). S is a one-row aggregate off that
-    join; ties reduce over the same tiny series.
-    """
-    daily = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
-                "cents"
-            )
-        )
-    )
-    a, b = daily.alias("a"), daily.alias("b")
-    pairs = (
-        a.join(b, F.col("b.day") > F.col("a.day"))
-        .agg(
-            F.sum(
-                F.when(F.col("b.cents") > F.col("a.cents"), 1)
-                .when(F.col("b.cents") < F.col("a.cents"), -1)
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("s")
-        )
-    )
-    ties = (
-        daily.groupBy("cents")
-        .agg(F.count("*").cast("bigint").alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-                ),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("tie18")
-        )
-    )
-    nn = daily.agg(F.count("*").cast("bigint").alias("n"))
-    m = (
-        pairs.crossJoin(ties)
-        .crossJoin(nn)
-        .withColumn(
-            "var18",
-            F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
-            - F.col("tie18"),
-        )
-    )
-    return m.select("n", "s", F.expr(_MK_Z).alias("z"))
 
 
 # ---------------------------------------------------------------------------
@@ -979,9 +870,11 @@ _HHI_EXPR = (
 _CR4_EXPR = "round(CAST(top4 AS DOUBLE) / CAST(tot AS DOUBLE), 6)"
 
 
-@query(
+# HHI and CR4 per segment. HHI sums cents^2 in DECIMAL and divides by tot^2
+# once: summing share^2 would be an order-dependent double sum.
+sql_query(
     "q_zp_concentration",
-    oracle=f"""
+    f"""
     WITH spend AS (
       SELECT c.c_mktsegment AS segment, o.o_custkey,
              SUM(CAST(CAST(round(o.o_totalprice * 100) AS BIGINT)
@@ -1004,64 +897,6 @@ _CR4_EXPR = "round(CAST(top4 AS DOUBLE) / CAST(tot AS DOUBLE), 6)"
     FROM agg ORDER BY segment
     """,
 )
-def q_zp_concentration(spark, sf_dir):
-    """Market-concentration audit per customer segment: Herfindahl-
-    Hirschman index and CR4 (top-4 share) of customer spend — the
-    antitrust-economics concentration measures (public), and in a
-    training-data pipeline the same math audits SOURCE concentration
-    (is one domain dominating the mix? cf. q_xv quotas / q_y5 mixing).
-
-    Exactness trick: HHI = sum(share^2) is an ORDER-DEPENDENT double sum
-    if computed share-by-share — instead sum(cents^2) exactly in
-    DECIMAL and divide by tot^2 ONCE in shared text:
-    sum((c_i/T)^2) = sum(c_i^2)/T^2 algebraically. CR4's top-4 is an
-    exact integer sum selected by a deterministic (cents DESC, custkey)
-    rank.
-
-    Scale shape: one combinable rollup to customer grain, then a
-    PER-SEGMENT window on the customer aggregate (partitioned — never a
-    single global sort) feeding one combinable per-segment aggregate.
-    At 1e9 customers the rank-for-CR4 swaps to a top-4-per-group
-    WindowGroupLimit (q_w1_topk's shape) — the HHI half needs no rank at
-    all.
-    """
-    orders = read_table(spark, sf_dir, "orders")
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    spend = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100)
-                .cast("bigint")
-                .cast("decimal(38,0)")
-            ).alias("cents")
-        )
-    )
-    from pyspark.sql import Window
-
-    rk = F.row_number().over(
-        Window.partitionBy("segment").orderBy(
-            F.desc("cents"), F.asc("o_custkey")
-        )
-    )
-    ranked = spend.withColumn("rk", rk)
-    agg = ranked.groupBy("segment").agg(
-        F.count("*").cast("bigint").alias("n_customers"),
-        F.sum("cents").alias("tot"),
-        F.sum(F.col("cents") * F.col("cents")).alias("sum_sq"),
-        F.sum(F.when(F.col("rk") <= 4, F.col("cents")).otherwise(0)).alias(
-            "top4"
-        ),
-    )
-    return agg.select(
-        "segment",
-        "n_customers",
-        F.expr(_HHI_EXPR).alias("hhi"),
-        F.expr(_CR4_EXPR).alias("cr4"),
-    ).orderBy("segment")
 
 
 # ---------------------------------------------------------------------------
@@ -1077,9 +912,11 @@ KS_SAMPLE_B = "click"
 _KS_EXPR = "round(CAST(d_num AS DOUBLE) / (CAST(na AS DOUBLE) * nb), 6)"
 
 
-@query(
+# Exact two-sample Kolmogorov-Smirnov D between two event types' values. The
+# ECDF gap is cross-multiplied into integers; values group before accumulating.
+sql_query(
     "q_zq_ks_twosample",
-    oracle=f"""
+    f"""
     WITH ev AS (
       SELECT value,
              CASE WHEN event_type = '{KS_SAMPLE_A}' THEN 1 ELSE 0 END AS ia,
@@ -1108,71 +945,6 @@ _KS_EXPR = "round(CAST(d_num AS DOUBLE) / (CAST(na AS DOUBLE) * nb), 6)"
     SELECT na, nb, at_value, {_KS_EXPR} AS ks_d FROM best
     """,
 )
-def q_zq_ks_twosample(spark, sf_dir):
-    """Exact two-sample Kolmogorov-Smirnov statistic between the value
-    distributions of two event types — the distribution-drift detector
-    that needs NO binning choice, complementing PSI (q_xu: binned,
-    scalar) and Q-Q deciles (q_yy: visual). D = sup_x |F_a(x) - F_b(x)|
-    evaluated exactly at every observed value.
-
-    Exactness: the running difference is cross-multiplied into integers
-    (|cum_a*n_b - cum_b*n_a|) so the sup and its argmax location carry
-    zero float ambiguity; ties across samples are handled by grouping on
-    value BEFORE accumulating (both samples step together at a shared
-    point, the correct ECDF convention). One shared-text division at the
-    end.
-
-    Scale shape: group-by-value first (combinable — collapses duplicate
-    observations), then the prefix sum. Locally that is one ordered
-    window; at 100 TB the window swaps for the distributed
-    range-repartition + broadcast-offsets prefix recipe already proven
-    in q_yv_auc/q_yj_gini — the statistic itself is engineered
-    integer-exact so EITHER layout hashes identically. The argmax is
-    TakeOrderedAndProject (per-partition top-1 merge), not a global
-    sort.
-    """
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin(KS_SAMPLE_A, KS_SAMPLE_B))
-        .select(
-            "value",
-            (F.col("event_type") == KS_SAMPLE_A).cast("long").alias("ia"),
-            (F.col("event_type") == KS_SAMPLE_B).cast("long").alias("ib"),
-        )
-    )
-    grp = ev.groupBy("value").agg(
-        F.sum("ia").cast("bigint").alias("ca"),
-        F.sum("ib").cast("bigint").alias("cb"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-    cum = grp.select(
-        "value",
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-    )
-    tot = grp.agg(
-        F.sum("ca").cast("bigint").alias("na"),
-        F.sum("cb").cast("bigint").alias("nb"),
-    )
-    d = cum.crossJoin(F.broadcast(tot)).select(
-        "na",
-        "nb",
-        F.abs(
-            F.col("cum_a") * F.col("nb") - F.col("cum_b") * F.col("na")
-        ).alias("dn"),
-        F.col("value").alias("at_value"),
-    )
-    best = d.orderBy(F.desc("dn"), F.asc("at_value")).limit(1)
-    return best.select(
-        "na",
-        "nb",
-        "at_value",
-        F.expr("round(CAST(dn AS DOUBLE) / (CAST(na AS DOUBLE) * nb), 6)").alias(
-            "ks_d"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1196,9 +968,11 @@ _WILSON_LB = (
 )
 
 
-@query(
+# Cohorts ranked by the Wilson score lower bound (Wilson 1927), so 3/3 does not
+# outrank 90/100; one shared expression keeps the ordering engine-portable.
+sql_query(
     "q_ad_wilson_ranking",
-    oracle=f"""
+    f"""
     WITH c AS (
       SELECT user_id % {_WILSON_COHORTS} AS cohort,
              CAST(count(*) AS BIGINT) AS n,
@@ -1212,35 +986,6 @@ _WILSON_LB = (
     FROM c ORDER BY wilson_lb DESC, cohort
     """,
 )
-def q_ad_wilson_ranking(spark, sf_dir):
-    """Rank user cohorts by the Wilson score LOWER BOUND of their
-    purchase rate instead of the raw proportion — the
-    small-sample-honest ranking (Wilson 1927, public): a cohort with
-    3/3 purchases must NOT outrank one with 90/100, which naive p-hat
-    ordering does. s and n are exact integers from one combinable
-    aggregate; p-hat and the bound are one shared-text DOUBLE expression
-    each, so the ordering itself (not just the values) is
-    engine-portable.
-
-    Scale shape: one grouped count over the scan; the ranking runs on
-    the cohort table (bounded by the cohort count). This is the exact
-    shape of production leaderboards (items, sellers, experiments)
-    where n varies by orders of magnitude across rows.
-    """
-    ev = read_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    c = ev.groupBy((F.col("user_id") % _WILSON_COHORTS).alias("cohort")).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("s"),
-    )
-    return c.selectExpr(
-        "CAST(cohort AS BIGINT) AS cohort",
-        "n",
-        "s",
-        f"round({_WILSON_P}, 6) AS p_hat",
-        f"round({_WILSON_LB}, 6) AS wilson_lb",
-    ).orderBy(F.desc("wilson_lb"), F.asc("cohort"))
 
 
 # ---------------------------------------------------------------------------
@@ -1257,9 +1002,11 @@ _MER_TERM = (
 )
 
 
-@query(
+# Entropy rate of the per-user event-type Markov chain against its ln(k)
+# ceiling; per-transition terms are quantized and summed exactly.
+sql_query(
     "q_ae_markov_entropy",
-    oracle=f"""
+    f"""
     WITH seq AS (
       SELECT user_id, event_type,
              lag(event_type) OVER (PARTITION BY user_id
@@ -1287,54 +1034,6 @@ _MER_TERM = (
     GROUP BY s.n_states, tt.ntot
     """,
 )
-def q_ae_markov_entropy(spark, sf_dir):
-    """Entropy RATE of the per-user event-type Markov chain —
-    H = -sum_ij pi_i p_ij ln p_ij with the stationary distribution
-    estimated by the empirical transition marginals (Shannon 1948;
-    Cover & Thomas ch.4 — public): how predictable the NEXT event is
-    given the current one, reported against the ln(k) ceiling as an
-    efficiency ratio. Builds on q_yb's lag-transition construction; the
-    per-transition terms are quantized to femto-units and summed
-    exactly, so the statistic is hash-stable across engines.
-
-    Scale shape: one per-user lag window (sessions sort independently
-    per user hash partition — millions of small sorts, never a global
-    one), one (i, j) count aggregate, then all ratio/log math on the
-    k x k transition table (k = event-type cardinality, tiny).
-    """
-    ev = read_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    from pyspark.sql import Window as W
-
-    seq = ev.select(
-        "event_type",
-        F.lag("event_type")
-        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
-        .alias("prev_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    t = seq.groupBy("prev_type", "event_type").agg(
-        F.count("*").cast("bigint").alias("n_ij")
-    )
-    marg = t.groupBy("prev_type").agg(F.sum("n_ij").cast("bigint").alias("n_i"))
-    tot = t.agg(F.sum("n_ij").cast("bigint").alias("ntot"))
-    states = marg.agg(F.count("*").cast("bigint").alias("n_states"))
-    terms = (
-        t.join(F.broadcast(marg), "prev_type")
-        .crossJoin(F.broadcast(tot))
-        .selectExpr(f"{_MER_TERM} AS q", "ntot")
-    )
-    return (
-        terms.crossJoin(F.broadcast(states))
-        .groupBy("n_states", F.col("ntot").alias("n_transitions"))
-        .agg(F.sum(F.col("q").cast("decimal(38,0)")).alias("sq"))
-        .selectExpr(
-            "n_states",
-            "n_transitions",
-            "round(CAST(sq AS DOUBLE) / 1000000000000000.0, 6) AS entropy_rate",
-            "round(ln(CAST(n_states AS DOUBLE)), 6) AS max_entropy",
-            "round(CAST(sq AS DOUBLE) / 1000000000000000.0"
-            " / ln(CAST(n_states AS DOUBLE)), 6) AS efficiency",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1438,9 +1137,11 @@ _JK_RI = (
 )
 
 
-@query(
+# Delete-one jackknife SE of R = sum(price)/sum(qty): each leave-one-out ratio
+# is a row expression of the global sums, quantized to BIGINT before summing.
+sql_query(
     "q_b1_jackknife_ratio",
-    oracle=f"""
+    f"""
     WITH rows_ AS (
       SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
              CAST(l_quantity AS BIGINT) AS qty
@@ -1468,49 +1169,6 @@ _JK_RI = (
     FROM m
     """,
 )
-def q_b1_jackknife_ratio(spark, sf_dir):
-    """Delete-one JACKKNIFE standard error (Quenouille 1956 / Tukey 1958
-    — public) of the ratio-of-sums estimator R = Σprice/Σqty — the
-    survey-sampling statistic whose SE has no closed form, which is why
-    the jackknife exists. The naive algorithm refits n times; here each
-    leave-one-out ratio R_i = (Sy-y_i)/(Sx-x_i) is a per-row expression
-    of the two broadcast GLOBAL sums, so the whole resample collapses to
-    one extra scan: SE² = (n-1)/n * Σ(R_i - R̄)², expanded to the
-    (ΣR_i², ΣR_i) moment form with R_i quantized to exact BIGINTs before
-    summation (order-independent — no float fold anywhere).
-
-    Scale shape: aggregate #1 produces a 3-number global row (broadcast);
-    aggregate #2 is one map-side-combinable pass over the quantized LOO
-    ratios. The explode×n a textbook jackknife implies never happens —
-    the same collapse trick as the Poisson bootstrap's weight explode
-    (q_zh) but with zero fan-out.
-    """
-    li = read_table(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-        F.col("l_quantity").cast("bigint").alias("qty"),
-    )
-    tot = li.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("sy"),
-        F.sum(F.col("qty").cast("decimal(38,0)")).alias("sx"),
-    )
-    loo = li.crossJoin(F.broadcast(tot)).selectExpr(
-        "n", "sy", "sx", f"{_JK_RI} AS ri"
-    )
-    m = loo.groupBy("n").agg(
-        F.min("sy").alias("sy"),
-        F.min("sx").alias("sx"),
-        F.sum(F.col("ri").cast("decimal(38,0)")).alias("sri"),
-        F.sum(F.col("ri").cast("decimal(38,0)") * F.col("ri")).alias("srr"),
-    )
-    return m.selectExpr(
-        "n",
-        "round(CAST(sy AS DOUBLE) / CAST(sx AS DOUBLE) / 100.0, 6) AS ratio",
-        "round(sqrt((CAST(n AS DOUBLE) - 1.0) / n"
-        " * (CAST(srr AS DOUBLE)"
-        " - CAST(sri AS DOUBLE) * CAST(sri AS DOUBLE) / n))"
-        f" / {_JK_Q} / 100.0, 6) AS jackknife_se",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1677,15 +1335,13 @@ _ANOVA_SSB = (
     " / CAST(n_tot AS DOUBLE)"
 )
 _ANOVA_SSW = "CAST(q_tot AS DOUBLE) - term_sum"
-_ANOVA_F = (
-    "(ssb / (CAST(k AS DOUBLE) - 1.0))"
-    " / nullif(ssw / (CAST(n_tot AS DOUBLE) - CAST(k AS DOUBLE)), 0.0)"
-)
 
 
-@query(
+# One-way ANOVA F of account balance across nations; per-group terms are
+# summed by an ordered window so the double accumulation is bit-stable.
+sql_query(
     "q_c4_anova",
-    oracle=f"""
+    f"""
     WITH x AS (
       SELECT c_nationkey,
              CAST(round(c_acctbal * 100) AS BIGINT) AS cents
@@ -1722,59 +1378,6 @@ _ANOVA_F = (
     FROM f
     """,
 )
-def q_c4_anova(spark, sf_dir):
-    """ONE-WAY ANOVA F-test of account balance across the 25 nations
-    (Fisher's variance decomposition, any statistics text — the
-    continuous-outcome counterpart of q_ya's chi-square and q_yi's
-    two-arm z): SSB/SSW from exact integer moments per group (sum,
-    sum-of-squares in DECIMAL, count), the per-group S_i^2/n_i terms
-    evaluated by one shared-text expression and accumulated by an
-    ORDERED window (bit-stable double summation, the q_bq contract),
-    then one shared-text F close. The within/between sums are reported
-    in squared dollars.
-
-    Scale shape: one map-side-combinable groupBy(nation) over the scan
-    collapses everything to 25 moment rows; all windows run on that
-    group-bounded frame. 100 TB = one scan + a 25-row tail.
-    """
-    c = read_table(spark, sf_dir, "customer").select(
-        "c_nationkey",
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
-    )
-    per = c.groupBy("c_nationkey").agg(
-        F.count("*").cast("bigint").alias("n_i"),
-        F.sum("cents").cast("bigint").alias("s_i"),
-        F.sum(F.col("cents").cast("decimal(38,0)") * F.col("cents")).alias("q_i"),
-    )
-    terms = per.withColumn("term", F.expr(_ANOVA_TERM))
-    w_cum = Window.orderBy("c_nationkey").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    acc = terms.select(
-        F.sum("term").over(w_cum).alias("term_sum"),
-        F.sum("n_i").over(w_all).alias("n_tot"),
-        F.sum("s_i").over(w_all).alias("s_tot"),
-        F.sum("q_i").over(w_all).alias("q_tot"),
-        F.count("*").over(w_all).alias("k"),
-        F.row_number()
-        .over(Window.orderBy(F.col("c_nationkey").desc()))
-        .alias("is_last"),
-    )
-    m = (
-        acc.filter(F.col("is_last") == 1)
-        .withColumn("ssb", F.expr(_ANOVA_SSB))
-        .withColumn("ssw", F.expr(_ANOVA_SSW))
-    )
-    return m.select(
-        F.col("k").cast("bigint").alias("k"),
-        F.col("n_tot").cast("bigint").alias("n"),
-        F.round(F.col("ssb") / 10000.0, 6).alias("ss_between_sq_dollars"),
-        F.round(F.col("ssw") / 10000.0, 6).alias("ss_within_sq_dollars"),
-        F.round(F.expr(_ANOVA_F), 6).alias("f_stat"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1802,9 +1405,11 @@ _WELCH_DF = (
 )
 
 
-@query(
+# Welch's t-test (Welch 1947) of order value, 1-URGENT vs 5-LOW, with the
+# Welch-Satterthwaite df; all doubles come from one shared expression text.
+sql_query(
     "q_cb_welch_ttest",
-    oracle=f"""
+    f"""
     WITH x AS (
       SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 2 END AS arm,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -1845,62 +1450,6 @@ _WELCH_DF = (
     FROM se
     """,
 )
-def q_cb_welch_ttest(spark, sf_dir):
-    """WELCH'S UNEQUAL-VARIANCE t-TEST (Welch 1947, the default two-sample
-    test in R/scipy) of mean order value, 1-URGENT vs 5-LOW — the
-    two-arm continuous companion of q_c4's k-arm ANOVA and q_yi's
-    two-proportion z: per-arm exact integer moments (count, cent sum,
-    DECIMAL sum of squares), then ONE shared-text chain computes sample
-    variances, squared standard errors, the t statistic, and the
-    Welch-Satterthwaite effective df — every double born from the same
-    expression text in both engines, so the statistic is bit-identical.
-
-    Scale shape: one filtered, map-side-combinable groupBy collapses the
-    fact table to TWO moment rows; the pivot-to-wide and the closing
-    algebra are constant-size. 100 TB = one scan + a 1-row tail.
-    """
-    x = (
-        read_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select(
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1)
-            .otherwise(2)
-            .alias("arm"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-    )
-    per = x.groupBy("arm").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("cents").cast("bigint").alias("s"),
-        F.sum(F.col("cents").cast("decimal(38,0)") * F.col("cents")).alias("q"),
-    )
-    wide = per.agg(
-        *[
-            F.max(F.when(F.col("arm") == a, F.col(c))).alias(f"{c}{a}")
-            for a in (1, 2)
-            for c in ("n", "s", "q")
-        ]
-    )
-    v = wide.withColumn("v1", F.expr(_WELCH_VAR.format(i=1))).withColumn(
-        "v2", F.expr(_WELCH_VAR.format(i=2))
-    )
-    se = v.withColumn("se1", F.expr(_WELCH_SE.format(i=1))).withColumn(
-        "se2", F.expr(_WELCH_SE.format(i=2))
-    )
-    return se.select(
-        "n1",
-        "n2",
-        F.round(
-            F.col("s1").cast("double") / F.col("n1").cast("double") / 100.0, 6
-        ).alias("mean1_dollars"),
-        F.round(
-            F.col("s2").cast("double") / F.col("n2").cast("double") / 100.0, 6
-        ).alias("mean2_dollars"),
-        F.round(F.col("v1") / 10000.0, 6).alias("var1_sq_dollars"),
-        F.round(F.col("v2") / 10000.0, 6).alias("var2_sq_dollars"),
-        F.round(F.expr(_WELCH_T), 6).alias("t_stat"),
-        F.round(F.expr(_WELCH_DF), 6).alias("df"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1917,9 +1466,11 @@ _CV_CONTRIB = "(CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e"
 _CV_V = "sqrt(chi2 / (CAST(n AS DOUBLE) * CAST(mindim AS DOUBLE)))"
 
 
-@query(
+# Cramér's V and standardized residuals for segment x region. Zero cells come
+# from the margin cross-product; the chi-square sums in a fixed cell order.
+sql_query(
     "q_cc_cramers_v",
-    oracle=f"""
+    f"""
     WITH x AS (
       SELECT c_mktsegment AS seg, r_name
       FROM customer
@@ -1958,77 +1509,6 @@ _CV_V = "sqrt(chi2 / (CAST(n AS DOUBLE) * CAST(mindim AS DOUBLE)))"
     ORDER BY seg, r_name
     """,
 )
-def q_cc_cramers_v(spark, sf_dir):
-    """CRAMÉR'S V EFFECT SIZE + PEARSON STANDARDIZED RESIDUALS for the
-    market-segment x region contingency table (Cramér 1946) — the
-    effect-size companion of q_ya's chi-square: the test says WHETHER
-    segment mix depends on region, V says HOW MUCH (0..1, comparable
-    across table sizes), and the per-cell standardized residuals say
-    WHICH cells drive it. Expectations come from exact integer margins;
-    the chi-square total is one window over the 25-cell frame in a
-    fixed (seg, region) order so the double accumulation is bit-stable;
-    zero cells are materialized via the margin cross-product (q_ya
-    contract).
-
-    Scale shape: two broadcast dimension joins, then one map-side-
-    combinable contingency aggregate collapses the fact table to
-    |segments| x |regions| cells; margins, the cross-product grid, and
-    the V close are all cell-count work. 100 TB = one scan + a 25-row
-    tail.
-    """
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_nationkey", F.col("c_mktsegment").alias("seg")
-    )
-    nat = read_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_regionkey"
-    )
-    reg = read_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    x = cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey).join(
-        F.broadcast(reg), nat.n_regionkey == reg.r_regionkey
-    )
-    obs = x.groupBy("seg", "r_name").agg(F.count("*").cast("bigint").alias("o"))
-    rows_m = obs.groupBy("seg").agg(F.sum("o").cast("bigint").alias("r"))
-    cols_m = obs.groupBy("r_name").agg(F.sum("o").cast("bigint").alias("c"))
-    tot = obs.agg(F.sum("o").cast("bigint").alias("n"))
-    dims = (
-        rows_m.agg((F.count("*") - 1).alias("rm1"))
-        .crossJoin(cols_m.agg((F.count("*") - 1).alias("cm1")))
-        .select(F.least("rm1", "cm1").alias("mindim"))
-    )
-    grid = (
-        rows_m.crossJoin(F.broadcast(cols_m))
-        .crossJoin(F.broadcast(tot))
-        .join(obs, ["seg", "r_name"], "left")
-        .select(
-            "seg", "r_name", "r", "c", "n", F.coalesce("o", F.lit(0)).alias("o")
-        )
-    )
-    cells = grid.withColumn("e", F.expr(_CV_E))
-    w_all = Window.orderBy("seg", "r_name").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    acc = cells.select(
-        "seg",
-        "r_name",
-        "o",
-        "n",
-        "e",
-        F.expr(_CV_RESID).alias("std_resid"),
-        F.sum(F.expr(_CV_CONTRIB)).over(w_all).alias("chi2"),
-    )
-    return (
-        acc.crossJoin(F.broadcast(dims))
-        .select(
-            "seg",
-            "r_name",
-            "o",
-            F.round("e", 6).alias("e"),
-            F.round("std_resid", 6).alias("std_resid"),
-            F.round("chi2", 6).alias("chi2"),
-            F.round(F.expr(_CV_V), 6).alias("cramers_v"),
-        )
-        .orderBy("seg", "r_name")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2042,9 +1522,11 @@ _CONF_K = "CAST(floor((9 * (n_cal + 1) + 9) / 10.0) AS BIGINT)"
 _CONF_YHAT = "CAST(floor(CAST(s_tr AS DOUBLE) / CAST(n_tr AS DOUBLE)) AS BIGINT)"
 
 
-@query(
+# Split-conformal interval and coverage audit (alpha = 0.1): folds are
+# orderkey mod 4, q-hat an exact order statistic of integer-cent residuals.
+sql_query(
     "q_cf_conformal",
-    oracle=f"""
+    f"""
     WITH x AS (
       SELECT o_orderkey % 4 AS fold, o_orderpriority AS grp,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -2082,93 +1564,6 @@ _CONF_YHAT = "CAST(floor(CAST(s_tr AS DOUBLE) / CAST(n_tr AS DOUBLE)) AS BIGINT)
     FROM kk CROSS JOIN qhat q CROSS JOIN test t
     """,
 )
-def q_cf_conformal(spark, sf_dir):
-    """SPLIT-CONFORMAL PREDICTION INTERVAL + COVERAGE AUDIT (Vovk et al.
-    2005; Lei et al. 2018 JASA — the distribution-free uncertainty
-    wrapper production ML ships around any point model): train folds fit
-    a per-priority mean-price model, the calibration fold takes q̂ = the
-    ceil((n+1)(1-α))-th smallest absolute residual (α=0.1), and the
-    held-out test fold audits that ŷ ± q̂ covers ~90% — the guarantee is
-    distribution-free, so coverage ≈ 0.9 is a testable invariant, not a
-    hope. Folds are deterministic (orderkey mod 4); scores are exact
-    integer cents; q̂ is an EXACT order statistic via the distributed-
-    rank recipe (value cells + cumulative window, q_b8 contract), and
-    the conformal rank itself is exact integer arithmetic through the
-    shared floor close.
-
-    Scale shape: one scan, split by a cheap modulus; the model is a
-    5-row broadcast; score cells collapse the calibration fold before
-    the (cell-grain) cumulative window; the test audit is one combinable
-    aggregate against two broadcast scalars. 100 TB = one scan + cell-
-    grain tails.
-    """
-    x = read_table(spark, sf_dir, "orders").select(
-        (F.col("o_orderkey") % 4).alias("fold"),
-        F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    model = (
-        x.filter(F.col("fold").isin(0, 1))
-        .groupBy("grp")
-        .agg(
-            F.count("*").cast("bigint").alias("n_tr"),
-            F.sum("cents").cast("bigint").alias("s_tr"),
-        )
-    )
-    yhat = model.select("grp", F.expr(_CONF_YHAT).alias("yhat"))
-    cal = (
-        x.filter(F.col("fold") == 2)
-        .join(F.broadcast(yhat), "grp")
-        .select(F.abs(F.col("cents") - F.col("yhat")).alias("score"))
-    )
-    kk = cal.agg(F.count("*").cast("bigint").alias("n_cal")).select(
-        "n_cal", F.expr(_CONF_K).alias("k")
-    )
-    cells = cal.groupBy("score").agg(F.count("*").cast("bigint").alias("c"))
-    cum = cells.select(
-        "score",
-        F.sum("c")
-        .over(Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0))
-        .alias("cw"),
-    )
-    qhat = (
-        cum.crossJoin(F.broadcast(kk))
-        .filter(F.col("cw") >= F.col("k"))
-        .agg(F.min("score").alias("qhat_cents"))
-    )
-    test = (
-        x.filter(F.col("fold") == 3)
-        .join(F.broadcast(yhat), "grp")
-        .crossJoin(F.broadcast(qhat))
-        .agg(
-            F.count("*").cast("bigint").alias("n_test"),
-            F.sum(
-                F.when(
-                    F.abs(F.col("cents") - F.col("yhat"))
-                    <= F.col("qhat_cents"),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_covered"),
-        )
-    )
-    return (
-        kk.crossJoin(F.broadcast(qhat))
-        .crossJoin(F.broadcast(test))
-        .select(
-            "n_cal",
-            F.col("k").alias("conformal_rank"),
-            "qhat_cents",
-            "n_test",
-            "n_covered",
-            F.round(
-                F.col("n_covered").cast("double")
-                / F.col("n_test").cast("double"),
-                6,
-            ).alias("coverage"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -28,12 +28,12 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
 from ..sources import read_table
-from .registry import query
+from .registry import query, sql_query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -44,9 +44,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # MERGE / upsert
 # ---------------------------------------------------------------------------
 
-@query(
+# MERGE a delta into a base snapshot. `base` excludes doc_id % 10 = 7 so a
+# third of the delta rows are inserts; md5 fingerprints keep the hash small.
+sql_query(
     "q_xj_merge_upsert",
-    oracle="""
+    """
     WITH base AS (
       SELECT doc_id, source, text, 1 AS version
       FROM documents WHERE doc_id % 10 <> 7
@@ -63,43 +65,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ORDER BY doc_id
     """,
 )
-def q_xj_merge_upsert(spark, sf_dir):
-    """MERGE (upsert) a delta batch into a base snapshot: matched keys take
-    the delta row (update), unmatched delta keys insert, untouched base rows
-    survive. ``base`` excludes ``doc_id % 10 == 7`` so a third of the delta
-    rows are genuine inserts, not just updates. (SCD/merge taxonomy per
-    Kimball & Ross, "The Data Warehouse Toolkit" — public.)
-
-    Spark-first: MERGE = ``delta ∪ (base ⟕anti broadcast(delta))`` — the
-    one-pass relational decomposition Delta/Iceberg compile to. The delta is
-    explicitly broadcast, so the 100 TB base side is a map-only scan + local
-    anti probe: zero shuffle of lake data, and the union is a no-exchange
-    concatenation. Output fingerprints (md5) rather than full text so the
-    check hashes versions, not megabytes."""
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 10 != 7).select(
-        "doc_id", "source", "text", F.lit(1).alias("version")
-    )
-    delta = docs.filter(F.col("doc_id") % 3 == 0).select(
-        "doc_id",
-        "source",
-        F.concat(F.col("text"), F.lit(" rev2")).alias("text"),
-        F.lit(2).alias("version"),
-    )
-    survivors = base.join(F.broadcast(delta), "doc_id", "left_anti")
-    merged = delta.unionByName(survivors)
-    return merged.select(
-        "doc_id", "source", "version", F.md5(F.col("text")).alias("fp")
-    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
 # SCD type-2 history build
 # ---------------------------------------------------------------------------
 
-@query(
+# SCD type-2 from the event log: event_type is the tracked state, unchanged
+# consecutive rows compact away, each version closes at the next change.
+sql_query(
     "q_xk_scd2_history",
-    oracle="""
+    """
     WITH log AS (
       SELECT user_id, ts, event_type AS state, event_id
       FROM events WHERE user_id IS NOT NULL
@@ -125,43 +101,6 @@ def q_xj_merge_upsert(spark, sf_dir):
     ORDER BY user_id, version
     """,
 )
-def q_xk_scd2_history(spark, sf_dir):
-    """Slowly-changing-dimension type-2 build from a change log: treat each
-    user's event stream as attribute updates (``event_type`` as the tracked
-    state), keep only rows where the state actually CHANGED (consecutive
-    duplicates compact away), then close each version with the next change's
-    timestamp — ``effective_from / effective_to / is_current``.
-
-    Spark-first: one shuffle on ``user_id`` serves the change-detection lag,
-    the version-range lead, and the row_number — Catalyst reuses the same
-    sort+exchange for all three window passes (same partitioning + ordering).
-    Nothing wider than one key's history is co-resident, so the plan holds
-    for any number of keys; a key with a pathological history length is a
-    data-model problem, not a plan problem."""
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    log = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select("user_id", "ts", F.col("event_type").alias("state"), "event_id")
-    )
-    changes = (
-        log.withColumn("prev_state", F.lag("state").over(w))
-        .filter(F.col("prev_state").isNull() | (F.col("state") != F.col("prev_state")))
-        .drop("prev_state")
-    )
-    return (
-        changes.withColumn("version", F.row_number().over(w).cast("bigint"))
-        .withColumn("effective_from", F.col("ts"))
-        .withColumn("effective_to", F.lead("ts").over(w))
-        .withColumn(
-            "is_current", F.col("effective_to").isNull().cast("int")
-        )
-        .select(
-            "user_id", "version", "state",
-            "effective_from", "effective_to", "is_current",
-        )
-        .orderBy("user_id", "version")
-    )
 
 
 # ---------------------------------------------------------------------------

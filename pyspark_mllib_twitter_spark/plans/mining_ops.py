@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..sources import read_table, spread
-from .registry import query
+from .registry import query, sql_query
 
 
 def _docs(spark, sf_dir):
@@ -327,9 +327,11 @@ def q_zb_gaps_islands(spark, sf_dir):
 # CUSUM change-point detection (exact integer domain)
 # ---------------------------------------------------------------------------
 
-@query(
+# CUSUM change point per event type (Page 1954), in the exact integer domain:
+# deviations are scaled by tot_n so the argmax is an integer comparison.
+sql_query(
     "q_zc_cusum",
-    oracle="""
+    """
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
              CAST(count(*) AS BIGINT) AS n,
@@ -363,69 +365,6 @@ def q_zb_gaps_islands(spark, sf_dir):
     FROM pick WHERE rn = 1 ORDER BY event_type
     """,
 )
-def q_zc_cusum(spark, sf_dir):
-    """CUSUM change-point detection per event-type series (Page 1954 —
-    public): cumulative sum of deviations of daily totals from the
-    series' grand mean; the day of maximum |CUSUM| is the estimated
-    change point. The statistic is computed ENTIRELY in the exact integer
-    domain — deviations are scaled by tot_n (cents*tot_n - n*tot_cents)
-    so the running sum, the argmax, and the tie-break are integer
-    comparisons with zero float-ordering ambiguity; the one double
-    appears in the final de-scaled readout. Same discipline as the
-    drawdown entry's DECIMAL running sums.
-
-    Scale shape: day-grain pre-aggregation first (map-side combinable —
-    raw events never enter a window), then per-type windows over ≤
-    series-length rows. Change-point state is bounded by days, not
-    events.
-    """
-    ev = read_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-    )
-    wt = Window.partitionBy("event_type")
-    tot = daily.select(
-        "event_type", "d", "n", "cents",
-        F.sum("n").over(wt).alias("tot_n"),
-        F.sum("cents").over(wt).alias("tot_cents"),
-    )
-    dev = tot.withColumn(
-        "sdev",
-        F.col("cents").cast("decimal(38,0)") * F.col("tot_n")
-        - F.col("n").cast("decimal(38,0)") * F.col("tot_cents"),
-    )
-    wrun = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cus = dev.select(
-        "event_type", "d", "tot_n",
-        F.sum("sdev").over(wrun).alias("cusum_scaled"),
-    )
-    wpick = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("cusum_scaled")).desc(), "d"
-    )
-    pick = cus.select(
-        "event_type", "d", "tot_n", "cusum_scaled",
-        F.row_number().over(wpick).alias("rn"),
-        F.count("*").over(Window.partitionBy("event_type")).alias("n_days"),
-    )
-    return (
-        pick.filter(F.col("rn") == 1)
-        .select(
-            "event_type",
-            F.col("d").alias("change_day"),
-            F.col("n_days").cast("bigint").alias("n_days"),
-            F.round(
-                F.col("cusum_scaled").cast("double") / (100.0 * F.col("tot_n")), 6
-            ).alias("max_abs_cusum"),
-        )
-        .orderBy("event_type")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -746,9 +685,12 @@ _ICF_COS = (
 )
 
 
-@query(
+# Item-item collaborative filtering: top-ITEMCF_TOPK cosine neighbours from
+# binary co-occurrence. Baskets over ITEMCF_MAX_BASKET items are dropped as
+# noise; the cosine is rounded before the rank so both engines rank alike.
+sql_query(
     "q_bf_itemcf",
-    oracle=f"""
+    f"""
     WITH ui AS (
       SELECT DISTINCT o_custkey AS u, l_partkey AS i
       FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -774,72 +716,6 @@ _ICF_COS = (
     ORDER BY item_i, rnk
     """,
 )
-def q_bf_itemcf(spark, sf_dir):
-    """ITEM-ITEM neighborhood collaborative filtering (Sarwar et al. WWW
-    2001; Linden, Smith & York, IEEE IC 2003 — public): top-{ITEMCF_TOPK}
-    most-cosine-similar items per item from binary user-item
-    co-occurrence — the memory-based alternative to the ALS workload
-    (W2): no training, incrementally maintainable, explainable
-    ("bought together"). Co-occurrence and item counts are exact
-    BIGINTs; cosine cooc/√(n_i·n_j) is one shared-text close, rounded
-    BEFORE the rank so both engines rank identical values (ties break on
-    item id).
-
-    Scale shape: the pair fan-out is a PER-USER self-join whose cost is
-    Σ basket² — bounded by dropping baskets > {ITEMCF_MAX_BASKET}
-    (documented CF practice: power users are pure noise and quadratic
-    cost); the support floor prunes before the cosine join; top-k is
-    rank-over-partition (WindowGroupLimit shape). At 100 TB this is the
-    co-occurrence discipline every "customers also bought" pipeline
-    runs.
-    """
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    ui = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .distinct()
-    )
-    ok_users = ui.groupBy("u").agg(F.count("*").alias("b")).filter(
-        F.col("b") <= ITEMCF_MAX_BASKET
-    )
-    uif = ui.join(ok_users.select("u"), "u")
-    item_n = uif.groupBy("i").agg(F.count("*").cast("bigint").alias("n"))
-    pairs = (
-        uif.alias("a")
-        .join(
-            uif.alias("b"),
-            (F.col("a.u") == F.col("b.u")) & (F.col("a.i") != F.col("b.i")),
-        )
-        .groupBy(F.col("a.i").alias("item_i"), F.col("b.i").alias("item_j"))
-        .agg(F.count("*").cast("bigint").alias("cooc"))
-        .filter(F.col("cooc") >= ITEMCF_MIN_COOC)
-    )
-    scored = (
-        pairs.join(
-            item_n.select(F.col("i").alias("item_i"), F.col("n").alias("n_i")),
-            "item_i",
-        )
-        .join(
-            item_n.select(F.col("i").alias("item_j"), F.col("n").alias("n_j")),
-            "item_j",
-        )
-        .selectExpr("item_i", "item_j", "cooc", "n_i", "n_j", f"{_ICF_COS} AS cosine")
-    )
-    w = Window.partitionBy("item_i").orderBy(
-        F.col("cosine").desc(), F.col("item_j")
-    )
-    return (
-        scored.select(
-            "item_i",
-            F.row_number().over(w).cast("bigint").alias("rnk"),
-            "item_j",
-            "cooc",
-            "cosine",
-        )
-        .filter(F.col("rnk") <= ITEMCF_TOPK)
-        .orderBy("item_i", "rnk")
-    )
 
 
 # ---------------------------------------------------------------------------

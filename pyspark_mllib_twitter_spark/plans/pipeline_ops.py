@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TXT
 from ..operators.cdc import CDC_AVG, CDC_MAX, CDC_MIN
 from ..sources import read_table, spread
-from .registry import query
+from .registry import query, sql_query
 
 #: Chunking geometry. Sized to the synthetic fixture (docs <= ~550 chars) so
 #: chunking is non-vacuous — production corpora would use e.g. 2048/1536.
@@ -246,9 +246,12 @@ def _contamination_report(d):
 # Source mixing
 # ---------------------------------------------------------------------------
 
-@query(
+# Deterministic weighted source mixing: a document survives iff a Knuth
+# multiplicative hash of its id lands under its source's rate (20%..100%),
+# so the mixture is reproducible across runs and engines.
+sql_query(
     "q_x4_mix_sources",
-    oracle="""
+    """
     WITH d AS (
       SELECT source,
              (substring(source, 4)::INT % 5) * 20 + 20 AS weight_pct,
@@ -264,34 +267,6 @@ def _contamination_report(d):
     FROM d GROUP BY source ORDER BY source
     """,
 )
-def q_x4_mix_sources(spark, sf_dir):
-    """Deterministic weighted source mixing: each source gets a target
-    sampling rate (here derived from its numeric suffix: 20/40/.../100 %)
-    and a document survives iff a Knuth multiplicative hash of its id lands
-    under the rate.
-
-    Hash-gated sampling (not ``rand()``) so the mixture is reproducible
-    run-to-run and engine-to-engine — the property a training-data pipeline
-    needs for resumable jobs. Map-only over the corpus (the filter is a
-    pure row predicate, no shuffle); the per-source report aggregates a few
-    counters. The same predicate applied as a filter IS the production
-    sampler; this query reports the realized mixture for audit.
-    """
-    sfx = F.substring("source", 4, 8).cast("int")
-    weight = (sfx % 5) * 20 + 20
-    kept = ((F.col("doc_id") * F.lit(2654435761)) % 100 < weight).cast("int")
-    return (
-        _docs(spark, sf_dir)
-        .select("source", weight.alias("weight_pct"), kept.alias("kept"))
-        .groupBy("source")
-        .agg(
-            F.any_value("weight_pct").alias("weight_pct"),
-            F.count("*").cast("bigint").alias("n_total"),
-            F.sum("kept").cast("bigint").alias("n_kept"),
-            (F.sum("kept") / F.count("*")).alias("kept_ratio"),
-        )
-        .orderBy("source")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1814,9 +1789,11 @@ def _canon_sql(col: str) -> str:
     return f"regexp_replace({lowered}, '/$', '')"
 
 
-@query(
+# Canonical-URL dedup over five synthesized variants per page (_RAWURL_SQL),
+# so the canonicalizer itself is checked: each group must reach n_docs = 5.
+sql_query(
     "q_dv_url_canonical",
-    oracle=f"""
+    f"""
     WITH u AS (SELECT doc_id, {_RAWURL_SQL} AS raw_url FROM documents),
     c AS (SELECT doc_id, raw_url, {_canon_sql("raw_url")} AS canonical_url
           FROM u)
@@ -1827,36 +1804,6 @@ def _canon_sql(col: str) -> str:
     FROM c GROUP BY canonical_url ORDER BY canonical_url
     """,
 )
-def q_dv_url_canonical(spark, sf_dir):
-    """Canonical-URL dedup — the crawl-side twin of content dedup: raw
-    URLs differing only by host case, trailing slash, utm_* tracking
-    params, or fragment collapse to one canonical form, and each
-    canonical group keeps its smallest doc_id. The fixture synthesizes
-    five deterministic variants per page (``_RAWURL_SQL``), so the
-    canonicalizer itself — not just the grouping — is value-checked:
-    every group must reach n_docs=5 from 4+ distinct raw spellings.
-    The canonicalization chain is ONE SQL expression (``_canon_sql``)
-    passed verbatim to both engines.
-
-    Scale shape: map-only string rewrites (codegen'd regexps), then a
-    single hash aggregation keyed by the canonical URL — the standard
-    short-string dedup shuffle; text/payload columns would ride a
-    later keeper semi-join, never this exchange."""
-    u = spread(_docs(spark, sf_dir)).selectExpr(
-        "doc_id", f"{_RAWURL_SQL} AS raw_url"
-    )
-    c = u.selectExpr(
-        "doc_id", "raw_url", f"{_canon_sql('raw_url')} AS canonical_url"
-    )
-    return (
-        c.groupBy("canonical_url")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.countDistinct("raw_url").cast("bigint").alias("n_variants"),
-            F.min("doc_id").cast("bigint").alias("keeper_doc_id"),
-        )
-        .orderBy("canonical_url")
-    )
 
 
 #: Padding buckets are powers of two with a floor of MIN_BUCKET tokens —
@@ -1943,9 +1890,11 @@ K_ANON = 5
 BAL_BUCKET = 500.0
 
 
-@query(
+# k-anonymity audit (Sweeney 2002): quasi-identifier classes smaller than
+# K_ANON over (nation, segment, balance bucket).
+sql_query(
     "q_dx_k_anonymity",
-    oracle=f"""
+    f"""
     WITH cls AS (
       SELECT c_nationkey AS nation_key, c_mktsegment AS segment,
              CAST(floor(c_acctbal / {BAL_BUCKET}) AS BIGINT) AS bal_bucket,
@@ -1957,38 +1906,6 @@ BAL_BUCKET = 500.0
     ORDER BY nation_key, segment, bal_bucket
     """,
 )
-def q_dx_k_anonymity(spark, sf_dir):
-    """k-anonymity audit (Sweeney 2002, public): group records by their
-    quasi-identifier combination — here (nation, market segment,
-    account-balance bucket) — and report every equivalence class smaller
-    than k={K_ANON}: those rows are re-identifiable by an adversary who
-    knows the quasi-identifiers. The release gate a privacy-reviewed
-    data export runs before shipping, and the structured counterpart of
-    the regex PII pass (q_du_pii_redact): one finds identifiers IN the
-    text, this finds identifying COMBINATIONS across columns.
-
-    Scale shape: one hash aggregation on the quasi-identifier tuple +
-    a class-size filter — partial aggs collapse map-side, the output is
-    bounded by the quasi-identifier domain (not the row count), and no
-    row data moves. Generalization search (widening buckets until the
-    audit passes) is a driver loop over THIS query at different widths.
-    """
-    c = read_table(spark, sf_dir, "customer")
-    cls = c.groupBy(
-        F.col("c_nationkey").alias("nation_key"),
-        F.col("c_mktsegment").alias("segment"),
-        F.floor(F.col("c_acctbal") / BAL_BUCKET).cast("bigint").alias("bal_bucket"),
-    ).agg(F.count("*").alias("class_size"))
-    return (
-        cls.filter(F.col("class_size") < K_ANON)
-        .select(
-            "nation_key",
-            "segment",
-            "bal_bucket",
-            F.col("class_size").cast("bigint").alias("class_size"),
-        )
-        .orderBy("nation_key", "segment", "bal_bucket")
-    )
 
 
 #: Host synthesis (shared verbatim) + the blocklist. Rules are DOMAIN

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
 from ..sources import read_table
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # Kruskal-Wallis H test (rank ANOVA across the five order-priority arms)
@@ -62,9 +62,11 @@ _KW_C = (
 )
 
 
-@query(
+# Kruskal-Wallis H across the five priority arms. Ranks are carried doubled
+# (always integers); all-tied families close to NULL via nullif.
+sql_query(
     "q_cn_kruskal_wallis",
-    oracle=f"""
+    f"""
     WITH base AS (
       SELECT o_orderpriority AS arm,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -102,78 +104,6 @@ _KW_C = (
     FROM acc ORDER BY arm
     """,
 )
-def q_cn_kruskal_wallis(spark, sf_dir):
-    """KRUSKAL-WALLIS H TEST (Kruskal & Wallis, JASA 1952 — the
-    rank-based one-way ANOVA) across the five order-priority arms on
-    order value: do the arms draw from the same distribution, without
-    q_c4_anova's normality assumption? Average ranks are carried in
-    DOUBLED units (2*cum - t + 1 for a tie group of size t ending at
-    cumulative position cum — always an exact integer), so per-arm
-    rank sums are exact BIGINTs and the only doubles are the
-    shared-text H close and the tie-correction divisor, both
-    accumulated in fixed arm order. Degenerate families (all values
-    tied) close to NULL via nullif, never a divide error.
-
-    Scale shape: raw rows collapse to (arm, cents) cells map-side,
-    then to value cells; the prefix sum runs at value-cell grain
-    (locally one ordered window — at 100 TB the distributed
-    range-repartition + broadcast-offsets recipe from q_yv_auc, which
-    hashes identically because ranks are integer-exact). The H close
-    runs on a 5-row frame. 100 TB = one scan + two cell-grain
-    shuffles + a constant tail.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_orderpriority").alias("arm"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    cell = base.groupBy("arm", "cents").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
-    vcell = cell.groupBy("cents").agg(F.sum("c").cast("bigint").alias("t"))
-    w_val = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
-    vrank = vcell.select(
-        "cents", "t", F.sum("t").over(w_val).alias("cum")
-    )
-    arm_sum = (
-        cell.join(vrank, "cents")
-        .groupBy("arm")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_arm"),
-            F.sum(
-                F.col("c") * (2 * F.col("cum") - F.col("t") + 1)
-            )
-            .cast("bigint")
-            .alias("r2"),
-        )
-    )
-    glob = vcell.agg(
-        F.sum("t").cast("bigint").alias("n"),
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
-        .cast("bigint")
-        .alias("tie_sum"),
-    )
-    w_all = Window.orderBy("arm").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    acc = arm_sum.crossJoin(F.broadcast(glob)).select(
-        "arm",
-        "n_arm",
-        "r2",
-        "n",
-        "tie_sum",
-        F.sum(F.expr(_KW_TERM)).over(w_all).alias("s"),
-    )
-    return acc.select(
-        "arm",
-        "n_arm",
-        F.col("r2").alias("rank_sum_x2"),
-        F.round(F.expr(_KW_H), 6).alias("h_stat"),
-        F.round(F.expr(f"{_KW_H} / nullif({_KW_C}, 0e0)"), 6).alias(
-            "h_tie_corrected"
-        ),
-        F.lit(4).cast("bigint").alias("df"),
-    ).orderBy("arm")
 
 
 # ---------------------------------------------------------------------------
@@ -195,9 +125,11 @@ _W1_TERM = (
 )
 
 
-@query(
+# Exact 1-D Wasserstein-1 distance between two event types' values: integer
+# CDF gaps, transport terms summed in ascending-value window order.
+sql_query(
     "q_co_wasserstein",
-    oracle=f"""
+    f"""
     WITH ev AS (
       SELECT CAST(round(value * 1e6) AS BIGINT) AS v,
              CASE WHEN event_type = '{W1_SAMPLE_A}' THEN 1 ELSE 0 END AS ia,
@@ -234,83 +166,6 @@ _W1_TERM = (
     FROM last
     """,
 )
-def q_co_wasserstein(spark, sf_dir):
-    """EXACT 1-D WASSERSTEIN-1 (earth mover's) DISTANCE between the
-    value distributions of two event types — the drift metric that
-    reports HOW MUCH mass must move (in value units), complementing
-    q_zq's KS sup-gap (a max that ignores magnitude) and q_xu's PSI
-    (binning-dependent). For 1-D distributions W1 = integral of
-    |F_a(x) - F_b(x)| dx, evaluated exactly over the observed support:
-    values quantize to exact integer micro-units, CDF gaps are
-    cross-multiplied integers (|cum_a*nb - cum_b*na|, the q_zq
-    contract), and each segment's transport term is one shared-text
-    double accumulated in ascending-value window order so both engines
-    sum the identical sequence (the q_ck_perm_entropy contract). The
-    one-sided sanity bound W1 >= |mean_a - mean_b| ships in the same
-    row via the exact integer value sums.
-
-    Scale shape: group-by-value-cell first (combinable), one
-    cell-grain prefix window (the q_zq local/distributed swap note
-    applies verbatim), a top-1 tail pick. 100 TB = one scan + one
-    cell-grain shuffle + a 1-row close.
-    """
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin(W1_SAMPLE_A, W1_SAMPLE_B))
-        .select(
-            F.round(F.col("value") * 1e6).cast("bigint").alias("v"),
-            (F.col("event_type") == W1_SAMPLE_A).cast("long").alias("ia"),
-            (F.col("event_type") == W1_SAMPLE_B).cast("long").alias("ib"),
-        )
-    )
-    grp = ev.groupBy("v").agg(
-        F.sum("ia").cast("bigint").alias("ca"),
-        F.sum("ib").cast("bigint").alias("cb"),
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    w_lead = Window.orderBy("v")
-    cum = grp.select(
-        "v",
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-        (F.lead("v").over(w_lead) - F.col("v")).alias("dv"),
-    )
-    tot = grp.agg(
-        F.sum("ca").cast("bigint").alias("na"),
-        F.sum("cb").cast("bigint").alias("nb"),
-        F.sum(F.col("ca") * F.col("v")).cast("bigint").alias("sum_a"),
-        F.sum(F.col("cb") * F.col("v")).cast("bigint").alias("sum_b"),
-    )
-    seg = cum.crossJoin(F.broadcast(tot)).select(
-        F.sum(
-            F.when(F.col("dv").isNotNull(), F.expr(_W1_TERM)).otherwise(
-                F.lit(0.0)
-            )
-        )
-        .over(w)
-        .alias("w1_acc"),
-        "v",
-        "na",
-        "nb",
-        "sum_a",
-        "sum_b",
-    )
-    last = seg.orderBy(F.desc("v")).limit(1)
-    return last.select(
-        "na",
-        "nb",
-        F.round(F.col("w1_acc"), 6).alias("w1_distance"),
-        F.round(
-            F.col("sum_a").cast("double")
-            / (F.lit(1e6) * F.col("na").cast("double")),
-            6,
-        ).alias("mean_a"),
-        F.round(
-            F.col("sum_b").cast("double")
-            / (F.lit(1e6) * F.col("nb").cast("double")),
-            6,
-        ).alias("mean_b"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -580,9 +435,11 @@ _AR2_STATIONARY = (
 )
 
 
-@query(
+# AR(2) fit by the Yule-Walker equations on daily revenue, with the
+# stationarity check; every moment is an exact DECIMAL(38,0).
+sql_query(
     "q_cv_ar2_yule_walker",
-    oracle=f"""
+    f"""
     WITH daily AS (
       SELECT date_trunc('day', o_orderdate) AS day,
              SUM(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
@@ -611,69 +468,6 @@ _AR2_STATIONARY = (
     FROM totals CROSS JOIN l1 CROSS JOIN l2
     """,
 )
-def q_cv_ar2_yule_walker(spark, sf_dir):
-    """AR(2) AUTOREGRESSION FIT via the YULE-WALKER equations (Yule
-    1927 / Walker 1931 — the method-of-moments AR estimator) on daily
-    revenue: phi1 = r1(1-r2)/(1-r1²), phi2 = (r2-r1²)/(1-r1²) from the
-    exact lag-1/lag-2 autocorrelations, plus the innovation-variance
-    share (how much of the series the linear memory does NOT explain)
-    and the stationarity-triangle check — the parametric model the ACF
-    diagnostic (q_zi) feeds; Holt/Brown smoothers (q_cd/q_ab) are its
-    exponential cousins. Every moment (sums, squares, lagged
-    cross-products) is an exact DECIMAL(38,0); the autocovariances,
-    phis and the stationarity booleans are shared-text expressions on
-    those exact sums, so both engines compute identical doubles AND
-    identical comparison outcomes.
-
-    Scale shape: one map-side-combinable daily rollup; everything after
-    runs on the calendar-bounded day series (q_zi document-and-contain
-    argument). The lag joins are day-index equi-joins. 100 TB = one
-    scan + a constant tail.
-    """
-    orders = read_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).alias("day")
-    ).agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100)
-            .cast("bigint")
-            .cast("decimal(38,0)")
-        ).alias("x")
-    )
-    idx = daily.select(
-        F.row_number().over(Window.orderBy("day")).alias("t"), "x"
-    )
-    totals = idx.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-
-    def lag_moments(k: int, suffix: str):
-        a, b = idx.alias("a"), idx.alias("b")
-        return (
-            a.join(F.broadcast(b), F.col("b.t") == F.col("a.t") + k)
-            .agg(
-                F.count("*").cast("bigint").alias(f"nk{suffix}"),
-                F.sum(F.col("a.x") * F.col("b.x")).alias(f"sxy{suffix}"),
-                F.sum(F.col("a.x")).alias(f"sa{suffix}"),
-                F.sum(F.col("b.x")).alias(f"sb{suffix}"),
-            )
-        )
-
-    out = (
-        totals.crossJoin(F.broadcast(lag_moments(1, "1")))
-        .crossJoin(F.broadcast(lag_moments(2, "2")))
-    )
-    return out.selectExpr(
-        "n",
-        f"round({_AR2_R1}, 6) AS r1",
-        f"round({_AR2_R2}, 6) AS r2",
-        f"round({_AR2_PHI1}, 6) AS phi1",
-        f"round({_AR2_PHI2}, 6) AS phi2",
-        f"round({_AR2_NOISE}, 6) AS noise_share",
-        f"{_AR2_STATIONARY} AS stationary",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -753,70 +547,9 @@ def _dft_oracle() -> str:
     """
 
 
-@query("q_cw_dft_seasonality", oracle=_dft_oracle())
-def q_cw_dft_seasonality(spark, sf_dir):
-    """SINGLE-BIN DFT SEASONALITY SCAN (the Goertzel single-frequency
-    evaluation, Goertzel 1958): project the demeaned daily-revenue
-    series onto cos/sin at candidate periods {5, 7, 9} days and report
-    each period's fitted amplitude and variance share — the spectral
-    confirmation that the weekly (7-day) cycle, not an artifact of
-    binning, carries the seasonality q_yx reads off day-of-week means
-    and q_b2's STL assumes. A sharp peak at 7 with flat neighbors (5,
-    9) is the signature; comparable power everywhere means no weekly
-    structure.
-
-    Exactness: the trig tables are repr'd double LITERALS generated at
-    codegen time and embedded in BOTH engine texts (neither engine's
-    libm cos/sin is consulted — the 1-ULP cross-engine hazard is
-    designed out); each day's projection term is shared-text demeaned
-    cents x literal, rounded to an integer so cross-day sums are
-    order-free (q_zv contract); amplitude/variance-share close in
-    shared text. sxx is a double product sum — order-free because each
-    term is an exact integer product below 2^53 cast once.
-
-    Scale shape: one map-side-combinable daily rollup; projections are
-    order-free sums over the calendar-bounded day series (q_zi
-    document-and-contain); 3 periods = one union of 1-row aggregates.
-    100 TB = one scan + a constant tail.
-    """
-    orders = read_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).alias("day")
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("x")
-    )
-    idx = daily.select(
-        F.row_number().over(Window.orderBy("day")).alias("t"), "x"
-    )
-    totals = idx.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum(F.col("x").cast("double") * F.col("x").cast("double")).alias(
-            "sxx"
-        ),
-    )
-    base = idx.crossJoin(F.broadcast(totals))
-    projs = None
-    for p in _DFT_PERIODS:
-        pr = base.agg(
-            F.lit(p).cast("bigint").alias("period"),
-            F.count("*").cast("bigint").alias("n_days"),
-            F.sum(F.expr(_dft_term("cos", p))).cast("bigint").alias("sc"),
-            F.sum(F.expr(_dft_term("sin", p))).cast("bigint").alias("ss"),
-        )
-        projs = pr if projs is None else projs.unionByName(pr)
-    return (
-        projs.crossJoin(F.broadcast(totals))
-        .selectExpr(
-            "period",
-            "n_days",
-            f"round({_DFT_AMP}, 6) AS amplitude_dollars",
-            f"round({_DFT_SHARE}, 6) AS variance_share",
-        )
-        .orderBy("period")
-    )
+# Single-bin DFT (Goertzel 1958) of daily revenue at periods 5, 7 and 9 days.
+# The trig tables are double literals in the text, so no engine libm is used.
+sql_query("q_cw_dft_seasonality", _dft_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1393,9 +1126,8 @@ def q_d2_tdigest(spark, sf_dir):
 # Shifted-beta-geometric (sBG) churn model fit by exact-integer grid MLE
 # ---------------------------------------------------------------------------
 
-#: Cohort year and renewal horizon: orders span 1995..2001-08, so 1995
-#: first-timers get five full renewal opportunities (1996..2000).
-_SBG_Y0 = 1995
+#: Renewal horizon: orders span 1995..2001-08, so 1995 first-timers get
+#: five full renewal opportunities (1996..2000).
 _SBG_T = 5
 
 #: Year -> bit literal map (bounded calendar, shared text, no dialect
@@ -1415,15 +1147,13 @@ _SBG_CHURN_T = (
     " WHEN mask & 32 = 0 THEN 5 ELSE NULL END)"
 )
 
+
 #: Log-spaced 20-point grids emitted as codegen-time double LITERALS
 #: (the q_cw trig-table trick — no engine pow()/exp2 is consulted):
 #: alpha in 2^(-1.5..8), beta in 2^(-1..10.5). The wide log range keeps
 #: the argmax interior even in the near-geometric (homogeneous-churn)
 #: regime where alpha, beta grow together with alpha/(alpha+beta)
 #: pinned at the flat hazard.
-import math as _m
-
-
 def _sbg_grid(idx: str, lo: float, step: float) -> str:
     # CAST AS DOUBLE: DuckDB parses bare decimal literals as DECIMAL,
     # which would survive round() and canonicalize differently.
@@ -1956,9 +1686,11 @@ _MC_CHI2 = (
 )
 
 
-@query(
+# McNemar's paired test on customer activity before/after 1998-01-01;
+# customers with no orders land in b00 through the LEFT join.
+sql_query(
     "q_d6_mcnemar",
-    oracle=f"""
+    f"""
     WITH act AS (
       SELECT c.c_custkey,
              CAST(max(CASE WHEN o.o_orderdate < TIMESTAMP '{_MC_SPLIT}'
@@ -1983,62 +1715,6 @@ _MC_CHI2 = (
     FROM cells
     """,
 )
-def q_d6_mcnemar(spark, sf_dir):
-    """McNEMAR'S PAIRED TEST (McNemar, Psychometrika 1947) on customer
-    activity flips across the 1998-01-01 midpoint: each customer is their
-    own control (active-before vs active-after booleans), and only the
-    DISCORDANT cells b01/b10 carry information — the right test for
-    "did the population's activity state change" where a two-sample
-    z-test (q_yi) would wrongly treat the periods as independent
-    samples. Continuity-corrected chi-square on exact integer cells;
-    customers with no orders at all land in b00 via the LEFT join.
-
-    Scale shape: one customer-keyed LEFT join + per-customer max
-    flags (combinable) + a single 4-cell reduction. 100 TB = one join
-    + a 1-row close.
-    """
-    c = read_table(spark, sf_dir, "customer").select("c_custkey")
-    o = read_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate"
-    )
-    split = F.lit(_MC_SPLIT).cast("timestamp")
-    act = (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.max(
-                F.when(F.col("o_orderdate") < split, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("before_f"),
-            F.max(
-                F.when(F.col("o_orderdate") >= split, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("after_f"),
-        )
-    )
-    cells = act.agg(
-        *[
-            F.sum(
-                F.when(
-                    (F.col("before_f") == bf) & (F.col("after_f") == af), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias(f"b{bf}{af}")
-            for bf in (0, 1)
-            for af in (0, 1)
-        ]
-    )
-    return cells.selectExpr(
-        "b00",
-        "b01",
-        "b10",
-        "b11",
-        f"round({_MC_CHI2}, 6) AS chi2_cc",
-        "CAST(1 AS BIGINT) AS df",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2215,9 +1891,11 @@ _CQ_STAT = (
 _CQ_YEAR_BITS = (2, 4, 8, 16, 32)
 
 
-@query(
+# Cochran's Q across the years 1996..2000, on bit_or activity masks per
+# customer; exact integer arithmetic up to the final division.
+sql_query(
     "q_db_cochran_q",
-    oracle=f"""
+    f"""
     WITH mask_t AS (
       SELECT o_custkey, CAST(bit_or({_SBG_BIT}) AS BIGINT) AS mask
       FROM orders WHERE year(o_orderdate) <= 2000
@@ -2240,55 +1918,6 @@ _CQ_YEAR_BITS = (2, 4, 8, 16, 32)
     FROM per_year
     """,
 )
-def q_db_cochran_q(spark, sf_dir):
-    """COCHRAN'S Q TEST (Cochran, Biometrika 1950 — the k-treatment
-    generalization of McNemar): are customer activity RATES equal
-    across the five years 1996..2000, treating each customer as their
-    own block? The activity panel collapses to the q_d3 bit_or mask
-    (one bigint per customer), row totals come from bit_count, column
-    totals from per-bit flags, and Q = (k-1)(k*sum C_j^2 - T^2) /
-    (k*T - sum R_i^2) is EXACT INTEGER arithmetic end to end — the
-    only double is the final shared-text division. Customers active in
-    all five years (or none) contribute nothing, exactly as the
-    statistic prescribes.
-
-    Scale shape: one combinable bit_or aggregate + one 5-term
-    reduction. 100 TB = one scan + a 1-row close.
-    """
-    o = read_table(spark, sf_dir, "orders").filter(
-        F.year("o_orderdate") <= 2000
-    )
-    mask_t = o.groupBy("o_custkey").agg(
-        F.expr(f"bit_or({_SBG_BIT})").cast("bigint").alias("mask")
-    )
-    rows_ = mask_t.select(
-        (F.col("mask").bitwiseAND(62)).alias("amask"),
-        F.expr("CAST(bit_count(CAST(mask & 62 AS BIGINT)) AS BIGINT)").alias(
-            "r"
-        ),
-    )
-    flag_sq = [
-        F.expr(
-            f"CAST(sum(CASE WHEN amask & {b} > 0 THEN 1 ELSE 0 END)"
-            f" * sum(CASE WHEN amask & {b} > 0 THEN 1 ELSE 0 END)"
-            " AS BIGINT)"
-        )
-        for b in _CQ_YEAR_BITS
-    ]
-    per_year = rows_.agg(
-        sum(flag_sq[1:], flag_sq[0]).alias("sc2"),
-        F.sum("r").cast("bigint").alias("t_tot"),
-        F.sum(F.col("r") * F.col("r")).cast("bigint").alias("sr2"),
-        F.count("*").cast("bigint").alias("b"),
-        F.lit(5).cast("bigint").alias("k"),
-    )
-    return per_year.selectExpr(
-        "b AS n_customers",
-        "k AS n_periods",
-        "t_tot",
-        f"round({_CQ_STAT}, 6) AS q_stat",
-        "CAST(k - 1 AS BIGINT) AS df",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2442,9 +2071,11 @@ _RB_CORR = (
 )
 
 
-@query(
+# Rolling 90-day beta and correlation of one segment's daily revenue on
+# another's, sampled every 30 days, from exact integer window sums.
+sql_query(
     "q_de_rolling_beta",
-    oracle=f"""
+    f"""
     WITH daily AS (
       SELECT date_trunc('day', o.o_orderdate) AS day,
              CAST(SUM(CASE WHEN c.c_mktsegment = '{_RB_SEG_X}'
@@ -2476,70 +2107,6 @@ _RB_CORR = (
     ORDER BY day
     """,
 )
-def q_de_rolling_beta(spark, sf_dir):
-    """ROLLING 90-DAY REGRESSION BETA of one segment's daily revenue on
-    another's (sampled every 30 days) — the time-varying-relationship
-    monitor behind pairs dashboards: a one-shot correlation (q_ac)
-    answers "are they related", the rolling beta answers "is the
-    relationship DRIFTING" (regime shifts show as beta excursions;
-    q_cm's HMM would segment them). All six rolling moments are exact
-    integer window sums over dollar-unit daily revenue (the q_cy int64
-    headroom argument); beta and corr close in shared text per day.
-
-    Scale shape: one fact join-aggregate to the dense day axis; the
-    rolling windows run at day grain (q_zi document-and-contain); the
-    30-day sampling keeps the emitted curve compact. 100 TB = one
-    scan + one join + a calendar-bounded tail.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    c = read_table(spark, sf_dir, "customer")
-    daily = (
-        o.join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .filter(F.col("c_mktsegment").isin(_RB_SEG_X, _RB_SEG_Y))
-        .groupBy(F.date_trunc("day", "o_orderdate").alias("day"))
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("c_mktsegment") == _RB_SEG_X,
-                    F.round("o_totalprice").cast("bigint"),
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("x"),
-            F.sum(
-                F.when(
-                    F.col("c_mktsegment") == _RB_SEG_Y,
-                    F.round("o_totalprice").cast("bigint"),
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("y"),
-        )
-    )
-    idx = daily.select(
-        F.row_number().over(Window.orderBy("day")).alias("t"), "day", "x", "y"
-    )
-    w = Window.orderBy("t").rowsBetween(-(_RB_WIN - 1), 0)
-    win = idx.select(
-        "t",
-        "day",
-        F.count("*").over(w).cast("bigint").alias("nw"),
-        F.sum("x").over(w).cast("bigint").alias("sx"),
-        F.sum("y").over(w).cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).over(w).cast("bigint").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).over(w).cast("bigint").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).over(w).cast("bigint").alias("syy"),
-    )
-    return (
-        win.filter((F.col("nw") == _RB_WIN) & (F.col("t") % 30 == 0))
-        .selectExpr(
-            "CAST(day AS DATE) AS day",
-            "nw",
-            f"round({_RB_BETA}, 6) AS beta",
-            f"round({_RB_CORR}, 6) AS corr",
-        )
-        .orderBy("day")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2560,9 +2127,11 @@ _MOB_M = (
 )
 
 
-@query(
+# Spend-quintile mobility 1996 -> 1999 and the Shorrocks index; quintiles
+# from ntile over a total order, diagonal terms quantized before the trace.
+sql_query(
     "q_df_mobility",
-    oracle=f"""
+    f"""
     WITH spend AS (
       SELECT o_custkey, year(o_orderdate) AS yr,
              CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -2601,82 +2170,6 @@ _MOB_M = (
     ORDER BY c.q_from, c.q_to
     """,
 )
-def q_df_mobility(spark, sf_dir):
-    """SPEND-QUINTILE MOBILITY MATRIX (1996 -> 1999) + SHORROCKS
-    MOBILITY INDEX (Shorrocks, Economica 1978): among customers active
-    in both years, where does each 1996 spend quintile land in 1999?
-    M = (k - trace(P)) / (k - 1) summarizes it — 0 = frozen ranks
-    (perfect persistence), 1 = complete reshuffling; the longitudinal
-    companion of the Gini/Lorenz static-inequality pair (q_yj/q_z7).
-    Quintiles come from ntile over a TOTAL order (exact, deterministic
-    on both engines — the q_dc contract); cell counts and row margins
-    are exact integers; each diagonal p_jj nano-quantizes before the
-    trace sum (q_zv contract) so M closes on exact integers.
-
-    Scale shape: one year-filtered rollup, customer-grain rank
-    transforms, a 25-cell tail. 100 TB = one scan + one customer-grain
-    shuffle + a constant close.
-    """
-    o = read_table(spark, sf_dir, "orders").filter(
-        F.year("o_orderdate").isin(_MOB_Y_FROM, _MOB_Y_TO)
-    )
-    spend = o.groupBy(
-        "o_custkey", F.year("o_orderdate").alias("yr")
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    both_y = (
-        spend.groupBy("o_custkey")
-        .agg(
-            F.min(
-                F.when(F.col("yr") == _MOB_Y_FROM, F.col("cents"))
-            ).alias("c_from"),
-            F.min(F.when(F.col("yr") == _MOB_Y_TO, F.col("cents"))).alias(
-                "c_to"
-            ),
-        )
-        .filter(
-            F.col("c_from").isNotNull() & F.col("c_to").isNotNull()
-        )
-    )
-    quints = both_y.select(
-        F.ntile(5)
-        .over(Window.orderBy("c_from", "o_custkey"))
-        .cast("bigint")
-        .alias("q_from"),
-        F.ntile(5)
-        .over(Window.orderBy("c_to", "o_custkey"))
-        .cast("bigint")
-        .alias("q_to"),
-    )
-    cells = quints.groupBy("q_from", "q_to").agg(
-        F.count("*").cast("bigint").alias("n")
-    )
-    rows_ = cells.groupBy("q_from").agg(
-        F.sum("n").cast("bigint").alias("row_n")
-    )
-    diag = (
-        cells.filter(F.col("q_from") == F.col("q_to"))
-        .join(rows_, "q_from")
-        .select(F.col("n").alias("n_jj"), "row_n")
-    )
-    tr = diag.agg(F.sum(F.expr(_MOB_PJJ)).cast("bigint").alias("tr_q"))
-    return (
-        cells.join(rows_, "q_from")
-        .crossJoin(F.broadcast(tr))
-        .select(
-            "q_from",
-            "q_to",
-            "n",
-            F.round(
-                F.col("n").cast("double") / F.col("row_n").cast("double"), 6
-            ).alias("p"),
-            F.round(F.expr(_MOB_M), 6).alias("shorrocks_m"),
-        )
-        .orderBy("q_from", "q_to")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2700,9 +2193,11 @@ _PI_P = "(CAST(pnum AS DOUBLE) / CAST(pden AS DOUBLE))"
 _PI_F = f"sqrt({_PI_L} * {_PI_P})"
 
 
-@query(
+# Laspeyres, Paasche and Fisher price indices by ship year against the 1995
+# basket; p*q cross terms are micro-quantized before the basket sums.
+sql_query(
     "q_dg_price_index",
-    oracle=f"""
+    f"""
     WITH py AS (
       SELECT l_partkey, year(l_shipdate) AS yr,
              CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
@@ -2731,69 +2226,6 @@ _PI_F = f"sqrt({_PI_L} * {_PI_P})"
     FROM sums ORDER BY yr
     """,
 )
-def q_dg_price_index(spark, sf_dir):
-    """LASPEYRES / PAASCHE / FISHER PRICE INDICES by ship year against
-    the 1995 base basket (Fisher 1922 — the "ideal index"; what CPI
-    methodology debates are about): Laspeyres holds base-year
-    quantities (sum p_t q_0 / sum p_0 q_0), Paasche holds current-year
-    quantities, Fisher is their geometric mean — bounding substitution
-    bias from both sides. Unit prices are per-part rationals
-    (rev/qty from exact integer sums); every p*q cross-term
-    micro-quantizes before the basket sum (q_zv contract), and the
-    exact identities sum(p_0 q_0) = rev_0, sum(p_t q_t) = rev_t skip
-    quantization entirely where the rational cancels.
-
-    Scale shape: one map-side-combinable (part, year) rollup, a
-    part-keyed join against the base basket, a years-sized close.
-    100 TB = one scan + one part-grain join.
-    """
-    li = read_table(spark, sf_dir, "lineitem").filter(
-        F.year("l_shipdate") <= 2000
-    )
-    py = (
-        li.groupBy(
-            "l_partkey", F.year("l_shipdate").alias("yr")
-        )
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("rev"),
-            F.sum(F.round("l_quantity").cast("bigint"))
-            .cast("bigint")
-            .alias("qty"),
-        )
-        .filter(F.col("qty") > 0)
-    )
-    base = py.filter(F.col("yr") == 1995).select(
-        "l_partkey",
-        F.col("rev").alias("rev_0"),
-        F.col("qty").alias("qty_0"),
-    )
-    matched = (
-        py.filter(F.col("yr") > 1995)
-        .join(base, "l_partkey")
-        .select(
-            "yr",
-            F.col("rev").alias("rev_t"),
-            F.col("qty").alias("qty_t"),
-            "rev_0",
-            "qty_0",
-        )
-    )
-    sums = matched.groupBy("yr").agg(
-        F.count("*").cast("bigint").alias("n_parts"),
-        F.sum(F.expr(_PI_LNUM)).cast("bigint").alias("lnum"),
-        F.sum(F.col("rev_0") * 1000).cast("bigint").alias("lden"),
-        F.sum(F.col("rev_t") * 1000).cast("bigint").alias("pnum"),
-        F.sum(F.expr(_PI_PDEN)).cast("bigint").alias("pden"),
-    )
-    return sums.selectExpr(
-        "yr",
-        "n_parts",
-        f"round({_PI_L}, 6) AS laspeyres",
-        f"round({_PI_P}, 6) AS paasche",
-        f"round({_PI_F}, 6) AS fisher",
-    ).orderBy("yr")
 
 
 # ---------------------------------------------------------------------------
@@ -2812,9 +2244,11 @@ _A3_LIFT = (
 )
 
 
-@query(
+# Apriori 3-itemsets (Agrawal & Srikant 1994) in >= 2 orders, with ab -> c
+# confidence and lift.
+sql_query(
     "q_dh_apriori_triples",
-    oracle=f"""
+    f"""
     WITH li AS (
       SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     n_ord_t AS (
@@ -2849,93 +2283,6 @@ _A3_LIFT = (
     ORDER BY t.sup DESC, t.p1, t.p2, t.p3
     """,
 )
-def q_dh_apriori_triples(spark, sf_dir):
-    """APRIORI 3-ITEMSETS (Agrawal & Srikant, VLDB 1994) over order
-    baskets with confidence and lift — one level deeper than the
-    pairwise rules (q_yh) and the reference twin of what FPGrowth
-    (q_ml_fpgrowth, rows-only) mines: triples co-purchased in >= 2
-    orders, the ab -> c rule confidence from the embedded pair
-    support, and lift against full independence. All supports are
-    exact integers from combinable counts; the two closes share text.
-
-    Scale shape: the triple fan-out is ORDER-BOUNDED (C(m,3) per
-    basket with m = items per order, bounded — the q_a2/q_cz pair-
-    grain argument cubed but still constant per order); candidate
-    pruning is the HAVING on the grouped supports — map-side partial
-    aggregation collapses the fan-out before the shuffle. 100 TB =
-    one scan + two basket-bounded shuffles.
-    """
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    n_ord = li.agg(
-        F.countDistinct("l_orderkey").cast("bigint").alias("n_ord")
-    )
-    freq = li.groupBy("l_partkey").agg(
-        F.count("*").cast("bigint").alias("f")
-    )
-    a, b, c = li.alias("a"), li.alias("b"), li.alias("c")
-    tri = (
-        a.join(
-            b,
-            (F.col("b.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("b.l_partkey") > F.col("a.l_partkey")),
-        )
-        .join(
-            c,
-            (F.col("c.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("c.l_partkey") > F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("p1"),
-            F.col("b.l_partkey").alias("p2"),
-            F.col("c.l_partkey").alias("p3"),
-        )
-        .agg(F.count("*").cast("bigint").alias("sup"))
-        .filter(F.col("sup") >= _A3_MINSUP)
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("b.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("b.l_partkey") > F.col("a.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("p1"),
-            F.col("b.l_partkey").alias("p2"),
-        )
-        .agg(F.count("*").cast("bigint").alias("sup_ab"))
-    )
-    return (
-        tri.join(pairs, ["p1", "p2"])
-        .join(
-            F.broadcast(freq.select(F.col("l_partkey").alias("p1"),
-                                    F.col("f").alias("f1"))),
-            "p1",
-        )
-        .join(
-            F.broadcast(freq.select(F.col("l_partkey").alias("p2"),
-                                    F.col("f").alias("f2"))),
-            "p2",
-        )
-        .join(
-            F.broadcast(freq.select(F.col("l_partkey").alias("p3"),
-                                    F.col("f").alias("f3"))),
-            "p3",
-        )
-        .crossJoin(F.broadcast(n_ord))
-        .selectExpr(
-            "p1",
-            "p2",
-            "p3",
-            "sup",
-            f"round({_A3_CONF}, 6) AS conf_ab_c",
-            f"round({_A3_LIFT}, 6) AS lift",
-        )
-        .orderBy(F.desc("sup"), "p1", "p2", "p3")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3224,9 +2571,11 @@ def _gu_rl(t: int) -> str:
     return f"({_GU_LOC} - {_GU_SCALE} * ln(-ln(1e0 - 1e0/{t}e0)))"
 
 
-@query(
+# Gumbel block-maxima fit on monthly peaks of daily revenue, with 12- and
+# 120-month return levels; the constants are double literals in the text.
+sql_query(
     "q_dm_gumbel",
-    oracle=f"""
+    f"""
     WITH daily AS (
       SELECT date_trunc('day', o_orderdate) AS day,
              CAST(SUM(CAST(round(o_totalprice) AS BIGINT)) AS BIGINT) AS x
@@ -3247,46 +2596,6 @@ def _gu_rl(t: int) -> str:
     FROM mom
     """,
 )
-def q_dm_gumbel(spark, sf_dir):
-    """GUMBEL BLOCK-MAXIMA FIT (Gumbel 1958; the Fisher-Tippett type-I
-    limit for light-tailed maxima) on monthly peaks of daily revenue,
-    by method of moments: scale = sqrt(6)/pi * sd, loc = mean - gamma *
-    scale (constants are codegen double literals — no engine libm
-    constant), then the 12- and 120-month RETURN LEVELS — "the daily
-    peak a year / a decade of months will exceed once" — capacity
-    planning's question, complementing the Hill estimator (q_c3:
-    heavy-tail index from upper order statistics) with the block-maxima
-    view. Block maxima and both moment sums are exact integers (dollar
-    units, q_cy headroom); every double closes in shared text.
-
-    Scale shape: one daily rollup + one month-grain max + a 1-row
-    close. 100 TB = one scan + a calendar-bounded tail.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).alias("day")
-    ).agg(
-        F.sum(F.round("o_totalprice").cast("bigint"))
-        .cast("bigint")
-        .alias("x")
-    )
-    blocks = daily.groupBy(
-        F.date_trunc("month", "day").alias("mon")
-    ).agg(F.max("x").cast("bigint").alias("mx"))
-    mom = blocks.agg(
-        F.count("*").cast("bigint").alias("nb"),
-        F.sum("mx").cast("bigint").alias("s1"),
-        F.sum(F.col("mx").cast("double") * F.col("mx").cast("double")).alias(
-            "s2"
-        ),
-    )
-    return mom.selectExpr(
-        "nb AS n_blocks",
-        f"round({_GU_LOC}, 6) AS gumbel_loc",
-        f"round({_GU_SCALE}, 6) AS gumbel_scale",
-        f"round({_gu_rl(12)}, 6) AS return_level_12mo",
-        f"round({_gu_rl(120)}, 6) AS return_level_120mo",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3299,9 +2608,11 @@ _DY_RECIP = (
 )
 
 
-@query(
+# Dyad census and reciprocity (Holland & Leinhardt 1970) of the directed
+# nation trade graph.
+sql_query(
     "q_dn_dyad_census",
-    oracle=f"""
+    f"""
     WITH dir AS (
       SELECT DISTINCT sp.s_nationkey AS i, cu.c_nationkey AS j
       FROM lineitem l
@@ -3328,62 +2639,3 @@ _DY_RECIP = (
     FROM census c CROSS JOIN nn n
     """,
 )
-def q_dn_dyad_census(spark, sf_dir):
-    """DYAD CENSUS + RECIPROCITY (Holland & Leinhardt 1970's MAN census,
-    the undirected-pair classification; Wasserman & Faust ch. 13) of
-    the directed nation trade graph: every unordered nation pair is
-    mutual (trade flows both ways), asymmetric (one way), or null —
-    and reciprocity = fraction of directed edges that are returned,
-    the first-order test of whether trade relationships are bilateral.
-    The assortativity (q_zk) and modularity (q_b4) entries read
-    structure from the same graph; this reads its SYMMETRY. Exact
-    integer census; one shared-text close.
-
-    Scale shape: the q_b4 fact join pipeline collapses to DISTINCT
-    directed nation pairs (<= 600 rows) map-side; the census is a
-    constant reduction. 100 TB = one scan + a constant tail.
-    """
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    sp = read_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    cu = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    na = read_table(spark, sf_dir, "nation")
-    dir_ = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(sp), li["l_suppkey"] == sp["s_suppkey"])
-        .join(cu, o["o_custkey"] == cu["c_custkey"])
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(
-            F.col("s_nationkey").alias("i"),
-            F.col("c_nationkey").alias("j"),
-        )
-        .distinct()
-    )
-    und = dir_.groupBy(
-        F.least("i", "j").alias("a"), F.greatest("i", "j").alias("b")
-    ).agg(F.count("*").cast("bigint").alias("directions"))
-    nn = na.agg(F.count("*").cast("bigint").alias("n_nations"))
-    census = und.agg(
-        F.sum(F.when(F.col("directions") == 2, 1).otherwise(0))
-        .cast("bigint")
-        .alias("mutual"),
-        F.sum(F.when(F.col("directions") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("asym"),
-    )
-    return (
-        census.crossJoin(F.broadcast(nn))
-        .selectExpr(
-            "mutual",
-            "asym",
-            "CAST(n_nations * (n_nations - 1) / 2 - mutual - asym"
-            " AS BIGINT) AS null_dyads",
-            f"round({_DY_RECIP}, 6) AS reciprocity",
-        )
-    )

@@ -1,29 +1,30 @@
 """Query registry: every engine capability is declared here as a named query.
 
-Each entry pairs a Spark DataFrame recipe ``(spark, sf_dir) -> DataFrame``
-with (where SQL-expressible) an equivalent ANSI-SQL string the DuckDB oracle
-runs on the same parquet tables. The driver compares row count + schema +
-order-insensitive value hash — so every computed column is aliased to the
-SAME name on both sides, floats are left for the driver to round (6dp), and
-every query has a total ORDER BY for determinism.
+An entry is registered one of two ways:
+
+- ``sql_query(name, sql)``: one SQL text serves both engines. The Spark
+  recipe is ``sources.run_sql``, which registers the fixture tables the text
+  names as temp views and runs it through ``spark.sql``; the DuckDB oracle
+  runs the same text. Use it whenever the SQL is the whole recipe.
+- ``@query(name, oracle=...)`` on a recipe ``(spark, sf_dir) -> DataFrame``:
+  for entries whose Spark side claims more than the SQL (a physical plan
+  shape, a Python data source, a stream, a UDF, an iterative operator).
+  ``oracle`` is the DuckDB SQL, or None for a rows-only check.
+
+The driver compares row count + schema + order-insensitive value hash, so
+every computed column is aliased to the SAME name on both sides, floats are
+left for the driver to round (6dp), and every query has a total ORDER BY.
 
 Naming: registrations use stable descriptive *base* names (``q_j_asof``,
 ``q_stream_window_counts`` …). External checkers process the registry
-alphabetically under a bounded budget (first 50 sorted names), so each round
+alphabetically under a bounded budget (first 50 sorted names), so
 ``CHECK_WINDOW`` pins the 50 entries that most need a fresh external
 correctness row: the registered public name becomes ``q_{idx:03d}_{base}``
 for window members (digits sort before letters, so exactly the window lands
 in the checked slots) while everything else keeps its base name. Rotating
-the window between rounds is a one-list edit here — no registration or test
-changes. Lookup by base name always resolves regardless of current window.
-
-Round-13 window — stalest-evidence rotation continues (``python
-tools/ledger.py --window``): the 45 entries whose last driver row is
-oldest — the r4-r5 curation/lakehouse/graph block (q_xc…q_xs), the
-r5 chunk-dedup + portable-MinHash family, the r5/r6 analytics batch
-(q_y1…q_y8), the r5 streaming joins/sinks, and the two TPC-H
-stragglers last checked r5 (q_sql_q10/q_sql_q18) — plus this round's
-<= 5 additions in the window's last slots, checked same-round.
+the window is a one-list edit here (``python tools/ledger.py --window``
+proposes one) — no registration or test changes. Lookup by base name always
+resolves regardless of the current window.
 """
 
 from __future__ import annotations
@@ -31,8 +32,11 @@ from __future__ import annotations
 import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.io import run_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -162,3 +166,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[SparkQuery], SparkQ
         return fn
 
     return wrap
+
+
+def sql_query(name: str, sql: str) -> None:
+    """Register ``sql`` under base name ``name`` as both the Spark recipe
+    (``run_sql`` over the fixture tables it names) and the DuckDB oracle."""
+    query(name, sql)(partial(run_sql, sql=sql))

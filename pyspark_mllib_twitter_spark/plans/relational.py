@@ -1,8 +1,9 @@
 """Relational operator surface — SURVEY.md §2.12 declared queries.
 
 Each query re-expresses one inventory row from the reference
-(``/root/reference/COMP5349_2.py``) or a ∅-ref built-in the target surface
-requires, as an idiomatic DataFrame plan. Scale notes are inline: what
+(``COMP5349_2.py``) or a ∅-ref built-in the target surface requires. Where
+the SQL is the whole recipe, one text serves Spark and the DuckDB oracle
+(``sql_query``); the rest are DataFrame plans with scale notes inline: what
 Catalyst pushes down, which joins broadcast, where shuffles land.
 
 Column-name discipline: every computed column is aliased identically in the
@@ -16,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..sources import read_table
-from .registry import query
+from .registry import query, sql_query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -114,23 +115,14 @@ def q_s4_pysink_roundtrip(spark, sf_dir):
     return spark.read.format("docstore").load(store).orderBy("doc_id")
 
 
-@query(
+sql_query(
     "q_p1_filter",
-    oracle="""
+    """
     SELECT l_orderkey, l_linenumber FROM lineitem
     WHERE l_shipdate IS NOT NULL AND l_discount > 0.05
     ORDER BY l_orderkey, l_linenumber
     """,
 )
-def q_p1_filter(spark, sf_dir):
-    """P1/P2: null-test + predicate filter (COMP5349_2.py:146,196). Both
-    predicates reach the parquet scan as PushedFilters."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate").isNotNull() & (F.col("l_discount") > 0.05))
-        .select("l_orderkey", "l_linenumber")
-        .orderBy("l_orderkey", "l_linenumber")
-    )
 
 
 @query(
@@ -178,9 +170,9 @@ def q_j_inner(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "q_j_outer",
-    oracle="""
+    """
     SELECT c_custkey,
            COUNT(o_orderkey) AS n_orders,
            CAST(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS total_price
@@ -188,86 +180,42 @@ def q_j_inner(spark, sf_dir):
     GROUP BY c_custkey ORDER BY c_custkey
     """,
 )
-def q_j_outer(spark, sf_dir):
-    """∅-ref: left outer join + aggregate over the nullable side."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            # decimal sum: order-independent (float-sum hash hazard at scale)
-            F.coalesce(F.sum(F.col("o_totalprice").cast("decimal(38,6)")), F.lit(0))
-            .cast("double")
-            .alias("total_price"),
-        )
-        .orderBy("c_custkey")
-    )
 
 
-@query(
+sql_query(
     "q_j_semi",
-    oracle="""
+    """
     SELECT c_custkey FROM customer
     WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     ORDER BY c_custkey
     """,
 )
-def q_j_semi(spark, sf_dir):
-    """∅-ref: left-semi join (EXISTS)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .select("c_custkey")
-        .orderBy("c_custkey")
-    )
 
 
-@query(
+# Left anti join (NOT EXISTS). The subquery keeps only big-ticket orders:
+# every customer has an order on this data, so a bare anti join returns
+# 0 rows and a match would prove nothing.
+sql_query(
     "q_j_anti",
-    oracle="""
+    """
     SELECT c_custkey FROM customer
     WHERE NOT EXISTS (SELECT 1 FROM orders
                       WHERE o_custkey = c_custkey AND o_totalprice > 300000)
     ORDER BY c_custkey
     """,
 )
-def q_j_anti(spark, sf_dir):
-    """∅-ref: left-anti join (NOT EXISTS). The subquery is restricted to
-    big-ticket orders so the anti side is non-empty at every sf (a bare
-    customers-without-orders anti-join returns 0 rows on this data — a
-    vacuous hash-match that proves nothing)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .select("c_custkey")
-        .orderBy("c_custkey")
-    )
 
 
-@query(
+# Theta join: the reference's all-pairs loop over a broadcast dict.
+sql_query(
     "q_j_theta",
-    oracle="""
+    """
     SELECT r_regionkey, n_nationkey, r_name, n_name
     FROM region, nation
     WHERE r_regionkey <> n_regionkey
     ORDER BY r_regionkey, n_nationkey
     """,
 )
-def q_j_theta(spark, sf_dir):
-    """J1: theta/cross join — the reference's all-pairs Python loop over a
-    broadcast dict (COMP5349_2.py:29-47) as a BroadcastNestedLoopJoin."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        r.crossJoin(F.broadcast(n))
-        .filter(F.col("r_regionkey") != F.col("n_regionkey"))
-        .select("r_regionkey", "n_nationkey", "r_name", "n_name")
-        .orderBy("r_regionkey", "n_nationkey")
-    )
 
 
 @query(
@@ -407,32 +355,20 @@ def q_a1_collect_list(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "q_a2_pair_count",
-    oracle="""
+    """
     SELECT l_orderkey, l_partkey, COUNT(*) AS y
     FROM lineitem GROUP BY l_orderkey, l_partkey
     ORDER BY l_orderkey, l_partkey
     """,
 )
-def q_a2_pair_count(spark, sf_dir):
-    """A2: pair-frequency implicit rating (COMP5349_2.py:197) — partial+final
-    HashAggregate, map-side combine halves the shuffle."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey", "l_partkey")
-        .agg(F.count("*").alias("y"))
-        .orderBy("l_orderkey", "l_partkey")
-    )
 
 
-@query(
+sql_query(
     "q_a3_distinct",
-    oracle="SELECT DISTINCT c_nationkey FROM customer ORDER BY c_nationkey",
+    "SELECT DISTINCT c_nationkey FROM customer ORDER BY c_nationkey",
 )
-def q_a3_distinct(spark, sf_dir):
-    """A3: distinct (COMP5349_2.py:207)."""
-    return _t(spark, sf_dir, "customer").select("c_nationkey").distinct().orderBy("c_nationkey")
 
 
 @query(
@@ -535,83 +471,37 @@ def q_a5_id_dictionary(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "q_g1_rollup",
-    oracle="""
+    """
     SELECT COALESCE(n_regionkey, -1) AS rk, COALESCE(n_nationkey, -1) AS nk,
            COUNT(*) AS n
     FROM nation GROUP BY ROLLUP (n_regionkey, n_nationkey)
     ORDER BY rk, nk
     """,
 )
-def q_g1_rollup(spark, sf_dir):
-    """∅-ref: ROLLUP grouping sets; NULL group markers normalized to -1."""
-    return (
-        _t(spark, sf_dir, "nation")
-        .rollup("n_regionkey", "n_nationkey")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.coalesce(F.col("n_regionkey"), F.lit(-1)).alias("rk"),
-            F.coalesce(F.col("n_nationkey"), F.lit(-1)).alias("nk"),
-            "n",
-        )
-        .orderBy("rk", "nk")
-    )
 
 
-@query(
+sql_query(
     "q_g2_cube",
-    oracle="""
+    """
     SELECT COALESCE(c_mktsegment, '(all)') AS seg, COALESCE(c_nationkey, -1) AS nk,
            COUNT(*) AS n, CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS bal
     FROM customer GROUP BY CUBE (c_mktsegment, c_nationkey)
     ORDER BY seg, nk
     """,
 )
-def q_g2_cube(spark, sf_dir):
-    """∅-ref: CUBE over two dimensions."""
-    return (
-        _t(spark, sf_dir, "customer")
-        .cube("c_mktsegment", "c_nationkey")
-        .agg(
-            F.count("*").alias("n"),
-            # decimal sum: order-independent (float-sum hash hazard at scale)
-            F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast("double").alias("bal"),
-        )
-        .select(
-            F.coalesce(F.col("c_mktsegment"), F.lit("(all)")).alias("seg"),
-            F.coalesce(F.col("c_nationkey"), F.lit(-1)).alias("nk"),
-            "n",
-            "bal",
-        )
-        .orderBy("seg", "nk")
-    )
 
 
-@query(
+sql_query(
     "q_g3_pivot",
-    oracle="""
+    """
     SELECT l_returnflag,
            SUM(l_quantity) FILTER (WHERE l_linestatus = 'O') AS qty_O,
            SUM(l_quantity) FILTER (WHERE l_linestatus = 'F') AS qty_F
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
 )
-def q_g3_pivot(spark, sf_dir):
-    """∅-ref: pivot with explicit value list (one shuffle; values list keeps
-    Catalyst from an extra distinct pass)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.sum("l_quantity"))
-        .select(
-            "l_returnflag",
-            F.col("O").alias("qty_O"),
-            F.col("F").alias("qty_F"),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -647,9 +537,9 @@ def q_w1_topk(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "q_w2_ranking",
-    oracle="""
+    """
     SELECT o_custkey, o_orderkey,
            CAST(RANK()       OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) AS BIGINT) AS rnk,
            CAST(DENSE_RANK() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) AS BIGINT) AS drnk,
@@ -658,27 +548,11 @@ def q_w1_topk(spark, sf_dir):
     FROM orders ORDER BY o_custkey, o_orderkey
     """,
 )
-def q_w2_ranking(spark, sf_dir):
-    """∅-ref: rank/dense_rank/lag/lead analytic functions."""
-    by_price = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc())
-    by_time = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        _t(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.rank().over(by_price).cast("bigint").alias("rnk"),
-            F.dense_rank().over(by_price).cast("bigint").alias("drnk"),
-            F.lag("o_totalprice").over(by_time).alias("prev_price"),
-            F.lead("o_totalprice").over(by_time).alias("next_price"),
-        )
-        .orderBy("o_custkey", "o_orderkey")
-    )
 
 
-@query(
+sql_query(
     "q_w3_frames",
-    oracle="""
+    """
     SELECT user_id, event_id,
            SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
                             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mv_sum,
@@ -687,19 +561,6 @@ def q_w2_ranking(spark, sf_dir):
     FROM events ORDER BY user_id, event_id
     """,
 )
-def q_w3_frames(spark, sf_dir):
-    """∅-ref: ROWS-frame moving and running aggregates."""
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        _t(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            "event_id",
-            F.sum("value").over(w.rowsBetween(-2, 0)).alias("mv_sum"),
-            F.sum("value").over(w.rowsBetween(W.unboundedPreceding, 0)).alias("running"),
-        )
-        .orderBy("user_id", "event_id")
-    )
 
 
 @query(
@@ -786,18 +647,7 @@ _Q3_SQL = """
 """
 
 
-@query("q_sql_q3", oracle=_Q3_SQL)
-def q_sql_q3(spark, sf_dir):
-    """∅-ref: the SQL front-end — TPC-H Q3 shape run via ``spark.sql`` over
-    registered views, same text as the DuckDB oracle. Catalyst gets the
-    whole plan declaratively: both filters push to the scans, customer
-    (segment-filtered) broadcasts, AQE picks the orders⋈lineitem strategy;
-    the LIMIT is TakeOrderedAndProject (per-partition top-N + single merge,
-    no global sort)."""
-    from ..sources import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_Q3_SQL)
+sql_query("q_sql_q3", _Q3_SQL)
 
 
 @query(
@@ -920,27 +770,18 @@ def q_w5_sessionize(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "q_t1_sort_limit",
-    oracle="""
+    """
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
 )
-def q_t1_sort_limit(spark, sf_dir):
-    """∅-ref: global sort + limit (TakeOrderedAndProject — per-partition
-    top-N then a single merge, never a full global sort)."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
 
 
-@query(
+sql_query(
     "q_u1_setops",
-    oracle="""
+    """
     SELECT 'all' AS tag, k FROM
       (SELECT c_custkey AS k FROM customer UNION SELECT o_custkey FROM orders)
     UNION ALL
@@ -952,16 +793,6 @@ def q_t1_sort_limit(spark, sf_dir):
     ORDER BY tag, k
     """,
 )
-def q_u1_setops(spark, sf_dir):
-    """∅-ref: UNION / INTERSECT / EXCEPT (distinct set semantics)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
-    tagged = (
-        c.union(o).distinct().select(F.lit("all").alias("tag"), "k")
-        .unionAll(c.intersect(o).select(F.lit("both").alias("tag"), "k"))
-        .unionAll(c.subtract(o).select(F.lit("customer_only").alias("tag"), "k"))
-    )
-    return tagged.orderBy("tag", "k")
 
 
 # ---------------------------------------------------------------------------
@@ -1028,9 +859,9 @@ def q_f_date(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "q_f_math",
-    oracle="""
+    """
     SELECT l_orderkey, l_linenumber,
            round(l_extendedprice, 1)            AS rnd,
            abs(l_discount - 0.05)               AS ab,
@@ -1042,23 +873,6 @@ def q_f_date(spark, sf_dir):
     FROM lineitem ORDER BY l_orderkey, l_linenumber
     """,
 )
-def q_f_math(spark, sf_dir):
-    """∅-ref math suite: round/abs/sqrt/ln/power/floor/ceil."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.round("l_extendedprice", 1).alias("rnd"),
-            F.abs(F.col("l_discount") - 0.05).alias("ab"),
-            F.sqrt("l_quantity").alias("sq"),
-            F.log("l_extendedprice").alias("logp"),
-            F.pow(F.lit(1) + F.col("l_discount"), 2).alias("pw"),
-            F.floor("l_extendedprice").cast("bigint").alias("fl"),
-            F.ceil("l_extendedprice").cast("bigint").alias("ce"),
-        )
-        .orderBy("l_orderkey", "l_linenumber")
-    )
 
 
 @query(
@@ -1128,31 +942,13 @@ def q_f_hof(spark, sf_dir):
     ).orderBy("o_custkey")
 
 
-@query(
+sql_query(
     "q_f_explode",
-    oracle="""
+    """
     SELECT o_custkey, COUNT(*) AS n, MIN(o_orderkey) AS min_k, MAX(o_orderkey) AS max_k
     FROM orders GROUP BY o_custkey ORDER BY o_custkey
     """,
 )
-def q_f_explode(spark, sf_dir):
-    """F5: explode round-trip — build per-key arrays, explode back to rows,
-    re-aggregate (COMP5349_2.py:196). Oracle is the algebraic identity."""
-    arr = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.collect_list("o_orderkey").alias("keys"))
-    )
-    return (
-        arr.select("o_custkey", F.explode("keys").alias("k"))
-        .groupBy("o_custkey")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-        .orderBy("o_custkey")
-    )
 
 
 @query(
@@ -1246,9 +1042,9 @@ def q_f_json(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "q_f_cond",
-    oracle="""
+    """
     SELECT event_id,
            CASE WHEN value > 100 THEN 'high'
                 WHEN value > 10  THEN 'mid'
@@ -1257,22 +1053,6 @@ def q_f_json(spark, sf_dir):
     FROM events ORDER BY event_id
     """,
 )
-def q_f_cond(spark, sf_dir):
-    """∅-ref conditional suite: CASE WHEN / coalesce / nullif (F1 shape)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.when(F.col("value") > 100, "high")
-            .when(F.col("value") > 10, "mid")
-            .otherwise("low")
-            .alias("bucket"),
-            F.coalesce(F.nullif(F.col("event_type"), F.lit("click")), F.lit("(clicked)")).alias(
-                "etype"
-            ),
-        )
-        .orderBy("event_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1332,9 +1112,11 @@ def q_e2e_w2pairs(spark, sf_dir):
     )
 
 
-@query(
+# Trailing 7-day sum and count per user over a RANGE INTERVAL frame. The sum
+# runs in DECIMAL(38,6) so frame addition is exact and order-independent.
+sql_query(
     "q_w7_range_frame",
-    oracle="""
+    """
     SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
            CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER (
                   PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
@@ -1349,33 +1131,6 @@ def q_e2e_w2pairs(spark, sf_dir):
     ORDER BY user_id, ts, event_id
     """,
 )
-def q_w7_range_frame(spark, sf_dir):
-    """∅-ref window surface: event-TIME range frame — trailing 7-day sum
-    and count per user via ``RANGE BETWEEN INTERVAL ... PRECEDING``. The
-    ROWS frames (q_w3) count physical rows; a RANGE-over-interval frame is
-    the time-series rollup users actually want (sliding by wall-clock, peers
-    at the same timestamp always in-frame together — which also makes the
-    result order-insensitive under ties, no ROW_NUMBER tiebreak needed).
-    The window sum routes through DECIMAL(38,6) so frame addition is exact
-    and order-independent; one shuffle on user_id serves both frames."""
-    frame = (
-        "(PARTITION BY user_id ORDER BY ts "
-        "RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW)"
-    )
-    return (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.expr(
-                f"CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER {frame} AS DOUBLE)"
-            ).alias("sum_7d"),
-            F.expr(f"CAST(COUNT(*) OVER {frame} AS BIGINT)").alias("n_7d"),
-        )
-        .orderBy("user_id", "ts", "event_id")
-    )
 
 
 @query(
@@ -1610,9 +1365,7 @@ def q_s9_time_travel(spark, sf_dir):
     VERSION via ``.option("version", N)`` and summarized. Each commit
     publishes an immutable ``_MANIFEST.vN.json`` snapshot before swapping
     the latest pointer, and superseded data files are retained (history
-    pins them) until ``docstore_vacuum`` expires old snapshots — vacuum
-    semantics (retention, orphan reclamation, version-gone-after-vacuum)
-    are asserted in tests/test_io.py.
+    pins them).
 
     The oracle recomputes all three version summaries from the source
     table, so snapshot isolation itself is value-checked: v1 must still
@@ -1620,8 +1373,7 @@ def q_s9_time_travel(spark, sf_dir):
     must see the append stacked on v2, not on v1.
 
     Scale shape: version planning is metadata-only (one manifest read);
-    a version read scans only that snapshot's files. History cost is
-    bounded by vacuum's retention window, not by write count.
+    a version read scans only that snapshot's files.
     """
     import hashlib as _hl
     import os as _os
@@ -1852,8 +1604,8 @@ MERGE_INS_LO, MERGE_INS_HI = 45, 55
 def q_sb_docstore_merge(spark, sf_dir):
     """MERGE INTO (upsert) through the docstore connector — the
     Delta/Iceberg MERGE shape (public designs) that completes the
-    maintenance surface next to DELETE (q_s8), time travel + VACUUM
-    (q_s9) and CDF (q_sa): the store is written range-partitioned on
+    maintenance surface next to DELETE (q_s8), time travel (q_s9) and
+    CDF (q_sa): the store is written range-partitioned on
     ``doc_id`` with per-file zone maps, MINUS a backfill range; one
     ``docstore_merge`` call then UPDATEs an existing id range (WHEN
     MATCHED: n_chars + 1000) and INSERTs the missing range (WHEN NOT

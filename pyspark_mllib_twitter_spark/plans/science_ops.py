@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
 from ..sources import read_table
-from .lakehouse import triangle_counts
-from .registry import query
+from .registry import query, sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -63,67 +62,11 @@ def _pearson_sql(n: str, sx: str, sy: str, sxy: str, sxx: str, syy: str) -> str:
 _SPEAR_RHO = _pearson_sql("n", "su", "sv", "suv", "suu", "svv")
 
 
-def _doubled_tie_ranks(spark, rows: DataFrame, grp: str, val: str) -> DataFrame:
-    """Distributed tie-averaged doubled ranks per (group, value):
-    ``u2 = 2*avg_rank = 2*(#smaller) + tie_count + 1``, exact integers.
-
-    Shape — the q_yj_gini distributed-rank recipe generalized to
-    per-group TIE ranks: (1) collapse rows to per-(grp, val) tie counts
-    (map-side combinable — the frame shrinks to the distinct-value
-    cardinality); (2) range-repartition that frame by (grp, val) and pin
-    the layout with localCheckpoint (RangePartitioner re-samples per
-    execution; the offsets job and the rank job must see the SAME
-    assignment); (3) per-partition running sums + broadcast prefix
-    offsets per (partition, grp) give every value its global
-    smaller-count WITHOUT any per-group global sort — a plain
-    ``Window.partitionBy(grp)`` would funnel each group through ONE
-    task, collapsing parallelism to the group count (measured: 3 tasks
-    sorting 2M rows each at sf0.1). Tie runs cannot straddle partitions
-    because each (grp, val) appears exactly once in the collapsed frame.
-    The offsets collect is numPartitions x numGroups rows — bounded
-    control state, not data."""
-    cnt = rows.groupBy(grp, val).agg(F.count("*").alias("c"))
-    parts = (
-        cnt.repartitionByRange(grp, val)
-        .sortWithinPartitions(grp, val)
-        .localCheckpoint(eager=True)
-    )
-    with_pid = parts.withColumn("_pid", F.spark_partition_id())
-    pg = sorted(
-        (r["_pid"], r[grp], r["s"])
-        for r in with_pid.groupBy("_pid", grp).agg(F.sum("c").alias("s")).collect()
-    )
-    acc: dict = {}
-    offsets = []
-    for pid, g, s in pg:
-        offsets.append((pid, g, acc.get(g, 0)))
-        acc[g] = acc.get(g, 0) + s
-    offsets_df = spark.createDataFrame(
-        offsets or [(0, "", 0)], f"_pid int, {grp} string, _offset long"
-    )
-    running = F.sum("c").over(
-        Window.partitionBy("_pid", grp)
-        .orderBy(val)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        with_pid.withColumn("_run", running)
-        .join(F.broadcast(offsets_df), ["_pid", grp])
-        .select(
-            grp,
-            val,
-            (
-                2 * (F.col("_offset") + F.col("_run") - F.col("c"))
-                + F.col("c")
-                + 1
-            ).alias("u2"),
-        )
-    )
-
-
-@query(
+# Spearman correlation per return flag over tie-averaged ranks, kept exact by
+# doubling them, so all five moment sums are DECIMAL(38,0).
+sql_query(
     "q_zr_spearman",
-    oracle=f"""
+    f"""
     WITH r AS (
       SELECT l_returnflag AS grp,
              -- doubled tie-averaged rank: 2*avg_rank = 2*rank + ties - 1,
@@ -145,45 +88,6 @@ def _doubled_tie_ranks(spark, rows: DataFrame, grp: str, val: str) -> DataFrame:
     FROM m ORDER BY grp
     """,
 )
-def q_zr_spearman(spark, sf_dir):
-    """Spearman rank correlation between quantity and extended price per
-    return flag — the monotone-association statistic that is robust to
-    outliers and nonlinearity (Spearman 1904, classical). Computed as
-    Pearson over TIE-AVERAGED ranks; the tie-averaged rank is kept exact
-    by doubling (``2*avg_rank = 2*rank() + tie_count - 1`` is always an
-    integer), so all five moment sums are exact DECIMAL(38,0) and the
-    only floating-point work is the single shared-text rho expression.
-
-    Scale shape: ranks come from ``_doubled_tie_ranks`` — the
-    q_yj_gini distributed-rank recipe per group and variable, so rank
-    parallelism is the PARTITION count, not the group count (a
-    ``Window.partitionBy(l_returnflag)`` rank funnels each of the 3
-    groups through one task — measured 3 tasks sorting 2M rows each at
-    sf0.1). The quantity rank map is tiny (|groups| x ~50 distinct
-    values — broadcast); the price rank map joins back shuffled on its
-    own key. The moment reduction is one map-side-combinable aggregate.
-    """
-    li = read_table(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("grp"), "l_quantity", "l_extendedprice"
-    )
-    ux = _doubled_tie_ranks(spark, li, "grp", "l_quantity").withColumnRenamed(
-        "u2", "u"
-    )
-    vy = _doubled_tie_ranks(spark, li, "grp", "l_extendedprice").withColumnRenamed(
-        "u2", "v"
-    )
-    r = li.join(F.broadcast(ux), ["grp", "l_quantity"]).join(
-        vy, ["grp", "l_extendedprice"]
-    )
-    m = r.groupBy("grp").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-        F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        F.sum(F.col("u").cast("decimal(38,0)") * F.col("v")).alias("suv"),
-        F.sum(F.col("u").cast("decimal(38,0)") * F.col("u")).alias("suu"),
-        F.sum(F.col("v").cast("decimal(38,0)") * F.col("v")).alias("svv"),
-    )
-    return m.selectExpr("grp", "n", f"round({_SPEAR_RHO}, 6) AS rho").orderBy("grp")
 
 
 # ---------------------------------------------------------------------------
@@ -200,9 +104,11 @@ _LCC_SQL = (
 )
 
 
-@query(
+# Local clustering coefficient 2*tri / (deg*(deg-1)) per node of the folded
+# supplier -> part graph; nodes in no triangle get 0 through an outer join.
+sql_query(
     "q_zs_clustering_coef",
-    oracle=f"""
+    f"""
     WITH raw AS (
       SELECT l_suppkey % {_LCC_MOD} AS a, l_partkey % {_LCC_MOD} AS b
       FROM lineitem WHERE l_linenumber = 2
@@ -230,46 +136,6 @@ _LCC_SQL = (
     ORDER BY node
     """,
 )
-def q_zs_clustering_coef(spark, sf_dir):
-    """Local clustering coefficient per node — triangles closed over
-    wedges possible, ``2*tri(v) / (deg(v) * (deg(v)-1))`` (Watts &
-    Strogatz 1998, public) — the community-density readout on the folded
-    supplier→part link graph. Composes the degree-oriented
-    ``triangle_counts`` operator (skew-proof wedge generation, Cohen
-    2009; see q_xm) with the degree table; nodes in no triangle get
-    coefficient 0 via an outer join, so the result covers EVERY node.
-
-    Scale shape: triangle counting is two equi-join shuffles of 2-int
-    rows with fan-out capped by degree orientation (~sqrt(|E|) out-degree
-    even on power-law graphs); degrees are one combinable aggregate; the
-    final join is node-keyed. The coefficient itself is shared-text
-    integer arithmetic — exact across engines.
-    """
-    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 2)
-    raw = li.select(
-        (F.col("l_suppkey") % _LCC_MOD).alias("a"),
-        (F.col("l_partkey") % _LCC_MOD).alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    edges = raw.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct()
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionByName(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
-    tri = triangle_counts(edges)
-    return (
-        deg.join(tri, "node", "left")
-        .select(
-            F.col("node").cast("bigint").alias("node"),
-            "deg",
-            F.coalesce("n_tri", F.lit(0)).cast("bigint").alias("n_tri"),
-        )
-        .selectExpr("node", "deg", "n_tri", f"{_LCC_SQL} AS lcc")
-        .orderBy("node")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -286,9 +152,12 @@ _LP_TOPK = 50
 _AA_Q = "CAST(round(1000000000000.0 / ln(CAST(deg AS DOUBLE)), 0) AS BIGINT)"
 
 
-@query(
+# Link prediction on the folded supplier -> part graph: common neighbours and
+# Adamic-Adar per non-edge, top 50. AA is summed in integer picounits and the
+# tie-break chain is total, so the LIMIT is deterministic.
+sql_query(
     "q_zt_link_predict",
-    oracle=f"""
+    f"""
     WITH raw AS (
       SELECT l_suppkey % {_LP_MOD} AS a, l_partkey % {_LP_MOD} AS b
       FROM lineitem WHERE l_linenumber = 1
@@ -317,70 +186,6 @@ _AA_Q = "CAST(round(1000000000000.0 / ln(CAST(deg AS DOUBLE)), 0) AS BIGINT)"
     LIMIT {_LP_TOPK}
     """,
 )
-def q_zt_link_predict(spark, sf_dir):
-    """Link prediction over the folded supplier→part graph: for every
-    NON-edge (a, b) sharing at least one neighbor, score by common
-    neighbors and Adamic-Adar ``sum(1/ln(deg(w)))`` (Adamic & Adar 2003;
-    Liben-Nowell & Kleinberg 2007 — public), then keep the top-50
-    candidates. The AA sum is quantized to integer picounits per shared
-    neighbor and summed exactly, so the cross-engine hash cannot drift
-    with partition order; the tie-break chain (cn desc, exact aa_q desc,
-    a, b) is total, making the LIMIT deterministic.
-
-    Scale shape: wedge generation is one self-join of the adjacency list
-    on the center node — fan-out Σ deg(v)² like the triangle recipe, and
-    the same degree-cap/salting mitigations apply on power-law graphs
-    (at 100 TB, hub centers above a degree cap are dropped or sampled, a
-    standard LP approximation; the fixture graph needs no cap). The
-    existing-edge exclusion is a broadcast-size anti join here and a
-    shuffled anti join at scale — semantics identical either way. Final
-    top-k is a rank-limit, not a global sort of candidates.
-    """
-    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
-    raw = li.select(
-        (F.col("l_suppkey") % _LP_MOD).alias("a"),
-        (F.col("l_partkey") % _LP_MOD).alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    e = raw.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct()
-    adj = e.select(F.col("u").alias("ctr"), F.col("v").alias("nbr")).unionByName(
-        e.select(F.col("v").alias("ctr"), F.col("u").alias("nbr"))
-    )
-    deg = adj.groupBy(F.col("ctr").alias("node")).agg(
-        F.count("*").cast("bigint").alias("deg")
-    )
-    a1 = adj.select(F.col("ctr"), F.col("nbr").alias("a"))
-    a2 = adj.select(F.col("ctr"), F.col("nbr").alias("b"))
-    wedge = (
-        a1.join(a2, "ctr")
-        .filter(F.col("a") < F.col("b"))
-        .join(deg.withColumnRenamed("node", "ctr"), "ctr")
-    )
-    cand = (
-        wedge.join(
-            e.withColumnRenamed("u", "a").withColumnRenamed("v", "b"),
-            ["a", "b"],
-            "left_anti",
-        )
-        .groupBy("a", "b")
-        .agg(
-            F.count("*").cast("bigint").alias("cn"),
-            F.sum(F.expr(_AA_Q).cast("decimal(38,0)")).alias("aa_q"),
-        )
-    )
-    return (
-        cand.orderBy(
-            F.col("cn").desc(), F.col("aa_q").desc(), F.col("a"), F.col("b")
-        )
-        .limit(_LP_TOPK)
-        .selectExpr(
-            "CAST(a AS BIGINT) AS a",
-            "CAST(b AS BIGINT) AS b",
-            "cn",
-            "round(CAST(aa_q AS DOUBLE) / 1000000000000.0, 6) AS adamic_adar",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2852,9 +2657,11 @@ _MOD_TERM = (
 )
 
 
-@query(
+# Newman-Girvan modularity of the nation partition of the supplier-customer
+# trade graph, with one row per community.
+sql_query(
     "q_b4_modularity",
-    oracle=f"""
+    f"""
     WITH e AS (
       SELECT DISTINCT l.l_suppkey AS s, o.o_custkey AS c
       FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey),
@@ -2879,67 +2686,6 @@ _MOD_TERM = (
     FROM cells ORDER BY community
     """,
 )
-def q_b4_modularity(spark, sf_dir):
-    """Newman-Girvan MODULARITY (Newman & Girvan 2004; Newman PNAS 2006
-    — public) of the nation partition over the bipartite supplier-
-    customer trade graph: Q = Σ_c [m_c/m − (d_c/2m)²] measures whether
-    trade concentrates within nations more than a degree-preserving
-    random graph predicts. The community-QUALITY metric that closes the
-    graph stack (CC finds components, k-core finds cores, this scores a
-    partition); per-community contributions are emitted so the sum is
-    the scalar Q.
-
-    Exactness: edge count m, intra-community edges m_c, and community
-    degree sums d_c are exact BIGINTs from combinable aggregates; the
-    per-community term is one shared-text close.
-
-    Scale shape: ONE distinct-edge shuffle of the fact table, two
-    broadcast dim joins for endpoint communities, then two combinable
-    aggregates over the (community)-keyed edge stream — no iteration, no
-    window; community count bounds the output.
-    """
-    li = read_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_orderkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    sup = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cus = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
-        .distinct()
-    )
-    en = (
-        e.join(F.broadcast(sup), e.s == sup.s_suppkey)
-        .join(F.broadcast(cus), e.c == cus.c_custkey)
-        .select(F.col("s_nationkey").alias("ns"), F.col("c_nationkey").alias("nc"))
-    )
-    m = en.agg(F.count("*").cast("bigint").alias("m"))
-    intra = (
-        en.filter(F.col("ns") == F.col("nc"))
-        .groupBy(F.col("ns").alias("community"))
-        .agg(F.count("*").cast("bigint").alias("m_c"))
-    )
-    deg = (
-        en.groupBy(F.col("ns").alias("community"))
-        .agg(F.count("*").alias("d"))
-        .unionByName(
-            en.groupBy(F.col("nc").alias("community")).agg(F.count("*").alias("d"))
-        )
-        .groupBy("community")
-        .agg(F.sum("d").cast("bigint").alias("d_c"))
-    )
-    out = (
-        deg.crossJoin(F.broadcast(m))
-        .join(F.broadcast(intra), "community", "left")
-        .select(
-            "community",
-            F.coalesce(F.col("m_c"), F.lit(0)).cast("bigint").alias("m_c"),
-            "d_c",
-            "m",
-        )
-    )
-    return out.selectExpr(
-        "community", "m_c", "d_c", "m", f"{_MOD_TERM} AS q_term"
-    ).orderBy("community")
 
 
 # ---------------------------------------------------------------------------
@@ -3195,9 +2941,11 @@ HILL_K = 500
 _HILL_TERM = "ln(CAST(cents AS DOUBLE)) - ln(CAST(xk1 AS DOUBLE))"
 
 
-@query(
+# Hill tail-index estimator over the top-k order values; ties break on order
+# key and the log-excesses sum in an ordered window.
+sql_query(
     "q_c3_hill_tail",
-    oracle=f"""
+    f"""
     WITH ranked AS (
       SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
              row_number() OVER (
@@ -3222,56 +2970,6 @@ _HILL_TERM = "ln(CAST(cents AS DOUBLE)) - ln(CAST(xk1 AS DOUBLE))"
     FROM acc WHERE is_last = 1
     """,
 )
-def q_c3_hill_tail(spark, sf_dir):
-    """HILL TAIL-INDEX estimator (Hill, Annals of Statistics 1975 —
-    public): gamma = (1/k) sum ln(x_(i)/x_(k+1)) over the top-k order
-    statistics of order value, alpha = 1/gamma — the standard estimate
-    of power-law tail heaviness (complement of q_zu's Zipf OLS, which
-    fits the whole rank curve; Hill reads only the extreme tail, where
-    whale risk lives). Order statistics tie-break on order key so both
-    engines pick identical top sets; each log-excess is one shared-text
-    expression, and the k doubles are summed by an ORDERED cumulative
-    window — bit-stable accumulation, the q_bq contract.
-
-    Scale shape: the ONLY corpus-scale work is the top-(k+1) selection,
-    which Spark plans as TakeOrderedAndProject (per-task partial top-k,
-    one k-row merge — no global sort); everything after runs on k+1
-    rows. At 100 TB the tail frame is still 501 rows.
-    """
-    o = read_table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        "o_orderkey",
-    )
-    top = (
-        o.orderBy(F.col("cents").desc(), F.col("o_orderkey"))
-        .limit(HILL_K + 1)
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.orderBy(F.col("cents").desc(), F.col("o_orderkey"))
-            ),
-        )
-    )
-    thresh = top.filter(F.col("rnk") == HILL_K + 1).select(
-        F.col("cents").alias("xk1")
-    )
-    terms = (
-        top.filter(F.col("rnk") <= HILL_K)
-        .crossJoin(F.broadcast(thresh))
-        .select("rnk", F.expr(_HILL_TERM).alias("term"), "xk1")
-    )
-    w_cum = Window.orderBy("rnk").rowsBetween(Window.unboundedPreceding, 0)
-    acc = terms.select(
-        "xk1",
-        F.sum("term").over(w_cum).alias("h_sum"),
-        F.row_number().over(Window.orderBy(F.col("rnk").desc())).alias("is_last"),
-    )
-    return acc.filter(F.col("is_last") == 1).select(
-        F.lit(HILL_K).cast("bigint").alias("k"),
-        F.col("xk1").cast("bigint").alias("xk1_cents"),
-        F.round(F.col("h_sum") / HILL_K, 6).alias("hill_gamma"),
-        F.round(HILL_K / F.expr("nullif(h_sum, 0.0)"), 6).alias("tail_alpha"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..sources import read_table, register_views
+from ..sources import read_table
 from .corpus_ops import KM_CUTOFF
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # Benjamini-Hochberg FDR over per-nation proportion tests
@@ -72,9 +72,12 @@ _BH_P_EXPR = (
 _BH_CRIT_EXPR = f"CAST(p_rank AS DOUBLE) * {_BH_ALPHA} / CAST(m AS DOUBLE)"
 
 
-@query(
+# Benjamini-Hochberg FDR over per-nation one-vs-rest z-tests; p-values use
+# the Abramowitz-Stegun 26.2.17 tail polynomial, so both engines agree on
+# every step-up comparison. Degenerate tests drop from the family.
+sql_query(
     "q_bi_bh_fdr",
-    oracle=f"""
+    f"""
     WITH per AS (
       SELECT c_nationkey,
              CAST(count(*) AS BIGINT) AS n1,
@@ -112,89 +115,6 @@ _BH_CRIT_EXPR = f"CAST(p_rank AS DOUBLE) * {_BH_ALPHA} / CAST(m AS DOUBLE)"
     ORDER BY p_rank
     """,
 )
-def q_bi_bh_fdr(spark, sf_dir):
-    """MULTIPLE-TESTING CONTROL: Benjamini-Hochberg step-up FDR
-    (Benjamini & Hochberg 1995, public) over the family of per-nation
-    "is this nation's high-balance rate different from the rest of the
-    world" two-proportion z-tests — the experimentation-platform readout
-    that keeps a dashboard of 25 simultaneous segment tests honest.
-    Per-nation z uses the pooled-variance one-vs-rest form on exact
-    integer counts; the two-sided p-value is the Abramowitz-Stegun
-    26.2.17 normal-tail polynomial evaluated as ONE shared-text
-    expression (both engines compute bit-identical doubles from
-    identical integer inputs, so the step-up comparisons — p_(i) <=
-    i*alpha/m and the max-rank cutoff — decide identically). Degenerate
-    pooled variance yields NULL z and drops from the family (m counts
-    non-null tests only).
-
-    Scale shape: the only corpus-scan work is one map-side-combinable
-    groupBy(nation) over customers; everything after (totals cross
-    join, p-values, the BH rank/step-up windows) runs on ONE ROW PER
-    HYPOTHESIS — 25 rows here, family-bounded at any corpus size. At
-    100 TB the test family is still tiny; the windows never see raw
-    rows.
-    """
-    c = read_table(spark, sf_dir, "customer")
-    nat = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    per = c.groupBy("c_nationkey").agg(
-        F.count("*").cast("bigint").alias("n1"),
-        F.sum(
-            F.when(F.col("c_acctbal") > _BH_CUTOFF, 1).otherwise(0)
-        ).cast("bigint").alias("k1"),
-    )
-    tot = per.agg(
-        F.sum("n1").cast("bigint").alias("nn"),
-        F.sum("k1").cast("bigint").alias("kk"),
-    )
-    z = (
-        per.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(nat), per.c_nationkey == nat.n_nationkey)
-        .select(
-            F.col("n_name").alias("nation"),
-            "n1",
-            "k1",
-            F.expr(_BH_Z_EXPR).alias("z_raw"),
-        )
-        .filter(F.col("z_raw").isNotNull())
-        .withColumn("tt", F.expr(_BH_T_EXPR))
-        .withColumn("p_raw", F.expr(_BH_P_EXPR))
-    )
-    # The BH windows run over one row per hypothesis (family-bounded
-    # frame), so the unpartitioned window is a 25-row sort, not a
-    # corpus sort.
-    ranked = z.select(
-        "nation",
-        "n1",
-        "k1",
-        "z_raw",
-        "p_raw",
-        F.row_number().over(Window.orderBy("p_raw", "nation")).alias("p_rank"),
-        F.count("*").over(
-            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("m"),
-    ).withColumn(
-        "ok_rank",
-        F.when(F.col("p_raw") <= F.expr(_BH_CRIT_EXPR), F.col("p_rank")).otherwise(
-            F.lit(0)
-        ),
-    )
-    kstar = ranked.agg(F.max("ok_rank").alias("k_star"))
-    return (
-        ranked.crossJoin(F.broadcast(kstar))
-        .select(
-            "nation",
-            F.col("n1").alias("n_customers"),
-            F.col("k1").alias("n_high"),
-            F.round("z_raw", 6).alias("z_score"),
-            F.round("p_raw", 6).alias("p_value"),
-            F.col("p_rank").cast("int").alias("p_rank"),
-            F.when(F.col("p_rank") <= F.col("k_star"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("rejected"),
-        )
-        .orderBy("p_rank")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -837,9 +757,11 @@ _VW_UNIT_MICROS = (
 )
 
 
-@query(
+# VWAP and TWAP per ship week; unit prices round once into integer
+# micro-dollars, so only the four closing divisions are doubles.
+sql_query(
     "q_bo_vwap",
-    oracle=f"""
+    f"""
     WITH fills AS (
       SELECT CAST(date_trunc('week', l_shipdate) AS DATE) AS week,
              CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
@@ -860,56 +782,6 @@ _VW_UNIT_MICROS = (
     FROM u GROUP BY week ORDER BY week
     """,
 )
-def q_bo_vwap(spark, sf_dir):
-    """VWAP / TWAP execution benchmarks per ship week — volume-weighted
-    average price Σ(price*qty)/Σqty vs the time(-fill)-weighted simple
-    average, plus the week's low/high unit price (the standard
-    execution-quality pair from market microstructure; VWAP slippage =
-    fill price vs this benchmark). lineitem's extendedprice IS qty *
-    unit price, so VWAP needs no division until the close; per-fill unit
-    price is rounded ONCE into exact integer micro-dollars by a
-    shared-text expression, making every aggregate an exact integer sum
-    — the only doubles are the four closing divisions.
-
-    Scale shape: one map-side-combinable groupBy(week) over the scan —
-    the canonical combinable aggregate; min/max/sum/count all merge
-    associatively, so 100 TB costs one scan + a calendar-bounded
-    shuffle.
-    """
-    li = read_table(spark, sf_dir, "lineitem").select(
-        # DATE, not the raw date_trunc TIMESTAMP: Spark's date_trunc
-        # returns a timestamp while DuckDB's returns a date — pandas-side
-        # compares coerce them equal, but string-normalizing harnesses
-        # (tests/oracle_harness) see '1997-12-29 00:00:00' vs '1997-12-29'.
-        F.date_trunc("week", "l_shipdate").cast("date").alias("week"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-        F.col("l_quantity").cast("bigint").alias("qty"),
-    )
-    u = li.withColumn("unit_micros", F.expr(_VW_UNIT_MICROS))
-    return (
-        u.groupBy("week")
-        .agg(
-            F.count("*").cast("bigint").alias("n_fills"),
-            F.sum("qty").cast("bigint").alias("volume"),
-            F.round(
-                F.sum("cents").cast("double") / F.sum("qty").cast("double") / 100.0,
-                6,
-            ).alias("vwap"),
-            F.round(
-                F.sum("unit_micros").cast("double")
-                / F.count("*").cast("double")
-                / 1_000_000.0,
-                6,
-            ).alias("twap"),
-            F.round(F.min("unit_micros").cast("double") / 1_000_000.0, 6).alias(
-                "low"
-            ),
-            F.round(F.max("unit_micros").cast("double") / 1_000_000.0, 6).alias(
-                "high"
-            ),
-        )
-        .orderBy("week")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -938,9 +810,12 @@ _SP_MH = (
 )
 
 
-@query(
+# Simpson's-paradox audit: pooled urgent-rate difference vs the
+# Cochran-Mantel-Haenszel difference across nations. The MH double sums
+# run over 25 well-conditioned stratum terms; 6dp rounding absorbs order.
+sql_query(
     "q_bp_simpson",
-    oracle=f"""
+    f"""
     WITH base AS (
       SELECT c_nationkey AS stratum, c_mktsegment AS seg,
              CASE WHEN {_SP_POS} THEN 1 ELSE 0 END AS pos
@@ -975,81 +850,6 @@ _SP_MH = (
     FROM acc
     """,
 )
-def q_bp_simpson(spark, sf_dir):
-    """SIMPSON'S-PARADOX audit: the pooled urgent-order-rate difference
-    between two customer segments vs the Cochran-Mantel-Haenszel
-    stratum-adjusted difference across nations (MH weights n_a*n_b /
-    (n_a+n_b) — Cochran 1954 / Mantel & Haenszel 1959, public), with a
-    sign-reversal flag — the aggregation-bias screen every experiment
-    dashboard needs before trusting a pooled lift. Strata missing either
-    segment drop (the MH weight is 0/undefined there). All counts are
-    exact integers; both closing rate differences are shared-text
-    doubles, and the MH numerator/denominator sums run over the
-    STRATUM-grain frame so there are only 25 addends.
-
-    Scale shape: one broadcast-joined scan (customer dim side fits in
-    memory at TPC-H shape) into a map-side-combinable groupBy(stratum);
-    the paradox algebra runs on one row per stratum. At 100 TB the
-    stratum frame is still nation-sized.
-
-    NOTE: the double sums in _SP_MH aggregate 25 stratum terms; both
-    engines sum them in their own order, so this relies on the terms
-    being well-conditioned (all same sign-magnitude range, no
-    catastrophic cancellation) plus the driver's 6dp rounding — the
-    same tolerance argument as q_ac's correlation matrix.
-    """
-    c = read_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("stratum"),
-        F.col("c_mktsegment").alias("seg"),
-    )
-    o = read_table(spark, sf_dir, "orders").select(
-        "o_custkey", F.expr(f"CASE WHEN {_SP_POS} THEN 1 ELSE 0 END").alias("pos")
-    )
-    base = o.join(
-        F.broadcast(c.filter(F.col("seg").isin(_SP_SEG_A, _SP_SEG_B))),
-        o.o_custkey == c.c_custkey,
-    )
-    cell = (
-        base.groupBy("stratum")
-        .agg(
-            F.sum(F.when(F.col("seg") == _SP_SEG_A, 1).otherwise(0))
-            .cast("bigint")
-            .alias("na"),
-            F.sum(F.when(F.col("seg") == _SP_SEG_A, F.col("pos")).otherwise(0))
-            .cast("bigint")
-            .alias("ka"),
-            F.sum(F.when(F.col("seg") == _SP_SEG_B, 1).otherwise(0))
-            .cast("bigint")
-            .alias("nb"),
-            F.sum(F.when(F.col("seg") == _SP_SEG_B, F.col("pos")).otherwise(0))
-            .cast("bigint")
-            .alias("kb"),
-        )
-        .filter((F.col("na") > 0) & (F.col("nb") > 0))
-    )
-    acc = cell.agg(
-        F.count("*").cast("bigint").alias("n_strata"),
-        F.sum("na").cast("bigint").alias("n_a"),
-        F.sum("ka").cast("bigint").alias("k_a"),
-        F.sum("nb").cast("bigint").alias("n_b"),
-        F.sum("kb").cast("bigint").alias("k_b"),
-        F.expr(_SP_POOLED).alias("pooled_diff"),
-        F.expr(_SP_MH).alias("mh_diff"),
-    )
-    return acc.select(
-        "n_strata",
-        "n_a",
-        "k_a",
-        "n_b",
-        "k_b",
-        F.round("pooled_diff", 6).alias("pooled_diff"),
-        F.round("mh_diff", 6).alias("mh_diff"),
-        F.when(F.col("pooled_diff") * F.col("mh_diff") < 0, 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("sign_reversed"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1438,9 +1238,11 @@ def q_bu_negative_sampling(spark, sf_dir):
 _SKEW_TOPK = 10
 
 
-@query(
+# Join-key skew profile of a skew-folded supplier key: the top _SKEW_TOPK
+# keys with row share and ratio to the average key.
+sql_query(
     "q_bv_skew_advisor",
-    oracle=f"""
+    f"""
     WITH keyed AS (
       SELECT l_suppkey % 100 AS join_key, count(*) AS cnt
       FROM lineitem GROUP BY 1),
@@ -1463,59 +1265,6 @@ _SKEW_TOPK = 10
     ORDER BY rnk
     """,
 )
-def q_bv_skew_advisor(spark, sf_dir):
-    """SHUFFLE-SKEW ADVISOR: the pre-join diagnosis every AQE-era
-    pipeline still needs — the join-key frequency profile (here a
-    deliberately skew-folded supplier key) reduced to its top-{_SKEW_TOPK}
-    heavy keys with each key's row share and ratio-to-average. A
-    ratio_to_avg of r means the hottest shuffle partition gets ~r times
-    the average work — the number that decides between plain shuffle,
-    AQE skew-join splitting, or explicit salting (q_a8's recipe). This
-    is the measurement step; the repo's salted-agg and broadcast ops
-    are the remediations.
-
-    Scale shape: ONE map-side-combinable groupBy(key) collapses the
-    corpus to key grain; the top-k is TakeOrderedAndProject (per-task
-    partial top-k, k-row merge — no global sort); totals are a 2-scalar
-    broadcast. 100 TB costs the keyed aggregate, nothing more.
-    """
-    li = read_table(spark, sf_dir, "lineitem").select(
-        (F.col("l_suppkey") % 100).alias("join_key")
-    )
-    keyed = li.groupBy("join_key").agg(F.count("*").alias("cnt"))
-    tot = keyed.agg(
-        F.sum("cnt").cast("bigint").alias("n_rows"),
-        F.count("*").cast("bigint").alias("n_keys"),
-    )
-    top = (
-        keyed.orderBy(F.col("cnt").desc(), F.col("join_key"))
-        .limit(_SKEW_TOPK)
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.orderBy(F.col("cnt").desc(), F.col("join_key"))
-            ),
-        )
-    )
-    return (
-        top.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("rnk").cast("int").alias("rnk"),
-            F.col("join_key").cast("bigint").alias("join_key"),
-            F.col("cnt").cast("bigint").alias("cnt"),
-            F.round(F.col("cnt").cast("double") / F.col("n_rows").cast("double"), 6)
-            .alias("share"),
-            F.round(
-                F.col("cnt").cast("double")
-                * F.col("n_keys").cast("double")
-                / F.col("n_rows").cast("double"),
-                6,
-            ).alias("ratio_to_avg"),
-            "n_rows",
-            "n_keys",
-        )
-        .orderBy("rnk")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1819,10 +1568,6 @@ def q_by_inventory(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Quantile normalization (exact percent-rank feature transform)
 # ---------------------------------------------------------------------------
-
-#: Doubled average rank keeps tie midpoints integral (the q_zr trick):
-#: rank2 = 2*prev_cum + cnt + 1 = 2 * (rank_lt + (n_eq+1)/2).
-_QN_NORM = "CAST(rank2 AS DOUBLE) / (2.0 * (CAST(n_tot AS DOUBLE) + 1.0))"
 
 
 @query(
@@ -2152,60 +1897,9 @@ def _lr_oracle() -> str:
     )
 
 
-@query("q_ca_logistic_irls", oracle=_lr_oracle())
-def q_ca_logistic_irls(spark, sf_dir):
-    """LOGISTIC REGRESSION by IRLS (iteratively reweighted least
-    squares — Fisher scoring, any GLM text; the algorithm inside every
-    distributed LR including MLlib's): P(urgent order) ~ sigmoid(b0 +
-    b1*price), three exact iterations emitted as the audit trail. Each
-    iteration is ONE map-side-combinable aggregate of five Fisher
-    moments; per-row terms are shared-text sigmoid algebra QUANTIZED to
-    integer micro-units before summation — the sums are exact BIGINTs,
-    so the accumulation is partition-order-free and the 2x2 closed-form
-    solve feeds bit-identical betas to the next iteration on both
-    engines. The w·z = w·eta + (y-mu) identity keeps addends bounded
-    where the working response explodes. This is the engine's
-    demonstration that ITERATIVE ML fits the declarative one-scan-per-
-    iteration shape — no RDDs, no driver math beyond plan construction.
-
-    Scale shape: {_LR_ITERS} corpus scans (one per iteration), each
-    collapsing to ONE moment row; betas travel as broadcast 1-row
-    frames. At 100 TB: {_LR_ITERS} combinable aggregates, nothing else.
-    """
-    src = read_table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        F.expr(
-            "CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')"
-            " THEN 1 ELSE 0 END"
-        ).alias("y"),
-    )
-    beta = spark.range(1).select(
-        F.lit(0.0).cast("double").alias("b0"), F.lit(0.0).cast("double").alias("b1")
-    )
-    outs = []
-    for i in range(1, _LR_ITERS + 1):
-        m = src.crossJoin(F.broadcast(beta)).agg(
-            *[
-                F.sum(F.expr(expr)).cast("bigint").alias(name)
-                for name, expr in _LR_ADDENDS.items()
-            ]
-        )
-        beta = m.select(
-            F.expr(_LR_B0).alias("b0"), F.expr(_LR_B1).alias("b1")
-        )
-        outs.append(
-            beta.crossJoin(F.broadcast(m)).select(
-                F.lit(i).cast("int").alias("iteration"),
-                F.round("b0", 6).alias("b0"),
-                F.round("b1", 6).alias("b1"),
-                F.round(F.col("qa").cast("double") / 1e12, 6).alias("sum_w"),
-                F.round(F.col("qd").cast("double") / 1e12, 6).alias("sum_wz"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("iteration")
+# Logistic regression by IRLS, _LR_ITERS iterations. Per-row terms are
+# quantized to integer micro-units, so each iteration's sums are exact.
+sql_query("q_ca_logistic_irls", _lr_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2344,30 +2038,10 @@ def _gmm_sql() -> str:
     )
 
 
-@query("q_cj_gmm_em", oracle=_gmm_sql())
-def q_cj_gmm_em(spark, sf_dir):
-    """TWO-COMPONENT GAUSSIAN MIXTURE fit by EM (Dempster-Laird-Rubin
-    1977), 3 iterations, as one declarative dataflow — the distribution-
-    modeling companion of q_ca's IRLS and the algorithm under MLlib's
-    GaussianMixture: each iteration's E-step computes every row's
-    component-1 responsibility from the previous parameters (ONE
-    shared-text log-odds + logistic expression), quantizes the six
-    weighted addends to 1e4 units, and BIGINT-sums them (order-free,
-    q_ca contract); the M-step closes means/variances/log-odds in shared
-    text. Init is deterministic: kilodollar-grain exact quartiles for
-    the means (distributed-rank over ~600 price cells), pooled variance,
-    even weights. Addends are bounded so every sum stays int64 — never
-    DECIMAL128 — because DuckDB's hugeint->double cast double-rounds
-    above 2^53 (the q_ch lesson). Per-iteration parameter trajectory is
-    the output, so convergence itself is hash-checked.
-
-    Scale shape: 3 scans of the fact table (one per iteration), each a
-    map-side-combinable 6-sum aggregate against a broadcast 1-row param
-    frame; init runs on the price-range-bounded cell table. 100 TB =
-    3 combinable scans, zero corpus-sized shuffles.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_gmm_sql())
+# Two-component Gaussian mixture by EM, 3 iterations. Addends are quantized
+# and bounded so every sum stays int64: DuckDB's hugeint -> double cast
+# double-rounds above 2^53.
+sql_query("q_cj_gmm_em", _gmm_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -2713,30 +2387,9 @@ def _km4_sql() -> str:
     """
 
 
-@query("q_dc_kmeans_sql", oracle=_km4_sql())
-def q_dc_kmeans_sql(spark, sf_dir):
-    """LLOYD k-MEANS (k=4, 3 iterations) as ONE dialect-portable SQL
-    text (Lloyd 1957/1982; the algorithm under MLlib's KMeans, which
-    the engine ships seeded as rows-only q_ml_kmeans — THIS twin is
-    fully oracle-checked): features are the customer's spend and
-    order-count PERCENTILE RANKS (ntile over a total order — exact
-    integers, scale-free, deterministic on both engines), every
-    point-to-centroid distance is micro-quantized so cluster
-    assignment is an exact-integer argmin with lowest-id tie-break
-    (the q_cm decision contract), and each iteration's centroid update
-    is exact integer sums over members with empty clusters holding
-    their previous position. Output: per-cluster size, realized
-    center, WCSS, and the model centroids — the full trajectory-final
-    state, hash-checked.
-
-    Scale shape: one per-customer rollup, rank transforms at customer
-    grain, then 3+1 passes each = one combinable aggregate against a
-    broadcast 1-row centroid frame (the q_cj GMM shape). 100 TB =
-    4 combinable scans of the customer table, zero corpus-sized
-    shuffles.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_km4_sql())
+# Lloyd k-means (k = 4, 3 iterations) on spend and order-count percentile
+# ranks; distances are micro-quantized so assignment is an integer argmin.
+sql_query("q_dc_kmeans_sql", _km4_sql())
 
 
 # ---------------------------------------------------------------------------

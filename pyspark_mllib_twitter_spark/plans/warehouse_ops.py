@@ -25,7 +25,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..sources import read_table
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # Exact per-group percentiles (p50 / p95 / p99)
@@ -228,9 +228,11 @@ def q_b9_gapfill(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Nation revenue as a share of its region and region of the world, from
+# exact DECIMAL(38,0) cents.
+sql_query(
     "q_ba_ratio_to_parent",
-    oracle="""
+    """
     WITH sales AS (
       SELECT r.r_name AS region, n.n_name AS nation,
              SUM(CAST(CAST(round(o.o_totalprice * 100) AS BIGINT)
@@ -254,57 +256,6 @@ def q_b9_gapfill(spark, sf_dir):
     FROM lev ORDER BY region, nation
     """,
 )
-def q_ba_ratio_to_parent(spark, sf_dir):
-    """RATIO-TO-PARENT rollup (the BI ratio_to_report / share-of-parent
-    analytic): nation revenue as a share of its region, and the region
-    as a share of global — the two-level drill-down every revenue
-    dashboard renders. Cents accumulate as DECIMAL(38,0) (exact,
-    order-free); the two shares are shared-text closes over the exact
-    sums, so the whole share tree is hash-checked.
-
-    Scale shape: the fact table aggregates ONCE to (region, nation)
-    cells (map-side combinable through three broadcast dim joins); the
-    parent sums are windows over the 25-row cell table — hierarchy
-    depth costs windows over the DIMENSION cardinality, never a second
-    fact scan.
-    """
-    o = read_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = read_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    r = read_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    sales = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100)
-                .cast("bigint")
-                .cast("decimal(38,0)")
-            ).alias("cents")
-        )
-    )
-    wr = Window.partitionBy("region")
-    wg = Window.partitionBy()
-    lev = sales.select(
-        "region",
-        "nation",
-        "cents",
-        F.sum("cents").over(wr).alias("region_cents"),
-        F.sum("cents").over(wg).alias("global_cents"),
-    )
-    return lev.selectExpr(
-        "region",
-        "nation",
-        "CAST(cents AS BIGINT) AS cents",
-        "round(CAST(cents AS DOUBLE) / CAST(region_cents AS DOUBLE), 6)"
-        " AS share_of_region",
-        "round(CAST(region_cents AS DOUBLE) / CAST(global_cents AS DOUBLE), 6)"
-        " AS region_share_of_global",
-    ).orderBy("region", "nation")
 
 
 # ---------------------------------------------------------------------------
@@ -402,9 +353,11 @@ def q_bg_profile(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Incremental view maintenance: the v2 (count, sum) rollup per priority from
+# v1 plus insert and delete deltas; the oracle recomputes v2 from scratch.
+sql_query(
     "q_bh_incremental_agg",
-    oracle="""
+    """
     WITH final_rows AS (
       SELECT o_orderpriority AS priority,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -416,91 +369,18 @@ def q_bg_profile(spark, sf_dir):
     FROM final_rows GROUP BY priority ORDER BY priority
     """,
 )
-def q_bh_incremental_agg(spark, sf_dir):
-    """INCREMENTAL VIEW MAINTENANCE of an algebraic rollup (the
-    self-maintainable-aggregate theory — Gupta & Mumick, "Maintenance of
-    materialized views", 1995, public): a per-priority (count, sum)
-    materialized aggregate built from the base v1 is brought to v2 by
-    merging INSERT deltas (+) and DELETE deltas (−) — count and sum are
-    self-maintainable, so the base is NEVER rescanned (the materialized
-    row set is pinned with an eager checkpoint; only the two delta
-    batches are aggregated). Groups whose count reaches zero drop out.
-    The oracle recomputes v2 from scratch, so the delta algebra itself
-    is value-checked.
-
-    Scale shape: maintaining a 100 TB rollup costs O(delta) per batch —
-    aggregate each delta map-side, merge with the (group-count sized)
-    materialized state by one co-grouped outer join. This is the batch
-    algebra underneath every streaming update-mode aggregation.
-    """
-    src = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    v1 = src.filter(F.col("o_orderkey") % 4 != 0)
-    inserts = src.filter(F.col("o_orderkey") % 4 == 0)
-    deletes = v1.filter(F.col("o_orderkey") % 8 == 1)
-    # the materialized aggregate: built once, pinned — never rescanned
-    mat = (
-        v1.groupBy("priority")
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.col("cents").cast("decimal(38,0)")).alias("sum_cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def _delta(df, sign):
-        return df.groupBy("priority").agg(
-            (F.lit(sign) * F.count("*")).cast("bigint").alias("d_n"),
-            (F.lit(sign) * F.sum(F.col("cents").cast("decimal(38,0)"))).alias(
-                "d_sum"
-            ),
-        )
-
-    deltas = (
-        _delta(inserts, 1)
-        .unionByName(_delta(deletes, -1))
-        .groupBy("priority")
-        .agg(F.sum("d_n").alias("d_n"), F.sum("d_sum").alias("d_sum"))
-    )
-    merged = mat.join(deltas, "priority", "full_outer").select(
-        "priority",
-        (F.coalesce(F.col("n_rows"), F.lit(0)) + F.coalesce(F.col("d_n"), F.lit(0)))
-        .cast("bigint")
-        .alias("n_rows"),
-        (
-            F.coalesce(F.col("sum_cents"), F.lit(0).cast("decimal(38,0)"))
-            + F.coalesce(F.col("d_sum"), F.lit(0).cast("decimal(38,0)"))
-        ).alias("sum_cents"),
-    )
-    return (
-        merged.filter(F.col("n_rows") > 0)
-        .select("priority", "n_rows", F.col("sum_cents").cast("bigint"))
-        .orderBy("priority")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Referential-integrity audit (FK orphan detection across the star schema)
 # ---------------------------------------------------------------------------
 
-#: Audited FK edges: (label, child table, child key, parent table,
-#: parent key, parent-is-dimension). Dimension parents broadcast; the
-#: one fact-sized parent (orders) takes a shuffled join.
-_FK_EDGES = (
-    ("customer.nation", "customer", "c_nationkey", "nation", "n_nationkey", True),
-    ("lineitem.orders", "lineitem", "l_orderkey", "orders", "o_orderkey", False),
-    ("lineitem.part", "lineitem", "l_partkey", "part", "p_partkey", True),
-    ("lineitem.supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey", True),
-    ("orders.customer", "orders", "o_custkey", "customer", "c_custkey", True),
-)
 
-
-@query(
+# Referential-integrity audit: orphaned child rows and keys per FK edge of
+# the star schema.
+sql_query(
     "q_br_fk_orphans",
-    oracle="""
+    """
     SELECT 'customer.nation' AS edge,
            CAST(count(*) AS BIGINT) AS n_child_rows,
            CAST(sum(CASE WHEN n_nationkey IS NULL THEN 1 ELSE 0 END)
@@ -540,49 +420,6 @@ _FK_EDGES = (
     ORDER BY edge
     """,
 )
-def q_br_fk_orphans(spark, sf_dir):
-    """REFERENTIAL-INTEGRITY AUDIT: orphan detection for every FK edge
-    of the star schema in one report — child row count, orphaned child
-    rows, and distinct orphaned keys per edge (the ingestion gate that
-    catches broken upstream joins before they silently drop rows in
-    INNER joins downstream; complements q_y4's single-table
-    expectations with CROSS-table contracts).
-
-    Spark-first shape: each edge pre-aggregates the child to (key,
-    row-count) — one map-side-combinable shuffle on the key — then
-    LEFT-joins the parent's key set: dimension parents broadcast
-    (nation/part/supplier/customer), the one fact-sized parent (orders)
-    takes a shuffled join that AQE sizes. The orphan arithmetic then
-    runs on the KEY-grain frame, so the distinct-count is over
-    already-distinct keys — no second distinct shuffle. At 100 TB each
-    edge costs one child scan + one key-grain join; edges are
-    independent and union trivially.
-    """
-    results = []
-    for label, child_t, ckey, parent_t, pkey, is_dim in _FK_EDGES:
-        child = read_table(spark, sf_dir, child_t)
-        parent = read_table(spark, sf_dir, parent_t).select(pkey).distinct()
-        if is_dim:
-            parent = F.broadcast(parent)
-        keyed = child.groupBy(ckey).agg(F.count("*").alias("cnt"))
-        joined = keyed.join(parent, keyed[ckey] == parent[pkey], "left")
-        orphan = F.col(pkey).isNull()
-        results.append(
-            joined.agg(
-                F.lit(label).alias("edge"),
-                F.sum("cnt").cast("bigint").alias("n_child_rows"),
-                F.sum(F.when(orphan, F.col("cnt")).otherwise(0))
-                .cast("bigint")
-                .alias("n_orphan_rows"),
-                F.sum(F.when(orphan, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_orphan_keys"),
-            )
-        )
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("edge")
 
 
 # ---------------------------------------------------------------------------
@@ -594,9 +431,11 @@ def q_br_fk_orphans(spark, sf_dir):
 _DIV_K = 20
 
 
-@query(
+# Diversified top-k: rank within each source, then interleave by (rank,
+# score) so every source's rank-1 doc comes first; ties break on doc_id.
+sql_query(
     "q_bt_diversified_topk",
-    oracle=f"""
+    f"""
     WITH per AS (
       SELECT doc_id, source, n_chars,
              row_number() OVER (PARTITION BY source
@@ -614,43 +453,6 @@ _DIV_K = 20
     ORDER BY final_rank
     """,
 )
-def q_bt_diversified_topk(spark, sf_dir):
-    """DIVERSIFIED TOP-K: the round-robin interleave that search and
-    feed ranking use to stop one source dominating the page — rank
-    documents within each source (score = length proxy), then order
-    globally by (within-source rank, score) so rank-1 docs of every
-    source appear before any rank-2 doc (the "slot-based diversity"
-    scheme; same goal as q_ar's MMR but deterministic and
-    SQL-expressible, so it gets a full value oracle). Ties break on
-    doc_id at both levels — total order, engine-identical.
-
-    Spark-first shape: the per-source window is a WindowGroupLimit prune
-    (rank <= k cuts each partition to k rows DURING the shuffle — the
-    q_w1_topk plan shape), so the global interleave window sorts only
-    n_sources * k rows, never the corpus. At 100 TB the corpus-sized
-    stage is one partitioned window with group-limit pushdown; the
-    final sort frame stays bounded.
-    """
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    w_src = Window.partitionBy("source").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    pruned = d.withColumn("src_rank", F.row_number().over(w_src)).filter(
-        F.col("src_rank") <= _DIV_K
-    )
-    w_all = Window.orderBy("src_rank", F.col("n_chars").desc(), F.col("doc_id"))
-    return (
-        pruned.withColumn("final_rank", F.row_number().over(w_all))
-        .filter(F.col("final_rank") <= _DIV_K)
-        .select(
-            F.col("final_rank").cast("int").alias("final_rank"),
-            "doc_id",
-            "source",
-            "n_chars",
-            F.col("src_rank").cast("int").alias("src_rank"),
-        )
-        .orderBy("final_rank")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -668,9 +470,11 @@ _ABC_CLASS = (
 )
 
 
-@query(
+# ABC (80/15/5) classification of parts by revenue; the prior cumulative
+# share is compared by integer cross-multiplication.
+sql_query(
     "q_d9_abc_class",
-    oracle=f"""
+    f"""
     WITH per_part AS (
       SELECT l_partkey,
              CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100)
@@ -691,59 +495,6 @@ _ABC_CLASS = (
     FROM classed GROUP BY abc ORDER BY abc
     """,
 )
-def q_d9_abc_class(spark, sf_dir):
-    """ABC (PARETO) INVENTORY CLASSIFICATION of parts by discounted
-    revenue — the classic 80/15/5 warehouse segmentation (A-parts get
-    cycle counts and safety stock, C-parts get bulk policies; the
-    (s,Q) simulation q_by consumes exactly this split): rank parts by
-    revenue DESC, classify by the PRIOR cumulative share against the
-    80%/95% thresholds via exact integer cross-multiplication — no
-    float share ever feeds a comparison, so the boundary part lands in
-    the same class on both engines. Emits per-class part counts and
-    revenue shares.
-
-    Scale shape: one map-side-combinable per-part rollup; the ranked
-    prefix runs at part grain (sublinear in the fact table; the q_yj
-    distributed-rank recipe swaps in when the part dimension itself is
-    huge — integer-exact either way). 100 TB = one scan + one
-    part-grain shuffle + a 3-row close.
-    """
-    li = read_table(spark, sf_dir, "lineitem")
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("rev")
-    )
-    w_cum = Window.orderBy(F.desc("rev"), F.asc("l_partkey")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_tot = Window.partitionBy()
-    ranked = per_part.select(
-        "l_partkey",
-        "rev",
-        F.sum("rev").over(w_cum).alias("cum"),
-        F.sum("rev").over(w_tot).alias("tot"),
-    )
-    classed = ranked.select(
-        F.expr(_ABC_CLASS).alias("abc"), "rev", "tot"
-    )
-    return (
-        classed.groupBy("abc")
-        .agg(
-            F.count("*").cast("bigint").alias("n_parts"),
-            F.round(
-                F.sum("rev").cast("double") / F.min("tot").cast("double"), 6
-            ).alias("revenue_share"),
-            F.round(F.sum("rev").cast("double") / 100.0, 2).alias(
-                "revenue_dollars"
-            ),
-        )
-        .orderBy("abc")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -757,9 +508,11 @@ def q_d9_abc_class(spark, sf_dir):
 _KNEE_DEV = "(cum * n_parts - i * tot)"
 
 
-@query(
+# Kneedle knee of the Pareto revenue curve: argmax of the exact integer
+# deviation cum_i*N - i*T, ties broken by rank.
+sql_query(
     "q_dk_pareto_knee",
-    oracle=f"""
+    f"""
     WITH per_part AS (
       SELECT l_partkey,
              CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100)
@@ -785,55 +538,3 @@ _KNEE_DEV = "(cum * n_parts - i * tot)"
     FROM best
     """,
 )
-def q_dk_pareto_knee(spark, sf_dir):
-    """KNEE DETECTION on the Pareto revenue curve (the "kneedle"
-    max-distance-from-chord criterion, Satopaa et al. ICDCS-W 2011):
-    where does cumulative part revenue stop earning its rank? The
-    answer replaces q_d9's FIXED 80/95 thresholds with the
-    data-chosen cutoff — the same primitive picks k from a scree plot
-    (q_bw PCA spectrum). The deviation dev_i = cum_i*N - i*T is an
-    exact integer cross-multiplication (no float share feeds the
-    argmax) and the argmax is TakeOrderedAndProject with a
-    deterministic rank tie-break.
-
-    Scale shape: one per-part rollup + a part-grain prefix (q_yj
-    distributed-rank swap applies) + a top-1 tail. 100 TB = one scan
-    + one part-grain shuffle + a 1-row close.
-    """
-    li = read_table(spark, sf_dir, "lineitem")
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("rev")
-    )
-    w_ord = Window.orderBy(F.desc("rev"), F.asc("l_partkey"))
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    ranked = per_part.select(
-        "rev",
-        F.row_number().over(w_ord).alias("i"),
-        F.sum("rev").over(w_cum).alias("cum"),
-        F.sum("rev").over(w_all).alias("tot"),
-        F.count("*").over(w_all).alias("n_parts"),
-    )
-    best = (
-        ranked.select(
-            "i", "cum", "tot", "n_parts", F.expr(_KNEE_DEV).alias("dev")
-        )
-        .orderBy(F.desc("dev"), F.asc("i"))
-        .limit(1)
-    )
-    return best.select(
-        F.col("i").cast("bigint").alias("knee_rank"),
-        F.col("n_parts").cast("bigint").alias("n_parts"),
-        F.round(
-            F.col("i").cast("double") / F.col("n_parts").cast("double"), 6
-        ).alias("knee_part_share"),
-        F.round(
-            F.col("cum").cast("double") / F.col("tot").cast("double"), 6
-        ).alias("knee_revenue_share"),
-    )

@@ -4,6 +4,7 @@ from .io import (
     read_table,
     read_tweets_jsonl,
     register_views,
+    run_sql,
     spread,
 )
 
@@ -13,5 +14,6 @@ __all__ = [
     "read_table",
     "read_tweets_jsonl",
     "register_views",
+    "run_sql",
     "spread",
 ]

@@ -10,6 +10,7 @@ inference costs an extra full scan. The new engine declares explicit
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -112,10 +113,19 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for ``spark.sql``."""
+def register_views(spark: SparkSession, sf_dir: str, sql: str) -> None:
+    """Register, as temp views for ``spark.sql``, the fixture tables whose
+    names appear as words in ``sql``. Each read runs one job, so a text that
+    names two tables reads two, not all ten."""
     for name in FIXTURE_TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        if re.search(rf"\b{name}\b", sql):
+            read_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Run ``sql`` on Spark over the fixture tables it names."""
+    register_views(spark, sf_dir, sql)
+    return spark.sql(sql)
 
 
 def read_tweets_jsonl(spark: SparkSession, path: str) -> DataFrame:

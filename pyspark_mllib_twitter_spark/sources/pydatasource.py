@@ -214,9 +214,9 @@ class DocStoreWriter(DataSourceWriter):
         # Time travel (opt-in, per-store): every commit also publishes an
         # immutable versioned snapshot ``_MANIFEST.v{N}.json`` and SKIPS
         # reclaiming superseded data files (older versions still reference
-        # them); ``docstore_vacuum`` owns reclamation instead. Without the
-        # flag, behavior is unchanged: replaced files are deleted at commit
-        # (the round-6 overwrite-hygiene contract).
+        # them), so a store written with history keeps every version's
+        # files. Without the flag, replaced files are deleted at commit
+        # (the overwrite-hygiene contract).
         # Optimistic concurrency control (Delta/Iceberg commit-conflict
         # shape, public designs): a read-modify-write cycle (DELETE /
         # MERGE / OPTIMIZE plans against manifest version V, rewrites
@@ -373,7 +373,7 @@ class DocStoreWriter(DataSourceWriter):
         # overwrite) orphans its predecessors on disk forever. Staged names
         # are uuid4, so a new file can never collide with a prior one.
         # EXCEPT under retain_history: superseded files stay readable
-        # through older manifest versions; docstore_vacuum reclaims them.
+        # through older manifest versions.
         if not self.retain_history:
             keep = {e["file"] for e in files}
             for name in replaced:
@@ -435,8 +435,7 @@ class DocStoreReader(DataSourceReader):
             raise ValueError("docstore: .load(path) is required")
         # Time travel: .option("version", N) plans from the immutable
         # snapshot manifest instead of the latest pointer. Versions exist
-        # only for stores written with retain_history (and survive until
-        # docstore_vacuum retires them).
+        # only for stores written with retain_history.
         version = options.get("version")
         name = f"_MANIFEST.v{int(version)}.json" if version else "_MANIFEST.json"
         try:
@@ -446,7 +445,7 @@ class DocStoreReader(DataSourceReader):
             if version:
                 raise ValueError(
                     f"docstore: version {version} not found (never written "
-                    "with retain_history, or vacuumed)"
+                    "with retain_history)"
                 ) from None
             raise
         # Optional manifest-subset read: plan partitions for ONLY the named
@@ -628,67 +627,6 @@ def docstore_merge(
         "n_updates": n_updates,
         "n_inserts": n_inserts,
         "n_deletes": n_deletes,
-    }
-
-
-#: Manifest versions :func:`docstore_vacuum` keeps.
-VACUUM_RETAIN = 2
-
-
-def docstore_vacuum(store: str) -> dict:
-    """Reclaim unreachable history from a ``retain_history`` docstore: keep
-    the newest ``VACUUM_RETAIN`` manifest versions (the latest pointer always
-    survives), delete older version snapshots, then delete every data file
-    referenced by NO retained manifest. The lakehouse VACUUM shape
-    (Delta/Iceberg expire-snapshots, public designs): time travel is a
-    retention CONTRACT, not an unbounded log — without vacuum every
-    overwrite pins its predecessors to disk forever.
-
-    Metadata-only: reads manifests, never data. Safe under the store's
-    single-writer contract (no commit races the sweep). Returns the
-    decision — ``kept_versions`` / ``dropped_versions`` /
-    ``deleted_files`` / ``live_files`` — so callers and tests can assert
-    reclamation actually happened.
-    """
-    import json as _json
-    import os as _os
-    import re as _re
-
-    vpat = _re.compile(r"^_MANIFEST\.v(\d+)\.json$")
-    versions = sorted(
-        int(m.group(1))
-        for m in (vpat.match(f) for f in _os.listdir(store))
-        if m
-    )
-    kept_v = versions[-VACUUM_RETAIN:]
-    dropped_v = versions[:-VACUUM_RETAIN] if len(versions) > VACUUM_RETAIN else []
-
-    def _files(name: str) -> set[str]:
-        with open(_os.path.join(store, name), encoding="utf-8") as f:
-            return {e["file"] for e in _json.load(f)["files"]}
-
-    live = _files("_MANIFEST.json")
-    for v in kept_v:
-        live |= _files(f"_MANIFEST.v{v}.json")
-    dead: set[str] = set()
-    for v in dropped_v:
-        dead |= _files(f"_MANIFEST.v{v}.json")
-    dead -= live
-    for name in sorted(dead):
-        try:
-            _os.remove(_os.path.join(store, name))
-        except OSError:
-            pass  # already gone — reclamation is idempotent
-    for v in dropped_v:
-        try:
-            _os.remove(_os.path.join(store, f"_MANIFEST.v{v}.json"))
-        except OSError:
-            pass
-    return {
-        "kept_versions": kept_v,
-        "dropped_versions": dropped_v,
-        "deleted_files": sorted(dead),
-        "live_files": sorted(live),
     }
 
 

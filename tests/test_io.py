@@ -48,6 +48,34 @@ def test_spread_is_noop_when_already_parallel(spark, sf_smoke):
     assert spread(already) is already  # no second exchange
 
 
+def test_register_views_reads_only_the_tables_the_sql_names(spark, sf_smoke, monkeypatch):
+    """Each table read runs a job, so ``register_views`` reads only the
+    fixture tables named as words in the text (``n_orders`` is not
+    ``orders``), and those resolve in ``spark.sql``."""
+    from pyspark.sql import DataFrameReader
+
+    from pyspark_mllib_twitter_spark.sources import register_views
+
+    reads = []
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.extend(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    sql = (
+        "SELECT count(*) AS n_orders FROM orders "
+        "JOIN lineitem ON o_orderkey = l_orderkey"
+    )
+    register_views(spark, sf_smoke, sql)
+    assert sorted(os.path.basename(p) for p in reads) == [
+        "lineitem.parquet",
+        "orders.parquet",
+    ]
+    assert spark.sql(sql).first().n_orders > 0
+
+
 def test_python_datasource_partitions_and_determinism(spark):
     """Spark 4 Python Data Source connector (sources/pydatasource.py): the
     reader plans ceil(n/partitions) id-range input partitions (generation is
@@ -275,20 +303,15 @@ def test_docstore_compaction_collapses_files(spark, tmp_path):
     }
 
 
-def test_docstore_time_travel_and_vacuum(spark, tmp_path):
+def test_docstore_time_travel(spark, tmp_path):
     """Time-travel contract: with retain_history every commit publishes an
     immutable versioned manifest; old versions stay readable (data files
-    pinned) after later overwrites; docstore_vacuum expires
-    old snapshots, reclaims data files referenced by NO retained version,
-    and makes expired version reads fail loudly — while every retained
-    version and the latest pointer read exactly as before."""
+    pinned) after later overwrites, and a version never written fails
+    loudly."""
     import json
     import os
 
-    from pyspark_mllib_twitter_spark.sources.pydatasource import (
-        docstore_vacuum,
-        register,
-    )
+    from pyspark_mllib_twitter_spark.sources.pydatasource import register
 
     register(spark)
     store = str(tmp_path / "tt")
@@ -327,27 +350,9 @@ def test_docstore_time_travel_and_vacuum(spark, tmp_path):
     }
     assert v1_files <= set(os.listdir(store))
 
-    out = docstore_vacuum(store)
-    assert out["kept_versions"] == [2, 3]
-    assert out["dropped_versions"] == [1]
-    # v1's files were referenced ONLY by v1 -> reclaimed
-    assert set(out["deleted_files"]) == v1_files
-    assert not (v1_files & set(os.listdir(store)))
-    assert not os.path.exists(os.path.join(store, "_MANIFEST.v1.json"))
-
-    # retained versions and latest still read exactly
-    assert ids(2) == list(range(100, 150))
-    assert ids(3) == list(range(100, 170))
-    assert ids() == ids(3)
-
-    # expired version reads fail loudly, not silently-empty
-    with pytest.raises(Exception, match="version 1"):
-        ids(1)
-
-    # vacuum is idempotent
-    again = docstore_vacuum(store)
-    assert again["dropped_versions"] == []
-    assert again["deleted_files"] == []
+    # a version that was never written fails loudly, not silently-empty
+    with pytest.raises(Exception, match="version 4"):
+        ids(4)
 
 
 def test_docstore_merge_upserts_with_zone_pruning(spark, tmp_path):

@@ -15,6 +15,12 @@ defined more than once are skipped: name matching cannot tell them apart.
 
 A second guard caps the total count of those defaulted parameters, so an
 option set only by a test cannot come back either.
+
+A third guard fails on every module-level package ``def`` or ``class`` that
+no code outside ``tests/`` names (as a name, an attribute or an import; prose
+does not count). Code only a test reaches is dead code with a test attached.
+Re-exports in an ``__init__.py`` are not callers; ``@query`` recipes are
+exempt, since the registry calls them.
 """
 
 from __future__ import annotations
@@ -25,7 +31,10 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "pyspark_mllib_twitter_spark"
-CALLERS = [PACKAGE, ROOT / "tools", ROOT / "perfbench", ROOT / "tests", ROOT / "bench.py"]
+PROGRAM = [
+    PACKAGE, ROOT / "tools", ROOT / "perfbench", ROOT / "bench.py", ROOT / "__spark_entry__.py",
+]
+CALLERS = PROGRAM + [ROOT / "tests"]
 #: Ceiling on the package's settable values: defaulted parameters of
 #: non-``@query`` defs.
 MAX_OPTIONS = 54
@@ -116,4 +125,41 @@ def test_option_count_stays_under_ceiling():
     assert n <= MAX_OPTIONS, (
         f"{n} settable options > {MAX_OPTIONS}; write values no real caller "
         "varies in the body instead"
+    )
+
+
+def _named(path: Path) -> collections.Counter:
+    """Names a file uses as code: loaded names, attributes and imports
+    (except an ``__init__.py``'s re-exports)."""
+    found = collections.Counter()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            found[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            found[node.attr] += 1
+        elif isinstance(node, ast.alias) and path.name != "__init__.py":
+            found[node.name.rsplit(".", 1)[-1]] += 1
+    return found
+
+
+def test_every_package_def_has_a_caller_outside_tests():
+    named = collections.Counter()
+    for src in PROGRAM:
+        for path in _py_files(src):
+            named.update(_named(path))
+    orphans = []
+    for path in _py_files(PACKAGE):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if isinstance(node, ast.FunctionDef) and _is_recipe(node):
+                continue
+            own = sum(
+                1 for n in ast.walk(node) if isinstance(n, ast.Name) and n.id == node.name
+            )
+            if named[node.name] - own <= 0:
+                orphans.append(f"{path.relative_to(ROOT)}:{node.lineno} {node.name}")
+    assert not orphans, (
+        f"{len(orphans)} package def(s) no code outside tests/ uses; delete them "
+        "with their tests:\n" + "\n".join(orphans)
     )

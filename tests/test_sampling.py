@@ -1,13 +1,12 @@
-"""Sampling operators: hash-sample determinism/portability guarantees and
-stratified-sample rate tolerances. (Oracle-level check runs via
-q_sample_hash in test_oracle.)"""
+"""Sampling operators: hash-sample determinism/portability guarantees.
+(Oracle-level checks run via q_sample_hash and q_sample_stratified in
+test_oracle.)"""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from pyspark_mllib_twitter_spark.operators.sampling import hash_sample, stratified_sample
+from pyspark_mllib_twitter_spark.operators.sampling import hash_sample
 from pyspark_mllib_twitter_spark.sources import read_table
 
 
@@ -43,24 +42,3 @@ def test_hash_sample_guards(orders):
         hash_sample(orders, "o_orderkey", 0)
     with pytest.raises(ValueError):
         hash_sample(orders, "o_orderkey", 17)
-
-
-def test_stratified_sample_respects_per_stratum_rates(orders):
-    fractions = {"O": 0.5, "F": 0.1, "P": 1.0}
-    out = stratified_sample(orders, "o_orderstatus", fractions)
-    base = {r.o_orderstatus: r.n for r in orders.groupBy("o_orderstatus").agg(F.count("*").alias("n")).collect()}
-    got = {r.o_orderstatus: r.n for r in out.groupBy("o_orderstatus").agg(F.count("*").alias("n")).collect()}
-    for status, frac in fractions.items():
-        if status not in base:
-            continue
-        expect = base[status] * frac
-        if frac == 1.0:
-            assert got.get(status, 0) == base[status]
-        else:
-            # Bernoulli: allow ±40% relative (small strata at sf0.001)
-            assert 0.6 * expect <= got.get(status, 0) <= 1.4 * expect, (status, expect, got)
-    # seeded: reproducible within the engine
-    again = stratified_sample(orders, "o_orderstatus", fractions)
-    assert sorted(r.o_orderkey for r in out.collect()) == sorted(
-        r.o_orderkey for r in again.collect()
-    )

@@ -55,11 +55,6 @@ SLOW = {
     "q_xc_semantic_dedup",
 }
 
-FIXTURE_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 
 def canon(df):
     """The external checker's canonicalization: column-name sort, 6dp float
@@ -84,6 +79,7 @@ def main() -> int:
 
     from pyspark_mllib_twitter_spark.plans import REGISTRY
     from pyspark_mllib_twitter_spark.plans.registry import base_name
+    from pyspark_mllib_twitter_spark.sources.io import FIXTURE_TABLES
 
     # Vanilla on purpose — do NOT route through session.get_spark. Only the
     # master/parallelism knobs a harness would also set, no repo confs.
