@@ -19,15 +19,11 @@ Scale notes inline per query; the common themes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..sources import read_table, run_sql
 from .registry import query, sql_query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
 
 
 def _dec_sum(col: str | F.Column) -> F.Column:
@@ -78,7 +74,7 @@ def q_sub_q17(spark, sf_dir):
     agg output). Plain ``AVG`` is safe here: quantities are integral
     doubles, so partial sums are exact in any order and both engines divide
     the same exact sum."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     thr = li.groupBy("l_partkey").agg(
@@ -130,7 +126,7 @@ def q_w6_analytic(spark, sf_dir):
     )
     wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
             "o_orderkey",
@@ -187,7 +183,7 @@ def q_u2_unpivot(spark, sf_dir):
     oracle spells the same reshape as a UNION ALL to stay dialect-neutral.
     Measures are cast to a common double before unpivoting — Spark requires
     a single value type and the oracle must match it."""
-    part = _t(spark, sf_dir, "part").select(
+    part = read_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_retailprice").cast("double").alias("p_retailprice"),
         F.col("p_size").cast("double").alias("p_size"),
@@ -248,7 +244,7 @@ def q_j_nullsafe(spark, sf_dir):
     hash join on the null-safe key (nulls hash to one partition — for a
     skew-heavy null bucket at scale, pre-aggregate first as done here so at
     most one null row survives per side)."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.when(F.col("user_id") % 7 == 0, F.lit(None))
         .otherwise(F.col("user_id"))
         .alias("uid"),
@@ -302,10 +298,10 @@ def q_j_skew_salted(spark, sf_dir):
     hash."""
     from ..operators.skew import salted_join
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice", "l_discount"
     )
-    part = _t(spark, sf_dir, "part").select(
+    part = read_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
     joined = salted_join(li, part, on="l_partkey", n_salts=8)
@@ -348,7 +344,7 @@ def q_a8_salted_agg(spark, sf_dir):
     immaterial."""
     from ..operators.skew import salted_aggregate
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_type", F.col("value").cast("decimal(38,6)").alias("value_dec"),
         "value",
     )
@@ -444,7 +440,7 @@ def q_sample_stratified(spark, sf_dir):
     no shuffle but the final order."""
     from ..operators.sampling import stratified_hash_sample
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         stratified_hash_sample(
             ev, strata_col="event_type", key_col="event_id",
@@ -476,7 +472,7 @@ def q_f_bitwise(spark, sf_dir):
     arithmetic on BIGINT, Spark's shiftright is 32/64-bit specific), and
     popcount. Bit tricks are the workhorse of hash-bucketing and bitmask
     columns (see the SimHash operator's band extraction)."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") < 1024)
+    o = read_table(spark, sf_dir, "orders").where(F.col("o_orderkey") < 1024)
     k = F.col("o_orderkey")
     return o.select(
         "o_orderkey",
@@ -547,7 +543,7 @@ def q_udf_arrow_map(spark, sf_dir):
                 ["vec_id", "dim", "vec_sum"],
             )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     return emb.mapInArrow(
         batches, "vec_id bigint, dim bigint, vec_sum double"
     ).orderBy("vec_id")
@@ -579,7 +575,7 @@ def q_stat_crosstab(spark, sf_dir):
     FILTER'd counts under identical column names. Same single-shuffle
     pivot plan as q_g3; the value of pinning it is the API (crosstab is
     the one-liner users actually reach for)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return (
         o.stat.crosstab("o_orderstatus", "o_orderpriority")
         .orderBy("o_orderstatus_o_orderpriority")
@@ -655,7 +651,7 @@ def q_a11_sketch_merge(spark, sf_dir):
     unioned (``hll_union_agg``) into a global estimate without rescanning
     rows. Rows-only here (the sketch is engine-internal);
     tests/test_properties.py bounds the estimate against exact distinct."""
-    c = _t(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     partials = c.groupBy("c_nationkey").agg(
         F.hll_sketch_agg("c_custkey").alias("sk"),
     )
@@ -685,7 +681,7 @@ def q_a12_listagg(spark, sf_dir):
     both engines concatenate in partition-arrival order and no hash can
     match."""
     c = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .where(F.col("c_custkey") <= 200)
         .select("c_nationkey", "c_name")
     )
@@ -765,7 +761,7 @@ def q_udf_grouped_agg(spark, sf_dir):
     p90 = pandas_udf(_p90, "double")
     cnt = pandas_udf(_cnt, "bigint")
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -811,9 +807,11 @@ sql_query(
 )
 
 
-@query(
+# Cohort retention: users grouped by first active week, counted distinct in
+# each later week.
+sql_query(
     "q_xo_cohort_retention",
-    oracle="""
+    """
     WITH ev AS (
       SELECT user_id, CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE)
                AS act_week
@@ -822,7 +820,7 @@ sql_query(
       SELECT user_id, MIN(act_week) AS cohort_week FROM ev GROUP BY user_id
     )
     SELECT c.cohort_week,
-           CAST(datediff('day', c.cohort_week, e.act_week) / 7 AS INT)
+           CAST(CAST(e.act_week - c.cohort_week AS BIGINT) / 7 AS INT)
              AS weeks_since,
            CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS n_active
     FROM ev e JOIN cohort c ON e.user_id = c.user_id
@@ -830,40 +828,6 @@ sql_query(
     ORDER BY 1, 2
     """,
 )
-def q_xo_cohort_retention(spark, sf_dir):
-    """∅-ref behavioral analytics: cohort retention matrix — users grouped
-    by first-activity week, counted distinct in each later week. The
-    companion to q_xn_funnel: funnel measures depth, retention measures
-    longevity; together they're the core product-analytics pair.
-
-    Spark-first: cohorts are a per-user min-aggregate joined back on
-    user_id — the same one-partitioning agg-then-join shape as the funnel,
-    so no second shuffle before the final (cohort_week, weeks_since)
-    rollup. Week truncation happens in the scan projection (both engines
-    start weeks on Monday); weeks_since is day-difference div 7, exact
-    integer arithmetic on both sides."""
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(
-            "user_id",
-            F.date_trunc("week", F.col("ts")).cast("date").alias("act_week"),
-        )
-    )
-    cohort = ev.groupBy("user_id").agg(F.min("act_week").alias("cohort_week"))
-    return (
-        ev.join(cohort, "user_id")
-        .select(
-            "user_id",
-            "cohort_week",
-            (F.datediff("act_week", "cohort_week") / 7)
-            .cast("int")
-            .alias("weeks_since"),
-        )
-        .groupBy("cohort_week", "weeks_since")
-        .agg(F.countDistinct("user_id").cast("bigint").alias("n_active"))
-        .orderBy("cohort_week", "weeks_since")
-    )
 
 
 @query(
@@ -983,7 +947,7 @@ def q_xq_editdist_join(spark, sf_dir):
     calls after predicate pushdown)."""
     from ..sources import spread
 
-    p = spread(_t(spark, sf_dir, "part")).select(
+    p = spread(read_table(spark, sf_dir, "part")).select(
         "p_partkey",
         "p_name",
         F.split("p_name", " ").getItem(0).alias("blk"),
@@ -1128,7 +1092,7 @@ def q_xt_profile(spark, sf_dir):
     aggregations. At 100 TB swap exact distinct counts for
     approx_count_distinct (sketch, partial-aggregable) — pinned trade, same
     as q_udf_grouped_agg's note."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
 
     def num(col):
         return [
@@ -1215,7 +1179,7 @@ def q_xu_drift_psi(spark, sf_dir):
     tiny 10-row aggregates join. The baseline percentile is the only
     full-width pass. At 100 TB swap exact percentiles for
     ``approx_percentile`` — boundaries need stability, not exactness."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").alias("x")
     )
     a = o.filter(F.col("o_orderkey") % 2 == 0).select("x")
@@ -1491,7 +1455,7 @@ def q_w9_topk_ties(spark, sf_dir):
     at most the rows tying into the top 3 before the group shuffle
     (plan-asserted in tests/test_plans.py).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").cast("decimal(18,2)").desc()
     )

@@ -276,17 +276,19 @@ sql_query(
 ROC_BINS = 20
 
 
-@query(
+# ROC points at 20 equal-width score bins (score = value in cents, label =
+# purchase) from exact descending cumulative counts.
+sql_query(
     "q_ay_roc_curve",
-    oracle=f"""
+    f"""
     WITH scored AS (
       SELECT CAST(round(value * 100) AS BIGINT) AS cents,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS label
       FROM events),
     bounds AS (SELECT min(cents) AS lo, max(cents) AS hi FROM scored),
     binned AS (
-      SELECT least(CAST(((cents - lo) * {ROC_BINS})
-                        // (hi - lo + 1) AS BIGINT),
+      SELECT least(CAST(floor(((cents - lo) * {ROC_BINS})
+                              / (hi - lo + 1)) AS BIGINT),
                    {ROC_BINS - 1}) AS bin,
              label
       FROM scored, bounds),
@@ -314,62 +316,6 @@ ROC_BINS = 20
     FROM cum ORDER BY bin
     """,
 )
-def q_ay_roc_curve(spark, sf_dir):
-    """ROC curve points at {ROC_BINS} equal-width score thresholds
-    (Fawcett 2006, "An introduction to ROC analysis", public): score =
-    event value in cents, label = purchase. TPR/FPR at threshold b count
-    rows with bin >= b — exact integer cumulative counts; the two rates
-    are the only floats (shared-text divisions). Complements
-    ``q_yv_auc_ranksum``: that gives the scalar area, this the curve.
-
-    Scale shape: one combinable aggregate collapses the corpus to
-    {ROC_BINS} (bin, pos, neg) rows; the descending cumulative window
-    runs over those {ROC_BINS} rows (constant, NOT corpus-sized — the
-    single-partition window is bounded by the bin count). Bin bounds
-    come from a broadcast 1-row min/max aggregate, integer arithmetic
-    throughout.
-    """
-    scored = read_table(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-    )
-    bounds = scored.agg(
-        F.min("cents").alias("lo"), F.max("cents").alias("hi")
-    )
-    binned = scored.crossJoin(F.broadcast(bounds)).select(
-        F.least(
-            F.floor(
-                (F.col("cents") - F.col("lo"))
-                * ROC_BINS
-                / (F.col("hi") - F.col("lo") + 1)
-            ).cast("bigint"),
-            F.lit(ROC_BINS - 1).cast("bigint"),
-        ).alias("bin"),
-        "label",
-    )
-    per_bin = binned.groupBy("bin").agg(
-        F.count(F.when(F.col("label") == 1, 1)).cast("bigint").alias("pos"),
-        F.count(F.when(F.col("label") == 0, 1)).cast("bigint").alias("neg"),
-    )
-    w = (
-        Window.orderBy(F.col("bin").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy()
-    cum = per_bin.select(
-        "bin",
-        F.sum("pos").over(w).alias("pos_ge"),
-        F.sum("neg").over(w).alias("neg_ge"),
-        F.sum("pos").over(wall).alias("pos_tot"),
-        F.sum("neg").over(wall).alias("neg_tot"),
-    )
-    return cum.select(
-        F.col("bin").cast("bigint"),
-        F.col("pos_ge").cast("bigint").alias("n_pos_ge"),
-        F.col("neg_ge").cast("bigint").alias("n_neg_ge"),
-        F.round(F.col("pos_ge").cast("double") / F.col("pos_tot"), 6).alias("tpr"),
-        F.round(F.col("neg_ge").cast("double") / F.col("neg_tot"), 6).alias("fpr"),
-    ).orderBy("bin")
 
 
 # ---------------------------------------------------------------------------

@@ -43,10 +43,6 @@ from ..streaming.streams import KMV_K
 from .registry import query, sql_query
 
 
-def _docs(spark, sf_dir):
-    return read_table(spark, sf_dir, "documents")
-
-
 # ---------------------------------------------------------------------------
 # Per-domain quota sampling (URL function family)
 # ---------------------------------------------------------------------------
@@ -109,7 +105,7 @@ def q_xv_domain_quota(spark, sf_dir):
     (partial top-k before the shuffle — see q_xw's plan) so no domain's
     full row set ever sorts on one task.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "source", "lang")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "source", "lang")
     url = F.concat(
         F.lit("https://cdn"),
         (F.col("doc_id") % 3).cast("string"),
@@ -197,7 +193,7 @@ def q_xw_inverted_index(spark, sf_dir):
     the shuffle, so stopword-grade terms (millions of postings at 100 TB)
     never sort their full posting list on one task.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select("doc_id", F.explode(TXT.tokens("text")).alias("term"))
     tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     stats = tf.groupBy("term").agg(
@@ -310,7 +306,7 @@ def q_xx_cms_heavy_hitters(spark, sf_dir):
     query result) is engine-portable. Exact counts ride along here only
     for the comparison; production reads estimates alone.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     tf = (
         d.select(F.explode(TXT.tokens("text")).alias("term"))
         .groupBy("term")
@@ -640,7 +636,7 @@ def q_y2_bpe_merge_step(spark, sf_dir):
     Repeating the step after applying the winning merge (re-tokenize,
     recount) is the full training loop; each iteration is this same plan.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     freq = (
         d.select(F.explode(TXT.tokens("text")).alias("w"))
         .groupBy("w")
@@ -726,7 +722,7 @@ def q_y3_pmi_cooccur(spark, sf_dir):
     projection. Output is threshold-filtered and ordered by the token pair
     (never by the float PMI), so engine agreement is exact.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     pos = d.select(
         "doc_id", F.posexplode(TXT.tokens("text")).alias("p0", "tok")
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
@@ -851,7 +847,7 @@ def q_y4_expectations(spark, sf_dir):
     o = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem")
     cu = read_table(spark, sf_dir, "customer")
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
 
     o_agg = o.agg(
         F.count("*").alias("n"),
@@ -917,9 +913,12 @@ MIX_ALPHA = 0.3
 MIX_TARGET_FRAC = 0.6
 
 
-@query(
+# Temperature-scaled language mixture: per-language keep counts from n^alpha
+# weights, rounded to one integer per group before any row is gated, and keep
+# sets chosen by md5 rank.
+sql_query(
     "q_y5_mix_temperature",
-    oracle=f"""
+    f"""
     WITH n AS (SELECT lang, count(*) AS n_s FROM documents GROUP BY lang),
     tot AS (SELECT sum(n_s) AS n_total, sum(pow(n_s, {MIX_ALPHA})) AS z FROM n),
     k AS (
@@ -932,70 +931,13 @@ MIX_TARGET_FRAC = 0.6
       SELECT d.doc_id, d.lang, k.k_s,
              row_number() OVER (
                PARTITION BY d.lang
-               ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id) AS rnk
+               ORDER BY md5(CAST(d.doc_id AS STRING)), d.doc_id) AS rnk
       FROM documents d JOIN k USING (lang))
     SELECT doc_id, lang, CAST(k_s AS BIGINT) AS k_target,
            CAST(CASE WHEN rnk <= k_s THEN 1 ELSE 0 END AS BIGINT) AS kept
     FROM ranked ORDER BY doc_id
     """,
 )
-def q_y5_mix_temperature(spark, sf_dir):
-    """Temperature-based language/source mixture (mC4 / XLM-R, public):
-    re-weight groups by ``p_g^alpha`` (alpha < 1 flattens the distribution
-    toward uniform), convert the weights to integer per-group keep counts
-    against a target corpus size, and select each group's keep set by md5
-    rank — deterministic, engine-portable. Complements ``q_x4_mix_sources``
-    (fixed per-source weights): here the weights are COMPUTED from the
-    observed distribution, the production shape. Keyed on ``lang``, the
-    fixture's genuinely imbalanced axis.
-
-    Float-robustness: the only cross-engine float math (pow/normalize) is
-    collapsed to ONE integer per group (``round``) before any row is
-    gated; per-row selection is then pure md5 ranking, so a 1-ulp libm
-    difference only matters if a group's real-valued target count sits
-    within 1 ulp of the round-half boundary. The fixture's uniform
-    ``source`` axis lands EVERY group exactly there (25 * 0.5), which is
-    why the mixture keys on the imbalanced axis and a .6 target — keep
-    integer targets off the boundary or the answer is engine-dependent.
-
-    Scale shape: group counts and the normalizer are two broadcast-sized
-    aggregates; the rank is a window per group (same head-bounded rank
-    note as q_xv — the keep-only production form gets WindowGroupLimit).
-    """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "lang")
-    n = d.groupBy("lang").agg(F.count("*").alias("n_s"))
-    tot = n.agg(
-        F.sum("n_s").alias("n_total"),
-        F.sum(F.pow("n_s", F.lit(MIX_ALPHA))).alias("z"),
-    )
-    k = n.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "n_s",
-        F.least(
-            F.col("n_s"),
-            F.round(
-                F.pow("n_s", F.lit(MIX_ALPHA))
-                / F.col("z")
-                * F.col("n_total")
-                * MIX_TARGET_FRAC,
-                0,
-            ).cast("bigint"),
-        ).alias("k_s"),
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    return (
-        d.join(F.broadcast(k.select("lang", "k_s")), "lang")
-        .withColumn("rnk", F.row_number().over(w))
-        .select(
-            "doc_id",
-            "lang",
-            F.col("k_s").cast("bigint").alias("k_target"),
-            (F.col("rnk") <= F.col("k_s")).cast("bigint").alias("kept"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1313,7 +1255,7 @@ def q_ya_chi2_independence(spark, sf_dir):
     — |langs| x |sources| cells, broadcast-sized however large the corpus;
     the margins cross-join is cell-count work, not row-count work.
     """
-    d = _docs(spark, sf_dir).select("lang", "source")
+    d = read_table(spark, sf_dir, "documents").select("lang", "source")
     obs = d.groupBy("lang", "source").agg(F.count("*").alias("o"))
     rows_m = obs.groupBy("lang").agg(F.sum("o").alias("r"))
     cols_m = obs.groupBy("source").agg(F.sum("o").alias("c"))
@@ -1551,7 +1493,7 @@ def q_yd_bpe_train(spark, sf_dir):
     Rows-only by necessity (a driver-side loop is not one SQL text); the
     golden test replays the identical greedy algorithm in pure Python and
     requires the exact merge sequence (tests/test_corpus_ops.py)."""
-    return bpe_train(spread(_docs(spark, sf_dir)))
+    return bpe_train(spread(read_table(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------
@@ -1683,7 +1625,7 @@ def q_ek_bpe_apply(spark, sf_dir):
     sequential-pass form equals true BPE for this training-consistent
     merge list."""
     toks = (
-        spread(_docs(spark, sf_dir))
+        spread(read_table(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.explode(
@@ -1753,7 +1695,7 @@ def q_ye_weighted_sample(spark, sf_dir):
     k-row merge, no global sort, no single-partition window. Weighted
     sampling over 100 TB costs one scan.
     """
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
             "bigint"
@@ -2239,7 +2181,7 @@ def q_ym_vocab_coverage(spark, sf_dir):
     popularity ranking in q_y1; at extreme vocabularies the distributed
     rank recipe from q_yj applies verbatim).
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     tf = (
         d.select(F.explode(TXT.tokens("text")).alias("term"))
         .groupBy("term")
@@ -2634,7 +2576,7 @@ def q_yr_setsim_prefix_join(spark, sf_dir):
     elements out of every prefix, so the stopword key that explodes a
     naive token join generates no pairs.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select("doc_id", TXT.tokens("text").alias("toks")).filter(
         F.size("toks") >= 3
     )
@@ -2794,12 +2736,15 @@ def q_ys_haversine_knn(spark, sf_dir):
 KM_CUTOFF = "2001-01-01"
 
 
-@query(
+# Kaplan-Meier survival of customer lifetime as exp of summed logs, with an
+# explicit zero clamp (Spark's ln(0) is NULL, DuckDB's is -inf).
+sql_query(
     "q_yt_survival_km",
-    oracle=f"""
+    f"""
     WITH life AS (
       SELECT o_custkey,
-             date_diff('day', min(o_orderdate), max(o_orderdate)) AS dur,
+             CAST(CAST(max(o_orderdate) AS DATE) - CAST(min(o_orderdate) AS DATE)
+                  AS BIGINT) AS dur,
              CASE WHEN max(o_orderdate) < TIMESTAMP '{KM_CUTOFF}'
                   THEN 1 ELSE 0 END AS observed
       FROM orders GROUP BY o_custkey),
@@ -2829,58 +2774,6 @@ KM_CUTOFF = "2001-01-01"
     FROM km WHERE n_deaths > 0 ORDER BY duration_days
     """,
 )
-def q_yt_survival_km(spark, sf_dir):
-    """Kaplan-Meier survival curve of customer lifetime (first order →
-    last order, right-censored at {KM_CUTOFF}) — the product-limit
-    estimator S(t) = prod_(t_i <= t) (1 - d_i / n_i) with d_i churn
-    events and n_i the at-risk count (Kaplan & Meier, JASA 1958 —
-    public). Emits the standard curve rows: one per duration with >= 1
-    event.
-
-    Scale shape: the corpus-sized stage is ONE per-customer min/max
-    aggregate; everything after operates on per-DURATION aggregates
-    (calendar-bounded — a few thousand rows at any corpus size), so the
-    unpartitioned cumulative windows run on a vocabulary-sized frame
-    (same argument as q_ym_vocab_coverage; the q_yj distributed-rank
-    recipe applies if durations ever stop being calendar-bounded). The
-    product becomes exp-of-sum-of-logs with an explicit zero clamp —
-    Spark's ln() is NULL on 0 while DuckDB's is -inf, so the clamp keeps
-    both engines on the defined branch.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    life = o.groupBy("o_custkey").agg(
-        F.datediff(F.max("o_orderdate"), F.min("o_orderdate")).alias("dur"),
-        (F.max("o_orderdate") < F.lit(KM_CUTOFF).cast("timestamp"))
-        .cast("long")
-        .alias("observed"),
-    )
-    n_total = life.count()
-    per_d = life.groupBy("dur").agg(
-        F.count("*").alias("n_all"), F.sum("observed").alias("n_deaths")
-    )
-    w_prev = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    risk = per_d.withColumn(
-        "at_risk",
-        F.lit(n_total) - F.coalesce(F.sum("n_all").over(w_prev), F.lit(0)),
-    )
-    factor = 1.0 - F.col("n_deaths").cast("double") / F.col("at_risk")
-    km = risk.withColumn(
-        "s",
-        F.when(F.min(factor).over(w_cum) <= 0.0, F.lit(0.0)).otherwise(
-            F.exp(F.sum(F.log(factor)).over(w_cum))
-        ),
-    )
-    return (
-        km.filter(F.col("n_deaths") > 0)
-        .select(
-            F.col("dur").cast("bigint").alias("duration_days"),
-            F.col("n_deaths").cast("bigint").alias("n_churned"),
-            F.col("at_risk").cast("bigint").alias("at_risk"),
-            F.round("s", 6).alias("survival"),
-        )
-        .orderBy("duration_days")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3661,11 +3554,13 @@ def q_z7_lorenz(spark, sf_dir):
 # Benford first-digit audit (fraud/data-quality screen)
 # ---------------------------------------------------------------------------
 
-@query(
+# Benford audit: first-digit frequencies of order totals (read from their
+# DECIMAL(18,2) text) against log10(1 + 1/d).
+sql_query(
     "q_z8_benford",
-    oracle="""
+    """
     WITH digits AS (
-      SELECT CAST(substring(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR), 1, 1)
+      SELECT CAST(substring(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS STRING), 1, 1)
                   AS INT) AS d
       FROM orders WHERE o_totalprice >= 1),
     obs AS (SELECT d, count(*) AS n FROM digits GROUP BY d),
@@ -3677,42 +3572,6 @@ def q_z7_lorenz(spark, sf_dir):
     FROM obs CROSS JOIN tot ORDER BY digit
     """,
 )
-def q_z8_benford(spark, sf_dir):
-    """Benford first-significant-digit audit of order totals: observed
-    leading-digit frequencies vs the Benford expectation log10(1 + 1/d)
-    (Newcomb 1881 / Benford 1938 — public; the classic forensic
-    data-quality screen — fabricated or truncated numeric columns deviate
-    hard). The leading digit is extracted from the DECIMAL(18,2) string
-    form so both engines see identical text (raw double formatting is
-    engine-specific); values < 1 are excluded to keep the first character
-    a digit. NOTE: the fixture's totals are NOT Benford-distributed
-    (bounded uniform-ish synthesis), so the deviation column is the
-    interesting readout — the test layer pins that the screen actually
-    flags it.
-
-    Scale shape: map-only digit extraction + a 9-group aggregate. Nothing
-    else.
-    """
-    o = read_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
-    d = F.substring(
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string"), 1, 1
-    ).cast("int")
-    obs = o.select(d.alias("d")).groupBy("d").agg(F.count("*").alias("n"))
-    tot = obs.agg(F.sum("n").alias("total"))
-    benford = F.log10(1.0 + 1.0 / F.col("d"))
-    return (
-        obs.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("d").cast("int").alias("digit"),
-            F.col("n").cast("bigint").alias("n"),
-            F.round(F.col("n").cast("double") / F.col("total"), 6).alias("observed_p"),
-            F.round(benford, 6).alias("benford_p"),
-            F.round(
-                F.col("n").cast("double") / F.col("total") - benford, 6
-            ).alias("deviation"),
-        )
-        .orderBy("digit")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -4108,7 +3967,7 @@ def q_b3_containment_join(spark, sf_dir):
     non-matching hot key costs one shuffle pass and zero output. Apply
     the prune only when the prefix vocabulary provably fits a broadcast.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select("doc_id", TXT.tokens("text").alias("toks")).filter(
         F.size("toks") >= 3
     )
@@ -4240,7 +4099,7 @@ def q_b6_feature_hashing(spark, sf_dir):
     state anywhere — the entire reason feature hashing exists at 100 TB
     (CountVectorizer's vocab broadcast does not scale; this needs none).
     """
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select("doc_id", F.explode(TXT.tokens("text")).alias("tok"))
     hashed = toks.select(
         "doc_id",
@@ -4311,7 +4170,7 @@ def q_b7_phrase_search(spark, sf_dir):
     scan), co-grouped on doc_id. The top-phrase pick is a global
     TakeOrderedAndProject of the bigram counts, broadcast as one row.
     """
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select("doc_id", TXT.tokens("text").alias("ts")).filter(
         F.size("ts") >= 2
     )

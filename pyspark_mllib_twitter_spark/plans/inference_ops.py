@@ -294,13 +294,15 @@ def q_zi_acf(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
+# RFM segmentation: recency, frequency and monetary quintiles (5 = best), each
+# ntile ordered by (metric, o_custkey) so tiles are reproducible.
+sql_query(
     "q_zj_rfm",
-    oracle="""
+    """
     WITH cust AS (
       SELECT o_custkey,
-             date_diff('day', MAX(o_orderdate),
-                       (SELECT MAX(o_orderdate) FROM orders)) AS recency_days,
+             CAST(CAST((SELECT MAX(o_orderdate) FROM orders) AS DATE)
+                  - CAST(MAX(o_orderdate) AS DATE) AS BIGINT) AS recency_days,
              CAST(COUNT(*) AS BIGINT) AS frequency,
              SUM(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
                       AS DECIMAL(38,0))) AS monetary_cents
@@ -322,68 +324,6 @@ def q_zi_acf(spark, sf_dir):
     ORDER BY r_score, f_score, m_score
     """,
 )
-def q_zj_rfm(spark, sf_dir):
-    """RFM customer segmentation — recency / frequency / monetary
-    quintile scores (classical direct-marketing segmentation), reported
-    as segment sizes and average spend per (R,F,M) cell. Score direction
-    follows the convention that 5 is best: most recent, most frequent,
-    highest spend.
-
-    Determinism: each ntile orders by (metric, o_custkey) — a total
-    order — so tile assignment is exactly reproducible on both engines
-    (ntile's uneven-bucket rule is SQL-standard: the first n mod 5 tiles
-    get the extra row). Monetary stays exact cents-DECIMAL until the
-    final shared-text average.
-
-    Scale shape: the per-customer rollup is one combinable groupBy; the
-    three ntile windows are global sorts of the CUSTOMER aggregate (one
-    row per customer — orders-of-magnitude smaller than the fact table,
-    and Spark runs all three in one Window stage per sort key). At the
-    1e9-customer extreme you'd swap exact ntile for approx_percentile
-    score cuts exactly as q_yn/q_yo document; exact quintiles keep the
-    oracle fixture.
-    """
-    orders = read_table(spark, sf_dir, "orders")
-    asof = orders.agg(F.max("o_orderdate").alias("asof"))
-    cust = (
-        orders.crossJoin(F.broadcast(asof))
-        .groupBy("o_custkey")
-        .agg(
-            F.datediff(F.first("asof"), F.max("o_orderdate")).alias(
-                "recency_days"
-            ),
-            F.count("*").cast("bigint").alias("frequency"),
-            F.sum(
-                F.round(F.col("o_totalprice") * 100)
-                .cast("bigint")
-                .cast("decimal(38,0)")
-            ).alias("monetary_cents"),
-        )
-    )
-    scored = cust.selectExpr(
-        "o_custkey",
-        "monetary_cents",
-        "ntile(5) OVER (ORDER BY recency_days DESC, o_custkey) AS r_score",
-        "ntile(5) OVER (ORDER BY frequency ASC, o_custkey) AS f_score",
-        "ntile(5) OVER (ORDER BY monetary_cents ASC, o_custkey) AS m_score",
-    )
-    return (
-        scored.groupBy("r_score", "f_score", "m_score")
-        .agg(
-            F.count("*").cast("bigint").alias("n_customers"),
-            F.round(
-                F.sum("monetary_cents").cast("double") / F.count("*") / 100.0, 6
-            ).alias("avg_monetary"),
-        )
-        .select(
-            F.col("r_score").cast("int").alias("r_score"),
-            F.col("f_score").cast("int").alias("f_score"),
-            F.col("m_score").cast("int").alias("m_score"),
-            "n_customers",
-            "avg_monetary",
-        )
-        .orderBy("r_score", "f_score", "m_score")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1190,12 +1130,15 @@ _LR_V = (
 )
 
 
-@query(
+# Two-arm log-rank test on time to first purchase (arms by user parity,
+# censored at the window end); per-day E and V terms are quantized to BIGINTs
+# before the sums.
+sql_query(
     "q_be_logrank",
-    oracle=f"""
+    f"""
     WITH ev AS (
       SELECT user_id, CAST(user_id % 2 AS INT) AS arm,
-             date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+             CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p
       FROM events WHERE user_id IS NOT NULL),
     grid AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
@@ -1237,87 +1180,6 @@ _LR_V = (
     FROM terms
     """,
 )
-def q_be_logrank(spark, sf_dir):
-    """Two-arm LOG-RANK test (Mantel 1966; Peto & Peto 1972 — public) on
-    time-to-first-purchase, arms by deterministic user parity, censoring
-    at the observation-window end — the significance companion of the
-    Kaplan-Meier curve (q_yt): at each event day t the observed arm-1
-    events compare against the hypergeometric expectation d·n1/n with
-    variance d·(n1/n)(1−n1/n)(n−d)/(n−1); Z = (O1 − ΣE1)/√ΣV. Per-day
-    terms are quantized to exact BIGINTs before summation (the JSD/PSI
-    discipline), so both engines add identical integers and the closing
-    z is one shared-text expression.
-
-    Scale shape: the event log collapses to one row per user (first
-    purchase or censor time — a combinable min/any aggregate), then to
-    per-day exit counts; at-risk counts are a descending cumulative
-    window over the calendar-bounded day table. Nothing after the first
-    aggregate is corpus-sized.
-    """
-    from pyspark.sql import Window as W
-
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(
-            "user_id",
-            (F.col("user_id") % 2).cast("int").alias("arm"),
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-            ).alias("day"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("is_p"),
-        )
-    )
-    grid = ev.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    per_user = (
-        ev.crossJoin(F.broadcast(grid))
-        .groupBy("user_id", "arm")
-        .agg(
-            F.coalesce(
-                F.min(F.when(F.col("is_p") == 1, F.col("day"))) - F.min("d0"),
-                F.min("d1") - F.min("d0"),
-            ).alias("t"),
-            F.when(
-                F.count(F.when(F.col("is_p") == 1, 1)) > 0, 1
-            )
-            .otherwise(0)
-            .alias("observed"),
-        )
-    )
-    exits = per_user.groupBy("t").agg(
-        F.count("*").cast("bigint").alias("x_all"),
-        F.count(F.when(F.col("arm") == 1, 1)).cast("bigint").alias("x_1"),
-        F.count(F.when(F.col("observed") == 1, 1)).cast("bigint").alias("d"),
-        F.count(F.when((F.col("observed") == 1) & (F.col("arm") == 1), 1))
-        .cast("bigint")
-        .alias("d1"),
-    )
-    wdesc = W.orderBy(F.col("t").desc()).rowsBetween(W.unboundedPreceding, 0)
-    risk = exits.select(
-        "t",
-        "d",
-        "d1",
-        F.sum("x_all").over(wdesc).alias("n"),
-        F.sum("x_1").over(wdesc).alias("n1"),
-    )
-    terms = risk.filter(F.col("d") > 0).selectExpr(
-        "d1", f"{_LR_E1} AS e_q", f"{_LR_V} AS v_q"
-    )
-    return terms.agg(
-        F.sum("d1").cast("bigint").alias("o1"),
-        F.expr(
-            f"round(CAST(SUM(CAST(e_q AS DECIMAL(38,0))) AS DOUBLE) / {_LR_Q}, 6)"
-        ).alias("e1"),
-        F.expr(
-            f"round(CAST(SUM(CAST(v_q AS DECIMAL(38,0))) AS DOUBLE) / {_LR_Q}, 6)"
-        ).alias("v"),
-        F.expr(
-            "round((CAST(SUM(d1) AS DOUBLE)"
-            f" - CAST(SUM(CAST(e_q AS DECIMAL(38,0))) AS DOUBLE) / {_LR_Q})"
-            f" / sqrt(CAST(SUM(CAST(v_q AS DECIMAL(38,0))) AS DOUBLE) / {_LR_Q})"
-            ", 6)"
-        ).alias("z"),
-    )
 
 
 # ---------------------------------------------------------------------------

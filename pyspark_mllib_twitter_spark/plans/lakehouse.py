@@ -28,16 +28,12 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
 from ..sources import read_table
 from .registry import query, sql_query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -235,7 +231,7 @@ def q_xl_pagerank(spark, sf_dir):
     fixed and contribution sums are exact decimals (order-independent), so
     Spark's distributed sum and DuckDB's serial sum see identical values
     bit-for-bit before the final 6dp round."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     edges = (
         li.select(
             (F.col("l_suppkey") % _PR_MOD).alias("src"),
@@ -264,7 +260,7 @@ def q_xl2_pagerank_converged(spark, sf_dir):
     plan size (tests/test_lakehouse.py); the 3-round values of the same
     :func:`pagerank` are oracle-checked by ``q_xl_pagerank``. The folded
     graph is dense, so it converges in 1-3 rounds at sf0.001-0.1."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     edges = (
         li.select(
             (F.col("l_suppkey") % _PR_MOD).alias("src"),
@@ -378,7 +374,7 @@ def q_xm_triangles(spark, sf_dir):
     The Spark side orients edges by DEGREE (skew-proof wedge generation);
     the oracle orients by id — the triangle set, and therefore every
     per-node count, is identical under any total order."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
     raw = li.select(
         (F.col("l_suppkey") % _TRI_MOD).alias("a"),
         (F.col("l_partkey") % _TRI_MOD).alias("b"),
@@ -468,7 +464,7 @@ def q_xr_incremental_rollup(spark, sf_dir):
     incremental cost is O(delta + touched-state). avg derives from merged
     sum/n_vals at read time; storing it would break mergeability. The
     decimal sum also makes merge order irrelevant bit-for-bit."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     states = [
         rollup_state(ev.filter(F.col("event_id") % 3 == i)) for i in range(3)
     ]
@@ -525,7 +521,7 @@ def q_xs_snapshot_diff(spark, sf_dir):
     (key, 16-byte digest) pairs, so the diff of a 100 TB table moves
     key+digest volume. The unchanged-row filter applies post-join (it needs
     both sides), but the fingerprint PROJECTION pushes into both scans."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     v1 = docs.filter(F.col("doc_id") % 10 != 7).select(
         "doc_id", F.md5("text").alias("fp_old")
     )
@@ -625,7 +621,7 @@ def q_xl3_hits(spark, sf_dir):
     tests/test_lakehouse.py checks the scores against a NumPy power
     iteration on the collected edge list to 1e-6 and pins the
     eigenvector properties (unit norm, non-negativity)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
     edges = li.select(
         F.col("l_suppkey").alias("hub"), F.col("l_partkey").alias("auth")
     ).distinct()

@@ -34,11 +34,7 @@ from pyspark.sql import functions as F
 
 from ..sources import read_table
 from .registry import query
-
-
-def _logq(x: str) -> str:
-    """ln(integer) quantized to integer nano-units — the q_zu contract."""
-    return f"CAST(round(ln(CAST({x} AS DOUBLE)) * 1000000000.0, 0) AS BIGINT)"
+from .science_ops import _logq
 
 
 # ---------------------------------------------------------------------------

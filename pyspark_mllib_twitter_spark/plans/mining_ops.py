@@ -38,10 +38,6 @@ from ..sources import read_table, spread
 from .registry import query, sql_query
 
 
-def _docs(spark, sf_dir):
-    return read_table(spark, sf_dir, "documents")
-
-
 # ---------------------------------------------------------------------------
 # Distributed OLS via normal equations (closed form, oracle-exact)
 # ---------------------------------------------------------------------------
@@ -218,7 +214,7 @@ def q_za_bm25(spark, sf_dir):
     TakeOrderedAndProject (per-task partial top-k, no global sort) and
     only then does the 20-row window assign ranks.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select("doc_id", TXT.tokens("text").alias("tk"))
     dl = toks.select("doc_id", F.size("tk").alias("dl"))
     stats = dl.selectExpr(
@@ -258,15 +254,17 @@ def q_za_bm25(spark, sf_dir):
 # Gaps and islands: per-user activity streaks
 # ---------------------------------------------------------------------------
 
-@query(
+# Gaps and islands: each user's runs of consecutive active days (day number
+# minus row number is constant within a run), with the longest run's start.
+sql_query(
     "q_zb_gaps_islands",
-    oracle="""
+    """
     WITH days AS (
       SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
       FROM events WHERE user_id IS NOT NULL),
     tagged AS (
       SELECT user_id, d,
-             date_diff('day', DATE '2024-01-01', d)
+             CAST(d - DATE '2024-01-01' AS BIGINT)
                - row_number() OVER (PARTITION BY user_id ORDER BY d) AS grp
       FROM days),
     islands AS (
@@ -284,43 +282,6 @@ def q_za_bm25(spark, sf_dir):
     FROM marked GROUP BY user_id ORDER BY user_id
     """,
 )
-def q_zb_gaps_islands(spark, sf_dir):
-    """Gaps-and-islands: per-user runs of CONSECUTIVE active days (the
-    classical streak/tenure SQL pattern): an island is a maximal run of
-    days where day_number - row_number is constant. Reports active days,
-    streak count, longest streak, and the longest streak's start date
-    (earliest on ties) — all exact integer/date arithmetic, fully
-    hash-checked.
-
-    Scale shape: one distinct on (user, day) — partial-agg shuffle of
-    8-byte pairs — then one per-user window (narrow frame) and two
-    map-side-combinable aggregates. The day grain bounds per-user state
-    regardless of raw event volume.
-    """
-    ev = read_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    days = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
-    w = Window.partitionBy("user_id").orderBy("d")
-    tagged = days.withColumn(
-        "grp",
-        F.datediff(F.col("d"), F.lit("2024-01-01")) - F.row_number().over(w),
-    )
-    islands = tagged.groupBy("user_id", "grp").agg(
-        F.count("*").cast("bigint").alias("len"), F.min("d").alias("start_d")
-    )
-    wmax = Window.partitionBy("user_id")
-    marked = islands.withColumn("mx", F.max("len").over(wmax))
-    return (
-        marked.groupBy("user_id")
-        .agg(
-            F.sum("len").cast("bigint").alias("active_days"),
-            F.count("*").cast("bigint").alias("n_streaks"),
-            F.max("len").cast("bigint").alias("longest_streak"),
-            F.min(F.when(F.col("len") == F.col("mx"), F.col("start_d"))).alias(
-                "longest_start"
-            ),
-        )
-        .orderBy("user_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -791,7 +752,7 @@ def q_c5_dirichlet_ql(spark, sf_dir):
     frame left-joined with the (tiny) matching-doc tf pivot; top-k is
     TakeOrderedAndProject. 100 TB = one scan + one doc-keyed join.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select("doc_id", TXT.tokens("text").alias("tk"))
     dl = toks.select("doc_id", F.size("tk").alias("dl"))
     flat = toks.select("doc_id", F.explode("tk").alias("term"))
@@ -909,7 +870,7 @@ def q_ce_g2_collocations(spark, sf_dir):
     broadcasts into the final projection. The report-floor filter prunes
     the long tail before the margin joins.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     pos = d.select(
         "doc_id", F.posexplode(TXT.tokens("text")).alias("p0", "tok")
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
@@ -1015,7 +976,7 @@ def q_ci_huffman(spark, sf_dir):
     optimal average length vs an independent implementation
     (tests/test_mining_ops.py).
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     freq = (
         d.select(F.explode(F.split(F.col("text"), "")).alias("ch"))
         .filter(F.col("ch") != "")

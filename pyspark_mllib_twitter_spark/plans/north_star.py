@@ -20,14 +20,6 @@ from .registry import query
 _SW = TXT.STOPWORDS
 
 
-def _docs(spark, sf_dir):
-    return read_table(spark, sf_dir, "documents")
-
-
-def _emb(spark, sf_dir):
-    return read_table(spark, sf_dir, "embeddings")
-
-
 # ---------------------------------------------------------------------------
 # Text analysis (oracle-checkable)
 # ---------------------------------------------------------------------------
@@ -45,7 +37,7 @@ def _emb(spark, sf_dir):
 def q_ns_token_stats(spark, sf_dir):
     """Token counting (whitespace tokenization, JVM-side)."""
     return (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             TXT.token_count("text").cast("bigint").alias("n_tokens"),
@@ -82,7 +74,7 @@ def q_ns_quality(spark, sf_dir):
     Timing: the r4→r5 bench delta (0.69→1.80s) re-timed at 0.62s solo at
     sf0.1 (3-run median, r6) — suite-position/GC artifact; expression and
     plan unchanged since round 1."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         TXT.alpha_ratio("text").alias("alpha_ratio"),
@@ -111,7 +103,7 @@ def _langid_oracle() -> str:
 @query("q_ns_langid", oracle=_langid_oracle())
 def q_ns_langid(spark, sf_dir):
     """Language ID: stopword-overlap argmax with alphabetical tie-break."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     toks = TXT.tokens("text")
     return d.select(
         "doc_id",
@@ -141,7 +133,7 @@ def q_ns_token_bpe(spark, sf_dir):
     # idx=0 = whole match (the pattern is alternation, no capture groups)
     toks = F.regexp_extract_all(F.lower("text"), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), F.lit(0))
     return (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.size(toks).cast("bigint").alias("n_bpe"),
@@ -192,7 +184,7 @@ def q_udf_pandas_cosine(spark, sf_dir):
         return pd.Series(out)
 
     spark.udf.register("cosine_pd", pandas_udf(_cosine, "double"))
-    _emb(spark, sf_dir).createOrReplaceTempView("emb_udf_view")
+    read_table(spark, sf_dir, "embeddings").createOrReplaceTempView("emb_udf_view")
     return spark.sql(
         """
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -260,7 +252,7 @@ def q_ns_emb_neardup(spark, sf_dir):
     L2-normalized vectors (the 5th dedup family). Threshold chosen so the
     random fixture yields a small, stable candidate set; recall properties
     are covered by the LSH ANN tests."""
-    pairs = dedup.embedding_near_dup_pairs(spread(_emb(spark, sf_dir)))
+    pairs = dedup.embedding_near_dup_pairs(spread(read_table(spark, sf_dir, "embeddings")))
     return pairs.select(
         "id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim")
     ).orderBy("id_a", "id_b")
@@ -277,7 +269,7 @@ def q_ns_emb_neardup(spark, sf_dir):
 def q_ns_fingerprint(spark, sf_dir):
     """Document fingerprinting: md5 of canonicalized text."""
     return (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", TXT.fingerprint("text").alias("fp"))
         .orderBy("doc_id")
     )
@@ -299,7 +291,7 @@ def q_ns_fingerprint(spark, sf_dir):
 def q_ns_dedup_exact(spark, sf_dir):
     """Exact (content-hash) dedup groups with keep-min-id policy."""
     return (
-        dedup.content_dedup_groups(_docs(spark, sf_dir))
+        dedup.content_dedup_groups(read_table(spark, sf_dir, "documents"))
         .select("keep_id", "n_copies")
         .orderBy("keep_id")
     )
@@ -331,7 +323,7 @@ def q_ns_jaccard_pairs(spark, sf_dir):
     fixture's shuffled-word duplicates — ~1.5k real pairs at every sf, so the
     hash match is non-vacuous (3-grams found nothing: the duplicates reorder
     words)."""
-    d = spread(_docs(spark, sf_dir).filter(F.col("doc_id") < 300))
+    d = spread(read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
     return (
         dedup.ngram_jaccard_pairs(d, n=1)
         .orderBy("id_a", "id_b")
@@ -342,7 +334,7 @@ def q_ns_jaccard_pairs(spark, sf_dir):
 def q_ns_dedup_minhash(spark, sf_dir):
     """MinHash-LSH fuzzy dedup: surviving doc ids (property-tested: recall
     vs exact Jaccard, idempotence)."""
-    survivors = dedup.minhash_dedup(spread(_docs(spark, sf_dir)))
+    survivors = dedup.minhash_dedup(spread(read_table(spark, sf_dir, "documents")))
     return survivors.select("doc_id").orderBy("doc_id")
 
 
@@ -408,7 +400,7 @@ def q_ns_minhash_portable(spark, sf_dir):
     90k for unigrams — word-shuffled dups are ``q_ns_jaccard_pairs``'s job;
     LSH showcases the banded candidate cut, which needs a sparse pair
     set)."""
-    pairs = dedup.minhash_pairs_portable(spread(_docs(spark, sf_dir)))
+    pairs = dedup.minhash_pairs_portable(spread(read_table(spark, sf_dir, "documents")))
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -442,7 +434,7 @@ def q_ns_minhash_dedup_e2e(spark, sf_dir):
     id set, not just its size, is hash-checked. Same component machinery
     as ``q_x6_cc_clusters`` but over LSH-verified near-dup edges instead of
     gram-block edges — the composition a production fuzzy-dedup runs."""
-    d = spread(_docs(spark, sf_dir))
+    d = spread(read_table(spark, sf_dir, "documents"))
     pairs = dedup.minhash_pairs_portable(d)
     reps = dedup.keep_one_representatives(
         pairs.select("id_a", "id_b"), d.select("doc_id"), "doc_id"
@@ -457,7 +449,7 @@ def q_ns_minhash_dedup_e2e(spark, sf_dir):
 @query("q_ns_dedup_simhash", oracle=None)  # xxhash64-based signature, engine-specific
 def q_ns_dedup_simhash(spark, sf_dir):
     """SimHash near-dup candidate pairs (hamming <= 3 over 63-bit sigs)."""
-    return dedup.simhash_candidate_pairs(spread(_docs(spark, sf_dir))).orderBy("id_a", "id_b")
+    return dedup.simhash_candidate_pairs(spread(read_table(spark, sf_dir, "documents"))).orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------
@@ -483,7 +475,7 @@ def q_ns_dedup_simhash(spark, sf_dir):
 def q_ns_knn_exact(spark, sf_dir):
     """Exact brute-force cosine top-5 for 10 query vectors — the ANN
     baseline. Corpus streams, queries broadcast, JVM-side dot products."""
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     res = similarity.brute_force_top_k(
         corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5
     )
@@ -496,7 +488,7 @@ def q_ns_knn_exact(spark, sf_dir):
 def q_ns_ann_lsh(spark, sf_dir):
     """Random-projection LSH ANN, same contract as q_ns_knn_exact
     (property-tested: recall >= 0.6 vs exact)."""
-    emb = spread(_emb(spark, sf_dir))
+    emb = spread(read_table(spark, sf_dir, "embeddings"))
     res = similarity.lsh_top_k(corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5)
     return res.orderBy("query_id", "rn")
 
@@ -504,7 +496,7 @@ def q_ns_ann_lsh(spark, sf_dir):
 @query("q_ns_ann_ivf", oracle=None)  # KMeans centroids are engine-specific
 def q_ns_ann_ivf(spark, sf_dir):
     """IVF (KMeans-partitioned) ANN — the large-|Q| scale path."""
-    emb = spread(_emb(spark, sf_dir))
+    emb = spread(read_table(spark, sf_dir, "embeddings"))
     res = similarity.ivf_top_k(corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5)
     return res.orderBy("query_id", "rn")
 
@@ -518,7 +510,7 @@ def q_ns_ann_pq(spark, sf_dir):
     # NOT spread: PQ's per-subspace KMeans fits launch ~16 small jobs that
     # each re-read the encoded corpus; an extra exchange in that lineage
     # costs more than the single-task scan saves (measured 4.6s -> 13.4s).
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     res = similarity.pq_top_k(corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5)
     return res.orderBy("query_id", "rn")
 
@@ -531,7 +523,7 @@ def q_ns_ann_ivfpq(spark, sf_dir):
     budget quantizes finer than raw-vector PQ), then exact re-rank.
     Recall-vs-exact is property-tested alongside the PQ-only operator at
     an equal code budget (tests/test_properties.py)."""
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     res = similarity.ivfpq_top_k(corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5)
     return res.orderBy("query_id", "rn")
 
@@ -565,7 +557,7 @@ def q_ns_ann_ivfpq_idx(spark, sf_dir):
 
     tag = _re.sub(r"\W+", "_", sf_dir).strip("_")
     path = f"/tmp/ann_ivfpq_idx_{tag}"
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     similarity.build_ivfpq_index(emb, path, n_centroids=16)
     res = similarity.probe_ivfpq_index(
         spark, path, emb.filter(F.col("vec_id") < 10), k=5, n_probe=8
@@ -792,7 +784,7 @@ def q_ns_pipeline(spark, sf_dir):
     through decimal-sum/count so both engines divide identical inputs."""
     from ..operators import dedup as D
 
-    docs = spread(_docs(spark, sf_dir))
+    docs = spread(read_table(spark, sf_dir, "documents"))
     sid = F.col("doc_id").cast("string")
     raw = F.concat(
         F.col("text"),
@@ -843,7 +835,7 @@ def q_xc_semantic_dedup(spark, sf_dir):
     assignment is engine-specific; the removal property is pinned in
     tests/test_properties.py.
     """
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     planted = emb.filter(F.col("vec_id") % 50 == 0).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.transform(
@@ -879,7 +871,7 @@ def q_ns_compression_quality(spark, sf_dir):
     """
     import pandas as pd
 
-    docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    docs = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
 
     def batches(it):
         import zlib
@@ -971,7 +963,7 @@ def q_d7_cohens_kappa(spark, sf_dir):
     intersects — no Python), one class-grain aggregate, a constant
     close. 100 TB = one scan + a 36-cell tail.
     """
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     pred = d.select(
         F.col("lang").alias("truth"), TXT.lang_guess("text").alias("guess")
     )

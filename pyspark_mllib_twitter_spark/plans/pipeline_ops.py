@@ -57,10 +57,6 @@ CONTAM_N = 3
 CONTAM_BENCH_MOD = 97
 
 
-def _docs(spark, sf_dir):
-    return read_table(spark, sf_dir, "documents")
-
-
 # ---------------------------------------------------------------------------
 # Chunking
 # ---------------------------------------------------------------------------
@@ -90,7 +86,7 @@ def q_x1_chunk_docs(spark, sf_dir):
     stage. (Reference scope: the reference has no chunker; this extends its
     text pipeline, COMP5349_2.py:151, toward training-data prep.)
     """
-    d = _docs(spark, sf_dir).select("doc_id", "text", F.length("text").alias("n"))
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text", F.length("text").alias("n"))
     k = F.ceil((F.col("n") - CHUNK_OVERLAP) / float(CHUNK_STRIDE))
     k = F.greatest(F.lit(1).cast("long"), k)
     return (
@@ -140,7 +136,7 @@ def q_x2_pack_sequences(spark, sf_dir):
     window at any scale. Greedy first-fit (order-dependent state) is the
     ``applyInPandas`` twin, intentionally not this query.
     """
-    docs = _docs(spark, sf_dir).select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "source", "doc_id", TXT.token_count("text").cast("bigint").alias("n_tokens")
     )
     w = (
@@ -209,7 +205,7 @@ def q_x3_contamination(spark, sf_dir):
     non-benchmark docs never reach it. The final left join back to
     ``documents`` keeps row count stable (uncontaminated docs report 0).
     """
-    return _contamination_report(spread(_docs(spark, sf_dir)))
+    return _contamination_report(spread(read_table(spark, sf_dir, "documents")))
 
 
 def _contamination_report(d):
@@ -309,7 +305,7 @@ def q_x5_tfidf_topterms(spark, sf_dir):
     window prunes to WindowGroupLimit so only 5 rows per source survive the
     final sort.
     """
-    docs = spread(_docs(spark, sf_dir))
+    docs = spread(read_table(spark, sf_dir, "documents"))
     toks = docs.select("source", "doc_id", F.explode(TXT.tokens("text")).alias("term"))
     tf = toks.groupBy("source", "term").agg(F.count("*").cast("bigint").alias("tf"))
     df_tab = toks.groupBy("term").agg(
@@ -400,7 +396,7 @@ def q_x6_cc_clusters(spark, sf_dir):
     """
     from ..operators.dedup import keep_one_representatives
 
-    d = spread(_docs(spark, sf_dir))
+    d = spread(read_table(spark, sf_dir, "documents"))
     grams = d.select(
         "doc_id", F.explode(TXT.word_ngrams(TXT.tokens("text"), CC_N)).alias("g")
     )
@@ -477,7 +473,7 @@ def q_x7_pack_greedy(spark, sf_dir):
     value oracle (the others are vs-batch-twin or property-tested).
     Fixed-boundary packing (pure SQL, no Python) is ``q_x2``.
     """
-    docs = _docs(spark, sf_dir).select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "source", "doc_id", TXT.token_count("text").cast("bigint").alias("n_tokens")
     )
     return (
@@ -578,7 +574,7 @@ def q_x8_repetition(spark, sf_dir):
     the text column itself is never shuffled. The left join back to
     ``documents`` keeps row count stable (empty docs report zeros).
     """
-    return _repetition_report(spread(_docs(spark, sf_dir)))
+    return _repetition_report(spread(read_table(spark, sf_dir, "documents")))
 
 
 def _repetition_report(d):
@@ -673,7 +669,7 @@ def q_x9_lm_score(spark, sf_dir):
     broadcast. Scores round to 4dp on both engines (avg-of-logs is
     summation-order-sensitive in the last bits).
     """
-    return _lm_score_report(spread(_docs(spark, sf_dir)))
+    return _lm_score_report(spread(read_table(spark, sf_dir, "documents")))
 
 
 def _lm_score_report(d):
@@ -767,7 +763,7 @@ def q_xa_split_holdout(spark, sf_dir):
         .otherwise(F.lit("train"))
     )
     return (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .select("source", split.alias("split"), TXT.token_count("text").cast("bigint").alias("nt"))
         .groupBy("source", "split")
         .agg(
@@ -840,7 +836,7 @@ def q_xb_boilerplate(spark, sf_dir):
     ``array_contains`` against the broadcast set) — the full text never
     shuffles, and the rebuild preserves line order without a window.
     """
-    d = spread(_docs(spark, sf_dir))
+    d = spread(read_table(spark, sf_dir, "documents"))
     text2 = F.concat(
         F.lit("subscribe to newsletter variant "),
         (F.col("doc_id") % 3).cast("string"),
@@ -928,7 +924,7 @@ def q_xd_incremental_dedup(spark, sf_dir):
     """
     from ..operators.dedup import dedup_against
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     batch = d.filter(F.col("doc_id") % 4 == 0).unionByName(
         d.filter(F.col("doc_id") % 8 == 1).select(
@@ -1030,7 +1026,7 @@ def q_xe_cdc_chunks(spark, sf_dir):
     """
     from ..operators.cdc import cdc_chunks
 
-    return cdc_chunks(spread(_docs(spark, sf_dir))).orderBy("doc_id", "chunk_id")
+    return cdc_chunks(spread(read_table(spark, sf_dir, "documents"))).orderBy("doc_id", "chunk_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1086,7 +1082,7 @@ def q_xf_chunk_dedup(spark, sf_dir):
     """
     from ..operators.cdc import cdc_chunks
 
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     v2_docs = d.select(
         "doc_id",
         F.when(
@@ -1150,7 +1146,7 @@ def q_xg_chunk_dedup_bucketed(spark, sf_dir):
     from ..operators.cdc import cdc_chunks
 
     tag = _re.sub(r"\W+", "_", sf_dir).strip("_")
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     idx = build_chunk_fp_index(d, f"chunk_fp_index_v1_{tag}")
     v2_docs = d.select(
         "doc_id",
@@ -1223,7 +1219,7 @@ def q_xh_para_dedup(spark, sf_dir):
     row_number pattern, so no single-partition sort and map-side combine
     collapses duplicate-heavy fingerprints early.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     paras = d.select(
         "doc_id",
         (F.col("doc_id") - (F.col("doc_id") % 4)).alias("page_base"),
@@ -1337,7 +1333,7 @@ def q_xi_span_dedup(spark, sf_dir):
     bound, not corpus bound); the reassembly anti-join + groupBy shuffles
     token-position pairs once. No window over the corpus, no Python.
     """
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select("doc_id", TXT.tokens("text").alias("t"))
     grams = toks.select(
         "doc_id",
@@ -1504,7 +1500,7 @@ def q_dt_filter_funnel(spark, sf_dir):
     (split/list ops, no explode, no shuffle), one 6-group aggregate, and
     a constant 5-row funnel tail. 100 TB = one scan + a 6-row reduce.
     """
-    t = with_funnel_fail(_docs(spark, sf_dir)).select("fail")
+    t = with_funnel_fail(read_table(spark, sf_dir, "documents")).select("fail")
     drops = t.groupBy("fail").agg(
         F.count("*").cast("bigint").alias("n")
     )
@@ -1610,7 +1606,7 @@ def q_ds_curriculum_interleave(spark, sf_dir):
     corpus; the full schedule would be written partition-parallel by
     repartitionByRange(pos) at 100 TB.
     """
-    d = _docs(spark, sf_dir).select("source", "doc_id")
+    d = read_table(spark, sf_dir, "documents").select("source", "doc_id")
     ranked = d.select(
         "source",
         "doc_id",
@@ -1713,7 +1709,7 @@ def q_du_pii_redact(spark, sf_dir):
     the quality gates it composes with (q_dt_filter_funnel).
     """
     t = F.expr(_PII_SQL)
-    d = spread(_docs(spark, sf_dir)).select(
+    d = spread(read_table(spark, sf_dir, "documents")).select(
         "source", t.alias("t")
     )
     ne = F.size(F.regexp_extract_all("t", F.lit(PII_EMAIL), F.lit(0)))
@@ -1851,7 +1847,7 @@ def q_dw_length_buckets(spark, sf_dir):
     Scale shape: map-only token count + a hash aggregation over ~a
     dozen bucket keys — partial aggregation collapses everything
     map-side, the cheapest distributed histogram there is."""
-    t = spread(_docs(spark, sf_dir)).select(
+    t = spread(read_table(spark, sf_dir, "documents")).select(
         TXT.token_count("text").alias("n")
     )
     b = t.select(
@@ -1971,7 +1967,7 @@ def q_dy_blocklist_suffix(spark, sf_dir):
     corpus fan-out side, which only works when the probe side is small
     and never at 100 TB; the forced shuffle still moves only the short
     (doc_id, sfx) fan-out rows, never the text."""
-    u = spread(_docs(spark, sf_dir)).selectExpr(
+    u = spread(read_table(spark, sf_dir, "documents")).selectExpr(
         "doc_id", f"{_HOST_SQL} AS host"
     )
     sfx = u.select(
@@ -2050,7 +2046,7 @@ def q_dz_dup_profile(spark, sf_dir):
     rides min(length(text)) — computed map-side before the digest
     shuffle, so payload still never moves. 100 TB = the exact-dedup
     shuffle it prices out, minus the keeper semi-join."""
-    d = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     dups1 = d.filter(F.col("doc_id") % 5 == 0).withColumn(
         "doc_id", F.col("doc_id") + 100000
     )
@@ -2133,7 +2129,7 @@ def q_ea_source_overlap(spark, sf_dir):
     bounded (vocab x S short rows), never driver-collected. 100 TB =
     ONE corpus scan + the bounded matrix."""
     st = (
-        spread(_docs(spark, sf_dir))
+        spread(read_table(spark, sf_dir, "documents"))
         .select("source", F.explode(TXT.tokens("text")).alias("token"))
         .distinct()
         .localCheckpoint()
@@ -2228,7 +2224,7 @@ def q_eb_path_blocklist(spark, sf_dir):
     round-11 ceiling experiment in BENCHNOTES bounds how far); the
     longest-rule pick is a partial-aggregable max over a (length, rule)
     struct. The filter composes as an anti-join on the output ids."""
-    u = spread(_docs(spark, sf_dir)).selectExpr(
+    u = spread(read_table(spark, sf_dir, "documents")).selectExpr(
         "doc_id", f"{_PATH_SQL} AS path"
     )
     pfx = u.select(
@@ -2379,7 +2375,7 @@ def q_ee_flag_term_gate(spark, sf_dir):
     through 100k terms), NOT the 100k figure this docstring originally
     guessed."""
     return (
-        with_flag_stats(spread(_docs(spark, sf_dir)))
+        with_flag_stats(spread(read_table(spark, sf_dir, "documents")))
         .select(
             "doc_id",
             "n_tok",
@@ -2442,7 +2438,7 @@ def minhash_delta_fixture(spark, sf_dir):
     the batch probe (q_ef) and its streaming twin (q_stream_minhash_delta):
     every ``DELTA_MOD``-th lake doc re-arrives with ``DELTA_PREFIX``
     prepended under ``doc_id + DELTA_ID_OFFSET``."""
-    lake = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    lake = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     delta = lake.filter(F.col("doc_id") % DELTA_MOD == 0).select(
         (F.col("doc_id") + DELTA_ID_OFFSET).alias("doc_id"),
         F.concat(F.lit(DELTA_PREFIX), F.col("text")).alias("text"),
@@ -2615,7 +2611,7 @@ def q_em_fuzzy_decontaminate(spark, sf_dir):
     pipeline, so flags, counts, AND jaccards are value-checked."""
     from ..operators import dedup
 
-    lake = spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    lake = spread(read_table(spark, sf_dir, "documents")).select("doc_id", "text")
     tainted = lake.filter(F.col("doc_id") % EVAL_MOD == 0).select(
         (F.col("doc_id") + EVAL_TAINT_OFFSET).alias("doc_id"),
         F.concat(F.col("text"), F.lit(EVAL_SUFFIX)).alias("text"),
@@ -2682,7 +2678,7 @@ _KEEPBEST_COPIES_SQL = """
 
 
 def _docs_with_copies(spark, sf_dir):
-    d = spread(_docs(spark, sf_dir)).select(
+    d = spread(read_table(spark, sf_dir, "documents")).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     c1 = d.filter(F.col("doc_id") % 5 == 0).select(
@@ -2806,7 +2802,7 @@ def q_eh_shard_plan(spark, sf_dir):
     one unavoidable order dependency — it parallelizes across sources
     (repartitionByRange on the window key) and each source's cumsum is
     one pass; the shard count output is corpus_tokens/budget rows."""
-    t = spread(_docs(spark, sf_dir)).select(
+    t = spread(read_table(spark, sf_dir, "documents")).select(
         "source", "doc_id", TXT.token_count("text").cast("bigint").alias("n_tok")
     )
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(

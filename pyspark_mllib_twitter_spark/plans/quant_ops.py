@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.iterate import iterate
 from ..sources import read_table
 from .registry import query, sql_query
+from .warehouse_ops import _rank
 
 # ---------------------------------------------------------------------------
 # Kruskal-Wallis H test (rank ANOVA across the five order-priority arms)
@@ -172,16 +173,16 @@ sql_query(
 # Value-at-Risk + CVaR (expected shortfall) per order-priority desk
 # ---------------------------------------------------------------------------
 
-#: Exact integer target rank ceil(19n/20) for the 95th percentile —
-#: integer division only, per-dialect operator (DIV vs //), no float
-#: touches the rank (the q_b8 contract).
-_VAR_K_SPARK = "CAST((19 * n_arm + 19) DIV 20 AS BIGINT)"
-_VAR_K_DUCK = "CAST((19 * n_arm + 19) // 20 AS BIGINT)"
+#: Exact integer target rank ceil(19n/20) for the 95th percentile: the
+#: floor of a quotient of integers below 2^53 is exact (the q_b8 contract).
+_VAR_K = "CAST(floor((19 * n_arm + 19) / 20) AS BIGINT)"
 
 
-@query(
+# VaR95 (the ceil(0.95 n)-th order statistic) and CVaR95 (the mean at or above
+# it) of order value per priority, from exact prefix sums.
+sql_query(
     "q_cq_cvar",
-    oracle=f"""
+    f"""
     WITH base AS (
       SELECT o_orderpriority AS arm,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -204,7 +205,7 @@ _VAR_K_DUCK = "CAST((19 * n_arm + 19) // 20 AS BIGINT)"
       SELECT c.arm, c.cents, c.cum_c, c.cum_s, c.c, t.n_arm, t.tot_s,
              row_number() OVER (PARTITION BY c.arm ORDER BY c.cents) AS hit_rk
       FROM cum c JOIN tot t ON t.arm = c.arm
-      WHERE c.cum_c >= {_VAR_K_DUCK}),
+      WHERE c.cum_c >= {_VAR_K}),
     pick AS (SELECT * FROM hit WHERE hit_rk = 1)
     SELECT arm, n_arm,
            CAST(n_arm - (cum_c - c) AS BIGINT) AS tail_n,
@@ -214,69 +215,6 @@ _VAR_K_DUCK = "CAST((19 * n_arm + 19) // 20 AS BIGINT)"
     FROM pick ORDER BY arm
     """,
 )
-def q_cq_cvar(spark, sf_dir):
-    """VALUE-AT-RISK (95%) + CVaR / EXPECTED SHORTFALL per
-    order-priority desk (Rockafellar & Uryasev, J. Risk 2000 — the
-    coherent tail-risk measure Basel committees moved to precisely
-    because VaR alone ignores tail shape): VaR95 is the exact
-    ceil(0.95 n)-th order statistic of order value (integer rank via
-    the shared DIV expression, the q_b8 contract — no float touches
-    rank selection), and CVaR95 is the exact mean of every observation
-    at or above it (tail count and tail cents both exact integers
-    derived from the complement of the prefix sums, so ties at the VaR
-    boundary are handled identically on both engines).
-
-    Scale shape: raw rows collapse to (arm, cents) cells map-side; the
-    per-arm prefix sums run at cell grain PARTITIONED BY ARM (5
-    independent windows — parallel, never a global sort); the boundary
-    pick is a per-arm row_number over the qualifying suffix, which
-    AQE resolves as a WindowGroupLimit-style small tail. 100 TB = one
-    scan + one cell-grain shuffle + a 5-row close.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_orderpriority").alias("arm"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    cell = base.groupBy("arm", "cents").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
-    w_arm = Window.partitionBy("arm").orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = cell.select(
-        "arm",
-        "cents",
-        "c",
-        F.sum("c").over(w_arm).alias("cum_c"),
-        F.sum(F.col("c") * F.col("cents")).over(w_arm).alias("cum_s"),
-    )
-    tot = cell.groupBy("arm").agg(
-        F.sum("c").cast("bigint").alias("n_arm"),
-        F.sum(F.col("c") * F.col("cents")).cast("bigint").alias("tot_s"),
-    )
-    hit = (
-        cum.join(F.broadcast(tot), "arm")
-        .filter(F.col("cum_c") >= F.expr(_VAR_K_SPARK))
-        .withColumn(
-            "hit_rk",
-            F.row_number().over(
-                Window.partitionBy("arm").orderBy("cents")
-            ),
-        )
-    )
-    pick = hit.filter(F.col("hit_rk") == 1)
-    tail_n = F.col("n_arm") - (F.col("cum_c") - F.col("c"))
-    tail_s = F.col("tot_s") - (F.col("cum_s") - F.col("c") * F.col("cents"))
-    return pick.select(
-        "arm",
-        "n_arm",
-        tail_n.cast("bigint").alias("tail_n"),
-        F.round(F.col("cents").cast("double") / 1e2, 6).alias("var95"),
-        F.round(
-            tail_s.cast("double") / (F.lit(1e2) * tail_n.cast("double")), 6
-        ).alias("cvar95"),
-    ).orderBy("arm")
 
 
 # ---------------------------------------------------------------------------
@@ -284,11 +222,10 @@ def q_cq_cvar(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 #: Decile of a score cell from its DESC-order cumulative count:
-#: ceil(10*cum/n) — integer division per dialect (q_b8 contract). A
+#: ceil(10*cum/n) as an exact floor of integers (q_b8 contract). A
 #: tie cell lands wholly in the decile its END falls into, which is
 #: deterministic on both engines because cum is cell-grain exact.
-_LG_DEC_SPARK = "CAST((10 * cum + n - 1) DIV n AS BIGINT)"
-_LG_DEC_DUCK = "CAST((10 * cum + n - 1) // n AS BIGINT)"
+_LG_DEC = "CAST(floor((10 * cum + n - 1) / n) AS BIGINT)"
 
 #: Shared-text closes on exact integer decile aggregates.
 _LG_LIFT = (
@@ -298,9 +235,11 @@ _LG_LIFT = (
 _LG_GAIN = "(CAST(cum_pos AS DOUBLE) / nullif(CAST(p AS DOUBLE), 0e0))"
 
 
-@query(
+# Lift and cumulative gains per score decile; a decile is ceil(10 cum / n)
+# over descending cumulative counts, so tied scores share a decile.
+sql_query(
     "q_cu_lift_gains",
-    oracle=f"""
+    f"""
     WITH scored AS (
       SELECT CAST(round(value * 1e6) AS BIGINT) AS s,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
@@ -316,7 +255,7 @@ _LG_GAIN = "(CAST(cum_pos AS DOUBLE) / nullif(CAST(p AS DOUBLE), 0e0))"
       SELECT CAST(sum(c) AS BIGINT) AS n, CAST(sum(yc) AS BIGINT) AS p
       FROM cells),
     bucketed AS (
-      SELECT {_LG_DEC_DUCK} AS decile, c, yc
+      SELECT {_LG_DEC} AS decile, c, yc
       FROM cum CROSS JOIN tot),
     per AS (
       SELECT decile, CAST(sum(c) AS BIGINT) AS nb,
@@ -334,65 +273,6 @@ _LG_GAIN = "(CAST(cum_pos AS DOUBLE) / nullif(CAST(p AS DOUBLE), 0e0))"
     FROM curve c CROSS JOIN tot ORDER BY c.decile
     """,
 )
-def q_cu_lift_gains(spark, sf_dir):
-    """CUMULATIVE GAINS / LIFT TABLE at deciles — the campaign-targeting
-    evaluation every marketing/risk scorer ships next to ROC (q_ay:
-    threshold-free ranking quality) and calibration (q_z4: probability
-    faithfulness); lift says "decile 1 converts 3.2x base rate", the
-    gains curve says "the top 30% of scores captures 62% of positives".
-    Scores are micro-unit integers, deciles come from DESC-cumulative
-    counts at score-cell grain with the per-dialect integer division
-    (ceil(10*cum/n) — tie cells land wholly in one decile on BOTH
-    engines), and lift/gain close in shared text over exact integers.
-
-    Scale shape: collapse to score cells (combinable), one cell-grain
-    prefix window (q_zq local/distributed swap note), a 10-row tail.
-    100 TB = one scan + one cell-grain shuffle + a constant close.
-    """
-    ev = read_table(spark, sf_dir, "events")
-    scored = ev.select(
-        F.round(F.col("value") * 1e6).cast("bigint").alias("s"),
-        (F.col("event_type") == "purchase").cast("long").alias("y"),
-    )
-    cells = scored.groupBy("s").agg(
-        F.count("*").cast("bigint").alias("c"),
-        F.sum("y").cast("bigint").alias("yc"),
-    )
-    w_desc = Window.orderBy(F.desc("s")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = cells.select(
-        "s", "c", "yc", F.sum("c").over(w_desc).alias("cum")
-    )
-    tot = cells.agg(
-        F.sum("c").cast("bigint").alias("n"),
-        F.sum("yc").cast("bigint").alias("p"),
-    )
-    bucketed = cum.crossJoin(F.broadcast(tot)).select(
-        F.expr(_LG_DEC_SPARK).alias("decile"), "c", "yc"
-    )
-    per = bucketed.groupBy("decile").agg(
-        F.sum("c").cast("bigint").alias("nb"),
-        F.sum("yc").cast("bigint").alias("pos"),
-    )
-    w_dec = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    curve = per.select(
-        "decile", "nb", "pos", F.sum("pos").over(w_dec).alias("cum_pos")
-    )
-    return (
-        curve.crossJoin(F.broadcast(tot))
-        .select(
-            "decile",
-            "nb",
-            "pos",
-            F.col("cum_pos").cast("bigint").alias("cum_pos"),
-            F.round(F.expr(_LG_LIFT), 6).alias("lift"),
-            F.round(F.expr(_LG_GAIN), 6).alias("cum_gain"),
-        )
-        .orderBy("decile")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -572,12 +452,15 @@ _RMST_S = (
 )
 
 
-@query(
+# Restricted mean survival time (tau = 365 days) per market segment: the area
+# under each segment's Kaplan-Meier curve, accumulated in duration order.
+sql_query(
     "q_cx_rmst",
-    oracle=f"""
+    f"""
     WITH life AS (
       SELECT c.c_mktsegment AS arm,
-             date_diff('day', min(o.o_orderdate), max(o.o_orderdate)) AS dur,
+             CAST(CAST(max(o.o_orderdate) AS DATE) - CAST(min(o.o_orderdate) AS DATE)
+                  AS BIGINT) AS dur,
              CASE WHEN max(o.o_orderdate) < TIMESTAMP '{_RMST_CUTOFF}'
                   THEN 1 ELSE 0 END AS observed
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
@@ -620,107 +503,6 @@ _RMST_S = (
     FROM acc WHERE rk_desc = 1 ORDER BY arm
     """,
 )
-def q_cx_rmst(spark, sf_dir):
-    """RESTRICTED MEAN SURVIVAL TIME (RMST, tau = 365 days) of customer
-    lifetime per market segment — the area under the Kaplan-Meier curve
-    up to tau (Royston & Parmar, Stat Med 2013 made it the recommended
-    hazard-ratio alternative): "expected retained days in the first
-    year", directly comparable across segments without proportional-
-    hazards assumptions. Builds the q_yt KM machinery PER ARM
-    (partitioned windows — 5 independent curves, never a global sort),
-    then integrates the step function with an ORDERED cumulative area
-    (both engines accumulate the identical shared-text doubles in the
-    same duration order — the q_ck contract) and closes with the final
-    plateau segment s_K * (tau - t_K) on the per-arm last row.
-
-    Scale shape: the corpus-sized stage is ONE per-customer min/max
-    aggregate + a customer-key join; everything after runs at (arm x
-    duration) grain — calendar-bounded. 100 TB = one scan + one join +
-    a constant tail.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    c = read_table(spark, sf_dir, "customer")
-    life = (
-        o.join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .groupBy("o_custkey", F.col("c_mktsegment").alias("arm"))
-        .agg(
-            F.datediff(F.max("o_orderdate"), F.min("o_orderdate")).alias(
-                "dur"
-            ),
-            (
-                F.max("o_orderdate")
-                < F.lit(_RMST_CUTOFF).cast("timestamp")
-            )
-            .cast("long")
-            .alias("observed"),
-        )
-        .select("arm", "dur", "observed")
-    )
-    tot = life.groupBy("arm").agg(F.count("*").cast("bigint").alias("n"))
-    per_d = life.groupBy("arm", "dur").agg(
-        F.count("*").alias("n_all"), F.sum("observed").alias("n_deaths")
-    )
-    w_prev = (
-        Window.partitionBy("arm")
-        .orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    risk = per_d.join(tot, "arm").select(
-        "arm",
-        "dur",
-        "n_deaths",
-        (
-            F.col("n")
-            - F.coalesce(F.sum("n_all").over(w_prev), F.lit(0))
-        ).alias("at_risk"),
-        "n",
-    )
-    km = risk.withColumn("s", F.expr(_RMST_S)).filter(
-        F.col("n_deaths") > 0
-    )
-    w_arm = Window.partitionBy("arm").orderBy("dur")
-    seg = km.filter(F.col("dur") <= _RMST_TAU).select(
-        "arm",
-        "dur",
-        "s",
-        "n",
-        F.coalesce(F.lag("dur").over(w_arm), F.lit(0)).alias("prev_dur"),
-        F.coalesce(F.lag("s").over(w_arm), F.lit(1.0)).alias("prev_s"),
-    )
-    w_acc = w_arm.rowsBetween(Window.unboundedPreceding, 0)
-    acc = seg.select(
-        "arm",
-        "dur",
-        "s",
-        "n",
-        F.sum(
-            F.col("prev_s") * (F.col("dur") - F.col("prev_dur")).cast("double")
-        )
-        .over(w_acc)
-        .alias("area"),
-        F.row_number()
-        .over(Window.partitionBy("arm").orderBy(F.desc("dur")))
-        .alias("rk_desc"),
-        F.count("*")
-        .over(Window.partitionBy("arm"))
-        .cast("bigint")
-        .alias("n_times"),
-    )
-    return (
-        acc.filter(F.col("rk_desc") == 1)
-        .select(
-            "arm",
-            F.col("n").alias("n_subjects"),
-            F.col("n_times").alias("n_event_times"),
-            F.lit(_RMST_TAU).cast("bigint").alias("tau_days"),
-            F.round(
-                F.col("area")
-                + F.col("s") * (F.lit(_RMST_TAU) - F.col("dur")).cast("double"),
-                6,
-            ).alias("rmst_days"),
-        )
-        .orderBy("arm")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -957,12 +739,11 @@ _SH_BOWLEY = (
 )
 
 
-def _sh_rank(a: int, b: int, div: str) -> str:
-    return f"CAST(({a} * n + {b} - 1) {div} {b} AS BIGINT)"
-
-
-def _shape_oracle() -> str:
-    return f"""
+# Skewness, excess kurtosis and Bowley quartile skew per event type from exact
+# DECIMAL power sums and integer-rank quartiles.
+sql_query(
+    "q_d1_shape_audit",
+    f"""
     WITH base AS (
       SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v
       FROM events),
@@ -977,9 +758,9 @@ def _shape_oracle() -> str:
       FROM cells),
     quart AS (
       SELECT event_type,
-             min(CASE WHEN c >= {_sh_rank(1, 4, "//")} THEN v END) AS q1,
-             min(CASE WHEN c >= {_sh_rank(1, 2, "//")} THEN v END) AS q2,
-             min(CASE WHEN c >= {_sh_rank(3, 4, "//")} THEN v END) AS q3
+             min(CASE WHEN c >= {_rank(1, 4)} THEN v END) AS q1,
+             min(CASE WHEN c >= {_rank(1, 2)} THEN v END) AS q2,
+             min(CASE WHEN c >= {_rank(3, 4)} THEN v END) AS q3
       FROM cum GROUP BY event_type),
     mom AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -996,79 +777,8 @@ def _shape_oracle() -> str:
            round({_SH_BOWLEY}, 6) AS bowley_skew
     FROM mom m JOIN quart q ON q.event_type = m.event_type
     ORDER BY m.event_type
-    """
-
-
-@query("q_d1_shape_audit", oracle=_shape_oracle())
-def q_d1_shape_audit(spark, sf_dir):
-    """DISTRIBUTION-SHAPE AUDIT per event type: moment skewness g1,
-    excess kurtosis g2, AND the outlier-robust Bowley quartile skew in
-    one pass — the "is this metric even roughly normal" triage that
-    decides whether the parametric tests upstream (q_cb Welch, q_c4
-    ANOVA) or the rank tests (q_cn Kruskal-Wallis) apply, and the
-    tail-heaviness signal (g2) behind the Hill estimator handoff
-    (q_c3). Power sums stay exact DECIMAL(38,0) over centi-unit
-    integers; quartiles are exact order statistics via the per-dialect
-    integer-division rank (q_b8 contract); every double closes in
-    shared text with no pow() (m2^1.5 = m2*sqrt(m2) keeps libm out).
-
-    Scale shape: TWO combinable aggregates over the corpus (moment
-    sums at type grain; value cells for quartiles) + per-type
-    cell-grain prefix windows. 100 TB = one scan + two shuffles + a
-    type-count-sized close.
-    """
-    ev = read_table(spark, sf_dir, "events")
-    base = ev.select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("v"),
-    )
-    cells = base.groupBy("event_type", "v").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    w_c = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_n = Window.partitionBy("event_type")
-    cum = cells.select(
-        "event_type",
-        "v",
-        F.sum("cnt").over(w_c).alias("c"),
-        F.sum("cnt").over(w_n).alias("n"),
-    )
-    quart = cum.groupBy("event_type").agg(
-        F.expr(
-            f"min(CASE WHEN c >= {_sh_rank(1, 4, 'DIV')} THEN v END)"
-        ).alias("q1"),
-        F.expr(
-            f"min(CASE WHEN c >= {_sh_rank(1, 2, 'DIV')} THEN v END)"
-        ).alias("q2"),
-        F.expr(
-            f"min(CASE WHEN c >= {_sh_rank(3, 4, 'DIV')} THEN v END)"
-        ).alias("q3"),
-    )
-    d = F.col("v").cast("decimal(38,0)")
-    mom = base.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(d).alias("s1"),
-        F.sum(d * F.col("v")).alias("s2"),
-        F.sum(d * F.col("v") * F.col("v")).alias("s3"),
-        F.sum(d * F.col("v") * F.col("v") * F.col("v")).alias("s4"),
-    )
-    return (
-        mom.join(quart, "event_type")
-        .selectExpr(
-            "event_type",
-            "n",
-            f"round({_SH_MU} / 100e0, 6) AS mean",
-            f"round(sqrt({_SH_M2}) / 100e0, 6) AS sd",
-            f"round({_SH_SKEW}, 6) AS skewness",
-            f"round({_SH_KURT}, 6) AS ex_kurtosis",
-            f"round({_SH_BOWLEY}, 6) AS bowley_skew",
-        )
-        .orderBy("event_type")
-    )
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2310,9 +2020,11 @@ _BF_SG2N = (
 )
 
 
-@query(
+# Brown-Forsythe test of equal variances across priorities: the ANOVA F on
+# absolute deviations, in whole dollars, from each group's exact median.
+sql_query(
     "q_di_brown_forsythe",
-    oracle=f"""
+    f"""
     WITH base AS (
       SELECT o_orderpriority AS arm,
              CAST(round(o_totalprice) AS BIGINT) AS dollars
@@ -2328,7 +2040,7 @@ _BF_SG2N = (
       FROM cells),
     med AS (
       SELECT arm,
-             min(CASE WHEN c >= {_sh_rank(1, 2, "//")} THEN dollars END)
+             min(CASE WHEN c >= {_rank(1, 2)} THEN dollars END)
                AS m
       FROM cum GROUP BY arm),
     dev AS (
@@ -2353,74 +2065,6 @@ _BF_SG2N = (
     FROM tot
     """,
 )
-def q_di_brown_forsythe(spark, sf_dir):
-    """BROWN-FORSYTHE TEST (Brown & Forsythe, JASA 1974 — Levene's test
-    with MEDIAN centering, the robust default) for variance equality
-    across the five priority arms on order value: the gatekeeper for
-    every pooled-variance method upstream (q_c4 ANOVA assumes it;
-    Welch q_cb is the escape hatch when this rejects). Group medians
-    are exact order statistics (q_b8 per-dialect integer rank);
-    absolute deviations are exact integers in whole-DOLLAR units (the
-    q_cy int64-headroom argument: cents-squared sums overflow int64 at
-    sf0.01 already), so the one-way-ANOVA F on them closes in shared
-    text from integer moments, with the
-    per-group S_g^2/n_g rationals nano-quantized before their k-term
-    sum (q_zv contract).
-
-    Scale shape: value-cell collapse + per-arm prefix windows for the
-    medians (q_b8 recipe), one deviation scan, a 5-row close. 100 TB =
-    two scans + one cell-grain shuffle.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_orderpriority").alias("arm"),
-        F.round(F.col("o_totalprice")).cast("bigint").alias("dollars"),
-    )
-    cells = base.groupBy("arm", "dollars").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    w_c = (
-        Window.partitionBy("arm")
-        .orderBy("dollars")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_n = Window.partitionBy("arm")
-    cum = cells.select(
-        "arm",
-        "dollars",
-        "cnt",
-        F.sum("cnt").over(w_c).alias("c"),
-        F.sum("cnt").over(w_n).alias("n"),
-    )
-    med = cum.groupBy("arm").agg(
-        F.expr(
-            f"min(CASE WHEN c >= {_sh_rank(1, 2, 'DIV')} THEN dollars END)"
-        ).alias("m")
-    )
-    dev = base.join(F.broadcast(med), "arm").select(
-        "arm", F.abs(F.col("dollars") - F.col("m")).alias("z")
-    )
-    grp = dev.groupBy("arm").agg(
-        F.count("*").cast("bigint").alias("n_g"),
-        F.sum("z").cast("bigint").alias("s_g"),
-        F.sum(F.col("z") * F.col("z")).cast("bigint").alias("zz_g"),
-    )
-    tot = grp.agg(
-        F.count("*").cast("bigint").alias("k"),
-        F.sum("n_g").cast("bigint").alias("n_all"),
-        F.sum("s_g").cast("bigint").alias("s_all"),
-        F.sum("zz_g").cast("bigint").alias("zz_all"),
-        (F.sum(F.expr(_BF_SG2N)).cast("double") / F.lit(1000.0)).alias(
-            "sg2n"
-        ),
-    )
-    return tot.selectExpr(
-        "k AS n_arms",
-        "n_all",
-        f"round({_BF_F}, 6) AS bf_f_stat",
-        "CAST(k - 1 AS BIGINT) AS df1",
-        "CAST(n_all - k AS BIGINT) AS df2",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2444,9 +2088,11 @@ _IV_TERM = (
 )
 
 
-@query(
+# Weight of evidence per value decile, and the information value of event
+# value against the purchase label.
+sql_query(
     "q_dj_woe_iv",
-    oracle=f"""
+    f"""
     WITH scored AS (
       SELECT CAST(round(value * 1e6) AS BIGINT) AS s,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
@@ -2460,7 +2106,7 @@ _IV_TERM = (
       FROM cells),
     tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
     binned AS (
-      SELECT CAST((10 * cum + n - 1) // n AS BIGINT) AS bin, c, yc
+      SELECT CAST(floor((10 * cum + n - 1) / n) AS BIGINT) AS bin, c, yc
       FROM cum CROSS JOIN tot),
     per AS (
       SELECT bin, CAST(sum(yc) AS BIGINT) AS pos,
@@ -2482,68 +2128,6 @@ _IV_TERM = (
     FROM acc ORDER BY bin
     """,
 )
-def q_dj_woe_iv(spark, sf_dir):
-    """WEIGHT OF EVIDENCE + INFORMATION VALUE (the credit-scoring
-    feature screen; Siddiqi, "Credit Risk Scorecards" 2006) of event
-    value vs the purchase label: WoE per value decile says which way
-    and how strongly each bin separates the classes, IV = sum
-    (dist_pos - dist_neg) * WoE grades the whole feature (the
-    scorecard folklore thresholds: < 0.02 useless, > 0.3 strong) —
-    the binned, directional complement of mutual information (q_yz)
-    and the input transform logistic scorecards (q_ca) consume.
-    Deciles come from the q_cu integer-rank bucketing; WoE is a
-    difference of ln's of exact integer products (bit-identical, no
-    ratio ever rounds first); the IV accumulates in fixed bin order.
-
-    Scale shape: score-cell collapse + one cell-grain prefix window
-    (q_zq swap note) + a 10-row close. 100 TB = one scan + one
-    cell-grain shuffle.
-    """
-    ev = read_table(spark, sf_dir, "events")
-    scored = ev.select(
-        F.round(F.col("value") * 1e6).cast("bigint").alias("s"),
-        (F.col("event_type") == "purchase").cast("long").alias("y"),
-    )
-    cells = scored.groupBy("s").agg(
-        F.count("*").cast("bigint").alias("c"),
-        F.sum("y").cast("bigint").alias("yc"),
-    )
-    w_cum = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
-    cum = cells.select(
-        "s", "c", "yc", F.sum("c").over(w_cum).alias("cum")
-    )
-    tot = cells.agg(F.sum("c").cast("bigint").alias("n"))
-    binned = cum.crossJoin(F.broadcast(tot)).select(
-        F.expr("CAST((10 * cum + n - 1) DIV n AS BIGINT)").alias("bin"),
-        "c",
-        "yc",
-    )
-    per = binned.groupBy("bin").agg(
-        F.sum("yc").cast("bigint").alias("pos"),
-        F.sum(F.col("c") - F.col("yc")).cast("bigint").alias("neg"),
-    )
-    tots = per.agg(
-        F.sum("pos").cast("bigint").alias("post"),
-        F.sum("neg").cast("bigint").alias("negt"),
-    )
-    w_all = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    acc = per.crossJoin(F.broadcast(tots)).select(
-        "bin",
-        "pos",
-        "neg",
-        "post",
-        "negt",
-        F.sum(F.expr(_IV_TERM)).over(w_all).alias("iv"),
-    )
-    return acc.selectExpr(
-        "bin",
-        "pos",
-        "neg",
-        f"round({_WOE}, 6) AS woe",
-        "round(iv, 6) AS iv_total",
-    ).orderBy("bin")
 
 
 # ---------------------------------------------------------------------------

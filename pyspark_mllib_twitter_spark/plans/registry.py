@@ -6,6 +6,17 @@ An entry is registered one of two ways:
   recipe is ``sources.run_sql``, which registers the fixture tables the text
   names as temp views and runs it through ``spark.sql``; the DuckDB oracle
   runs the same text. Use it whenever the SQL is the whole recipe.
+  The text must parse on DuckDB 1.0 and Spark 4.1 alike; these spellings
+  are common to both:
+
+  - day difference: ``CAST(CAST(b AS DATE) - CAST(a AS DATE) AS BIGINT)``,
+    not ``date_diff('day', a, b)``;
+  - integer division: ``CAST(floor(a / b) AS BIGINT)``, not ``a // b``
+    (exact for non-negative integers below 2^53; a DOUBLE -> BIGINT cast
+    alone rounds on DuckDB and truncates on Spark);
+  - strings: ``STRING`` / ``::STRING``, not ``VARCHAR``;
+  - quantiles: ``percentile_cont(q) WITHIN GROUP (ORDER BY x)`` and
+    ``percentile_disc``, not ``quantile_cont(x, q)`` / ``quantile_disc``.
 - ``@query(name, oracle=...)`` on a recipe ``(spark, sf_dir) -> DataFrame``:
   for entries whose Spark side claims more than the SQL (a physical plan
   shape, a Python data source, a stream, a UDF, an iterative operator).

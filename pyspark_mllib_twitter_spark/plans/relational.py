@@ -13,15 +13,26 @@ hashes values).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+import hashlib
+import tempfile
+
+from pyspark import SparkFiles
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..sources import read_table
 from .registry import query, sql_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+def _store_dir(kind: str, sf_dir: str) -> str:
+    """A new directory for one invocation's store, unique so concurrent runs
+    never share one. It lives under Spark's per-application ``userFiles``
+    dir, which Spark deletes when the context stops; the returned frames
+    read their store lazily for as long as the session lives."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    return tempfile.mkdtemp(
+        prefix=f"spark_graft_{kind}_{tag}_", dir=SparkFiles.getRootDirectory()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -35,7 +46,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q_s1_scan(spark, sf_dir):
     """S1: parquet scan (reference: multiline-JSON scan, COMP5349_2.py:138).
     Columnar read, column pruning at the scan."""
-    return _t(spark, sf_dir, "region").select("r_regionkey", "r_name").orderBy("r_regionkey")
+    return read_table(spark, sf_dir, "region").select("r_regionkey", "r_name").orderBy("r_regionkey")
 
 
 @query(
@@ -97,20 +108,12 @@ def q_s4_pysink_roundtrip(spark, sf_dir):
     value-checked byte-for-byte, not smoke-tested.
 
     Scale shape: tasks write their own partitions in parallel and ship
-    only (path, row-count) messages to the driver; commit is O(#tasks).
-    The store path is deterministic per sf so reruns overwrite (exercising
-    the manifest-swap path) instead of appending."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile
-
+    only (path, row-count) messages to the driver; commit is O(#tasks)."""
     from ..sources.pydatasource import register
 
     register(spark)
-    store = tempfile.mkdtemp(  # unique per invocation: no cross-run race
-        prefix=f"spark_graft_docstore_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
-    src = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    store = _store_dir("docstore", sf_dir)
+    src = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     src.write.format("docstore").mode("overwrite").save(store)
     return spark.read.format("docstore").load(store).orderBy("doc_id")
 
@@ -132,7 +135,7 @@ sql_query(
 def q_p3_project(spark, sf_dir):
     """P3/P4: projection + alias + computed column (COMP5349_2.py:146,197)."""
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .select(
             F.col("o_orderkey").alias("k"),
             (F.col("o_totalprice") * 0.9).alias("p"),
@@ -159,9 +162,9 @@ def q_j_inner(spark, sf_dir):
     """J2-style equi-inner join chain, replacing the reference's broadcast
     linear-scan lookup (COMP5349_2.py:93-99). Dimension tables are broadcast —
     no shuffle of the fact side at any scale."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -234,7 +237,7 @@ def q_j_asof(spark, sf_dir):
     """∅-ref: as-of join (latest click at-or-before each event, per user),
     expressed as a running last_value window instead of a per-probe scan.
     One shuffle on user_id; no O(N^2) pairing — survives 100x scale."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -268,7 +271,7 @@ def q_j_asof_generic(spark, sf_dir):
     recipe; this entry is the reusable operator."""
     from ..operators.asof import as_of_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "ts", F.col("event_id").alias("click_event_id")
     )
@@ -311,7 +314,7 @@ def q_j_range(spark, sf_dir):
         (F.col("id") * 10000.0).alias("lo"),
         (F.col("id") * 10000.0 + 20000.0).alias("hi"),
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     joined = interval_join(orders, bands, "o_totalprice", "lo", "hi", bin_width=10000.0)
     return (
         joined.groupBy("band_id")
@@ -340,7 +343,7 @@ def q_a1_collect_list(spark, sf_dir):
     (COMP5349_2.py:146). List sorted for determinism (ObjectHashAggregate;
     partial aggregation still applies map-side)."""
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
             F.array_join(
@@ -402,7 +405,7 @@ def q_a4_agg_suite(spark, sf_dir):
     plan. The exact COUNT(DISTINCT) expand is the scale-sensitive term;
     q_a6_approx_distinct is the documented sketch path when ~2% error is
     acceptable at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -432,7 +435,7 @@ def q_a6_approx_distinct(spark, sf_dir):
     sketch exists to avoid and measurably 2.4×'d the query. Accuracy vs the
     exact count is pinned in the test layer instead
     (tests/test_properties.py::test_approx_count_distinct_error_bounded)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(F.approx_count_distinct("l_partkey").alias("approx_parts"))
@@ -460,7 +463,7 @@ def q_a5_id_dictionary(spark, sf_dir):
     """
     from ..workloads.w2_recommend import dense_id_dictionary
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         dense_id_dictionary(ev, ["user_id"])
         .select(
@@ -529,7 +532,7 @@ def q_w1_topk(spark, sf_dir):
         F.col("o_totalprice").desc(), F.col("o_orderkey").desc()
     )
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .withColumn("rn", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rn") <= 5)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
@@ -589,7 +592,7 @@ def q_j_overlap(spark, sf_dir):
         (F.col("id") * 5000.0).alias("lo"),
         (F.col("id") * 5000.0 + 12000.0).alias("hi"),
     )
-    orders_iv = _t(spark, sf_dir, "orders").select(
+    orders_iv = read_table(spark, sf_dir, "orders").select(
         "o_totalprice",
         (F.col("o_totalprice") - 1000.0).alias("o_lo"),
         (F.col("o_totalprice") + 1000.0).alias("o_hi"),
@@ -620,7 +623,7 @@ def q_sample_hash(spark, sf_dir):
     from ..operators.sampling import hash_sample
 
     return (
-        hash_sample(_t(spark, sf_dir, "orders"), "o_orderkey", 2)
+        hash_sample(read_table(spark, sf_dir, "orders"), "o_orderkey", 2)
         .select("o_orderkey", "o_totalprice")
         .orderBy("o_orderkey")
     )
@@ -672,7 +675,7 @@ def q_w4_time_rollup(spark, sf_dir):
     stage (codegen'd), so the only shuffle is the grouping-sets aggregate;
     partial aggregation happens map-side per bucket before the exchange.
     Money-sum routed through DECIMAL(38,6) for order-independent totals."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.date_trunc("hour", F.col("ts")).alias("bucket"),
         F.col("event_type").alias("etype"),
         "value",
@@ -729,7 +732,7 @@ def q_w5_sessionize(spark, sf_dir):
     exchange); no per-row Python anywhere."""
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     marked = (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .select(
             "user_id",
@@ -816,7 +819,7 @@ sql_query(
 def q_f_string(spark, sf_dir):
     """∅-ref string suite: lower/upper/substring/length/trim/split/regexp."""
     return (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .select(
             "p_partkey",
             F.lower("p_name").alias("lo"),
@@ -831,32 +834,20 @@ def q_f_string(spark, sf_dir):
     )
 
 
-@query(
+# Date functions: year, month, quarter, month start and days since 1995-01-01.
+sql_query(
     "q_f_date",
-    oracle="""
+    """
     SELECT o_orderkey,
            CAST(year(o_orderdate)    AS BIGINT) AS y,
            CAST(month(o_orderdate)   AS BIGINT) AS m,
            CAST(quarter(o_orderdate) AS BIGINT) AS q,
            CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
-           CAST(datediff('day', DATE '1995-01-01', o_orderdate) AS BIGINT) AS days_since
+           CAST(CAST(o_orderdate AS DATE) - DATE '1995-01-01' AS BIGINT)
+             AS days_since
     FROM orders ORDER BY o_orderkey
     """,
 )
-def q_f_date(spark, sf_dir):
-    """∅-ref date suite: year/month/quarter/date_trunc/datediff."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            F.year("o_orderdate").cast("bigint").alias("y"),
-            F.month("o_orderdate").cast("bigint").alias("m"),
-            F.quarter("o_orderdate").cast("bigint").alias("q"),
-            F.date_trunc("month", "o_orderdate").cast("date").alias("month_start"),
-            F.datediff(F.col("o_orderdate"), F.lit("1995-01-01")).cast("bigint").alias("days_since"),
-        )
-        .orderBy("o_orderkey")
-    )
 
 
 sql_query(
@@ -892,7 +883,7 @@ sql_query(
 def q_f_array(spark, sf_dir):
     """∅-ref array suite: size/element_at/filter/slice over built lists."""
     arr = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.sort_array(F.collect_list("o_orderkey")).alias("keys"))
     )
@@ -927,7 +918,7 @@ def q_f_hof(spark, sf_dir):
     UDF); the zip_with of a list with its reverse reduces to first+last,
     which is what the oracle states directly."""
     arr = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.sort_array(F.collect_list("o_orderkey")).alias("keys"))
     )
@@ -977,7 +968,7 @@ def q_f_map(spark, sf_dir):
         F.lit("priority"), F.col("o_orderpriority"),
     )
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .select(
             "o_orderkey",
             F.size(m).cast("bigint").alias("n_keys"),
@@ -1005,7 +996,7 @@ def q_a7_percentiles(spark, sf_dir):
     (mergeable t-digest-style sketch, no per-group sort) — kept exact here
     because approximate sketches are engine-specific (see q_a6's HLL note).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     pct = F.percentile("l_extendedprice", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)))
     return (
         li.groupBy("l_returnflag")
@@ -1032,7 +1023,7 @@ def q_a7_percentiles(spark, sf_dir):
 def q_f_json(spark, sf_dir):
     """∅-ref JSON suite: get_json_object over events.props."""
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .select(
             "event_id",
             F.get_json_object("props", "$.k").alias("k_str"),
@@ -1077,7 +1068,7 @@ def q_e2e_w1doc(spark, sf_dir):
     """W1 document-build prefix (P1 + F1 + A1, COMP5349_2.py:146) transplanted
     onto events: two mutually-exclusive nullable picks, null-skipping
     concat_ws, group-collect into a sorted document string."""
-    ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
+    ev = read_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     r = F.when(F.col("value") > 50, F.col("event_id").cast("string"))
     s = F.when(~(F.col("value") > 50), F.col("event_id").cast("string"))
     t = ev.select("user_id", r.alias("r"), s.alias("s"))
@@ -1102,7 +1093,7 @@ def q_e2e_w1doc(spark, sf_dir):
 def q_e2e_w2pairs(spark, sf_dir):
     """W2 rating-build shape (F5 explode + P2 filter + A2 pair count,
     COMP5349_2.py:196-197) on documents: explode tokens, count pairs."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select("lang", F.explode(F.split("text", " ")).alias("token"))
         .where(F.col("token") != "")
@@ -1214,19 +1205,14 @@ def q_s6_docstore_compact(spark, sf_dir):
     so rewrite units stay bounded — the connector's manifest would carry
     range metadata exactly like the clustered-parquet writer's footers.
     """
-    import hashlib as _hl
-    import os as _os
     import shutil
-    import tempfile
 
     from ..sources.pydatasource import register
 
     register(spark)
-    store = tempfile.mkdtemp(  # unique per invocation: no cross-run race
-        prefix=f"spark_graft_compact_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
+    store = _store_dir("compact", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
-    src = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    src = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     src.repartition(16).write.format("docstore").mode("overwrite").save(store)
     # compact: connector read -> 2 files -> atomic overwrite republish
     spark.read.format("docstore").load(store).coalesce(2).write.format(
@@ -1257,14 +1243,10 @@ def q_s7_schema_evolution(spark, sf_dir):
     parity CASE because it reads the ORIGINAL table; file routing is by
     ``o_orderkey`` parity, deterministic on both sides.
     """
-    import hashlib as _hl
     import os as _os
-    import tempfile
 
-    base = tempfile.mkdtemp(  # unique per invocation: no cross-run race
-        prefix=f"spark_graft_evolve_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
-    o = _t(spark, sf_dir, "orders")
+    base = _store_dir("evolve", sf_dir)
+    o = read_table(spark, sf_dir, "orders")
     old = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     new = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_totalprice", F.col("o_orderpriority").alias("priority")
@@ -1308,19 +1290,14 @@ def q_s8_docstore_delete(spark, sf_dir):
     rewrite reads ONLY those files (manifest-subset partition planning),
     never the store.
     """
-    import hashlib as _hl
-    import os as _os
     import shutil
-    import tempfile
 
     from ..sources.pydatasource import docstore_delete, register
 
     register(spark)
-    store = tempfile.mkdtemp(  # unique per invocation: no cross-run race
-        prefix=f"spark_graft_delete_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
+    store = _store_dir("delete", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
-    src = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    src = read_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     (
         src.repartitionByRange(8, "doc_id")
         .sortWithinPartitions("doc_id")
@@ -1375,19 +1352,14 @@ def q_s9_time_travel(spark, sf_dir):
     Scale shape: version planning is metadata-only (one manifest read);
     a version read scans only that snapshot's files.
     """
-    import hashlib as _hl
-    import os as _os
     import shutil
-    import tempfile
 
     from ..sources.pydatasource import register
 
     register(spark)
-    store = tempfile.mkdtemp(  # unique per invocation: no cross-run race
-        prefix=f"spark_graft_ttravel_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
+    store = _store_dir("ttravel", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
-    src = _t(spark, sf_dir, "orders").select(
+    src = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
     for mode, pri in (
@@ -1451,8 +1423,8 @@ def q_j_hints(spark, sf_dir):
     override. AQE can still re-coalesce partitions but honors the
     strategy hint.
     """
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    c = _t(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
+    c = read_table(spark, sf_dir, "customer")
     return (
         o.join(c.hint("merge"), o.o_custkey == c.c_custkey)
         .select("o_orderkey", "c_name", F.col("o_totalprice").cast("double").alias("o_totalprice"))
@@ -1505,22 +1477,14 @@ def q_sa_docstore_cdf(spark, sf_dir):
     full-outer diff IS the general change feed and is how engines
     backfill CDF for pre-existing versions.
     """
-    import hashlib as _hl
-    import os as _os
     import shutil
-    import tempfile
 
     from ..sources.pydatasource import register
 
     register(spark)
-    # Per-invocation unique directory: a fixed md5(sf_dir) path raced
-    # under concurrent runs (pytest-xdist / parallel harness) — one run
-    # could rmtree the store another was still reading.
-    store = tempfile.mkdtemp(
-        prefix=f"spark_graft_cdf_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
+    store = _store_dir("cdf", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
-    src = _t(spark, sf_dir, "orders").select(
+    src = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("p"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
@@ -1622,18 +1586,14 @@ def q_sb_docstore_merge(spark, sf_dir):
     one anti-join of those files' rows against the (typically far
     smaller, broadcastable) source batch.
     """
-    import hashlib as _hl
     import shutil
-    import tempfile
 
     from ..sources.pydatasource import docstore_merge, register
 
     register(spark)
-    store = tempfile.mkdtemp(  # unique per invocation: no cross-run race
-        prefix=f"spark_graft_merge_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
+    store = _store_dir("merge", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
-    src = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    src = read_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     initial = src.filter(
         ~F.col("doc_id").between(MERGE_INS_LO, MERGE_INS_HI)
     )
@@ -1691,18 +1651,14 @@ def q_bb_cdc_apply(spark, sf_dir):
     At 100 TB a CDC batch is minutes of changes — the pruned-file
     rewrite is the whole point.
     """
-    import hashlib as _hl
     import shutil
-    import tempfile
 
     from ..sources.pydatasource import docstore_merge, register
 
     register(spark)
-    store = tempfile.mkdtemp(  # unique per invocation: no cross-run race
-        prefix=f"spark_graft_cdcapply_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}_"
-    )
+    store = _store_dir("cdcapply", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
-    src = _t(spark, sf_dir, "orders").select(
+    src = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("p"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),

@@ -794,11 +794,13 @@ _PRF_F1 = (
 )
 
 
-@query(
+# Per-class precision, recall and F1 of the majority-language-per-source
+# baseline on the md5 test split.
+sql_query(
     "q_zz_eval_prf",
-    oracle=f"""
+    f"""
     WITH base AS (
-      SELECT doc_id, lang, source, {_SPLIT_TRAIN_DUCK} AS is_train
+      SELECT doc_id, lang, source, {_SPLIT_TRAIN} AS is_train
       FROM documents),
     maj AS (
       SELECT source, lang AS predicted
@@ -832,71 +834,6 @@ _PRF_F1 = (
     FROM m ORDER BY cls
     """,
 )
-def q_zz_eval_prf(spark, sf_dir):
-    """Per-class precision / recall / F1 of the majority-class baseline
-    (predict every held-out document's language as its source's most
-    common TRAIN-split language) — the evaluation harness every
-    classifier in the engine (NB, kNN-LOO, the MLlib quality clf) is
-    judged against, and the baseline any reported score must beat (the
-    standard sanity bar in IR evaluation; van Rijsbergen 1979, public).
-    tp/fp/fn are derived from two marginal aggregates of the confusion
-    frame joined FULL OUTER so classes that are never predicted still
-    report recall — precision/recall/F1 are shared-text CASE-guarded
-    doubles over exact integers.
-
-    Scale shape: the majority model is one grouped count + per-source
-    rank (broadcastable — one row per source); applying it is a
-    broadcast join; the metrics are two combinable aggregates over the
-    prediction frame and a class-count-sized outer join.
-    """
-    base = read_table(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "lang", "source", f"{_SPLIT_TRAIN} AS is_train"
-    )
-    maj = (
-        base.filter("is_train")
-        .groupBy("source", "lang")
-        .agg(F.count("*").alias("n"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("source").orderBy(F.col("n").desc(), F.col("lang"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("source", F.col("lang").alias("predicted"))
-    )
-    conf = (
-        base.filter("NOT is_train")
-        .join(F.broadcast(maj), "source")
-        .select(F.col("lang").alias("actual"), "predicted")
-    )
-    byactual = conf.groupBy(F.col("actual").alias("cls")).agg(
-        F.count("*").cast("bigint").alias("n_actual"),
-        F.sum(F.when(F.col("actual") == F.col("predicted"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("tp"),
-    )
-    bypred = conf.groupBy(F.col("predicted").alias("cls")).agg(
-        F.count("*").cast("bigint").alias("n_pred")
-    )
-    m = (
-        byactual.join(bypred, "cls", "full_outer")
-        .select(
-            "cls",
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            (F.coalesce("n_pred", F.lit(0)) - F.coalesce("tp", F.lit(0))).alias("fp"),
-            (F.coalesce("n_actual", F.lit(0)) - F.coalesce("tp", F.lit(0))).alias("fn"),
-        )
-    )
-    return m.selectExpr(
-        "cls",
-        "CAST(tp AS BIGINT) AS tp",
-        "CAST(fp AS BIGINT) AS fp",
-        "CAST(fn AS BIGINT) AS fn",
-        f"round({_PRF_P}, 6) AS precision_",
-        f"round({_PRF_R}, 6) AS recall_",
-        f"round({_PRF_F1}, 6) AS f1",
-    ).orderBy("cls")
 
 
 # ---------------------------------------------------------------------------
@@ -924,11 +861,14 @@ _BB_SIG = (
 )
 
 
-@query(
+# Bollinger bands: trailing 7-day mean +/- 2 sample sigmas of daily event
+# value from exact integer window moments; days with fewer than 2 points
+# signal 'warmup'.
+sql_query(
     "q_aa_bollinger",
-    oracle=f"""
+    f"""
     WITH daily AS (
-      SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+      SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
       FROM events GROUP BY 1),
     w AS (
@@ -949,49 +889,6 @@ _BB_SIG = (
     FROM w ORDER BY day
     """,
 )
-def q_aa_bollinger(spark, sf_dir):
-    """Bollinger bands over the daily total event value: trailing
-    7-day simple moving average with +/-2 sample-sigma bands and a
-    per-day breakout signal (Bollinger, classical technical analysis —
-    public). The daily series is exact integer cents; the rolling count,
-    sum, and sum-of-squares come from ONE constant-width ROWS frame, so
-    mean, sigma, and both bands are shared-text DOUBLE expressions over
-    exact integers — no double is ever summed across rows. Warm-up rows
-    (window < 2 points) signal 'warmup' instead of emitting NULL-driven
-    band math.
-
-    Scale shape: the corpus-sized work is one combinable daily rollup;
-    the window pass runs over the day-count table (one row per day) with
-    bounded frame state. For per-entity bands at scale the same frame
-    is partitioned by entity — identical shape, no global sort.
-    """
-    ev = read_table(spark, sf_dir, "events").select("ts", "value")
-    daily = ev.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
-            "day"
-        )
-    ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("x")
-    )
-    win = Window.orderBy("day").rowsBetween(-(_BB_WIN - 1), 0)
-    w = daily.select(
-        "day",
-        "x",
-        F.count("*").over(win).cast("bigint").alias("nw"),
-        F.sum(F.col("x").cast("decimal(38,0)")).over(win).alias("sx"),
-        F.sum((F.col("x").cast("decimal(38,0)") * F.col("x"))).over(win).alias("sxx"),
-    )
-    return w.selectExpr(
-        "CAST(day AS BIGINT) AS day",
-        "round(CAST(x AS DOUBLE) / 100.0, 6) AS value",
-        "nw AS n_window",
-        f"round({_BB_MEAN}, 6) AS sma",
-        f"round({_BB_UP}, 6) AS upper_band",
-        f"round({_BB_LO}, 6) AS lower_band",
-        f"{_BB_SIG} AS signal",
-    ).orderBy("day")
 
 
 # ---------------------------------------------------------------------------
@@ -1463,12 +1360,15 @@ def q_ah_cosine_hist(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Isotonic regression of daily mean value per event type by the minimax closed
+# form fit_i = max_{j<=i} min_{k>=i} mean(y[j..k]) (PAVA's output as joins and
+# aggregates over the day table).
+sql_query(
     "q_ai_isotonic",
-    oracle="""
+    """
     WITH daily AS (
       SELECT event_type,
-             date_diff('day', DATE '1970-01-01', CAST(ts AS TIMESTAMP)::DATE) AS day,
+             CAST(CAST(ts AS TIMESTAMP)::DATE - DATE '1970-01-01' AS BIGINT) AS day,
              CAST(count(*) AS BIGINT) AS w,
              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sy
       FROM events GROUP BY 1, 2),
@@ -1499,75 +1399,6 @@ def q_ah_cosine_hist(spark, sf_dir):
     ORDER BY p.event_type, p.day
     """,
 )
-def q_ai_isotonic(spark, sf_dir):
-    """Isotonic (monotone non-decreasing) regression of daily mean event
-    value per event type, via the MINIMAX closed form
-    ``fit_i = max_{j<=i} min_{k>=i} weightedMean(y[j..k])`` (Barlow,
-    Bartholomew, Bremner & Brunk 1972 — public; identical to PAVA's
-    output). PAVA itself is a sequential pooling pass — hostile to a
-    shared-nothing engine — while the minimax identity is pure joins and
-    aggregates over the BUCKETIZED frame, so the fit distributes. Means
-    are doubles from identical integer (sum, weight) pairs on both
-    engines, so every min/max comparison resolves identically.
-
-    Scale shape: the corpus-sized work is one combinable daily rollup
-    (the same two-level shape as q_aa); the O(B^3) minimax join runs on
-    the bucket frame (B = days per type, bounded by the calendar —
-    B=30 here, B^3 = 27k rows per type). At finer granularity you bound
-    B by re-bucketing, not by pushing PAVA into the corpus scan.
-    """
-    ev = read_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
-            "day"
-        ),
-    ).agg(
-        F.count("*").cast("bigint").alias("w"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sy"),
-    )
-    pts = daily.withColumn(
-        "i",
-        F.row_number().over(Window.partitionBy("event_type").orderBy("day")),
-    )
-    j = pts.select("event_type", F.col("i").alias("j"))
-    k = pts.select("event_type", F.col("i").alias("k"))
-    p = pts.select("event_type", F.col("i").alias("pi"), "sy", "w")
-    ranges = (
-        j.join(k, "event_type")
-        .filter(F.col("k") >= F.col("j"))
-        .join(
-            p,
-            ["event_type"],
-        )
-        .filter((F.col("pi") >= F.col("j")) & (F.col("pi") <= F.col("k")))
-        .groupBy("event_type", "j", "k")
-        .agg(
-            (
-                F.sum("sy").cast("double") / F.sum("w").cast("double")
-            ).alias("mean_jk")
-        )
-    )
-    i_grid = pts.select("event_type", F.col("i").alias("i"))
-    inner_min = (
-        ranges.join(i_grid, "event_type")
-        .filter((F.col("j") <= F.col("i")) & (F.col("i") <= F.col("k")))
-        .groupBy("event_type", "i", "j")
-        .agg(F.min("mean_jk").alias("m"))
-    )
-    fit = inner_min.groupBy("event_type", "i").agg(F.max("m").alias("fitted_cents"))
-    return (
-        fit.join(pts, ["event_type", "i"])
-        .selectExpr(
-            "event_type",
-            "CAST(day AS BIGINT) AS day",
-            "round(CAST(sy AS DOUBLE) / w / 100.0, 6) AS raw_mean",
-            "round(fitted_cents / 100.0, 6) AS fitted",
-        )
-        .orderBy("event_type", "day")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1704,20 +1535,23 @@ _SAX_Z = (
 )
 
 
-@query(
+# SAX symbols of each event type's daily series: 5-day segment means,
+# z-normalized on exact moments and rounded to 6dp before the quartile-
+# breakpoint CASE.
+sql_query(
     "q_al_sax",
-    oracle=f"""
+    f"""
     WITH daily AS (
       SELECT event_type,
-             date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+             CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
       FROM events GROUP BY 1, 2),
     idx AS (
       SELECT event_type, day, x,
-             -- // is floor division: DuckDB's / is float division and a
-             -- BIGINT cast rounds-to-nearest (Spark's cast truncates)
-             CAST((row_number() OVER (PARTITION BY event_type ORDER BY day) - 1)
-                  // {_SAX_SEG_DAYS} AS BIGINT) AS seg
+             -- floor before the cast: a DOUBLE -> BIGINT cast rounds to
+             -- nearest on DuckDB and truncates on Spark
+             CAST(floor((row_number() OVER (PARTITION BY event_type ORDER BY day) - 1)
+                        / {_SAX_SEG_DAYS}) AS BIGINT) AS seg
       FROM daily),
     segs AS (
       SELECT event_type, seg,
@@ -1738,65 +1572,6 @@ _SAX_Z = (
     FROM z ORDER BY event_type, segment
     """,
 )
-def q_al_sax(spark, sf_dir):
-    """SAX symbolization (Lin, Keogh, Lonardi & Chiu, "A symbolic
-    representation of time series", DMKD 2003 — public) of each event
-    type's daily-value series: Piecewise Aggregate Approximation over
-    5-day segments, z-normalized against the full series, then mapped to
-    a 4-symbol alphabet at the standard-normal quartile breakpoints —
-    the dimensionality reduction that turns numeric series into strings
-    amenable to the engine's text machinery (shingles, MinHash, grep).
-    All moments are exact integers; z is one shared-text expression
-    rounded to 6dp BEFORE the breakpoint CASE so symbol assignment
-    cannot differ between engines.
-
-    Scale shape: one combinable daily rollup; segment indexing is a
-    per-type window over the day table (bounded by the calendar); the
-    z/symbol math runs on the segment table. Per-entity SAX at scale
-    partitions the same windows by entity.
-    """
-    ev = read_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
-            "day"
-        ),
-    ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("x")
-    )
-    idx = daily.withColumn(
-        "seg",
-        F.floor(
-            (
-                F.row_number().over(
-                    Window.partitionBy("event_type").orderBy("day")
-                )
-                - 1
-            )
-            / _SAX_SEG_DAYS
-        ).cast("bigint"),
-    )
-    segs = idx.groupBy("event_type", "seg").agg(
-        F.count("*").cast("bigint").alias("seg_n"),
-        F.sum(F.col("x").cast("decimal(38,0)")).cast("decimal(38,0)").alias("seg_sum"),
-    )
-    tot = idx.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("tot_n"),
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("tot_sum"),
-        F.sum(F.col("x").cast("decimal(38,0)") * F.col("x")).alias("tot_ss"),
-    )
-    z = segs.join(F.broadcast(tot), "event_type").selectExpr(
-        "event_type", "seg", "seg_n", f"{_SAX_Z} AS z"
-    )
-    return z.selectExpr(
-        "event_type",
-        "CAST(seg AS BIGINT) AS segment",
-        "seg_n AS n_days",
-        "z",
-        f"{_SAX_SYM} AS symbol",
-    ).orderBy("event_type", "segment")
 
 
 # ---------------------------------------------------------------------------
@@ -2015,9 +1790,12 @@ def q_an_readability(spark, sf_dir):
 _IMP_MASK = "(event_id % 7 = 0)"
 
 
-@query(
+# Mean vs median imputation against the true mean per event type, with every
+# 7th event id masked; sums stay exact DECIMAL cents and the median is
+# discrete.
+sql_query(
     "q_ao_impute",
-    oracle=f"""
+    f"""
     WITH base AS (
       SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
              CASE WHEN {_IMP_MASK} THEN 1 ELSE 0 END AS miss
@@ -2026,7 +1804,8 @@ _IMP_MASK = "(event_id % 7 = 0)"
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n_obs,
              SUM(CAST(cents AS DECIMAL(38,0))) AS s_obs,
-             CAST(quantile_disc(cents, 0.5) AS BIGINT) AS med_obs
+             CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY cents) AS BIGINT)
+               AS med_obs
       FROM base WHERE miss = 0 GROUP BY event_type),
     tot AS (
       SELECT event_type,
@@ -2047,61 +1826,6 @@ _IMP_MASK = "(event_id % 7 = 0)"
     ORDER BY t.event_type
     """,
 )
-def q_ao_impute(spark, sf_dir):
-    """Imputation audit — the data-repair step every training pipeline
-    runs before features reach a model: with a DETERMINISTIC missingness
-    mask (every 7th event id), compare mean- vs median-imputation
-    against the known ground-truth mean per event type (the mask is
-    synthetic precisely so the truth column exists; in production the
-    same query runs without it). Observed sums are exact DECIMAL cents,
-    the median is the exact discrete quantile, and every reported mean
-    is a shared-text ratio over those exact aggregates — imputation math
-    never sums floats.
-
-    Scale shape: two combinable aggregates over one scan (observed and
-    total branches share it via column pruning), a type-cardinality
-    join, and per-type arithmetic. The exact median keeps the oracle
-    fixture honest; at 100 TB the mergeable approx_percentile swaps in
-    exactly as in q_yn/q_yo.
-    """
-    base = read_table(spark, sf_dir, "events").selectExpr(
-        "event_type",
-        "CAST(round(value * 100) AS BIGINT) AS cents",
-        f"CASE WHEN {_IMP_MASK} THEN 1 ELSE 0 END AS miss",
-    )
-    obs = (
-        base.filter(F.col("miss") == 0)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_obs"),
-            F.sum(F.col("cents").cast("decimal(38,0)")).alias("s_obs"),
-            F.expr(
-                "CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY cents) AS BIGINT)"
-            ).alias("med_obs"),
-        )
-    )
-    tot = base.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("miss").cast("bigint").alias("n_missing"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s_true"),
-    )
-    return (
-        tot.join(obs, "event_type")
-        .selectExpr(
-            "event_type",
-            "n",
-            "n_missing",
-            "round(CAST(s_obs AS DOUBLE) / n_obs / 100.0, 6) AS mean_observed",
-            "round(CAST(med_obs AS DOUBLE) / 100.0, 6) AS median_observed",
-            "round((CAST(s_obs AS DOUBLE) + CAST(n_missing AS DOUBLE)"
-            " * (CAST(s_obs AS DOUBLE) / n_obs)) / n / 100.0, 6)"
-            " AS mean_after_mean_impute",
-            "round((CAST(s_obs AS DOUBLE) + CAST(n_missing AS DOUBLE) * med_obs)"
-            " / n / 100.0, 6) AS mean_after_median_impute",
-            "round(CAST(s_true AS DOUBLE) / n / 100.0, 6) AS mean_true",
-        )
-        .orderBy("event_type")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2501,10 +2225,9 @@ def q_az_textrank(spark, sf_dir):
     100 TB is a vocabulary-sized problem after the first aggregate.
     """
     from ..functions import text as TXT
-    from .corpus_ops import _docs
     from .lakehouse import pagerank
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select(TXT.tokens("text").alias("toks")).filter(F.size("toks") >= 2)
     pairs = toks.select(
         F.explode(
@@ -2543,12 +2266,15 @@ def q_az_textrank(spark, sf_dir):
 _STL_W = 7  # centered moving-average window (3 each side)
 
 
-@query(
+# Additive decomposition: centered 7-day moving-average trend, weekday
+# seasonal means in milli-units and the residual, exact integers until
+# display.
+sql_query(
     "q_b2_stl_decompose",
-    oracle=f"""
+    f"""
     WITH daily AS (
       SELECT event_type,
-             date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+             CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2),
     win AS (
@@ -2579,69 +2305,6 @@ _STL_W = 7  # centered moving-average window (3 each side)
     ORDER BY d.event_type, d.day
     """,
 )
-def q_b2_stl_decompose(spark, sf_dir):
-    """STL-lite additive decomposition (Cleveland et al. 1990's STL,
-    reduced to one pass: centered 7-day moving-average trend + weekday
-    seasonal means + residual — the monitoring-pipeline variant, not the
-    loess iteration). Full-window days only (the 7-day MA is undefined
-    at series edges). Everything is exact integers until the display
-    division: detrended7 = 7x - sum7 (exact), weekday means quantized to
-    milli-units, residual as an exact integer difference — identical on
-    both engines, hash-checked including the residuals.
-
-    Scale shape: the corpus collapses to the daily aggregate first; the
-    moving window runs over days-per-series partitions
-    (calendar-bounded); the seasonal join is on (event_type, weekday) —
-    14 keys, broadcast. The residual column is what an anomaly monitor
-    thresholds; Hampel (q_yf) gives the robust twin.
-    """
-    ev = read_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-        ).alias("day"),
-    ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
-    win = daily.select(
-        "event_type",
-        "day",
-        "cents",
-        F.sum("cents").over(w).alias("sum7"),
-        F.count("*").over(w).alias("n7"),
-    )
-    det = win.filter(F.col("n7") == _STL_W).select(
-        "event_type",
-        "day",
-        "cents",
-        "sum7",
-        (F.col("day") % 7).alias("dow"),
-        (F.lit(_STL_W) * F.col("cents") - F.col("sum7")).alias("det7"),
-    )
-    seas = det.groupBy("event_type", "dow").agg(
-        F.expr(
-            "CAST(round(CAST(SUM(CAST(det7 AS DECIMAL(38,0))) AS DOUBLE)"
-            " / count(*) * 1000.0) AS BIGINT)"
-        ).alias("seas_mq")
-    )
-    return (
-        det.join(F.broadcast(seas), ["event_type", "dow"])
-        .selectExpr(
-            "event_type",
-            "CAST(day AS BIGINT) AS day",
-            "round(CAST(cents AS DOUBLE) / 100.0, 6) AS raw",
-            f"round(CAST(sum7 AS DOUBLE) / {_STL_W} / 100.0, 6) AS trend",
-            f"round(CAST(seas_mq AS DOUBLE) / 1000.0 / {_STL_W} / 100.0, 6)"
-            " AS seasonal",
-            "round(CAST(1000 * det7 - seas_mq AS DOUBLE)"
-            f" / 1000.0 / {_STL_W} / 100.0, 6) AS residual",
-        )
-        .orderBy("event_type", "day")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2708,19 +2371,23 @@ _PSI_TERM = (
 )
 
 
-@query(
+# Population stability index between even- and odd-day value distributions per
+# event type over 10 smoothed bins; each bin's term is quantized to a BIGINT
+# before the sum.
+sql_query(
     "q_b5_psi",
-    oracle=f"""
+    f"""
     WITH scored AS (
       SELECT event_type,
              CAST(round(value * 100) AS BIGINT) AS cents,
-             CASE WHEN date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 2
+             CASE WHEN CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) % 2
                   = 0 THEN 0 ELSE 1 END AS half
       FROM events),
     bounds AS (SELECT min(cents) AS lo, max(cents) AS hi FROM scored),
     binned AS (
       SELECT event_type, half,
-             least(CAST(((cents - lo) * {PSI_BINS}) // (hi - lo + 1) AS BIGINT),
+             least(CAST(floor(((cents - lo) * {PSI_BINS}) / (hi - lo + 1))
+                        AS BIGINT),
                    {PSI_BINS - 1}) AS bin
       FROM scored, bounds),
     per_bin AS (
@@ -2741,66 +2408,6 @@ _PSI_TERM = (
     FROM terms GROUP BY event_type ORDER BY event_type
     """,
 )
-def q_b5_psi(spark, sf_dir):
-    """Population Stability Index (the credit-scoring / model-monitoring
-    drift statistic — PSI = Σ (p_i − q_i) ln(p_i/q_i), public) between
-    even-day and odd-day value distributions per event type, over
-    {PSI_BINS} equal-width cents bins with +1-per-bin smoothing.
-    Deterministic halves (day parity) make the whole statistic
-    hash-checkable — the same reason the bootstrap uses md5 draws. Each
-    bin's term is quantized to an exact BIGINT before summation (the JSD
-    discipline), so the only unguarded float is inside one shared-text
-    expression per bin.
-
-    Scale shape: one combinable aggregate collapses the corpus to
-    (type, bin) cells; totals and the term sum are per-type aggregates
-    over {PSI_BINS} rows. The monitoring query you run per feature per
-    day at any corpus size.
-    """
-    scored = read_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        (
-            F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-            % 2
-        ).alias("half"),
-    )
-    bounds = scored.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
-    binned = scored.crossJoin(F.broadcast(bounds)).select(
-        "event_type",
-        "half",
-        F.least(
-            F.floor(
-                (F.col("cents") - F.col("lo"))
-                * PSI_BINS
-                / (F.col("hi") - F.col("lo") + 1)
-            ).cast("bigint"),
-            F.lit(PSI_BINS - 1).cast("bigint"),
-        ).alias("bin"),
-    )
-    per_bin = binned.groupBy("event_type", "bin").agg(
-        F.count(F.when(F.col("half") == 0, 1)).cast("bigint").alias("na"),
-        F.count(F.when(F.col("half") == 1, 1)).cast("bigint").alias("nb"),
-    )
-    tot = per_bin.groupBy("event_type").agg(
-        F.sum("na").cast("bigint").alias("ta"),
-        F.sum("nb").cast("bigint").alias("tb"),
-    )
-    terms = per_bin.join(F.broadcast(tot), "event_type").selectExpr(
-        "event_type", "ta", "tb", f"{_PSI_TERM} AS t_q"
-    )
-    return (
-        terms.groupBy("event_type")
-        .agg(
-            F.min("ta").alias("n_a"),
-            F.min("tb").alias("n_b"),
-            F.expr(
-                "round(CAST(SUM(CAST(t_q AS DECIMAL(38,0))) AS DOUBLE)"
-                " / 1000000000.0, 6)"
-            ).alias("psi"),
-        )
-        .orderBy("event_type")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2829,17 +2436,19 @@ _STUMP_GAIN = (
 )
 
 
-@query(
+# Decision-stump split finding: information gain of every boundary 'bin <= b'
+# over 20 score bins, from cumulative counts.
+sql_query(
     "q_bd_decision_stump",
-    oracle=f"""
+    f"""
     WITH scored AS (
       SELECT CAST(round(value * 100) AS BIGINT) AS cents,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS label
       FROM events),
     bounds AS (SELECT min(cents) AS lo, max(cents) AS hi FROM scored),
     binned AS (
-      SELECT least(CAST(((cents - lo) * {STUMP_BINS})
-                        // (hi - lo + 1) AS BIGINT),
+      SELECT least(CAST(floor(((cents - lo) * {STUMP_BINS})
+                              / (hi - lo + 1)) AS BIGINT),
                    {STUMP_BINS - 1}) AS bin,
              label
       FROM scored, bounds),
@@ -2869,64 +2478,6 @@ _STUMP_GAIN = (
     SELECT * FROM gains ORDER BY split_bin
     """,
 )
-def q_bd_decision_stump(spark, sf_dir):
-    """Histogram-based DECISION-STUMP split finding — the inner kernel
-    of every distributed GBDT (XGBoost's approx/hist algorithms, Chen &
-    Guestrin KDD 2016; LightGBM, Ke et al. NeurIPS 2017 — public): bin
-    the feature into {STUMP_BINS} histogram buckets in ONE combinable
-    pass, then score every split boundary "bin <= b" by information
-    gain computed from cumulative (count, positives) — never rescanning
-    rows per candidate split. Emits ALL boundaries with exact left/right
-    counts and the gain (the argmax and its margin are then trivial);
-    0·ln0 edges are CASE-guarded identically on both engines.
-
-    Scale shape: the corpus collapses to {STUMP_BINS} histogram cells
-    (this is precisely why histogram GBDTs scale — split finding is
-    O(bins), not O(rows)); the cumulative window runs over those cells.
-    Per-feature parallelism at 100 TB is one such histogram per feature,
-    all from the same scan.
-    """
-    scored = read_table(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-    )
-    bounds = scored.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
-    binned = scored.crossJoin(F.broadcast(bounds)).select(
-        F.least(
-            F.floor(
-                (F.col("cents") - F.col("lo"))
-                * STUMP_BINS
-                / (F.col("hi") - F.col("lo") + 1)
-            ).cast("bigint"),
-            F.lit(STUMP_BINS - 1).cast("bigint"),
-        ).alias("bin"),
-        "label",
-    )
-    per_bin = binned.groupBy("bin").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.sum("label").cast("bigint").alias("pos"),
-    )
-    wc = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    cum = per_bin.select(
-        "bin",
-        F.sum("cnt").over(wc).alias("nl"),
-        F.sum("pos").over(wc).alias("pl"),
-        F.sum("cnt").over(wall).alias("n"),
-        F.sum("pos").over(wall).alias("p"),
-    )
-    return (
-        cum.filter(F.col("nl") < F.col("n"))
-        .selectExpr(
-            "bin AS split_bin",
-            "nl AS n_left",
-            "pl AS pos_left",
-            "n - nl AS n_right",
-            "p - pl AS pos_right",
-            f"{_STUMP_GAIN} AS gain",
-        )
-        .orderBy("split_bin")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3202,13 +2753,15 @@ _GR_F = (
 )
 
 
-@query(
+# Granger F-test: does yesterday's order count help forecast today's revenue?
+# Revenue is floored to kilodollars so every moment sum stays below 2^53.
+sql_query(
     "q_ch_granger",
-    oracle=f"""
+    f"""
     WITH daily AS (
-      SELECT date_diff('day',
-               (SELECT min(date_trunc('day', o_orderdate)) FROM orders),
-               date_trunc('day', o_orderdate)) AS t,
+      SELECT CAST(CAST(date_trunc('day', o_orderdate) AS DATE)
+                  - CAST((SELECT min(date_trunc('day', o_orderdate)) FROM orders)
+                         AS DATE) AS BIGINT) AS t,
              CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                AS rev,
              CAST(count(*) AS BIGINT) AS cnt
@@ -3237,89 +2790,6 @@ _GR_F = (
     FROM rss
     """,
 )
-def q_ch_granger(spark, sf_dir):
-    """GRANGER CAUSALITY TEST (Granger 1969) — does yesterday's ORDER
-    COUNT help forecast today's REVENUE beyond revenue's own lag? The
-    nested-OLS F-test production forecasting teams run before adding a
-    leading indicator: unrestricted y_t ~ 1 + y_{{t-1}} + x_{{t-1}}
-    (3x3 Cramer's rule on exact integer moments, the q_z9 layout) vs
-    restricted y_t ~ 1 + y_{{t-1}} (2x2 closed form), F = (RSS_r -
-    RSS_u) / (RSS_u / (n-3)). Lag alignment is an explicit day-index
-    equi-join (q_bs contract — robust to calendar gaps, no row-offset
-    lag). Revenue is quantized to whole kilodollars through the shared
-    floor close BEFORE the moments, keeping every sum below 2^53 — the
-    DECIMAL-above-2^53 route diverges by 1 ulp between the engines'
-    decimal->double casts (observed; DuckDB's hugeint conversion
-    double-rounds) — so both engines produce bit-identical
-    coefficients, RSS, and F from plain BIGINT sums.
-
-    Scale shape: ONE map-side-combinable daily rollup is the only
-    corpus-scan stage; the self-join, moment aggregate (10 sums over
-    ~2.4k day pairs), and the closed-form solve are calendar-bounded.
-    100 TB = one scan + a 1-row tail.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    day0 = o.agg(F.min(F.date_trunc("day", "o_orderdate")).alias("d0"))
-    daily = (
-        o.crossJoin(F.broadcast(day0))
-        .groupBy(
-            F.datediff(F.date_trunc("day", "o_orderdate"), F.col("d0")).alias(
-                "t"
-            )
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("rev"),
-            F.count("*").cast("bigint").alias("cnt"),
-        )
-    )
-    a = daily.alias("a")
-    b = daily.alias("b")
-    pairs = a.join(
-        F.broadcast(b), F.col("b.t") == F.col("a.t") - 1
-    ).select(
-        F.expr("CAST(floor(a.rev / 100000.0) AS BIGINT)").alias("y"),
-        F.expr("CAST(floor(b.rev / 100000.0) AS BIGINT)").alias("yl"),
-        F.col("b.cnt").alias("xl"),
-    )
-    m = pairs.agg(
-        *[
-            F.expr(expr).alias(alias)
-            for expr, alias in (s.rsplit(" AS ", 1) for s in _GR_MOMS)
-        ]
-    )
-    fit = m.select(
-        "n",
-        "sy",
-        "syy",
-        "syyl",
-        "syxl",
-        F.expr(_GR_B0).alias("b0"),
-        F.expr(_GR_B1).alias("b1"),
-        F.expr(_GR_B2).alias("b2"),
-        F.expr(_GR_A0).alias("a0"),
-        F.expr(_GR_A1).alias("a1"),
-    )
-    rss = fit.select(
-        "n",
-        "b0",
-        "b1",
-        "b2",
-        "a0",
-        "a1",
-        F.expr(_GR_RSS_U).alias("rss_u"),
-        F.expr(_GR_RSS_R).alias("rss_r"),
-    )
-    return rss.select(
-        "n",
-        F.round("b1", 6).alias("b_y_lag"),
-        F.round("b2", 6).alias("b_x_lag"),
-        F.round("a1", 6).alias("b_restricted_y_lag"),
-        F.round(F.col("rss_u"), 6).alias("rss_u_sq_kdollars"),
-        F.round(F.col("rss_r"), 6).alias("rss_r_sq_kdollars"),
-        F.round(F.expr(_GR_F), 6).alias("f_granger"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -521,12 +521,15 @@ _NA_V_TERM = (
 )
 
 
-@query(
+# Nelson-Aalen cumulative hazard, its variance and exp(-H) on q_yt's life
+# table; a window adds the increments in duration order on both engines.
+sql_query(
     "q_bm_nelson_aalen",
-    oracle=f"""
+    f"""
     WITH life AS (
       SELECT o_custkey,
-             date_diff('day', min(o_orderdate), max(o_orderdate)) AS dur,
+             CAST(CAST(max(o_orderdate) AS DATE) - CAST(min(o_orderdate) AS DATE)
+                  AS BIGINT) AS dur,
              CASE WHEN max(o_orderdate) < TIMESTAMP '{KM_CUTOFF}'
                   THEN 1 ELSE 0 END AS observed
       FROM orders GROUP BY o_custkey),
@@ -557,53 +560,6 @@ _NA_V_TERM = (
     FROM na WHERE n_deaths > 0 ORDER BY duration_days
     """,
 )
-def q_bm_nelson_aalen(spark, sf_dir):
-    """NELSON-AALEN cumulative hazard of customer lifetime — H(t) =
-    sum_(t_i <= t) d_i/n_i with variance sum d_i/n_i^2 (Nelson 1972,
-    Aalen 1978 — public), on the SAME life table as q_yt's Kaplan-Meier
-    (first order -> last order, right-censored at {KM_CUTOFF}); also
-    emits the Fleming-Harrington survival exp(-H), the KM alternative
-    that is better-behaved at small risk sets. The hazard increments are
-    the same shared-text d/n expression on both engines, and the
-    cumulative window adds them in the identical dur order, so the
-    running doubles match bit-for-bit.
-
-    Scale shape: identical to q_yt — one corpus-sized per-customer
-    min/max aggregate, then calendar-bounded per-duration frames for the
-    cumulative windows. At 100 TB only the first aggregate scans data.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    life = o.groupBy("o_custkey").agg(
-        F.datediff(F.max("o_orderdate"), F.min("o_orderdate")).alias("dur"),
-        (F.max("o_orderdate") < F.lit(KM_CUTOFF).cast("timestamp"))
-        .cast("long")
-        .alias("observed"),
-    )
-    n_total = life.count()
-    per_d = life.groupBy("dur").agg(
-        F.count("*").alias("n_all"), F.sum("observed").alias("n_deaths")
-    )
-    w_prev = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    risk = per_d.withColumn(
-        "at_risk",
-        F.lit(n_total) - F.coalesce(F.sum("n_all").over(w_prev), F.lit(0)),
-    )
-    na = risk.withColumn("h", F.sum(F.expr(_NA_H_TERM)).over(w_cum)).withColumn(
-        "v", F.sum(F.expr(_NA_V_TERM)).over(w_cum)
-    )
-    return (
-        na.filter(F.col("n_deaths") > 0)
-        .select(
-            F.col("dur").cast("bigint").alias("duration_days"),
-            F.col("n_deaths").cast("bigint").alias("n_churned"),
-            F.col("at_risk").cast("bigint").alias("at_risk"),
-            F.round("h", 6).alias("cum_hazard"),
-            F.round("v", 6).alias("hazard_var"),
-            F.round(F.exp(-F.col("h")), 6).alias("na_survival"),
-        )
-        .orderBy("duration_days")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -623,23 +579,23 @@ _FS_DIG_A, _FS_DIG_D = 2_140_066, -1_791_759
 _FS_UPPER, _FS_LOWER = 3_000_000, 0
 
 #: Blocking key: $1000 account-balance bucket, offset so the bucket
-#: division never sees a negative operand (Spark's DIV truncates toward
-#: zero while DuckDB's // floors — they agree only on non-negatives;
-#: acctbal >= -999.99 so cents + 100000 >= 1).
-_FS_BUCKET_SPARK = "(cents + 100000) DIV 100000"
-_FS_BUCKET_DUCK = "(cents + 100000) // 100000"
+#: division never sees a negative operand (acctbal >= -999.99 so
+#: cents + 100000 >= 1).
+_FS_BUCKET = "CAST(floor((cents + 100000) / 100000) AS BIGINT)"
 
 
-@query(
+# Fellegi-Sunter record linkage: customer pairs blocked on (nation, $1000
+# balance bucket), scored by summed per-field weights in integer micro-nats.
+sql_query(
     "q_bn_fellegi_sunter",
-    oracle=f"""
+    f"""
     WITH c AS (
       SELECT c_custkey, c_nationkey, c_mktsegment,
              CAST(round(c_acctbal * 100) AS BIGINT) AS cents
       FROM customer),
     blocked AS (
       SELECT c_custkey, c_nationkey, c_mktsegment, cents,
-             {_FS_BUCKET_DUCK} AS bucket
+             {_FS_BUCKET} AS bucket
       FROM c),
     pairs AS (
       SELECT CASE WHEN a.c_mktsegment = b.c_mktsegment THEN 1 ELSE 0 END
@@ -652,8 +608,8 @@ _FS_BUCKET_DUCK = "(cents + 100000) // 100000"
         ON a.c_nationkey = b.c_nationkey AND a.bucket = b.bucket
        AND a.c_custkey < b.c_custkey),
     scored AS (
-      SELECT concat(CAST(seg_eq AS VARCHAR), CAST(bal_eq AS VARCHAR),
-                    CAST(dig_eq AS VARCHAR)) AS pattern,
+      SELECT concat(CAST(seg_eq AS STRING), CAST(bal_eq AS STRING),
+                    CAST(dig_eq AS STRING)) AS pattern,
              CAST(CASE WHEN seg_eq = 1 THEN {_FS_SEG_A}
                        ELSE {_FS_SEG_D} END
                 + CASE WHEN bal_eq = 1 THEN {_FS_BAL_A}
@@ -669,79 +625,6 @@ _FS_BUCKET_DUCK = "(cents + 100000) // 100000"
     FROM scored GROUP BY pattern ORDER BY pattern
     """,
 )
-def q_bn_fellegi_sunter(spark, sf_dir):
-    """RECORD-LINKAGE scoring by the Fellegi-Sunter model (Fellegi &
-    Sunter, JASA 1969 — public; the probabilistic-linkage algebra under
-    Splink and every MDM dedup engine): candidate customer pairs from
-    BLOCKING on (nation, $1000 balance bucket), a 3-field agreement
-    vector (segment equality, balance within $50, id checksum digit),
-    and the summed log-likelihood weight ln(m/u) / ln((1-m)/(1-u)) per
-    field — carried as exact integer micro-nats so scoring and the
-    match / possible / nonmatch threshold decision are float-free and
-    engine-identical. Output is the agreement-pattern summary table (one
-    row per pattern: count, weight, decision), the linkage QA readout.
-
-    Scale shape: blocking turns the quadratic comparison space into ONE
-    equi-join shuffle on the block key, with pair fan-out bounded by
-    block size (the same containment argument as q_ze's grid-blocked
-    spatial join); the weight algebra is map-side arithmetic and the
-    final aggregate has <= 8 pattern rows. At 100 TB you tune block
-    granularity, never the plan shape. Blocking misses cross-block true
-    matches by design — the standard recall/cost trade, documented here.
-    """
-    c = read_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_nationkey",
-        "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
-    )
-    blocked = c.withColumn("bucket", F.expr(_FS_BUCKET_SPARK))
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.c_custkey") < F.col("b.c_custkey")),
-    ).select(
-        F.when(F.col("a.c_mktsegment") == F.col("b.c_mktsegment"), 1)
-        .otherwise(0)
-        .alias("seg_eq"),
-        F.when(F.abs(F.col("a.cents") - F.col("b.cents")) <= 5000, 1)
-        .otherwise(0)
-        .alias("bal_eq"),
-        F.when(F.col("a.c_custkey") % 10 == F.col("b.c_custkey") % 10, 1)
-        .otherwise(0)
-        .alias("dig_eq"),
-    )
-    scored = pairs.select(
-        F.concat(
-            F.col("seg_eq").cast("string"),
-            F.col("bal_eq").cast("string"),
-            F.col("dig_eq").cast("string"),
-        ).alias("pattern"),
-        (
-            F.when(F.col("seg_eq") == 1, _FS_SEG_A).otherwise(_FS_SEG_D)
-            + F.when(F.col("bal_eq") == 1, _FS_BAL_A).otherwise(_FS_BAL_D)
-            + F.when(F.col("dig_eq") == 1, _FS_DIG_A).otherwise(_FS_DIG_D)
-        )
-        .cast("bigint")
-        .alias("score_micros"),
-    )
-    return (
-        scored.groupBy("pattern")
-        .agg(
-            F.count("*").cast("bigint").alias("n_pairs"),
-            F.min("score_micros").alias("score_micros"),
-        )
-        .withColumn(
-            "decision",
-            F.when(F.col("score_micros") >= _FS_UPPER, "match")
-            .when(F.col("score_micros") >= _FS_LOWER, "possible")
-            .otherwise("nonmatch"),
-        )
-        .orderBy("pattern")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -878,9 +761,11 @@ _BR_RES_TERM = (
 )
 
 
-@query(
+# Brier score with Murphy's reliability / resolution / uncertainty split over
+# 10 forecast bins; an ordered window sums the per-bin double terms.
+sql_query(
     "q_bq_brier",
-    oracle=f"""
+    f"""
     WITH base AS (
       SELECT {_BR_FP} AS fp, {_BR_Y} AS y FROM orders),
     tot AS (
@@ -888,9 +773,9 @@ _BR_RES_TERM = (
              CAST(sum((fp - 100 * y) * (fp - 100 * y)) AS BIGINT) AS sq
       FROM base),
     bins AS (
-      SELECT fp // 10 AS bin, CAST(count(*) AS BIGINT) AS nk,
+      SELECT CAST(floor(fp / 10) AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS nk,
              CAST(sum(fp) AS BIGINT) AS sfp, CAST(sum(y) AS BIGINT) AS sy
-      FROM base GROUP BY fp // 10),
+      FROM base GROUP BY CAST(floor(fp / 10) AS BIGINT)),
     terms AS (
       SELECT bin, nk, sfp, sy, nn, kk, sq,
              {_BR_REL_TERM} AS rel_term, {_BR_RES_TERM} AS res_term
@@ -914,73 +799,6 @@ _BR_RES_TERM = (
     FROM cum WHERE rn = 1
     """,
 )
-def q_bq_brier(spark, sf_dir):
-    """BRIER SCORE with the Murphy decomposition (Brier 1950; Murphy
-    1973 — public): mean squared error of a probability forecast split
-    into reliability − resolution + uncertainty over 10 forecast bins —
-    the calibration audit behind every ML-scoring dashboard (companion
-    to q_z4's calibration curve, which plots the bins this decomposes).
-    The forecast is a deterministic integer-percent function of the
-    order key; the raw Brier numerator Σ(fp−100y)² and every bin moment
-    are EXACT integers, and each bin's reliability/resolution term is
-    one shared-text division of integer products. The 10 per-bin double
-    terms are then summed by an ORDERED cumulative window (bin order) —
-    both engines add them in the identical sequence, so even the double
-    accumulation is bit-stable (no unordered double aggregation
-    anywhere).
-
-    Scale shape: one map-side-combinable global aggregate + one 10-group
-    aggregate over the scan; the decomposition windows run on the
-    10-row bin frame. 100 TB = one scan, constant-size tail.
-    """
-    o = read_table(spark, sf_dir, "orders").select(
-        F.expr(_BR_FP).alias("fp"), F.expr(_BR_Y).alias("y")
-    )
-    tot = o.agg(
-        F.count("*").cast("bigint").alias("nn"),
-        F.sum("y").cast("bigint").alias("kk"),
-        F.sum((F.col("fp") - 100 * F.col("y")) * (F.col("fp") - 100 * F.col("y")))
-        .cast("bigint")
-        .alias("sq"),
-    )
-    bins = o.groupBy(F.expr("fp DIV 10").alias("bin")).agg(
-        F.count("*").cast("bigint").alias("nk"),
-        F.sum("fp").cast("bigint").alias("sfp"),
-        F.sum("y").cast("bigint").alias("sy"),
-    )
-    terms = bins.crossJoin(F.broadcast(tot)).select(
-        "bin",
-        "nn",
-        "kk",
-        "sq",
-        F.expr(_BR_REL_TERM).alias("rel_term"),
-        F.expr(_BR_RES_TERM).alias("res_term"),
-    )
-    w_cum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = terms.select(
-        "bin",
-        "nn",
-        "kk",
-        "sq",
-        F.sum("rel_term").over(w_cum).alias("rel_sum"),
-        F.sum("res_term").over(w_cum).alias("res_sum"),
-        F.row_number().over(Window.orderBy(F.col("bin").desc())).alias("rn"),
-    )
-    ybar = F.col("kk").cast("double") / F.col("nn").cast("double")
-    return cum.filter(F.col("rn") == 1).select(
-        F.col("nn").alias("n"),
-        F.col("kk").alias("n_events"),
-        F.round(
-            F.col("sq").cast("double") / (10000.0 * F.col("nn").cast("double")), 6
-        ).alias("brier"),
-        F.round(F.col("rel_sum") / F.col("nn").cast("double"), 6).alias(
-            "reliability"
-        ),
-        F.round(F.col("res_sum") / F.col("nn").cast("double"), 6).alias(
-            "resolution"
-        ),
-        F.round(ybar * (1.0 - ybar), 6).alias("uncertainty"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -999,13 +817,15 @@ _SMAPE_EXPR = (
 )
 
 
-@query(
+# MASE and sMAPE of the weekly seasonal-naive revenue forecast; days align by
+# an equi-join on the day index, so calendar gaps cannot misalign them.
+sql_query(
     "q_bs_mase",
-    oracle=f"""
+    f"""
     WITH daily AS (
-      SELECT date_diff('day',
-               (SELECT min(date_trunc('day', o_orderdate)) FROM orders),
-               date_trunc('day', o_orderdate)) AS day_idx,
+      SELECT CAST(CAST(date_trunc('day', o_orderdate) AS DATE)
+                  - CAST((SELECT min(date_trunc('day', o_orderdate)) FROM orders)
+                         AS DATE) AS BIGINT) AS day_idx,
              CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                AS cents
       FROM orders GROUP BY 1),
@@ -1028,67 +848,6 @@ _SMAPE_EXPR = (
     FROM agg
     """,
 )
-def q_bs_mase(spark, sf_dir):
-    """SEASONAL-NAIVE FORECAST EVALUATION: score the weekly-seasonal
-    naive forecast (revenue today = revenue 7 days ago) with MASE —
-    seasonal MAE over one-step-naive MAE (Hyndman & Koehler 2006,
-    public; the scale-free forecast-accuracy standard, MASE < 1 beats
-    the naive) — and sMAPE. Complements q_am's rolling-origin backtest
-    with the benchmark-relative metric. Day alignment is an explicit
-    day-index equi-join (robust to calendar gaps — a lag() over rows
-    would silently misalign across missing days); absolute errors are
-    exact integer cents summed exactly, and the two metrics are
-    shared-text closes.
-
-    Scale shape: one map-side-combinable daily rollup is the only
-    corpus-scan stage; the two alignment joins and the final reduce run
-    on the calendar-bounded daily frame (~2.4k rows at any sf).
-    """
-    o = read_table(spark, sf_dir, "orders")
-    day0 = o.agg(
-        F.min(F.date_trunc("day", "o_orderdate")).alias("d0")
-    )
-    daily = (
-        o.crossJoin(F.broadcast(day0))
-        .groupBy(
-            F.datediff(F.date_trunc("day", "o_orderdate"), F.col("d0")).alias(
-                "day_idx"
-            )
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    a = daily.alias("a")
-    b = daily.alias("b")
-    season = a.join(
-        F.broadcast(b), F.col("b.day_idx") == F.col("a.day_idx") - 7
-    ).select(
-        F.abs(F.col("a.cents") - F.col("b.cents")).alias("ae7"),
-        (F.col("a.cents") + F.col("b.cents")).alias("s7"),
-    )
-    naive = a.join(
-        F.broadcast(b), F.col("b.day_idx") == F.col("a.day_idx") - 1
-    ).select(F.abs(F.col("a.cents") - F.col("b.cents")).alias("ae1"))
-    s_agg = season.agg(
-        F.count("*").cast("bigint").alias("n7"),
-        F.sum("ae7").cast("bigint").alias("sae7"),
-        F.sum("s7").cast("bigint").alias("ssum7"),
-    )
-    n_agg = naive.agg(
-        F.count("*").cast("bigint").alias("n1"),
-        F.sum("ae1").cast("bigint").alias("sae1"),
-    )
-    return s_agg.crossJoin(F.broadcast(n_agg)).select(
-        F.col("n7").alias("n_scored"),
-        F.col("sae7").alias("seasonal_abs_err_cents"),
-        F.col("n1").alias("n_naive"),
-        F.col("sae1").alias("naive_abs_err_cents"),
-        F.expr(_MASE_EXPR).alias("mase"),
-        F.expr(_SMAPE_EXPR).alias("smape"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1570,9 +1329,11 @@ def q_by_inventory(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Quantile normalization per priority: doubled midpoint ranks over 2(n+1) from
+# cumulative cell counts, reported per (group, decile).
+sql_query(
     "q_c8_quantile_norm",
-    oracle=f"""
+    f"""
     WITH raw AS (
       SELECT o_orderpriority AS grp,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -1592,7 +1353,7 @@ def q_by_inventory(spark, sf_dir):
       FROM cum),
     binned AS (
       SELECT grp, cnt, n_tot, rank2,
-             (10 * rank2) // (2 * (n_tot + 1)) AS decile
+             CAST(floor((10 * rank2) / (2 * (n_tot + 1))) AS BIGINT) AS decile
       FROM ranked)
     SELECT grp, CAST(decile AS INT) AS decile,
            CAST(sum(cnt) AS BIGINT) AS n_rows,
@@ -1603,64 +1364,6 @@ def q_by_inventory(spark, sf_dir):
     FROM binned GROUP BY grp, decile ORDER BY grp, decile
     """,
 )
-def q_c8_quantile_norm(spark, sf_dir):
-    """QUANTILE NORMALIZATION: the exact percent-rank transform
-    norm(x) = avg_rank(x) / (n+1) per priority group — the
-    feature-scaling step that maps any distribution to ~Uniform(0,1)
-    (rank transform, any statistics text; ties get the midpoint via the
-    q_zr doubled-rank trick so every rank stays an exact integer). The
-    readout aggregates the transform back to (group, decile) grain —
-    n_rows per decile ~ n/10 and mean_norm ~ decile midpoint are the
-    self-audit that the transform is uniform.
-
-    Scale shape: ranks come from the distributed-rank recipe on the
-    (group, value, count) cell table; the per-group cumulative window
-    is the corpus-facing risk at 100 TB (distinct prices per group make
-    the cell frame corpus-sized) — there the q_bk crossing-bucket /
-    segmented-prefix decomposition applies unchanged; at bench scale
-    the straightforward cell window is faster than the extra shuffle
-    (measured ~2s; the q_bk rewrite paid off only past ~40s). No float
-    enters until the closing shared-text division.
-    """
-    raw = read_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    cells = raw.groupBy("grp", "cents").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    grp_w = Window.partitionBy("grp")
-    cum = cells.select(
-        "grp",
-        "cnt",
-        F.coalesce(
-            F.sum("cnt").over(
-                grp_w.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("prev"),
-        F.sum("cnt").over(grp_w).alias("n_tot"),
-    )
-    ranked = cum.withColumn("rank2", 2 * F.col("prev") + F.col("cnt") + 1)
-    binned = ranked.withColumn(
-        "decile", F.expr("(10 * rank2) DIV (2 * (n_tot + 1))")
-    )
-    return (
-        binned.groupBy("grp", F.col("decile").cast("int").alias("decile"))
-        .agg(
-            F.sum("cnt").cast("bigint").alias("n_rows"),
-            F.round(
-                F.sum(F.col("cnt") * F.col("rank2")).cast("double")
-                / (
-                    F.sum("cnt").cast("double")
-                    * 2.0
-                    * (F.min("n_tot").cast("double") + 1.0)
-                ),
-                6,
-            ).alias("mean_norm"),
-        )
-        .orderBy("grp", "decile")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2061,13 +1764,15 @@ _PE_TERM = (
 )
 
 
-@query(
+# Permutation entropy (dimension 3) of daily revenue; a window accumulates the
+# pattern terms in fixed pattern order.
+sql_query(
     "q_ck_perm_entropy",
-    oracle=f"""
+    f"""
     WITH daily AS (
-      SELECT date_diff('day',
-               (SELECT min(date_trunc('day', o_orderdate)) FROM orders),
-               date_trunc('day', o_orderdate)) AS t,
+      SELECT CAST(CAST(date_trunc('day', o_orderdate) AS DATE)
+                  - CAST((SELECT min(date_trunc('day', o_orderdate)) FROM orders)
+                         AS DATE) AS BIGINT) AS t,
              CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                AS y
       FROM orders GROUP BY 1),
@@ -2093,69 +1798,6 @@ _PE_TERM = (
     FROM acc ORDER BY pattern
     """,
 )
-def q_ck_perm_entropy(spark, sf_dir):
-    """PERMUTATION ENTROPY of daily revenue (Bandt & Pompe, PRL 2002 —
-    the ordinal-pattern complexity measure; low = trending/periodic,
-    ln(6)-normalized 1 = white noise), embedding dimension 3: each
-    consecutive day triple maps to its ordinal pattern via three stable
-    <= comparisons (ties rank by temporal order, the Bandt-Pompe
-    convention; transitivity leaves 6 legal codes), and the Shannon
-    entropy of the pattern distribution closes with the 0·ln0-guarded
-    shared-text term accumulated in fixed pattern order (q_bq contract).
-    Day alignment is the explicit day-index equi-join (q_bs contract).
-
-    Scale shape: one map-side-combinable daily rollup, two
-    calendar-bounded self-joins, a <= 6-row pattern table; entropy runs
-    on that constant frame. 100 TB = one scan + a 6-row tail.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    day0 = o.agg(F.min(F.date_trunc("day", "o_orderdate")).alias("d0"))
-    daily = (
-        o.crossJoin(F.broadcast(day0))
-        .groupBy(
-            F.datediff(F.date_trunc("day", "o_orderdate"), F.col("d0")).alias(
-                "t"
-            )
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
-    )
-    d0, d1, d2 = daily.alias("d0"), daily.alias("d1"), daily.alias("d2")
-    trip = (
-        d0.join(F.broadcast(d1), F.col("d1.t") == F.col("d0.t") + 1)
-        .join(F.broadcast(d2), F.col("d2.t") == F.col("d0.t") + 2)
-        .select(
-            F.col("d0.y").alias("a"),
-            F.col("d1.y").alias("b"),
-            F.col("d2.y").alias("c"),
-        )
-    )
-    pat = trip.groupBy(F.expr(_PE_PAT).alias("pattern")).agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    tot = pat.agg(F.sum("cnt").cast("bigint").alias("nt"))
-    w_all = Window.orderBy("pattern").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    acc = pat.crossJoin(F.broadcast(tot)).select(
-        "pattern",
-        "cnt",
-        "nt",
-        F.sum(F.expr(_PE_TERM)).over(w_all).alias("negh"),
-    )
-    return acc.select(
-        "pattern",
-        "cnt",
-        F.round(F.col("cnt").cast("double") / F.col("nt").cast("double"), 6)
-        .alias("p"),
-        F.round(-F.col("negh"), 6).alias("perm_entropy_nats"),
-        F.round(-F.col("negh") / F.expr("ln(6e0)"), 6).alias(
-            "perm_entropy_norm"
-        ),
-    ).orderBy("pattern")
 
 
 # ---------------------------------------------------------------------------
@@ -2172,13 +1814,15 @@ _RT_VAR = (
 _RT_Z = f"((CAST(r AS DOUBLE) - {_RT_MU}) / nullif(sqrt({_RT_VAR}), 0e0))"
 
 
-@query(
+# Wald-Wolfowitz runs test on the day-over-day up/down sequence of revenue
+# (flat days dropped).
+sql_query(
     "q_cl_runs_test",
-    oracle=f"""
+    f"""
     WITH daily AS (
-      SELECT date_diff('day',
-               (SELECT min(date_trunc('day', o_orderdate)) FROM orders),
-               date_trunc('day', o_orderdate)) AS t,
+      SELECT CAST(CAST(date_trunc('day', o_orderdate) AS DATE)
+                  - CAST((SELECT min(date_trunc('day', o_orderdate)) FROM orders)
+                         AS DATE) AS BIGINT) AS t,
              CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                AS y
       FROM orders GROUP BY 1),
@@ -2204,74 +1848,6 @@ _RT_Z = f"((CAST(r AS DOUBLE) - {_RT_MU}) / nullif(sqrt({_RT_VAR}), 0e0))"
     FROM agg
     """,
 )
-def q_cl_runs_test(spark, sf_dir):
-    """WALD-WOLFOWITZ RUNS TEST on the daily revenue up/down sequence
-    (Wald & Wolfowitz 1940 — the nonparametric randomness check trading
-    desks and monitoring systems run before trusting iid assumptions):
-    day-over-day moves become a binary up/down sequence (flat days
-    dropped, the standard treatment), the run count R compares against
-    its exact null moments mu = 1 + 2 n1 n2 / n and the classical
-    variance, closing in one shared-text z. Too FEW runs = trending,
-    too MANY = mean-reverting oscillation. The run count itself is a
-    lag-compare sum — exact integers end to end; the only window runs
-    at day grain.
-
-    Scale shape: one map-side-combinable daily rollup, a day-index lag
-    join, one day-grain ordered window, a 1-row close. 100 TB = one
-    scan + a calendar-bounded tail.
-    """
-    o = read_table(spark, sf_dir, "orders")
-    day0 = o.agg(F.min(F.date_trunc("day", "o_orderdate")).alias("d0"))
-    daily = (
-        o.crossJoin(F.broadcast(day0))
-        .groupBy(
-            F.datediff(F.date_trunc("day", "o_orderdate"), F.col("d0")).alias(
-                "t"
-            )
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
-    )
-    a, b = daily.alias("a"), daily.alias("b")
-    moves = (
-        a.join(F.broadcast(b), F.col("b.t") == F.col("a.t") - 1)
-        .filter(F.col("a.y") != F.col("b.y"))
-        .select(
-            F.col("a.t").alias("t"),
-            F.when(F.col("a.y") > F.col("b.y"), 1).otherwise(0).alias("up"),
-        )
-    )
-    seq = moves.select(
-        "up", F.lag("up").over(Window.orderBy("t")).alias("prev_up")
-    )
-    agg = seq.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("up").cast("bigint").alias("n1"),
-        (F.count("*") - F.sum("up")).cast("bigint").alias("n2"),
-        (
-            F.lit(1)
-            + F.sum(
-                F.when(
-                    F.col("prev_up").isNotNull()
-                    & (F.col("up") != F.col("prev_up")),
-                    1,
-                ).otherwise(0)
-            )
-        )
-        .cast("bigint")
-        .alias("r"),
-    )
-    return agg.select(
-        "n",
-        "n1",
-        "n2",
-        "r",
-        F.round(F.expr(_RT_MU), 6).alias("expected_runs"),
-        F.round(F.expr(_RT_Z), 6).alias("z_stat"),
-    )
 
 
 # ---------------------------------------------------------------------------

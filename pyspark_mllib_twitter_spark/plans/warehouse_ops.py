@@ -31,26 +31,20 @@ from .registry import query, sql_query
 # Exact per-group percentiles (p50 / p95 / p99)
 # ---------------------------------------------------------------------------
 
-#: Integer target rank for quantile a/b over n rows: ceil(a*n/b) with
-#: INTEGER division only. NOT shared text — `/` is float division on
-#: both engines but DuckDB's BIGINT cast rounds-to-nearest while
-#: Spark's truncates (the q_al SAX lesson), so each engine gets its own
-#: exact integer-division operator (DIV vs //); integer ops need no
-#: shared text to agree.
-def _rank_spark(a: int, b: int) -> str:
-    return f"CAST(({a} * n + {b} - 1) DIV {b} AS BIGINT)"
+#: Integer target rank for quantile a/b over n rows: ceil(a*n/b). `/` is
+#: float division on both engines and a DOUBLE -> BIGINT cast rounds to
+#: nearest on DuckDB but truncates on Spark (the q_al SAX lesson), so the
+#: quotient is floored before the cast; for integers below 2^53 the
+#: floor is exact.
+def _rank(a: int, b: int) -> str:
+    return f"CAST(floor(({a} * n + {b} - 1) / {b}) AS BIGINT)"
 
 
-def _rank_duck(a: int, b: int) -> str:
-    return f"CAST(({a} * n + {b} - 1) // {b} AS BIGINT)"
-
-
-_PCTL_PICKS = {"p50": (1, 2), "p95": (19, 20), "p99": (99, 100)}
-
-
-@query(
+# Exact p50/p95/p99 per event type: the smallest value whose cumulative count
+# reaches ceil(q*n), with the target rank computed in integers.
+sql_query(
     "q_b8_percentiles",
-    oracle=f"""
+    f"""
     WITH cells AS (
       SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
              CAST(count(*) AS BIGINT) AS cnt
@@ -63,61 +57,15 @@ _PCTL_PICKS = {"p50": (1, 2), "p95": (19, 20), "p99": (99, 100)}
              SUM(cnt) OVER (PARTITION BY event_type) AS n
       FROM cells)
     SELECT event_type, CAST(min(n) AS BIGINT) AS n,
-           round(CAST(min(CASE WHEN c >= {_rank_duck(1, 2)} THEN cents END)
+           round(CAST(min(CASE WHEN c >= {_rank(1, 2)} THEN cents END)
                       AS DOUBLE) / 100.0, 6) AS p50,
-           round(CAST(min(CASE WHEN c >= {_rank_duck(19, 20)} THEN cents END)
+           round(CAST(min(CASE WHEN c >= {_rank(19, 20)} THEN cents END)
                       AS DOUBLE) / 100.0, 6) AS p95,
-           round(CAST(min(CASE WHEN c >= {_rank_duck(99, 100)} THEN cents END)
+           round(CAST(min(CASE WHEN c >= {_rank(99, 100)} THEN cents END)
                       AS DOUBLE) / 100.0, 6) AS p99
     FROM cum GROUP BY event_type ORDER BY event_type
     """,
 )
-def q_b8_percentiles(spark, sf_dir):
-    """EXACT per-group percentiles (p50/p95/p99 of event value) by the
-    distributed-rank recipe: collapse to (group, value, count) cells
-    (one combinable shuffle — the corpus is never globally sorted),
-    cumulate counts over the value order within each group, then pick
-    the smallest value whose cumulative count reaches the integer target
-    rank ceil(q*n) — computed without ANY float ((a*n + b - 1) / b in
-    BIGINTs, so no 0.95*n boundary ambiguity). The SLA/latency
-    dashboard staple, exact where approx_percentile is not, and the
-    deterministic twin the mergeable-bins entry (q_yo) trades against.
-
-    Scale shape: the window runs over DISTINCT VALUES per group (cells,
-    not rows); at 1e9 rows with bounded-cardinality metrics that is
-    thousands of cells per group. For truly continuous metrics the
-    documented swap is pre-bucketing to fixed precision (cents already
-    is one).
-    """
-    cells = (
-        read_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wn = Window.partitionBy("event_type")
-    cum = cells.select(
-        "event_type",
-        "cents",
-        F.sum("cnt").over(w).alias("c"),
-        F.sum("cnt").over(wn).alias("n"),
-    )
-    picks = [F.min("n").cast("bigint").alias("n")]
-    for name, (a, b) in _PCTL_PICKS.items():
-        picks.append(
-            F.expr(
-                f"round(CAST(min(CASE WHEN c >= {_rank_spark(a, b)} THEN cents END)"
-                " AS DOUBLE) / 100.0, 6)"
-            ).alias(name)
-        )
-    return cum.groupBy("event_type").agg(*picks).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------

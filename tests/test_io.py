@@ -4,7 +4,12 @@ commit protocol."""
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import subprocess
+import sys
+import tempfile
 
 import pytest
 
@@ -74,6 +79,41 @@ def test_register_views_reads_only_the_tables_the_sql_names(spark, sf_smoke, mon
         "orders.parquet",
     ]
     assert spark.sql(sql).first().n_orders > 0
+
+
+_STORE_CHILD = """
+import json, glob, os, sys
+from pyspark import SparkFiles
+from pyspark.sql import SparkSession
+from pyspark_mllib_twitter_spark.plans import REGISTRY
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.driver.memory", "1g").getOrCreate())
+for name in ("q_s4_pysink_roundtrip", "q_s6_docstore_compact"):
+    REGISTRY[name].spark(spark, sys.argv[1]).collect()
+root = SparkFiles.getRootDirectory()
+stores = glob.glob(os.path.join(root, "spark_graft_*"))
+spark.stop()
+print(json.dumps({"stores": stores,
+                  "left": [p for p in stores if os.path.exists(p)]}))
+"""
+
+
+def test_docstore_stores_are_deleted_when_the_session_stops(sf_smoke):
+    """The connector recipes write their stores under Spark's per-application
+    ``userFiles`` dir: a fresh session that runs two of them and stops
+    leaves no ``spark_graft_*`` dir in the temp dir, nor the stores it
+    wrote."""
+    tmp = tempfile.gettempdir()
+    before = set(glob.glob(os.path.join(tmp, "spark_graft_*")))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])))
+    out = subprocess.run(
+        [sys.executable, "-c", _STORE_CHILD, sf_smoke],
+        env=env, capture_output=True, text=True, timeout=600, check=True,
+    )
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert set(glob.glob(os.path.join(tmp, "spark_graft_*"))) == before
+    assert len(res["stores"]) == 2 and res["left"] == []
 
 
 def test_python_datasource_partitions_and_determinism(spark):

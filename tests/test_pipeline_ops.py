@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from pyspark_mllib_twitter_spark.plans import REGISTRY, pipeline_ops
+from pyspark_mllib_twitter_spark.sources import read_table
 
 from .conftest import SF_SMOKE as SF
 
@@ -265,7 +266,6 @@ def test_cdc_chunks_lossless_and_edit_stable(spark):
        shift every boundary.
     """
     from pyspark_mllib_twitter_spark.operators.cdc import cdc_chunks
-    from pyspark_mllib_twitter_spark.sources import read_table
 
     docs = read_table(spark, SF, "documents").select("doc_id", "text").limit(100)
     out = cdc_chunks(docs).collect()
@@ -429,7 +429,7 @@ def test_privacy_release_gate_composition(spark):
     from pyspark_mllib_twitter_spark.functions import text as TXT
 
     P = pipeline_ops
-    docs = P._docs(spark, SF)
+    docs = read_table(spark, SF, "documents")
     n0 = docs.count()
 
     # Stage 1 — scrub (map-only, count-preserving): inject the q_du PII
@@ -682,7 +682,7 @@ def test_release_gate_k_anonymity_stage(spark):
     from pyspark_mllib_twitter_spark.functions import text as TXT
 
     P = pipeline_ops
-    docs = P._docs(spark, SF)
+    docs = read_table(spark, SF, "documents")
     scrubbed = docs.select(
         "doc_id", "source", "lang",
         TXT.scrub_text(F.expr(P._PII_SQL)).alias("text"),
