@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions import vectors
+from ..sources import local_frame
 from .iterate import iterate
 
 
@@ -618,9 +619,11 @@ def semantic_dedup_pairs(embeddings: DataFrame, min_cosine: float = 0.97) -> Dat
     sample = [r.arr for r in fit_sample.select("arr").collect()]
     n_fit = len(sample)
     if n_fit == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"id_a {dict(embeddings.dtypes)['vec_id']}, "
-                f"id_b {dict(embeddings.dtypes)['vec_id']}, cos_sim double"
+        id_type = dict(embeddings.dtypes)["vec_id"]
+        return local_frame(
+            embeddings.sparkSession,
+            [],
+            f"id_a {id_type}, id_b {id_type}, cos_sim double",
         )
     # A k close to n degenerates to one point per cluster (no within-cluster
     # pairs); cap at ~n/8 so clusters expect several members. k=1 means

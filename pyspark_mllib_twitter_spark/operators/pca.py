@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources import local_frame
+
 _PARTIAL_SCHEMA = StructType(
     [
         StructField("n", LongType()),
@@ -130,15 +132,10 @@ def pca_spectrum(df: DataFrame) -> DataFrame:
                 round(float(comps[i, j]), 4),
             )
         )
-    out_schema = StructType(
-        [
-            StructField("component", LongType()),
-            StructField("n_vectors", LongType()),
-            StructField("eigenvalue", DoubleType()),
-            StructField("explained_var_ratio", DoubleType()),
-            StructField("cum_explained_var", DoubleType()),
-            StructField("top_dim", LongType()),
-            StructField("top_loading", DoubleType()),
-        ]
-    )
-    return spark.createDataFrame(rows, out_schema).orderBy("component")
+    return local_frame(
+        spark,
+        rows,
+        "component bigint, n_vectors bigint, eigenvalue double, "
+        "explained_var_ratio double, cum_explained_var double, "
+        "top_dim bigint, top_loading double",
+    ).orderBy("component")

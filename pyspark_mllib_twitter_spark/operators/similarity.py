@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors
+from ..sources import local_frame
 from .quantizer import (
     bounded_fit_sample,
     fit_centroids,
@@ -169,8 +170,10 @@ def ivf_top_k(
     # rounds and n_probe, not centroid polish, is the recall dial.
     centroids = fit_centroids(c, "neighbor_id", "arr", N_CENTROIDS)
     c_assigned = c.withColumn("centroid_id", nearest_centroid_udf(centroids)("arr"))
-    cent_df = corpus.sparkSession.createDataFrame(
-        list(enumerate(centroids)), "centroid_id int, centroid array<double>"
+    cent_df = local_frame(
+        corpus.sparkSession,
+        list(enumerate(centroids)),
+        "centroid_id int, centroid array<double>",
     )
 
     q = queries.select(
@@ -424,8 +427,8 @@ def _rank_probed(
     ``centroid_id`` that predicate becomes a partition filter: unprobed
     cells are never read — the candidate cut becomes an I/O cut."""
     spark = codes.sparkSession
-    cent_df = spark.createDataFrame(
-        list(enumerate(coarse_lists)), "centroid_id int, centroid array<double>"
+    cent_df = local_frame(
+        spark, list(enumerate(coarse_lists)), "centroid_id int, centroid array<double>"
     )
     q_cent = top_k_per_group(
         q.crossJoin(F.broadcast(cent_df)).select(

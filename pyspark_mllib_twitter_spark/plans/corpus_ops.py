@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..functions import ordering as ORD
 from ..functions import text as TXT
 from ..operators.iterate import iterate
-from ..sources import read_table, spread
+from ..sources import local_frame, read_table, spread
 from ..streaming.streams import KMV_K
 from .registry import query, sql_query
 
@@ -1398,7 +1398,7 @@ def q_yc_bfs_sssp(spark, sf_dir):
         new = nxt.join(F.broadcast(dist.select("node")), "node", "left_anti")
         return dist.unionByName(new.select("node", F.lit(d).alias("dist")))
 
-    source = spark.createDataFrame([(BFS_SOURCE, 0)], "node string, dist int")
+    source = local_frame(spark, [(BFS_SOURCE, 0)], "node string, dist int")
     dist = iterate(source, bfs_level, BFS_DEPTH)
     return dist.select("node", F.col("dist").cast("bigint").alias("dist")).orderBy(
         "dist", "node"
@@ -1481,7 +1481,7 @@ def bpe_train(docs: DataFrame) -> DataFrame:
         freq = freq.select(
             _F.regexp_replace("sym", pattern, a + b).alias("sym"), "f"
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(learned, "step int, pair string, weight bigint").select(
+    return local_frame(spark, learned, "step int, pair string, weight bigint").select(
         _F.col("step").cast("bigint").alias("step"), "pair", "weight"
     )
 
@@ -1986,7 +1986,7 @@ def q_yj_gini(spark, sf_dir):
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    offsets_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset long")
+    offsets_df = local_frame(spark, offsets, "_pid int, _offset long")
     local_rank = F.row_number().over(
         Window.partitionBy("_pid").orderBy("s", "o_custkey")
     )
@@ -2353,7 +2353,7 @@ def q_yp_skyline(spark, sf_dir):
     for pid, m in pmax:
         prior.append((pid, run))
         run = m if run is None else max(run, m)
-    prior_df = spark.createDataFrame(prior or [(0, None)], "_pid int, _prior int")
+    prior_df = local_frame(spark, prior, "_pid int, _prior int")
     w = Window.partitionBy("_pid").orderBy("p_retailprice").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -4301,7 +4301,7 @@ def q_bc_weighted_sssp(spark, sf_dir):
         )
         return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
 
-    source = spark.createDataFrame([(BFS_SOURCE, 0)], "node string, dist long")
+    source = local_frame(spark, [(BFS_SOURCE, 0)], "node string, dist long")
     dist = iterate(source, relax, SSSP_ROUNDS)
     return dist.select("node", F.col("dist").cast("bigint").alias("dist")).orderBy(
         "dist", "node"
@@ -4320,11 +4320,13 @@ _MST_W_SQL = "(c * 7 + s * 13) % 97 + 1"
 #: geometrically) at or below this row count are resolved with a
 #: driver-local union-find — the same bounded-driver contract as the
 #: quantizer fit. Above it, distributed pointer jumping with a FIXED
-#: ceil(log2(n)) hop budget (no per-hop convergence probes). The bound
-#: is MEASURED, not aspirational: at exactly 1M pairs the branch costs
-#: ~7s end-to-end on this box (collect 2.7s + union-find 1.9s +
-#: createDataFrame/broadcast 2.4s; 4M measured 28s — too much driver
-#: serialization for a "bounded" contract, see BENCHNOTES round 10).
+#: ceil(log2(n)) hop budget (no per-hop convergence probes). The bound's
+#: cost on 4 cores: at 1M pairs, building the root frame with
+#: ``local_frame`` and its broadcast left join into a 2M-row label table
+#: take 5.5 s (``createDataFrame`` 3.7-4.0 s); at the pair counts the
+#: benchmark reaches (~16k components at sf0.1) ``local_frame`` is the
+#: faster one. 4M pairs measured 28 s — too much driver serialization for
+#: a "bounded" contract (see BENCHNOTES round 10).
 MST_DRIVER_UNION_MAX = 1_000_000
 #: Node tables at or below this row count are broadcast into the
 #: edge-to-component label joins (comp is 16 bytes/row — 2M rows ≈ 32 MB).
@@ -4440,7 +4442,8 @@ def boruvka_mst(edges: DataFrame) -> DataFrame:
                         parent[b] = a
                     else:
                         parent[a] = b
-            root = spark.createDataFrame(
+            root = local_frame(
+                spark,
                 [(c, _find(c)) for c in list(parent)],
                 "comp long, newc long",
             )

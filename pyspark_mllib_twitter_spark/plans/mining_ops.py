@@ -34,7 +34,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TXT
-from ..sources import read_table, spread
+from ..sources import local_frame, read_table, spread
 from .registry import query, sql_query
 
 
@@ -991,7 +991,8 @@ def q_ci_huffman(spark, sf_dir):
         )
     lengths = _huffman_lengths([(r.ch, r.cnt) for r in rows])
     codes = canonical_codes(lengths)
-    code_df = spark.createDataFrame(
+    code_df = local_frame(
+        spark,
         [(s, lengths[s], codes[s]) for s in sorted(lengths)],
         "ch string, code_len long, code string",
     )

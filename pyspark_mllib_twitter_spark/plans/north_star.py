@@ -15,6 +15,7 @@ from ..functions import text as TXT
 from ..operators import dedup, multimodal, phash, similarity
 from ..sources import read_table, spread
 from .registry import query
+from .relational import _store_dir
 
 # Tiny stopword lists shared with the DuckDB oracle text below.
 _SW = TXT.STOPWORDS
@@ -553,10 +554,7 @@ def q_ns_ann_ivfpq_idx(spark, sf_dir):
     not plan literals (a pruned 8-cell count at C=256 runs in 0.23s
     once listed). At this entry's 16-cell geometry the one-directory-
     per-cell layout is not the bottleneck."""
-    import re as _re
-
-    tag = _re.sub(r"\W+", "_", sf_dir).strip("_")
-    path = f"/tmp/ann_ivfpq_idx_{tag}"
+    path = _store_dir("ann_ivfpq", sf_dir)
     emb = read_table(spark, sf_dir, "embeddings")
     similarity.build_ivfpq_index(emb, path, n_centroids=16)
     res = similarity.probe_ivfpq_index(

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..operators.cdc import CDC_AVG, CDC_MAX, CDC_MIN
-from ..sources import read_table, spread
+from ..sources import local_frame, read_table, spread
 from .registry import query, sql_query
 
 #: Chunking geometry. Sized to the synthetic fixture (docs <= ~550 chars) so
@@ -1505,7 +1505,8 @@ def q_dt_filter_funnel(spark, sf_dir):
         F.count("*").cast("bigint").alias("n")
     )
     tot = t.agg(F.count("*").cast("bigint").alias("n_total"))
-    stages = spark.createDataFrame(
+    stages = local_frame(
+        spark,
         [(i + 1, name) for i, name in enumerate(FUNNEL_RULE_NAMES)],
         "stage long, rule string",
     )
@@ -1975,7 +1976,7 @@ def q_dy_blocklist_suffix(spark, sf_dir):
         "host",
         F.explode(F.expr(_HOST_SUFFIXES_EXPR)).alias("sfx"),
     )
-    rules = spark.createDataFrame([(r,) for r in BLOCK_RULES], "rule string")
+    rules = local_frame(spark, [(r,) for r in BLOCK_RULES], "rule string")
     hits = sfx.join(F.broadcast(rules), F.col("sfx") == F.col("rule")).select(
         "doc_id", "host", "rule"
     )
@@ -2232,9 +2233,7 @@ def q_eb_path_blocklist(spark, sf_dir):
         "path",
         F.explode(F.expr(_PATH_PREFIXES_EXPR)).alias("pfx"),
     )
-    rules = spark.createDataFrame(
-        [(r,) for r in PATH_BLOCK_RULES], "rule string"
-    )
+    rules = local_frame(spark, [(r,) for r in PATH_BLOCK_RULES], "rule string")
     hits = pfx.join(F.broadcast(rules), F.col("pfx") == F.col("rule")).select(
         "doc_id", "path", "rule"
     )

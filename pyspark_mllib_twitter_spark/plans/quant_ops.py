@@ -32,7 +32,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
-from ..sources import read_table
+from ..sources import local_frame, read_table
 from .registry import query, sql_query
 from .warehouse_ops import _rank
 
@@ -826,7 +826,8 @@ def q_d2_tdigest(spark, sf_dir):
             round(p99, 6),
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         row,
         "n_values bigint, n_centroids bigint, p50 double, p95 double, p99 double",
     )

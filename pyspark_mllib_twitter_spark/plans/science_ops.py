@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
-from ..sources import read_table
+from ..sources import local_frame, read_table
 from .registry import query, sql_query
 
 
@@ -1484,7 +1484,7 @@ def q_ak_grid_dbscan(spark, sf_dir):
         "cx", "cy", f"{_DB_KEY} AS cell", "n_pts"
     )
     offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    off_df = spark.createDataFrame(offsets, "dx int, dy int")
+    off_df = local_frame(spark, offsets, "dx int, dy int")
     probe = (
         core.crossJoin(F.broadcast(off_df))
         .selectExpr("cell AS u", "cx + dx AS cx", "cy + dy AS cy")

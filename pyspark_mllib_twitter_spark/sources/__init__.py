@@ -1,6 +1,7 @@
 from .io import (
     FIXTURE_TABLES,
     TWEETS_SCHEMA,
+    local_frame,
     read_table,
     read_tweets_jsonl,
     register_views,
@@ -11,6 +12,7 @@ from .io import (
 __all__ = [
     "FIXTURE_TABLES",
     "TWEETS_SCHEMA",
+    "local_frame",
     "read_table",
     "read_tweets_jsonl",
     "register_views",

@@ -12,9 +12,11 @@ from __future__ import annotations
 import os
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: Tables materialized by the test-data generator (TESTDATA.md / FIXTURES.md).
 FIXTURE_TABLES = (
@@ -126,6 +128,24 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     """Run ``sql`` on Spark over the fixture tables it names."""
     register_views(spark, sf_dir, sql)
     return spark.sql(sql)
+
+
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl``'s column order) as a frame
+    whose plan leaf is a JVM ``LocalRelation``.
+
+    ``createDataFrame`` of a Python list parallelizes pickled rows through a
+    Python RDD, so every job that reads the frame starts Python workers. An
+    Arrow table typed by ``ddl`` is handed to the JVM whole instead: no
+    Python runs, and the schema is exactly ``ddl``'s (nullable columns).
+    Empty ``rows`` give an empty frame of that schema."""
+    schema = T.StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_tweets_jsonl(spark: SparkSession, path: str) -> DataFrame:

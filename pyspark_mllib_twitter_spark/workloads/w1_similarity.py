@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors
 from ..operators.topk import top_k_per_group
+from ..sources import local_frame
 
 #: Reference vectorizer hyperparameters (COMP5349_2.py:151-178):
 #: HashingTF(numFeatures=200), CountVectorizer(vocabSize=200, minDF=1).
@@ -137,8 +138,8 @@ def user_similarity_top_k(
             F.col(query_user_ids.columns[0]).cast("bigint").alias("query_id")
         )
     else:
-        q_ids = spark.createDataFrame(
-            [(int(u),) for u in query_user_ids], "query_id bigint"
+        q_ids = local_frame(
+            spark, [(int(u),) for u in query_user_ids], "query_id bigint"
         )
     # A query vector's nonzeros (a handful of its 200 slots) are listed
     # once per query row, on the broadcast side; each pair then folds over

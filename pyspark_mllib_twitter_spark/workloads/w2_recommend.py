@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..sources import local_frame
+
 #: Reference ALS hyperparameters (COMP5349_2.py:204).
 ALS_RANK = 10
 ALS_SEED = 0
@@ -100,8 +102,8 @@ def dense_id_dictionary(df: DataFrame, id_cols: list[str]) -> DataFrame:
     for col, pid, cnt in counts:
         offsets.append((col, pid, acc.get(col, 0)))
         acc[col] = acc.get(col, 0) + cnt
-    offsets_df = df.sparkSession.createDataFrame(
-        offsets or [(id_cols[0], 0, 0)], "id_col string, _pid int, _offset long"
+    offsets_df = local_frame(
+        df.sparkSession, offsets, "id_col string, _pid int, _offset long"
     )
 
     local_rank = F.row_number().over(W.partitionBy("id_col", "_pid").orderBy("id"))

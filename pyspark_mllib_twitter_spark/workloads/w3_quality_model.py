@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TXT
+from ..sources import local_frame
 
 
 def quality_features(docs: DataFrame) -> DataFrame:
@@ -123,6 +124,6 @@ def tuning_report(docs: DataFrame) -> DataFrame:
         (float(grid_values[i]), round(float(metrics[i]), 4), int(i == best))
         for i in range(len(grid_values))
     ]
-    return docs.sparkSession.createDataFrame(
-        rows, "reg_param double, auc double, chosen int"
+    return local_frame(
+        docs.sparkSession, rows, "reg_param double, auc double, chosen int"
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors
+from ..sources import local_frame
 
 
 def cluster_embeddings(emb: DataFrame) -> DataFrame:
@@ -41,7 +42,8 @@ def cluster_embeddings(emb: DataFrame) -> DataFrame:
     ).fit(feats)
     assigned = model.transform(feats)
     cents = model.clusterCenters()
-    cent_df = assigned.sparkSession.createDataFrame(
+    cent_df = local_frame(
+        assigned.sparkSession,
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cluster int, centroid array<double>",
     )

@@ -38,6 +38,73 @@ def test_events_ts_is_timestamp(spark, sf_smoke):
         assert got[k] == want[k], (k, got[k], want[k])
 
 
+def _leaf(df) -> str:
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.children().size() > 0:
+        plan = plan.children().head()
+    return plan.nodeName()
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        # every column type the package's driver-side lists use, with nulls
+        (
+            [(1, 2**40, "a", 0.1, [1.5, -0.0]), (None, None, None, None, None)],
+            "a int, b bigint, c string, d double, e array<double>",
+        ),
+        ([(0, None), (3, 7)], "_pid int, _prior int"),
+        ([], "id_col string, _pid int, _offset long"),
+    ],
+)
+def test_local_frame_round_trips_as_a_local_relation(spark, rows, ddl):
+    """``local_frame`` gives the rows and schema ``createDataFrame`` gives
+    for the same list, nulls and empty ``rows`` included, from a JVM
+    ``LocalRelation`` instead of a Python RDD."""
+    from pyspark_mllib_twitter_spark.sources import local_frame
+
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert _leaf(got) == "LocalRelation"
+    assert _leaf(want) == "LogicalRDD"
+
+
+def test_local_frame_takes_numpy_arrays(spark):
+    """Centroid lists arrive as numpy arrays; they land as ``array<double>``."""
+    import numpy as np
+
+    from pyspark_mllib_twitter_spark.sources import local_frame
+
+    df = local_frame(spark, [(0, np.array([0.5, 0.25]))], "c int, v array<double>")
+    assert df.collect()[0].v == [0.5, 0.25]
+
+
+def test_package_builds_driver_rows_with_local_frame():
+    """AST scan: ``createDataFrame(`` appears in the package only inside
+    ``local_frame``."""
+    import ast
+    from pathlib import Path
+
+    package = Path(__file__).resolve().parents[1] / "pyspark_mllib_twitter_spark"
+    allowed = {("sources/io.py", "local_frame")}
+    found = set()
+    for path in sorted(package.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                ):
+                    found.add((path.relative_to(package).as_posix(), fn.name))
+    assert found == allowed
+
+
 def test_spread_is_noop_when_already_parallel(spark, sf_smoke):
     """spread() must add an exchange only for under-partitioned scans: an
     input already at session parallelism passes through unchanged (at

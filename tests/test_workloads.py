@@ -208,6 +208,39 @@ def test_w2_releases_fit_input(tweets):
     assert recs.count() > 0
 
 
+def test_w1_w2_frames_read_no_python_rdd(tweets):
+    """The driver-side lists W1 (a list of query users) and W2 (the
+    dictionary offsets) ship into Spark are JVM local relations: the
+    frames they return read no ``LogicalRDD``, so no job of theirs starts a
+    Python worker."""
+    from pyspark_mllib_twitter_spark.workloads.w1_similarity import (
+        build_user_documents,
+        user_similarity_top_k,
+    )
+    from pyspark_mllib_twitter_spark.workloads.w2_recommend import (
+        build_mention_pairs,
+        implicit_als_recommend,
+    )
+
+    w1 = user_similarity_top_k(build_user_documents(tweets), [QUERY_USER], k=5)
+    w2 = implicit_als_recommend(build_mention_pairs(tweets), k=5)
+    for df in (w1, w2):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan
+        assert "LogicalRDD" not in plan
+
+
+def test_dense_id_dictionary_of_nothing_is_empty(spark):
+    """An empty input gives an empty dictionary of the usual schema."""
+    from pyspark_mllib_twitter_spark.workloads.w2_recommend import dense_id_dictionary
+
+    empty = spark.range(0).selectExpr("id AS user_id", "id AS mention_id")
+    d = dense_id_dictionary(empty, ["user_id", "mention_id"])
+    assert d.columns == ["id_col", "id", "dense_id"]
+    assert d.dtypes == [("id_col", "string"), ("id", "bigint"), ("dense_id", "int")]
+    assert d.collect() == []
+
+
 def test_w2_no_null_users(tweets):
     """W2 keeps the reference's P2 filter: null authors contribute no pairs."""
     from pyspark_mllib_twitter_spark.workloads.w2_recommend import build_mention_pairs
